@@ -514,6 +514,35 @@ def with_ratio_of_total(
     ).drop("__root_value")
 
 
+def ancestor_ratio_columns(
+    value: Column, ancestor_value, depth: Column,
+) -> tuple[Column, Column]:
+    """(ratio of total, ratio of parent) for rows that carry their
+    ancestors' values — the loader's walk-up, with no join.
+
+    ``ancestor_value(k)`` returns the value at the row's depth-k ancestor
+    for an int Column ``k`` (0 = the root); it is only called with
+    0 <= k < ``depth``, the row's callpath length.  Same rule as
+    :func:`with_ratio_of_parent`: the deepest ancestor whose value is
+    >= ``value`` or NULL stops the walk, else the root; the root row
+    resolves to itself.  Per row this is one interpreted ``aggregate``
+    over ``depth`` indices.
+    """
+    stop = F.aggregate(
+        F.sequence(F.lit(0), depth - 1), F.lit(0),
+        lambda j, k: F.when(
+            F.coalesce(ancestor_value(k) >= value, F.lit(True)), k)
+        .otherwise(j))
+    is_root = depth == 0
+    own = F.try_divide(value, value)
+    return (
+        F.when(is_root, own)
+        .otherwise(F.try_divide(value, ancestor_value(F.lit(0)))),
+        F.when(is_root, own)
+        .otherwise(F.try_divide(value, ancestor_value(stop))),
+    )
+
+
 def _maybe_shuffle_hash(nodes: DataFrame, df: DataFrame) -> DataFrame:
     """Apply the shuffle-hash hint only while the build side provably
     fits the CURRENT heap (_shj_build_row_cap); beyond it, no hint —
@@ -535,7 +564,6 @@ def with_ratio_of_parent(
     walk_up: bool = True,
     persist_input: bool = True,
     carry_cols: Sequence[str] | None = None,
-    collect_threshold: int = 0,
     monotone: bool = False,
     depth_id_join: bool = False,
     root_id: int = -1,
@@ -593,61 +621,6 @@ def with_ratio_of_parent(
     """
     column_name = column_name or f"{base_column} ratio of parent"
     pc = list(partition_cols)
-
-    if collect_threshold and walk_up:
-        # adaptive small-input path (single profiles are ~10^4 nodes):
-        # collect the slim projection, walk up in memory, broadcast the
-        # (key, base) table back — one job + one broadcast join instead
-        # of the explode/join/agg pipeline (same semantics, verified by
-        # the property tests against both paths)
-        slim = df.select(*pc, "id", F.col(callpath_col).alias("__p"),
-                         F.col(base_column).cast("double").alias("__v"))
-        # one bounded job instead of count()+collect(): fetch at most
-        # threshold+1 rows — overflow means "too big, go distributed"
-        rows = slim.limit(collect_threshold + 1).collect()
-        if len(rows) > collect_threshold:
-            rows = None
-        if rows is not None:
-            by_path: dict = {}
-            for r in rows:
-                by_path[(tuple(r[c] for c in pc), tuple(r["__p"]))] = r["__v"]
-            out_rows = []
-            _MISSING = object()
-            for r in rows:
-                key = tuple(r[c] for c in pc)
-                path = tuple(r["__p"])
-                v = r["__v"]
-                anc = path
-                base = None
-                while True:
-                    anc = anc[:-1] if anc else ()
-                    b = by_path.get((key, anc), _MISSING)
-                    if b is _MISSING:
-                        # no row for this prefix: keep walking
-                        if anc == ():
-                            base = None
-                            break
-                        continue
-                    if b is None:
-                        # an EXISTING ancestor without the metric stops
-                        # the reference's `base < value` loop (NaN < x is
-                        # False) and yields NaN — mirror with NULL
-                        base = None
-                        break
-                    base = b
-                    if v is None or b >= v or anc == ():
-                        break
-                ratio = (None if base in (None, 0) or v is None
-                         else v / base)
-                out_rows.append((*key, r["id"], ratio))
-            from pyspark.sql import types as T
-
-            fields = [df.schema[c] for c in pc] + [
-                T.StructField("id", T.LongType()),
-                T.StructField(column_name, T.DoubleType())]
-            ratios = df.sparkSession.createDataFrame(
-                out_rows, T.StructType(fields))
-            return df.join(F.broadcast(ratios), on=[*pc, "id"], how="left")
 
     if walk_up and monotone:
         # caller-asserted: base_column is monotone NON-DECREASING up
@@ -865,31 +838,6 @@ def with_ratio_of_parent(
         F.try_divide(F.col(base_column).cast("double"),
                      F.col("__base").cast("double")),
     ).drop("__base")
-
-
-def fix_root_measurement(
-    df: DataFrame,
-    column_pairs: Sequence[tuple[str, str]],
-    callpath_col: str = "callpath",
-) -> DataFrame:
-    """Copy the root row's (I) value over its (E) value for each pair.
-
-    Reference: hpctoolkit_dataframe.py:291-305 — the root has no exclusive
-    samples, so ``X (E)`` at the root is patched from ``X (I)``.
-    ``column_pairs`` is [(exclusive_col, inclusive_col), ...].
-
-    One select, not a ``withColumn`` loop — each ``withColumn`` is a
-    full plan rebuild through Py4J and 11 of them cost ~0.25 s of pure
-    driver time per load.
-    """
-    sources = dict(column_pairs)
-    is_root = F.size(callpath_col) == 0
-    return df.select(*[
-        F.when(is_root, F.col(f"`{sources[c]}`"))
-        .otherwise(F.col(f"`{c}`")).alias(c)
-        if c in sources else F.col(f"`{c}`")
-        for c in df.columns
-    ])
 
 
 # ---------------------------------------------------------------------------
@@ -1118,8 +1066,11 @@ def merge_profiles(
     callpath twice (partial + final).  As group keys they cost nothing
     (same groups under the invariance contract) and the merge plans as
     a codegen HashAggregate; determinism improves too (no arbitrary
-    pick).  One shuffle on the callpath hash; aggregation is partial
-    map-side.
+    pick).  One shuffle, hashed on the callpath AND the location
+    columns; aggregation is partial map-side.  Nothing checks the
+    invariance contract: a callpath whose profiles disagree on a
+    location column comes out as one row per distinct location tuple
+    (duplicate callpath rows), not as one row with an arbitrary pick.
     """
     aggs = []
     for metric, kind in metric_combines.items():

@@ -4,9 +4,10 @@ Reference loader: hpctoolkit_dataframe/hpctoolkit_dataframe.py:154-216 —
 single-file, single-process, recursive DFS building a list of row dicts.
 Spark shape: ``spark.read.format("binaryFile")`` over a glob of
 experiment XMLs -> ``mapInPandas`` running a per-file parser that emits
-the flattened CCT (one row per node, callpath materialized), then
-finalize-formula application, root (E)<-(I) repair and ratio columns as
-declarative DataFrame transformations.  One experiment tree is ~10^4
+the flattened CCT (one row per node, callpath materialized, plus the raw
+values the ratio columns need at the node's ancestors) -> one narrow
+select: finalize formulas, root (E)<-(I) repair and both ratio columns.
+Building that plan starts no Spark job.  One experiment tree is ~10^4
 nodes, so per-file driver-side recursion inside the executor is cheap
 and the 100 TB case (millions of files) is embarrassingly parallel —
 each file parses independently in one task, no shuffle until analytics.
@@ -28,7 +29,7 @@ from __future__ import annotations
 import glob as _glob
 import os
 import xml.etree.ElementTree as ET
-from collections.abc import Iterator
+from collections.abc import Iterator, Sequence
 from pathlib import PurePosixPath
 
 import pandas as pd
@@ -36,7 +37,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..frame import CCTMetadata
+from ..frame import (_COMPACT_LOCATION_COLUMNS, _COMPACT_SUFFIXES,
+                     _HOT_PATH_SUFFIX, CCTMetadata,
+                     determine_percentage_column)
 from ..functions import formulas as _formulas
 from ..operators import cct as _cct
 
@@ -93,6 +96,7 @@ def parse_experiment_rows(
     *,
     max_depth: int | None = None,
     skip_callsite: bool = True,
+    ancestor_metric_ids: Sequence[int] = (),
 ) -> tuple[dict, list[dict]]:
     """Parse one experiment XML into (header, flat CCT row dicts).
 
@@ -100,6 +104,12 @@ def parse_experiment_rows(
     finalize formulas are applied later as Spark column expressions over
     these raw columns (the reference evaluates formulas over the raw
     per-node metric dict, hpctoolkit_dataframe.py:218-231).
+
+    For each id in ``ancestor_metric_ids`` a row also carries
+    ``__anc_<metric_id>``: that raw metric at the row's ancestors, root
+    first, then ``callpath[:-1]`` (the root row's list is empty).  The
+    parser holds the whole tree, so the ratio columns' walk-up needs no
+    self-join later (``operators.cct.ancestor_ratio_columns``).
     """
     root = ET.fromstring(content)
     header = _parse_header(root)
@@ -110,8 +120,10 @@ def parse_experiment_rows(
     data = profile.find("./SecCallPathProfileData")
     rows: list[dict] = []
 
+    anc_keys = [(f"__anc_{mid}", f"__raw_{mid}") for mid in ancestor_metric_ids]
+
     def walk(element: ET.Element, location: dict | None, budget: int | None,
-             add_local: bool) -> None:
+             add_local: bool, chain: tuple) -> None:
         local: dict = {}
         children = []
         for child in element:
@@ -127,7 +139,10 @@ def parse_experiment_rows(
         if add_local:
             row = dict(location)
             row.update(local)
+            for anc, raw in anc_keys:
+                row[anc] = [a.get(raw) for a in chain]
             rows.append(row)
+            chain = (*chain, local)
         if budget is not None and budget <= 0:
             return
         for child in children:
@@ -140,7 +155,7 @@ def parse_experiment_rows(
             if skip_callsite and tag == "C":
                 # splice: children attach to this node's location; the
                 # callsite's own M values are dropped (:266-269)
-                walk(child, location, budget, add_local=False)
+                walk(child, location, budget, False, chain)
                 continue
             new_location = dict(location)
             attrib = child.attrib
@@ -163,9 +178,9 @@ def parse_experiment_rows(
             new_location["callpath"] = (*location["callpath"],
                                         new_location["id"])
             walk(child, new_location,
-                 None if budget is None else budget - 1, add_local=True)
+                 None if budget is None else budget - 1, True, chain)
 
-    walk(data, None, max_depth, True)
+    walk(data, None, max_depth, True, ())
     ids = [r["id"] for r in rows]
     assert len(ids) == len(set(ids)), f"{profile_id}: duplicate node ids"
     return header, rows
@@ -179,7 +194,8 @@ def _register_self_for_pickle_by_value() -> None:
     register_module_by_value(__name__)
 
 
-def _raw_schema(metric_ids: list[int]) -> T.StructType:
+def _raw_schema(metric_ids: list[int],
+                ancestor_metric_ids: Sequence[int] = ()) -> T.StructType:
     fields = [
         T.StructField("profile_id", T.StringType()),
         T.StructField("id", T.LongType()),
@@ -194,6 +210,8 @@ def _raw_schema(metric_ids: list[int]) -> T.StructType:
     ]
     fields += [T.StructField(f"__raw_{mid}", T.DoubleType())
                for mid in metric_ids]
+    fields += [T.StructField(f"__anc_{mid}", T.ArrayType(T.DoubleType()))
+               for mid in ancestor_metric_ids]
     return T.StructType(fields)
 
 
@@ -249,14 +267,22 @@ def load_experiments(
     if header is None:
         raise ValueError(f"no parseable experiment file in {path}: {errors}")
     metric_ids = sorted(header["metrics_by_id"])
-    schema = _raw_schema(metric_ids)
+    metric_names = [header["metrics_by_id"][mid] for mid in metric_ids]
+    pct = determine_percentage_column(metric_names)
+    pct_mid = metric_ids[metric_names.index(pct)]
+    pct_formula = header["formulas_by_id"].get(pct_mid)
+    anc_ids = []  # the raw metrics the ratio walk-up reads at ancestors
+    if add_percentage_columns:
+        anc_ids = (sorted(_formulas.referenced_metric_ids(pct_formula))
+                   if pct_formula is not None else [pct_mid])
+    schema = _raw_schema(metric_ids, anc_ids)
     columns = [f.name for f in schema.fields]
 
     def _rows_frame(content: bytes, file_path: str) -> pd.DataFrame | None:
         try:
             file_header, rows = parse_experiment_rows(
-                content, file_path,
-                max_depth=max_depth, skip_callsite=skip_callsite)
+                content, file_path, max_depth=max_depth,
+                skip_callsite=skip_callsite, ancestor_metric_ids=anc_ids)
             # enforce the documented same-metric-ids contract: padding /
             # dropping columns for a heterogeneous fleet file would
             # produce silently wrong rows (ADVICE r1)
@@ -353,50 +379,27 @@ def load_experiments(
         modules_by_id=header["modules_by_id"],
         files_by_id=header["files_by_id"],
         procedures_by_id=header["procedures_by_id"],
+        meaningful_columns={
+            "percentage": pct,
+            "hot_path": pct + _HOT_PATH_SUFFIX,
+            "compact": [pct + s for s in _COMPACT_SUFFIXES]
+            + _COMPACT_LOCATION_COLUMNS,
+        },
     )
-
-    df = finalize_metrics(raw, header, with_imag=with_imag)
-
-    from ..frame import determine_percentage_column, _HOT_PATH_SUFFIX, \
-        _COMPACT_SUFFIXES, _COMPACT_LOCATION_COLUMNS
-
-    metric_names = [header["metrics_by_id"][mid] for mid in metric_ids]
-    pct = determine_percentage_column(metric_names)
-    meta.meaningful_columns = {
-        "percentage": pct,
-        "hot_path": pct + _HOT_PATH_SUFFIX,
-        "compact": [pct + s for s in _COMPACT_SUFFIXES]
-        + _COMPACT_LOCATION_COLUMNS,
-    }
-
+    anc_cols = [f"__anc_{mid}" for mid in anc_ids]
+    df = finalize_metrics(raw, header, with_imag=with_imag, carry=anc_cols)
     if add_percentage_columns:
-        # the ratio steps branch the frame several times (root lookup,
-        # ancestor walk, final select) and on the DISTRIBUTED path each
-        # branch would re-run the binaryFile+mapInPandas parse;
-        # materialize the parsed rows once so every downstream pass
-        # reads them instead of re-parsing (cache() is not enough —
-        # substitution fails across self-join relation dedup, see
-        # CLAUDE.md).  The fast path already holds the rows in a local
-        # relation: re-scanning it is formula re-evaluation over ~10^4
-        # rows, far cheaper than the eager checkpoint action (~0.7 s).
-        if not fast_path:
-            df = df.localCheckpoint(eager=True)
-        df = _cct.with_ratio_of_total(
-            df, pct, pct + " ratio of total", partition_cols=["profile_id"])
-        df = _cct.with_ratio_of_parent(
-            df, pct, pct + " ratio of parent", partition_cols=["profile_id"],
-            collect_threshold=100_000)
-        # reference layout (:190-198, 354): metrics sorted by metric id,
-        # ratio columns right after their base, then location columns;
-        # rebuilt explicitly because the ratio joins move their keys
-        # (profile_id, id) to the front of the natural column order
-        imag_names = [c for c in df.columns if c.endswith(" (imag)")]
-        cols = list(metric_names)
-        idx = cols.index(pct) + 1
-        cols = cols[:idx] + [pct + " ratio of total",
-                             pct + " ratio of parent"] + cols[idx:]
-        cols += imag_names + LOCATION_COLUMNS + ["profile_id"]
-        df = df.select(*[F.col(f"`{c}`") for c in cols])
+        # reference layout (:190-198, 354): the ratio columns right
+        # after their base; the ancestor arrays are dropped here
+        total, parent = _ratio_columns(pct, pct_mid, pct_formula)
+        cols = []
+        for c in df.columns:
+            if c not in anc_cols:
+                cols.append(F.col(f"`{c}`"))
+            if c == pct:
+                cols += [total.alias(pct + " ratio of total"),
+                         parent.alias(pct + " ratio of parent")]
+        df = df.select(*cols)
     return df, meta
 
 
@@ -472,55 +475,74 @@ def union_heterogeneous(
     return out, metas
 
 
-# Compiled-formula cache: the Column pair depends only on the formula
-# text (metric references are $N ids resolved to __raw_N columns), and
-# building the ~20 nested expressions costs ~0.3 s of Py4J round trips
-# per load.  Keyed by the active SparkContext so a restarted JVM cannot
-# serve stale expression handles.
-_COMPILE_CACHE: dict[tuple[int, str], tuple] = {}
+# Compiled-expression cache: the Columns depend only on the formula
+# text (metric references are $N ids resolved to __raw_N / __anc_N
+# columns), and building the ~20 nested expressions costs ~0.3 s of Py4J
+# round trips per load.  Keyed by the active SparkContext so a restarted
+# JVM cannot serve stale expression handles.
+_COMPILE_CACHE: dict[tuple, tuple] = {}
 
 
-def _compiled_raw_formula(frm: str):
+def _session_cached(key: tuple, build):
     from pyspark import SparkContext
 
     sc = SparkContext._active_spark_context
     # applicationId, not id(): object ids are reused after GC, so a new
     # context could alias stale Py4J expression handles
-    key = (sc.applicationId if sc is not None else None, frm)
+    key = (sc.applicationId if sc is not None else None, *key)
     hit = _COMPILE_CACHE.get(key)
     if hit is None:
-        hit = _formulas.compile_formula(
-            frm, lambda mid: F.col(f"__raw_{mid}"))
-        _COMPILE_CACHE[key] = hit
+        hit = _COMPILE_CACHE[key] = build()
     return hit
 
 
+def _compiled_raw_formula(frm: str):
+    return _session_cached(("raw", frm), lambda: _formulas.compile_formula(
+        frm, lambda mid: F.col(f"__raw_{mid}")))
+
+
+def _ratio_columns(pct: str, pct_mid: int, frm: str | None):
+    """(ratio of total, ratio of parent) of the elected column, from the
+    ``__anc_<id>`` arrays the parser emits.  The finalize formula is
+    resolved per ancestor index by the same ``compile_formula``."""
+    def at(k):
+        if frm is None:
+            return F.col(f"__anc_{pct_mid}")[k]
+        return _formulas.compile_formula(
+            frm, lambda mid: F.col(f"__anc_{mid}")[k])[0]
+
+    return _session_cached(
+        ("ratios", pct, pct_mid, frm),
+        lambda: _cct.ancestor_ratio_columns(
+            F.col(f"`{pct}`"), at, F.size("callpath")))
+
+
 def finalize_metrics(raw: DataFrame, header: dict, *,
-                     with_imag: bool = False) -> DataFrame:
+                     with_imag: bool = False,
+                     carry: Sequence[str] = ()) -> DataFrame:
     """Apply finalize formulas + root repair, order columns like the
-    reference (metrics sorted by id, then location columns; :190-198)."""
-    metric_ids = sorted(header["metrics_by_id"])
-    exprs: list = []
+    reference (metrics sorted by id, then location columns; :190-198).
+    ``carry`` names raw columns kept after those, unchanged."""
+    values: dict = {}
     imag_exprs: list = []
-    for mid in metric_ids:
+    for mid in sorted(header["metrics_by_id"]):
         name = header["metrics_by_id"][mid]
         frm = header["formulas_by_id"].get(mid)
         if frm is None:
-            exprs.append(F.col(f"__raw_{mid}").alias(name))
+            values[name] = F.col(f"__raw_{mid}")
             continue
         re_, im_ = _compiled_raw_formula(frm)
-        exprs.append(re_.alias(name))
+        values[name] = re_
         if with_imag and im_ is not None:
             imag_exprs.append(im_.alias(f"{name} (imag)"))
-    out = raw.select(
+    # root (E) <- (I) repair (:291-305): the root has no exclusive
+    # samples, so its ``X (E)`` is patched from ``X (I)``
+    is_root = F.size("callpath") == 0
+    exprs = [
+        F.when(is_root, values[name[:-4] + " (I)"]).otherwise(v).alias(name)
+        if name.endswith(" (E)") and name[:-4] + " (I)" in values
+        else v.alias(name)
+        for name, v in values.items()]
+    return raw.select(
         *exprs, *imag_exprs,
-        *[F.col(f"`{c}`") for c in LOCATION_COLUMNS], "profile_id")
-    # root (E) <- (I) repair (:291-305)
-    pairs = []
-    names = set(header["metrics_by_id"].values())
-    for name in names:
-        if name.endswith(" (E)"):
-            sibling = name[: -len(" (E)")] + " (I)"
-            if sibling in names:
-                pairs.append((name, sibling))
-    return _cct.fix_root_measurement(out, pairs)
+        *[F.col(f"`{c}`") for c in LOCATION_COLUMNS], "profile_id", *carry)

@@ -12,3 +12,45 @@ def spark():
 SF_DIR = "/root/testdata/sf0.001"
 EXPERIMENT1 = "/root/reference/test/data/experiment1.xml"
 EXPERIMENT2 = "/root/reference/test/data/experiment2.xml"
+
+
+def cct_xml(values, metrics=((2, "T:Mean (I)", None),), tags=None):
+    """A small experiment XML for a calling-context tree.
+
+    ``values`` maps an XML path (tuple of node ids, root ``()``) to
+    ``{metric_id: raw value}``; a metric that is absent or None has no
+    ``M`` element.  ``metrics`` is the MetricTable as (id, name,
+    finalize formula or None).  ``tags`` maps a path to its element tag
+    (default ``PF``; ``C`` call sites are spliced out by the loader)."""
+    tags = tags or {}
+    kids: dict = {}
+    for p in values:
+        if p:
+            kids.setdefault(p[:-1], []).append(p)
+
+    def ms(p):
+        return "".join(f'<M n="{mid}" v="{v!r}"/>'
+                       for mid, v in values[p].items() if v is not None)
+
+    def node(p):
+        tag = tags.get(p, "PF")
+        attrs = f'i="{p[-1]}" l="{len(p)}"' + (' n="1"' if tag == "PF" else "")
+        body = ms(p) + "".join(node(c) for c in sorted(kids.get(p, ())))
+        return f"<{tag} {attrs}>{body}</{tag}>"
+
+    table = "".join(
+        f'<Metric i="{mid}" n="{name}" v="raw" t="inclusive">'
+        + (f'<MetricFormula t="finalize" frm="{frm}"/>' if frm else "")
+        + "</Metric>" for mid, name, frm in metrics)
+    tree = ms(()) + "".join(node(c) for c in sorted(kids.get((), ())))
+    return f"""<?xml version="1.0"?>
+<HPCToolkitExperiment version="2.1">
+<SecCallPathProfile i="0" n="t">
+<SecHeader>
+  <MetricTable>{table}</MetricTable>
+  <LoadModuleTable/><FileTable/>
+  <ProcedureTable><Procedure i="1" n="main"/></ProcedureTable>
+</SecHeader>
+<SecCallPathProfileData>{tree}</SecCallPathProfileData>
+</SecCallPathProfile>
+</HPCToolkitExperiment>"""

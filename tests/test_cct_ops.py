@@ -92,26 +92,32 @@ def test_at_paths_prefix_suffix(tree):
     assert cct.at_paths(tree).count() == 10
 
 
-def test_ratio_of_parent_null_ancestor_stops_walk(spark):
+def test_ratio_of_parent_null_ancestor_stops_walk(spark, tmp_path):
     """Reference `base < value` loop: an existing ancestor whose value is
     NaN stops the walk (NaN < x is False) and yields NaN — NOT a
-    continued walk to a shallower non-null ancestor (ADVICE r1)."""
-    rows = [
-        ("p1", -1, [], 10.0),
-        ("p1", 1, [1], None),        # no metric at this ancestor
-        ("p1", 2, [1, 2], 5.0),
-        ("p1", 3, [1, 2, 3], 4.0),
-    ]
+    continued walk to a shallower non-null ancestor (ADVICE r1).  Pinned
+    on the explode walk-up and on the loader's ancestor-array walk-up."""
+    from hpctoolkit_dataframe_spark.sources.hpctoolkit_xml import \
+        load_experiments
+
+    from .conftest import cct_xml
+
+    values = {(): 10.0, (1,): None, (1, 2): 5.0, (1, 2, 3): 4.0}
     df = spark.createDataFrame(
-        rows, "profile_id string, id long, callpath array<long>, value double")
-    for threshold in (0, 1000):  # distributed path and collect path
-        out = {r["id"]: r["r"] for r in cct.with_ratio_of_parent(
-            df, "value", "r", partition_cols=["profile_id"],
-            collect_threshold=threshold).collect()}
-        assert out[-1] == 1.0
-        assert out[1] is None                      # own value null
-        assert out[2] is None, threshold           # parent null -> stop
-        assert out[3] == pytest.approx(0.8), threshold  # 4/5, never sees 1
+        [("p1", p[-1] if p else -1, list(p), v) for p, v in values.items()],
+        "profile_id string, id long, callpath array<long>, value double")
+    explode = cct.with_ratio_of_parent(
+        df, "value", "r", partition_cols=["profile_id"])
+    xml = tmp_path / "null_ancestor.xml"
+    xml.write_text(cct_xml({p: {2: v} for p, v in values.items()}))
+    loaded, _ = load_experiments(spark, str(xml))
+    for name, frame, col in (("explode", explode, "r"),
+                             ("loader", loaded, "T:Mean (I) ratio of parent")):
+        out = {r["id"]: r[col] for r in frame.collect()}
+        assert out[-1] == 1.0, name
+        assert out[1] is None, name                      # own value null
+        assert out[2] is None, name                      # parent null -> stop
+        assert out[3] == pytest.approx(0.8), name  # 4/5, never sees 1
 
 
 def test_fragment_contiguity_semantics(spark):

@@ -8,12 +8,17 @@ semantics directly from hpctoolkit_dataframe.py:79-128 (filters) and
 """
 
 import math
+import os
+import tempfile
 
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from hpctoolkit_dataframe_spark.operators import cct
+from hpctoolkit_dataframe_spark.sources.hpctoolkit_xml import load_experiments
+
+from .conftest import cct_xml
 
 
 @st.composite
@@ -49,9 +54,11 @@ def _walk_up_expected(values, path):
 
 @settings(max_examples=5, deadline=None,
           suppress_health_check=[HealthCheck.too_slow])
-@given(trees=st.lists(tree(), min_size=1, max_size=6),
-       fast_path=st.booleans())
-def test_walk_up_matches_python_reference(spark, trees, fast_path):
+@given(trees=st.lists(tree(), min_size=1, max_size=6))
+def test_walk_up_matches_python_reference(spark, trees):
+    """Both walk-ups against the Python one: the explode path over a
+    multi-profile frame, and the loader's ancestor arrays over the same
+    trees written as experiment XMLs."""
     rows = []
     for i, t in enumerate(trees):
         rows.extend(_rows(f"p{i}", t))
@@ -59,19 +66,30 @@ def test_walk_up_matches_python_reference(spark, trees, fast_path):
         rows, "profile_id string, id long, callpath array<long>, value double")
     out = cct.with_ratio_of_parent(
         df, "value", "ratio", partition_cols=["profile_id"],
-        persist_input=False,
-        collect_threshold=1_000_000 if fast_path else 0).collect()
-    got = {(r["profile_id"], tuple(r["callpath"])): r["ratio"] for r in out}
-    for i, t in enumerate(trees):
-        for path, v in t.items():
-            key = (f"p{i}", path)
-            exp = (1.0 if v else None) if path == () \
-                else _walk_up_expected(t, path)
-            if exp is None:
-                assert got[key] is None, (key, got[key])
-            else:
-                assert got[key] == pytest.approx(exp, rel=1e-12), (
-                    key, exp, got[key])
+        persist_input=False).collect()
+    explode = {(r["profile_id"], tuple(r["callpath"])): r["ratio"]
+               for r in out}
+    with tempfile.TemporaryDirectory() as d:
+        paths = []
+        for i, t in enumerate(trees):
+            paths.append(os.path.join(d, f"p{i}.xml"))
+            with open(paths[-1], "w") as f:
+                f.write(cct_xml({p: {2: v} for p, v in t.items()}))
+        loaded, _ = load_experiments(spark, paths)
+        out = loaded.collect()
+    loader = {(os.path.basename(r["profile_id"])[:-4], tuple(r["callpath"])):
+              r["T:Mean (I) ratio of parent"] for r in out}
+    for got in (explode, loader):
+        for i, t in enumerate(trees):
+            for path, v in t.items():
+                key = (f"p{i}", path)
+                exp = (1.0 if v else None) if path == () \
+                    else _walk_up_expected(t, path)
+                if exp is None:
+                    assert got[key] is None, (key, got[key])
+                else:
+                    assert got[key] == pytest.approx(exp, rel=1e-12), (
+                        key, exp, got[key])
 
 
 @settings(max_examples=5, deadline=None,
