@@ -293,15 +293,9 @@ FROM cct c LEFT JOIN best b ON b.id = c.id""",
 def cct_ratio_of_parent_walkup(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = build_cct(spark, sf_dir).withColumn(
         "avg_leaf", F.col("value").cast("double") / F.col("leaves").cast("double"))
-    # depth_id_join: the rollup CCT satisfies the operator's (depth, id)
-    # addressing preconditions by construction (id IS the level key with
-    # per-level offsets, root id -1) — the exploded ancestors shuffle two
-    # BIGINTs instead of prefix arrays, mirroring the oracle's r9 anc
-    # rewrite (guide §2.3)
     df = ops.with_ratio_of_parent(df, "avg_leaf", "ratio",
                                   carry_cols=("depth", "avg_leaf"),
-                                  persist_input=False,  # build is memoized
-                                  depth_id_join=True)
+                                  persist_input=False)  # build is memoized
     return df.select("id", "depth", "avg_leaf", "ratio")
 
 

@@ -146,47 +146,6 @@ def test_fragment_contiguity_semantics(spark):
         ops.at_paths(df, (3, 17))
 
 
-def test_broadcast_scan_equals_explode_walkup(spark, tree, monkeypatch):
-    """The r9 zero-shuffle broadcast-scan walk-up must reproduce the
-    ancestor-explode path bit-for-bit — on the non-monotone sf0.001
-    CCT (real tree, avg-leaf metric) AND on the synthetic tree with
-    per-profile partitioning and the skip-smaller-ancestor branch."""
-    from hpctoolkit_dataframe_spark.queries.cct_tpch import build_cct
-
-    df = build_cct(spark, "/root/testdata/sf0.001").withColumn(
-        "avg_leaf", F.col("value").cast("double") / F.col("leaves"))
-    monkeypatch.setattr(cct, "WALKUP_BCAST_ROWS_PER_HEAP_GIB", 8_000_000)
-    bcast = cct.with_ratio_of_parent(
-        df, "avg_leaf", "r", carry_cols=("depth",), persist_input=False)
-    monkeypatch.setattr(cct, "WALKUP_BCAST_ROWS_PER_HEAP_GIB", 0)
-    explode = cct.with_ratio_of_parent(
-        df, "avg_leaf", "r", carry_cols=("depth",), persist_input=False)
-    a = {r["id"]: (r["depth"], r["r"]) for r in bcast.collect()}
-    b = {r["id"]: (r["depth"], r["r"]) for r in explode.collect()}
-    assert a == b and len(a) > 100
-    # per-profile isolation + carry=None join-back shape, both paths
-    monkeypatch.setattr(cct, "WALKUP_BCAST_ROWS_PER_HEAP_GIB", 8_000_000)
-    p_b = cct.with_ratio_of_parent(
-        tree, "value", "r", partition_cols=["profile_id"]).collect()
-    monkeypatch.setattr(cct, "WALKUP_BCAST_ROWS_PER_HEAP_GIB", 0)
-    p_e = cct.with_ratio_of_parent(
-        tree, "value", "r", partition_cols=["profile_id"]).collect()
-    key = lambda rows: sorted((r["profile_id"], r["id"], r["r"])
-                              for r in rows)
-    assert key(p_b) == key(p_e)
-
-
-def test_walkup_bcast_cap_disabled_at_default(spark, monkeypatch):
-    """ADVICE r9 #1: with the knob at its default 0 the row cap must be
-    0 (not max(1, ...) = 1), so no frame — not even 1 row — can slip
-    into the 'disabled' broadcast-scan path, and the walk-up branch
-    skips its sizing count() entirely."""
-    monkeypatch.setattr(cct, "WALKUP_BCAST_ROWS_PER_HEAP_GIB", 0)
-    assert cct._walkup_bcast_row_cap(spark) == 0
-    monkeypatch.setattr(cct, "WALKUP_BCAST_ROWS_PER_HEAP_GIB", 8_000_000)
-    assert cct._walkup_bcast_row_cap(spark) > 0
-
-
 def test_monotone_hint_equals_walkup_explode(spark):
     """The monotone fast path (one parent join) must return exactly the
     explode/walk-up result when the metric really is monotone — the
@@ -204,33 +163,47 @@ def test_monotone_hint_equals_walkup_explode(spark):
     assert a == b
 
 
-def test_depth_id_join_equals_walkup_explode(spark, tree):
-    """The r13 (depth, id) ancestor addressing must reproduce the
-    prefix-array join bit-for-bit — on the non-monotone sf0.001 CCT
-    (real tree, avg-leaf metric) AND on the synthetic per-profile tree
+def _assert_walk_up(got, values):
+    """``got``: path -> ratio; ``values``: path -> value (one tree)."""
+    from .test_properties import _walk_up_expected
+
+    assert got.keys() == values.keys()
+    for path, r in got.items():
+        exp = _walk_up_expected(values, path)
+        assert r == (None if exp is None else pytest.approx(exp, rel=1e-12)), \
+            (path, exp, r)
+
+
+def test_walkup_explode_matches_python_reference(spark, tree):
+    """The ancestor explode against the Python walk-up — on the
+    non-monotone sf0.001 CCT (real tree, avg-leaf metric, slim carry
+    shape) AND on the synthetic per-profile tree (join-back shape),
     including the skip-smaller-ancestor and NULL-ancestor branches."""
     from hpctoolkit_dataframe_spark.queries.cct_tpch import build_cct
 
     df = build_cct(spark, "/root/testdata/sf0.001").withColumn(
         "avg_leaf", F.col("value").cast("double") / F.col("leaves"))
-    di = cct.with_ratio_of_parent(
-        df, "avg_leaf", "r", carry_cols=("depth",), persist_input=False,
-        depth_id_join=True)
-    arr = cct.with_ratio_of_parent(
+    rows = df.select("id", "callpath", "avg_leaf").collect()
+    paths = {r["id"]: tuple(r["callpath"]) for r in rows}
+    values = {tuple(r["callpath"]): r["avg_leaf"] for r in rows}
+    assert len(values) > 100
+    # the walk really skips smaller parents somewhere in this tree
+    assert any(values[p[:-1]] < v for p, v in values.items() if p)
+    out = cct.with_ratio_of_parent(
         df, "avg_leaf", "r", carry_cols=("depth",), persist_input=False)
-    a = {r["id"]: (r["depth"], r["r"]) for r in di.collect()}
-    b = {r["id"]: (r["depth"], r["r"]) for r in arr.collect()}
-    assert a == b and len(a) > 100
-    # per-profile isolation + carry=None join-back shape, both paths
-    p_d = cct.with_ratio_of_parent(
-        tree, "value", "r", partition_cols=["profile_id"],
-        depth_id_join=True).collect()
-    p_a = cct.with_ratio_of_parent(
+    got = {}
+    for r in out.collect():
+        assert r["depth"] == len(paths[r["id"]])
+        got[paths[r["id"]]] = r["r"]
+    _assert_walk_up(got, values)
+    # per-profile isolation: p2 reuses p1's ids with other values
+    out = cct.with_ratio_of_parent(
         tree, "value", "r", partition_cols=["profile_id"]).collect()
-    key = lambda rows: sorted((r["profile_id"], r["id"], r["r"])
-                              for r in rows)
-    assert key(p_d) == key(p_a)
-    # NULL-metric ancestor stops the walk identically in both paths
+    for p in ("p1", "p2"):
+        mine = [r for r in out if r["profile_id"] == p]
+        _assert_walk_up({tuple(r["callpath"]): r["r"] for r in mine},
+                        {tuple(r["callpath"]): r["value"] for r in mine})
+    # a NULL-metric ancestor stops the walk
     rows = [
         ("p1", -1, [], 10.0),
         ("p1", 1, [1], None),
@@ -240,12 +213,73 @@ def test_depth_id_join_equals_walkup_explode(spark, tree):
     ndf = spark.createDataFrame(
         rows, "profile_id string, id long, callpath array<long>, value double")
     out = {r["id"]: r["r"] for r in cct.with_ratio_of_parent(
-        ndf, "value", "r", partition_cols=["profile_id"],
-        depth_id_join=True).collect()}
+        ndf, "value", "r", partition_cols=["profile_id"]).collect()}
     assert out[-1] == 1.0
     assert out[1] is None
     assert out[2] is None
     assert out[3] == pytest.approx(0.8)
+
+
+def test_walkup_root_matched_by_depth_not_id(spark):
+    """The root is the depth-0 ancestor whatever its id: a root with
+    id 0 (not the conventional -1) still resolves to 1.0 and still
+    stops the walk of a node larger than every other ancestor; and a
+    depth-1 node with id 0 under a -1 root is an ordinary ancestor."""
+    rows = [
+        ("a", 0, [], 10.0),
+        ("a", 1, [1], 5.0),
+        ("a", 2, [1, 2], 99.0),    # above 5: the walk ends at the root
+        ("a", 3, [1, 2, 3], 1.0),
+        ("b", -1, [], 10.0),
+        ("b", 0, [0], 40.0),
+        ("b", 5, [0, 5], 30.0),    # parent 0 (40) stops the walk
+    ]
+    df = spark.createDataFrame(
+        rows, "profile_id string, id long, callpath array<long>, value double")
+    for carry in (None, ("value",)):
+        out = {(r["profile_id"], r["id"]): r["r"]
+               for r in cct.with_ratio_of_parent(
+                   df, "value", "r", partition_cols=["profile_id"],
+                   carry_cols=carry).collect()}
+        assert out == {
+            ("a", 0): 1.0, ("a", 1): 0.5, ("a", 2): pytest.approx(9.9),
+            ("a", 3): pytest.approx(1 / 99),
+            ("b", -1): 1.0, ("b", 0): 4.0, ("b", 5): 0.75,
+        }, carry
+
+
+def test_walkup_duplicate_key_raises_at_action(spark, monkeypatch):
+    """Two rows on one (partition, depth, id) key break the walk-up's
+    input contract: the action raises, naming the key, instead of
+    feeding both rows into the deepest-stopper aggregate; building the
+    plan starts no Spark job."""
+    rows = [
+        ("p", -1, [], 10.0),
+        ("p", 1, [1], 5.0),
+        ("p", 1, [1], 7.0),
+        ("p", 2, [1, 2], 6.0),
+    ]
+    df = spark.createDataFrame(
+        rows, "profile_id string, id long, callpath array<long>, value double")
+    # the shuffle-hash size gate counts the input (a job of its own, not
+    # the check's); stub it out so the probe sees only the walk-up plan
+    monkeypatch.setattr(cct, "_maybe_shuffle_hash", lambda nodes, df: nodes)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = "walkup-check-starts-no-job"
+    sc.setJobGroup(group, "with_ratio_of_parent plan building")
+    try:
+        out = cct.with_ratio_of_parent(
+            df, "value", "r", partition_cols=["profile_id"],
+            persist_input=False)
+        assert tracker.getJobIdsForGroup(group) == []
+        with pytest.raises(Exception, match="2 rows share depth 1 and id 1"):
+            out.collect()
+        assert tracker.getJobIdsForGroup(group)  # the probe works
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
 
 
 def test_deepest_aggregate_maxby_semantics(spark):

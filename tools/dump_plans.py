@@ -70,19 +70,18 @@ SELECTION = {
         "Monotone walk-up short-circuit (r7): the rollup-sum metric"
         " provably stops the walk at the immediate parent, so the plan"
         " is ONE slim parent self-join (shuffle-hash) — no explode, no"
-        " aggregate.  The general non-monotone path (explode to"
-        " ancestor prefixes, shuffle-hash join, max-struct deepest"
-        " stopper) is cct_ratio_of_parent_walkup's plan."),
+        " aggregate.  The general non-monotone path (ancestor explode,"
+        " (depth, id) join, max_by deepest stopper) is"
+        " cct_ratio_of_parent_walkup's plan."),
     "cct_ratio_of_parent_walkup": (
-        "Ancestor walk-up, general path: explode to ancestor prefixes,"
-        " shuffle-hash join against the node table (SHJ->SMJ past the"
-        " heap-scaled build cap), max-struct deepest stopper, join-"
-        " back.  The r9 broadcast-scan variant (packed path-hash map +"
-        " searchsorted mapInPandas scan) is retained opt-in via"
-        " SPARK_GRAFT_WALKUP_BCAST_ROWS_PER_HEAP_GIB; a quiet-box"
-        " matched A/B showed explode >= scan at every scale and the"
-        " scan's driver-assembled map caps at driver heap — see"
-        " PERF.md r9 re-adjudication."),
+        "Ancestor walk-up, general path: explode each node to its"
+        " ancestor depths, address each ancestor by the BIGINT pair"
+        " (depth, callpath[depth]) (the root as depth 0), shuffle-hash"
+        " join against the node table (SHJ->SMJ past the heap-scaled"
+        " build cap), max_by deepest stopper.  The node table is"
+        " aggregated on the join key to reject duplicate keys; that"
+        " aggregate's exchange is the join's, so it adds none.  No"
+        " Python stage."),
     "cct_merge_profiles": (
         "Multi-profile merge: ONE grouping-sets pass builds all 3"
         " per-profile trees (no per-profile rescan; p rides every"

@@ -38,10 +38,6 @@ ARROW_OK = {
     "semantic_decontaminate",  # broadcast-bench int64 GEMM argmax
                                # (mapInPandas; r8 — replaced the
                                # crossJoin + interpreted per-pair dot)
-    "cct_ratio_of_parent_walkup",  # opt-in broadcast-scan variant
-                                   # (SPARK_GRAFT_WALKUP_BCAST_...):
-                                   # 2 mapInPandas stages when enabled;
-                                   # default explode plan has none
     # r13 exact-int64 vector kernels (_veckernel, VERDICT r12 #1): the
     # interpreted transform/zip_with/aggregate distance lambdas became
     # numpy int64 GEMM/argmin stages — bit-identical arithmetic,
