@@ -42,9 +42,9 @@ def has_prefix(prefix: Sequence[int], callpath: Column | str = "callpath") -> Co
 
     For the common string-column case the predicate is built as ONE
     ``F.expr`` (a single Py4J round trip, parsed JVM-side) instead of
-    2+2L driver-side Column constructions: hot_path calls this every
-    descent iteration with a growing prefix, and the O(depth^2) Py4J
-    chatter was ~0.4 s of the xml_load_hot_path floor (r7 profile)."""
+    2+2L driver-side Column constructions: a driver-side descent that
+    called this once per depth spent ~0.4 s of the xml_load_hot_path
+    floor on that Py4J chatter (r7 profile)."""
     if not prefix:
         return F.lit(True)
     n = len(prefix)

@@ -445,7 +445,6 @@ def hot_path(
     threshold: float = 0.05,
     callpath_col: str = "callpath",
     max_iters: int = 64,
-    collect_threshold: int = 100_000,
 ) -> DataFrame:
     """Greedy hottest-descendant chain.
 
@@ -454,79 +453,13 @@ def hot_path(
     child with the max ``base_column`` value, and stop when there are no
     children or the hottest child's value drops below ``threshold`` (the
     below-threshold child is NOT included; the starting path always is).
-
-    Spark plan: one slim projection (value, id, depth, parent-prefix
-    test) cached once; each descent step is a tiny ``max_by`` aggregate
-    over the current node's children.  The loop runs at most tree-depth
-    times (<= ~25 in fixtures) and each job is a narrow filter+agg on the
-    cached slim frame, so driver orchestration cost is bounded and no
-    full collect ever happens.  Ties break on smallest id (the reference
-    takes the first row in DFS preorder via ``idxmax``; by-id is the
-    deterministic analogue).
+    At most ``max_iters`` paths are appended.  The whole frame is one
+    tree: this is :func:`hot_paths` from ``callpath``, which documents
+    the plan and the rules for ties, NULLs and the anchor.
     """
-    slim = df.select(
-        F.col("id").alias("__id"),
-        F.col(callpath_col).alias("__path"),
-        F.col(base_column).cast("double").alias("__value"),
-    )
-    current = tuple(int(x) for x in callpath)
-    chain: list[tuple[int, ...]] = []
-    # probe with ONE job: limit(threshold+1) returns the whole frame iff
-    # it fits (and only then do we trust the rows), so the small-tree
-    # case costs a single action instead of count()+collect()
-    probe = slim.limit(collect_threshold + 1).collect()
-    if len(probe) <= collect_threshold:
-        # small tree (one profile is ~10^4 nodes): the 3-column
-        # projection is already in memory and the descent runs locally —
-        # tree-depth Spark jobs collapse into one
-        by_parent: dict[tuple, list] = {}
-        for r in probe:
-            p = tuple(r["__path"])
-            by_parent.setdefault(p[:-1] if p else None, []).append(
-                (r["__value"], r["__id"], p))
-        for _ in range(max_iters):
-            chain.append(current)
-            children = [c for c in by_parent.get(current, ())
-                        if len(c[2]) == len(current) + 1]
-            if not children:
-                break
-            value, _, path = max(
-                children, key=lambda c: (c[0] if c[0] is not None
-                                         else float("-inf"), -c[1]))
-            if value is None or value < threshold:
-                break
-            current = path
-        preds = None
-        for p in chain:
-            pred = ((F.size(callpath_col) == len(p))
-                    & cp.has_prefix(p, callpath_col))
-            preds = pred if preds is None else (preds | pred)
-        return df.filter(preds)
-    del probe  # arbitrary subset — unusable; descend iteratively
-    slim = slim.cache()
-    try:
-        for _ in range(max_iters):
-            chain.append(current)
-            children = slim.filter(
-                (F.size("__path") == len(current) + 1)
-                & cp.has_prefix(current, "__path")
-            )
-            top = children.orderBy(
-                F.col("__value").desc(), F.col("__id").asc()
-            ).limit(1).collect()
-            if not top:
-                break
-            row = top[0]
-            if row["__value"] is None or row["__value"] < threshold:
-                break
-            current = tuple(row["__path"])
-        preds = None
-        for p in chain:
-            pred = (F.size(callpath_col) == len(p)) & cp.has_prefix(p, callpath_col)
-            preds = pred if preds is None else (preds | pred)
-        return df.filter(preds)
-    finally:
-        slim.unpersist()
+    return hot_paths(df, base_column, threshold=threshold,
+                     callpath_col=callpath_col,
+                     max_depth=len(callpath) + max_iters - 1, start=callpath)
 
 
 def hot_paths(
@@ -536,67 +469,71 @@ def hot_paths(
     threshold: float = 0.05,
     callpath_col: str = "callpath",
     max_depth: int = 64,
+    start: Sequence[int] = (),
 ) -> DataFrame:
-    """Greedy hot-path chains for EVERY profile in one batch job set —
-    the fleet-scale variant of :func:`hot_path` (same per-profile
-    semantics, reference hpctoolkit_dataframe.py:403-428) with no
-    per-profile driver loop.
+    """Greedy hot-path chain of EVERY partition (profile), from the
+    ``start`` path (the root by default) down to at most ``max_depth``:
+    :func:`hot_path`'s semantics per partition, as one lazy plan.  The
+    call starts no Spark job; the result runs as one action that reads
+    ``df`` once, and its rows (``df``'s columns) come out in depth order.
 
-    Plan (r12): materialize the qualifying rank-1 edges once (one
-    window; a node qualifies iff it is its parent's hottest child AND
-    clears the threshold — a SMALL set, bounded by how many nodes can
-    hold >= threshold of the root), then decide chain membership in
-    ONE pass: a node is on its profile's chain iff EVERY element of
-    its callpath is a qualifying edge (induction on the greedy
-    descent: depth-1 nodes descend from the root iff they qualify;
-    a deeper node is reached iff its parent was reached and it
-    qualifies).  The former shape descended level-by-level with an
-    eager localCheckpoint + isEmpty driver round trip per depth —
-    ~2 jobs x tree depth of pure scheduling over frontiers of <= one
-    row per profile; this is a fixed 3-stage plan at any depth.
-    Output: the chain rows (full input columns), unchanged.
+    1. The rows under ``start`` are ranked by :func:`hot_edges`: one
+       window per (partition, depth, parent id), hottest first, ties on
+       the smallest id, NULL values last.
+    2. Kept: the anchor (the ``start`` row, alone in its window) and
+       every rank-1 child whose value is ``>= threshold``.  A NULL never
+       clears the threshold, so a NULL hottest child stops the walk.
+    3. The kept rows are collected per partition, sorted by depth, and
+       walked once by ``aggregate`` from the anchor: a row extends the
+       chain iff it is one level below the chain's tail and its parent
+       id is the tail's.  The root is the parent of the depth-1 rows by
+       depth; its own id is never read.  A partition without its anchor
+       row yields nothing.
+    4. The chain's rows are ``inline``d back out.
+
+    With ``partition_cols``, the rows are repartitioned on them once, so
+    the window and the group share one exchange.  A partition's group
+    holds at most one row per internal node under ``start``, the bound
+    reached at threshold 0; at a useful threshold it holds the few
+    nodes with at least that value.
     """
     pc = list(partition_cols)
-    slim = df.select(
-        *pc, F.col("id").alias("__id"),
-        F.col(callpath_col).alias("__path"),
-        F.col(base_column).cast("double").alias("__v"),
-    ).withColumn("__depth", F.size("__path"))
-    parent = F.when(F.size(cp.parent_path("__path")) > 0,
-                    F.element_at(cp.parent_path("__path"), -1)).otherwise(-1)
-    w = Window.partitionBy(*pc, parent.alias("__parent")).orderBy(
-        F.col("__v").desc(), F.col("__id").asc())
-    edges = (
-        slim.filter((F.col("__depth") > 0)
-                    & (F.col("__depth") <= max_depth))
-        .withColumn("__rk", F.row_number().over(w))
-        .filter((F.col("__rk") == 1) & (F.col("__v") >= threshold))
-        .select(*pc, "__id", "__path", "__depth")
-    )
-    # small (see above) and referenced by BOTH sides of the ancestor
-    # self-join below — relation dedup does not share work across
-    # self-joins (CLAUDE.md), so materialize once
-    edges = edges.localCheckpoint(eager=True)
+    anchor = len(start)
+    depth = F.size(callpath_col)
+    rows = df.filter((depth >= anchor) & (depth <= max_depth)
+                     & cp.has_prefix(start, callpath_col))
+    if pc:
+        rows = rows.repartition(*pc)
+    kept = hot_edges(rows, base_column, pc, callpath_col=callpath_col).filter(
+        (F.col("__rank") == 1)
+        & ((depth == anchor) | (F.col(base_column) >= threshold)))
+    node = F.struct(
+        depth.alias("d"), _parent_id(callpath_col).alias("p"),
+        F.when(depth > 0, F.element_at(callpath_col, -1)).cast("long")
+        .alias("t"),
+        F.struct(*[F.col(f"`{c}`") for c in df.columns]).alias("row"))
 
-    # ancestor check: explode each candidate's path (<= depth rows per
-    # qualifying node) and count how many path elements qualify; the
-    # node is on the chain iff all of them do.  Path ids are unique
-    # (tree path) and __id is unique per profile, so the join adds no
-    # multiplicity.
-    anc = edges.select(*pc, "__id", "__depth",
-                       F.explode("__path").alias("__anc"))
-    sids = edges.select(*pc, F.col("__id").alias("__anc"))
-    on_chain = (
-        anc.join(sids, [*pc, "__anc"], "inner")
-        .groupBy(*pc, "__id", "__depth")
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .filter(F.col("__n") == F.col("__depth"))
-        .select(*pc, "__id")
-    )
-    roots = slim.filter(F.col("__depth") == 0).select(*pc, "__id")
-    keys = roots.unionAll(on_chain).select(
-        *pc, F.col("__id").alias("id"))
-    return df.join(keys, on=[*pc, "id"], how="left_semi")
+    def step(chain, n):
+        links = (n["d"] == anchor) | (
+            (n["d"] == chain["d"] + 1) & n["p"].eqNullSafe(chain["t"]))
+        return F.when(links, F.struct(
+            n["d"].alias("d"), n["t"].alias("t"),
+            F.concat(chain["nodes"], F.array(n)).alias("nodes"),
+        )).otherwise(chain)
+
+    levels = F.array_sort(F.collect_list(node), lambda a, b: a["d"] - b["d"])
+    walk = F.aggregate("__levels", F.struct(
+        F.lit(-1).alias("d"), F.lit(None).cast("long").alias("t"),
+        F.slice("__levels", 1, 0).alias("nodes")), step)
+    return (kept.groupBy(*pc).agg(levels.alias("__levels")).select(
+        F.inline(F.transform(walk["nodes"], lambda n: n["row"]))))
+
+
+def _parent_id(callpath_col: str) -> Column:
+    """The parent's id from the callpath: NULL for the root's children
+    (and the root), so the root is matched by depth, whatever its id."""
+    return F.when(F.size(callpath_col) > 1,
+                  F.element_at(callpath_col, -2)).cast("long")
 
 
 def hot_edges(
@@ -606,25 +543,17 @@ def hot_edges(
     parent_id_col: str | None = None,
     callpath_col: str = "callpath",
 ) -> DataFrame:
-    """Rank-1 child per parent — the one-job building block for computing
-    hot paths over MANY profiles at once (no driver loop per profile).
+    """Rank-1 child per parent: df's columns plus ``__rank`` = 1 for the
+    hottest child of each parent (ties by id, NULL values last).
 
-    Returns df's columns plus ``__rank`` = 1 for the hottest child of each
-    parent (ties by id).  A driver- or SQL-side recursive walk over these
-    edges yields the same chain as :func:`hot_path`.
+    Without ``parent_id_col`` the window is keyed by (partition, depth,
+    parent id from the callpath), so the root ranks alone; this is the
+    ranking :func:`hot_paths` walks.
     """
-    parent = (
-        F.col(parent_id_col)
-        if parent_id_col
-        # ANSI-safe: element_at on an empty array (the root) would throw
-        else F.when(
-            F.size(cp.parent_path(callpath_col)) > 0,
-            F.element_at(cp.parent_path(callpath_col), -1),
-        )
-    )
-    w = Window.partitionBy(*partition_cols, parent.alias("__parent")).orderBy(
-        F.col(base_column).desc(), F.col("id").asc()
-    )
+    keys = ([F.col(parent_id_col)] if parent_id_col
+            else [F.size(callpath_col), _parent_id(callpath_col)])
+    w = Window.partitionBy(*partition_cols, *keys).orderBy(
+        F.col(base_column).desc(), F.col("id").asc())
     return df.withColumn("__rank", F.row_number().over(w))
 
 

@@ -519,16 +519,13 @@ hot AS (
 SELECT id, depth, value, ratio FROM hot""",
           doc="greedy hottest-descendant chain (reference O3 hot_path)")
 def cct_hot_path(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # the memoized build is already checkpointed; the ratio join on top
-    # of it is cheap to recompute for the descent + final chain filter
     df = ops.with_ratio_of_total(build_cct(spark, sf_dir), "value", "ratio")
     chain = ops.hot_path(df, "ratio", threshold=HOT_THRESHOLD)
     return chain.select("id", "depth", "value", "ratio")
 
 
-# same oracle as cct_hot_path — the fleet operator (rank-1 edges + level
-# frontier joins, no per-profile driver loop) must produce the identical
-# chain when the whole frame is one profile
+# same oracle as cct_hot_path — the fleet operator hot_path delegates to,
+# called directly: the identical chain when the whole frame is one profile
 @register("cct_hot_path_batch",
           doc="fleet-scale hot_paths variant under the same oracle")
 def cct_hot_path_batch(spark: SparkSession, sf_dir: str) -> DataFrame:

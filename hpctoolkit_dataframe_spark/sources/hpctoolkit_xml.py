@@ -391,10 +391,11 @@ def load_experiments(
     if add_percentage_columns:
         # reference layout (:190-198, 354): the ratio columns right
         # after their base; the ancestor arrays are dropped here
-        total, parent = _ratio_columns(pct, pct_mid, pct_formula)
+        ancestors, total, parent = _ratio_columns(pct, pct_mid, pct_formula)
+        df = df.withColumn("__anc", ancestors)
         cols = []
         for c in df.columns:
-            if c not in anc_cols:
+            if c not in (*anc_cols, "__anc"):
                 cols.append(F.col(f"`{c}`"))
             if c == pct:
                 cols += [total.alias(pct + " ratio of total"),
@@ -502,19 +503,23 @@ def _compiled_raw_formula(frm: str):
 
 
 def _ratio_columns(pct: str, pct_mid: int, frm: str | None):
-    """(ratio of total, ratio of parent) of the elected column, from the
-    ``__anc_<id>`` arrays the parser emits.  The finalize formula is
-    resolved per ancestor index by the same ``compile_formula``."""
-    def at(k):
-        if frm is None:
-            return F.col(f"__anc_{pct_mid}")[k]
-        return _formulas.compile_formula(
-            frm, lambda mid: F.col(f"__anc_{mid}")[k])[0]
+    """(ancestors, ratio of total, ratio of parent) of the elected
+    column.  ``ancestors`` is its finalized value at each ancestor, from
+    the ``__anc_<id>`` arrays the parser emits: the finalize formula is
+    compiled once, over their elements at each ancestor index (one per
+    callpath element).  The ratios read it as column ``__anc``, so the
+    array is computed once per row."""
+    def build():
+        ancestors = F.col(f"__anc_{pct_mid}")
+        if frm is not None:
+            ancestors = F.transform("callpath", lambda _, k: (
+                _formulas.compile_formula(
+                    frm, lambda mid: F.col(f"__anc_{mid}")[k])[0]))
+        return (ancestors, *_cct.ancestor_ratio_columns(
+            F.col(f"`{pct}`"), lambda k: F.col("__anc")[k],
+            F.size("callpath")))
 
-    return _session_cached(
-        ("ratios", pct, pct_mid, frm),
-        lambda: _cct.ancestor_ratio_columns(
-            F.col(f"`{pct}`"), at, F.size("callpath")))
+    return _session_cached(("ratios", pct, pct_mid, frm), build)
 
 
 def finalize_metrics(raw: DataFrame, header: dict, *,

@@ -54,3 +54,26 @@ def cct_xml(values, metrics=((2, "T:Mean (I)", None),), tags=None):
 <SecCallPathProfileData>{tree}</SecCallPathProfileData>
 </SecCallPathProfile>
 </HPCToolkitExperiment>"""
+
+
+def hot_path_walk(values, start=(), threshold=0.05, max_iters=64):
+    """The reference's greedy hot path (hpctoolkit_dataframe.py:403-428)
+    over ``values`` (path tuple -> value or None), in plain Python: append
+    the current path, descend to the hottest child, stop when there is
+    none or it is below ``threshold``.  The hottest child is the largest
+    value with NULLs last, ties on the smallest id (the reference's
+    first-max ``idxmax``); a NULL hottest child stops the walk like the
+    reference's NaN.  At most ``max_iters`` paths; depth order."""
+    chain, current = [], tuple(start)
+    for _ in range(max_iters):
+        chain.append(current)
+        children = [p for p in values if len(p) == len(current) + 1
+                    and p[:len(current)] == current]
+        if not children:
+            break
+        best = max(children, key=lambda p: (
+            values[p] is not None, values[p] or 0.0, -p[-1]))
+        if values[best] is None or values[best] < threshold:
+            break
+        current = best
+    return chain

@@ -50,6 +50,22 @@ def test_cct_build_single_shuffle_aggregate(spark):
     assert explain.python_udf_count(df) == 0
 
 
+def test_hot_path_batch_one_lazy_plan(spark):
+    """The batch hot path is one window exchange and one group exchange
+    over its input: no checkpoint of its own and no Python stage."""
+    from hpctoolkit_dataframe_spark.operators import cct as ops
+    from hpctoolkit_dataframe_spark.queries.cct_tpch import build_cct
+
+    df = REGISTRY["cct_hot_path_batch"].fn(spark, SF_DIR)
+    assert explain.exchange_count(df) <= 2
+    # the only checkpoint scans are the memoized build's, which the
+    # ratio-of-total input reads
+    base = ops.with_ratio_of_total(build_cct(spark, SF_DIR), "value", "ratio")
+    scans = explain.executed_plan(base).count("Scan ExistingRDD")
+    assert explain.executed_plan(df).count("Scan ExistingRDD") == scans
+    assert explain.python_udf_count(df) == 0
+
+
 def test_filters_stay_jvm_side(spark):
     from hpctoolkit_dataframe_spark.operators import cct as ops
     from hpctoolkit_dataframe_spark.queries.cct_tpch import build_cct

@@ -18,7 +18,7 @@ from hypothesis import strategies as st
 from hpctoolkit_dataframe_spark.operators import cct
 from hpctoolkit_dataframe_spark.sources.hpctoolkit_xml import load_experiments
 
-from .conftest import cct_xml
+from .conftest import cct_xml, hot_path_walk
 
 
 @st.composite
@@ -131,31 +131,94 @@ def test_filters_match_python_reference(spark, trees, lo, hi, prefix_len):
         assert got_suffix == expected_suffix
 
 
-@settings(max_examples=4, deadline=None,
+@st.composite
+def hot_tree(draw):
+    """(root id, values) for the hot path: values from 0..4 (so ties and
+    values equal to an integer threshold are common) or NULL, a root id
+    of -1 or 0, and under a root of 0 possibly a non-root node -1."""
+    n = draw(st.integers(min_value=1, max_value=20))
+    root_id = draw(st.sampled_from([-1, 0]))
+    ids = draw(st.lists(st.integers(-1, 30).filter(lambda i: i != root_id),
+                        min_size=n - 1, max_size=n - 1, unique=True))
+    value = st.one_of(st.none(), st.integers(0, 4).map(float))
+    values = {(): draw(value)}
+    for i in ids:
+        values[(*draw(st.sampled_from(sorted(values))), i)] = draw(value)
+    return root_id, values
+
+
+def _hot_rows(profile, root_id, values):
+    return [(profile, p[-1] if p else root_id, list(p), v)
+            for p, v in values.items()]
+
+
+@settings(max_examples=6, deadline=None,
           suppress_health_check=[HealthCheck.too_slow])
-@given(t=tree(), threshold=st.floats(0.0, 1.2))
-def test_hot_path_matches_python_reference(spark, t, threshold):
-    rows = _rows("p", t)
+@given(trees=st.lists(hot_tree(), min_size=1, max_size=4),
+       threshold=st.integers(0, 5).map(float),
+       max_iters=st.integers(1, 6), data=st.data())
+def test_hot_path_matches_python_reference(spark, trees, threshold,
+                                           max_iters, data):
+    """``hot_paths`` over a multi-profile frame and ``hot_path`` from a
+    start path, against the Python walk (conftest.hot_path_walk)."""
+    rows = []
+    for i, (root_id, t) in enumerate(trees):
+        rows.extend(_hot_rows(f"p{i}", root_id, t))
     df = spark.createDataFrame(
         rows, "profile_id string, id long, callpath array<long>, value double")
-    got = sorted(tuple(r["callpath"]) for r in
-                 cct.hot_path(df, "value", threshold=threshold).collect())
+    got = {(r["profile_id"], tuple(r["callpath"])) for r in cct.hot_paths(
+        df, "value", ["profile_id"], threshold=threshold,
+        max_depth=max_iters - 1).collect()}
+    assert got == {(f"p{i}", p) for i, (_, t) in enumerate(trees)
+                   for p in hot_path_walk(t, (), threshold, max_iters)}
 
-    # reference :403-428: append current, descend to max child (first-max
-    # tie-break ~ smallest id), stop when below threshold
-    chain = []
-    current = ()
-    while True:
-        chain.append(current)
-        children = [p for p in t if len(p) == len(current) + 1
-                    and p[:len(current)] == current]
-        if not children:
-            break
-        best = max(children, key=lambda p: (t[p], -p[-1]))
-        if t[best] < threshold:
-            break
-        current = best
-    assert got == sorted(chain)
+    t = trees[0][1]
+    start = data.draw(st.sampled_from(sorted(t)))
+    got = [tuple(r["callpath"]) for r in cct.hot_path(
+        df.filter(df.profile_id == "p0"), "value", start, threshold,
+        max_iters=max_iters).collect()]
+    assert got == hot_path_walk(t, start, threshold, max_iters)
+
+
+# each case: (root id, values, start, max_iters, expected chain) at
+# threshold 2.0; the chains are written out, not computed, so they pin
+# the Python walk too
+HOT_CASES = {
+    # a tie on the hottest value: the smallest id wins
+    "tie": (-1, {(): 9.0, (5,): 3.0, (3,): 3.0, (3, 7): 2.5}, (), 64,
+            [(), (3,), (3, 7)]),
+    # a child equal to the threshold is taken; one below it is not
+    "threshold": (-1, {(): 9.0, (1,): 2.0, (1, 2): 1.9}, (), 64,
+                  [(), (1,)]),
+    # a root id of 0 and a non-root node -1 that has children
+    "ids": (0, {(): 9.0, (-1,): 5.0, (4,): 1.0, (-1, 6): 4.0}, (), 64,
+            [(), (-1,), (-1, 6)]),
+    # NULLs rank last; a NULL hottest child stops the walk
+    "null": (-1, {(): 9.0, (1,): None, (2,): 3.0, (2, 3): None}, (), 64,
+             [(), (2,)]),
+    # the max_iters cap
+    "iters": (-1, {(): 9.0, (1,): 8.0, (1, 2): 7.0, (1, 2, 3): 6.0}, (), 2,
+              [(), (1,)]),
+    # a start path below the root; its parent and siblings stay out
+    "start": (-1, {(): 9.0, (1,): 8.0, (1, 2): 3.0, (1, 3): 7.0,
+                   (1, 3, 4): 6.0}, (1, 3), 64, [(1, 3), (1, 3, 4)]),
+    # a start path with no children returns itself
+    "leaf": (-1, {(): 9.0, (1,): 8.0, (1, 2): 0.5}, (1, 2), 64, [(1, 2)]),
+}
+
+
+@pytest.mark.parametrize("case", sorted(HOT_CASES))
+def test_hot_path_edge_cases(spark, case):
+    root_id, t, start, max_iters, want = HOT_CASES[case]
+    assert hot_path_walk(t, start, 2.0, max_iters) == want
+    df = spark.createDataFrame(
+        _hot_rows("p", root_id, t),
+        "profile_id string, id long, callpath array<long>, value double")
+    got = cct.hot_path(df, "value", start, 2.0, max_iters=max_iters)
+    assert [tuple(r["callpath"]) for r in got.collect()] == want
+    got = cct.hot_paths(df, "value", ["profile_id"], threshold=2.0,
+                        max_depth=len(start) + max_iters - 1, start=start)
+    assert [tuple(r["callpath"]) for r in got.collect()] == want
 
 
 def _py_simhash64(tokens):

@@ -82,6 +82,19 @@ SELECTION = {
         " aggregated on the join key to reject duplicate keys; that"
         " aggregate's exchange is the join's, so it adds none.  No"
         " Python stage."),
+    "cct_hot_path": (
+        "Greedy hot path as one lazy plan (hot_path is hot_paths from a"
+        " start path): one exchange for the rank-1 window on (depth,"
+        " parent id), cut down by WindowGroupLimit before and after it,"
+        " then one exchange to the single group whose collect_list holds"
+        " the anchor and the above-threshold rank-1 rows; an aggregate"
+        " walk keeps the chain and inline emits its rows.  No driver"
+        " collect, no checkpoint of its own, no join back."),
+    "cct_hot_path_batch": (
+        "The same plan through hot_paths directly (no partition columns"
+        " here; with them, one repartition feeds both the window and the"
+        " group): at most 2 shuffle exchanges, the build's checkpoint"
+        " scans only, no Python stage (tests/test_plans.py)."),
     "cct_merge_profiles": (
         "Multi-profile merge: ONE grouping-sets pass builds all 3"
         " per-profile trees (no per-profile rescan; p rides every"
