@@ -21,6 +21,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..memo import session_key, session_memo  # noqa: F401  (re-exported)
+
 
 @dataclass
 class Query:
@@ -50,24 +52,6 @@ def hash8_sql(expr: str) -> str:
         f"(instr('0123456789abcdef', substr({h}, {k + 1}, 1)) - 1)"
         f" * {16 ** (7 - k)}"
         for k in range(8)) + ")"
-
-
-def session_key(spark: SparkSession) -> str:
-    """Stable cache key for per-session DataFrame memoization.
-    ``id(spark)`` is unsafe — CPython reuses object ids after GC, so a
-    new session can alias a stale entry holding a localCheckpoint'ed
-    DataFrame bound to a stopped SparkContext.  ``applicationId`` is
-    unique per live context."""
-    return spark.sparkContext.applicationId
-
-
-def evict_dead_sessions(cache: dict, skey: str) -> None:
-    """Drop memo entries whose (session, ...) key belongs to another —
-    necessarily stopped — SparkContext: one live session per process,
-    and a dead session's entries pin localCheckpoint handles forever in
-    a long-lived process (ADVICE r12).  Called on every memo insert."""
-    for k in [k for k in cache if k[0] != skey]:
-        del cache[k]
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str,
@@ -101,10 +85,12 @@ def load_table(spark: SparkSession, sf_dir: str, name: str,
     # load_table 150+ times — tens of seconds of pure driver time.
     # Nothing is computed or pinned: the entry is an unexecuted plan,
     # every action still scans the parquet files.
-    cache_key = (session_key(spark), sf_dir, name, spread)
-    hit = _TABLE_CACHE.get(cache_key)
-    if hit is not None:
-        return hit
+    return session_memo(_TABLE_CACHE, spark, sf_dir, name, spread,
+                        build=lambda: _read_table(spark, sf_dir, name, spread))
+
+
+def _read_table(spark: SparkSession, sf_dir: str, name: str,
+                spread: bool) -> DataFrame:
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     if name == "events" and dict(df.dtypes).get("ts", "").startswith("timestamp"):
         # Testdata regenerated with microsecond TIMESTAMP ts (was int64
@@ -124,8 +110,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str,
         par = spark.sparkContext.defaultParallelism
         if _scan_partitions(spark, sf_dir, name, df) < par // 2:
             df = df.repartition(par)
-    evict_dead_sessions(_TABLE_CACHE, cache_key[0])
-    _TABLE_CACHE[cache_key] = df
     return df
 
 
@@ -149,10 +133,11 @@ def _scan_partitions(spark: SparkSession, sf_dir: str, name: str,
     RDD probe on the testdata and multi-file clones); non-local or
     unstat-able inputs keep the RDD probe.  A wrong estimate could
     only flip the repartition heuristic — plan shape, never results."""
-    key = (session_key(spark), sf_dir, name)
-    hit = _SPREAD_CACHE.get(key)
-    if hit is not None:
-        return hit
+    return session_memo(_SPREAD_CACHE, spark, sf_dir, name,
+                        build=lambda: _count_scan_partitions(spark, df))
+
+
+def _count_scan_partitions(spark: SparkSession, df: DataFrame) -> int:
     n = None
     try:
         files = df.inputFiles()
@@ -200,8 +185,6 @@ def _scan_partitions(spark: SparkSession, sf_dir: str, name: str,
         n = None
     if n is None:
         n = df.rdd.getNumPartitions()
-    evict_dead_sessions(_SPREAD_CACHE, key[0])
-    _SPREAD_CACHE[key] = n
     return n
 
 

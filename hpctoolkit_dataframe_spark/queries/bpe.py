@@ -40,7 +40,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
-from . import load_table, register
+from . import load_table, register, session_memo
 from .textops import _tokens
 
 # Golden fixtures computed by an INDEPENDENT pure-Python BPE twin at
@@ -277,17 +277,13 @@ fixture-build time (tools/make_bpe_fixture.py), keyed by corpus
 size — train + encode are iterative, but their output is exact and
 deterministic, so it hash-gates like any other query.""")
 def bpe_encode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from . import evict_dead_sessions, session_key
-
-    key = (session_key(spark), sf_dir)
-    merges = _ENCODE_CACHE.get(key)
-    if merges is None:
+    def train():
         wc = word_counts(spark, sf_dir)
         top = (wc.orderBy(F.col("c").desc(), F.col("w"))
                .limit(VOCAB_CAP).collect())
-        merges = train_bpe([(r["w"], r["c"]) for r in top])
-        evict_dead_sessions(_ENCODE_CACHE, key[0])
-        _ENCODE_CACHE[key] = merges
+        return train_bpe([(r["w"], r["c"]) for r in top])
+
+    merges = session_memo(_ENCODE_CACHE, spark, sf_dir, build=train)
     docs = load_table(spark, sf_dir, "documents", spread=True).filter(
         F.col("text").isNotNull())
     enc = bpe_encode(docs, merges)

@@ -19,8 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators import cct as ops
-from . import (evict_dead_sessions, hash8_sql, load_table, register,
-               session_key)
+from . import hash8_sql, load_table, register, session_memo
 
 REGION_OFF = 1
 NATION_OFF = 10
@@ -95,18 +94,13 @@ def build_cct(spark: SparkSession, sf_dir: str) -> DataFrame:
     The materialized tree (~620k rows / ~50 MB at sf0.1) is memoized per
     (session, sf_dir) as an eager localCheckpoint — every CCT query
     shares one build, exactly like a materialized view a real
-    deployment would maintain.
+    deployment would maintain, refreshed when a file under ``sf_dir``
+    changes (``memo.session_memo``).
     """
-    key = (session_key(spark), sf_dir)
-    cached = _CCT_CACHE.get(key)
-    if cached is not None:
-        return cached
-    out = build_cct_plan(spark, sf_dir)
-    out = out.repartition(
-        _cct_checkpoint_partitions(spark, sf_dir)).localCheckpoint(eager=True)
-    evict_dead_sessions(_CCT_CACHE, key[0])
-    _CCT_CACHE[key] = out
-    return out
+    return session_memo(_CCT_CACHE, spark, sf_dir, build=lambda: (
+        build_cct_plan(spark, sf_dir)
+        .repartition(_cct_checkpoint_partitions(spark, sf_dir))
+        .localCheckpoint(eager=True)))
 
 
 def _cct_checkpoint_partitions(spark: SparkSession, sf_dir: str) -> int:

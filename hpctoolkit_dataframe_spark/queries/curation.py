@@ -50,8 +50,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
-from . import (REGISTRY, evict_dead_sessions, load_table, register,
-               session_key)
+from . import REGISTRY, load_table, register, session_memo
 from .vectors import (
     DIM, KMEANS_ITERS, _NORM2_SQL, _QINT_SQL, _kmeans_ctes,
     _lloyd_trained, _nonzero_embedding, _norm2, _qint, _quantized_corpus)
@@ -1288,20 +1287,14 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-ran the whole tokenize->bucket->model->score pipeline on top
     # of this entry's own run (the scored table is the artifact a DSIR
     # resampling pass persists)
-    key = (session_key(spark), sf_dir)
-    hit = _DSIR_CACHE.get(key)
-    if hit is not None:
-        return hit
-    docs = load_table(spark, sf_dir, "documents", spread=True).filter(
-        F.col("text").isNotNull())
-    tb = dsir_token_buckets(docs).localCheckpoint(eager=True)
-    w = dsir_weights_from_model(dsir_count_model(tb))
-    out = dsir_score(tb, w).localCheckpoint(eager=True)
-    for k in [k for k in _DSIR_CACHE if k[0] == key[0]]:
-        del _DSIR_CACHE[k]
-    evict_dead_sessions(_DSIR_CACHE, key[0])
-    _DSIR_CACHE[key] = out
-    return out
+    def build():
+        docs = load_table(spark, sf_dir, "documents", spread=True).filter(
+            F.col("text").isNotNull())
+        tb = dsir_token_buckets(docs).localCheckpoint(eager=True)
+        w = dsir_weights_from_model(dsir_count_model(tb))
+        return dsir_score(tb, w).localCheckpoint(eager=True)
+
+    return session_memo(_DSIR_CACHE, spark, sf_dir, build=build)
 
 
 _DSIR_CACHE: dict = {}

@@ -20,8 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
 from ..operators.graph import connected_components
-from . import (REGISTRY, evict_dead_sessions, hash8_sql, load_table,
-               register, session_key)
+from . import REGISTRY, hash8_sql, load_table, register, session_memo
 from .textops import lsh_pairs_materialized
 
 # the oracle reuses the full minhash->band->cap->self-join pipeline SQL
@@ -80,10 +79,11 @@ def clusters_materialized(spark: SparkSession, sf_dir: str) -> DataFrame:
     The labeling is documents-cardinality (4 skinny columns) and the
     CC step is the iterative part — exactly the materialized-view
     shape build_cct already memoizes."""
-    key = (session_key(spark), sf_dir)
-    hit = _CLUSTERS_CACHE.get(key)
-    if hit is not None:
-        return hit
+    return session_memo(_CLUSTERS_CACHE, spark, sf_dir,
+                        build=lambda: _label_clusters(spark, sf_dir))
+
+
+def _label_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = lsh_pairs_materialized(spark, sf_dir)
     labels = connected_components(pairs)
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
@@ -92,16 +92,11 @@ def clusters_materialized(spark: SparkSession, sf_dir: str) -> DataFrame:
                    F.coalesce(labels.component, docs.doc_id)
                    .alias("cluster_id")))
     w = Window.partitionBy("cluster_id")
-    out = lab.select(
+    return lab.select(
         "doc_id", "cluster_id",
         F.count(F.lit(1)).over(w).cast("long").alias("cluster_size"),
         (F.col("doc_id") == F.col("cluster_id")).cast("int")
         .alias("is_canonical")).localCheckpoint(eager=True)
-    for k in [k for k in _CLUSTERS_CACHE if k[0] == key[0]]:
-        del _CLUSTERS_CACHE[k]
-    evict_dead_sessions(_CLUSTERS_CACHE, key[0])
-    _CLUSTERS_CACHE[key] = out
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -293,23 +288,17 @@ def fingerprint_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpoint over the identical corpus."""
     from .textops import with_simhash64
 
-    key = (session_key(spark), sf_dir)
-    hit = _FPS_CACHE.get(key)
-    if hit is not None:
-        return hit
-    docs = load_table(spark, sf_dir, "documents", spread=True).filter(
-        F.col("text").isNotNull())
-    doc_hash = F.conv(
-        F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8),
-        16, 10).cast("long")
-    out = with_simhash64(docs).select(
-        "doc_id", F.md5("text").alias("th"), "simhash",
-        (doc_hash % DELTA_MOD).alias("bucket")).localCheckpoint(eager=True)
-    for k in [k for k in _FPS_CACHE if k[0] == key[0]]:
-        del _FPS_CACHE[k]
-    evict_dead_sessions(_FPS_CACHE, key[0])
-    _FPS_CACHE[key] = out
-    return out
+    def build():
+        docs = load_table(spark, sf_dir, "documents", spread=True).filter(
+            F.col("text").isNotNull())
+        doc_hash = F.conv(
+            F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8),
+            16, 10).cast("long")
+        return with_simhash64(docs).select(
+            "doc_id", F.md5("text").alias("th"), "simhash",
+            (doc_hash % DELTA_MOD).alias("bucket")).localCheckpoint(eager=True)
+
+    return session_memo(_FPS_CACHE, spark, sf_dir, build=build)
 
 
 def write_fingerprint_store(fps: DataFrame, table: str = FP_STORE_TABLE,

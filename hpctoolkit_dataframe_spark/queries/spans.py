@@ -23,8 +23,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from . import (evict_dead_sessions, hash8_sql, load_table, register,
-               session_key)
+from . import hash8_sql, load_table, register, session_memo
 
 SPAN_K = 8  # words per window; spans shorter than this are invisible
 
@@ -57,10 +56,12 @@ def _dup_hits(spark: SparkSession,
     checkpoint so tokenize+slide+hash runs once.  Memoized per
     (session, sf_dir) like the LSH bucketed table: three registry
     queries consume the same hits."""
-    cache_key = (session_key(spark), sf_dir)
-    hit = _HITS_CACHE.get(cache_key)
-    if hit is not None:
-        return hit
+    return session_memo(_HITS_CACHE, spark, sf_dir,
+                        build=lambda: _build_dup_hits(spark, sf_dir))
+
+
+def _build_dup_hits(spark: SparkSession,
+                    sf_dir: str) -> tuple[DataFrame, DataFrame]:
     docs = load_table(spark, sf_dir, "documents", spread=True)
     pos = _positions(docs).localCheckpoint(eager=True)
     dup = (pos.groupBy("h")
@@ -70,22 +71,7 @@ def _dup_hits(spark: SparkSession,
     # shuffle semi-join on the 8-byte key: the dup set is unbounded at
     # corpus scale, so it must NOT need to broadcast
     hits = pos.join(dup, "h", "left_semi").localCheckpoint(eager=True)
-    # one entry per SESSION: tests/tools cycle through temp fixture
-    # dirs, and a no-eviction cache would pin every dir's checkpoint
-    # blocks for the session's lifetime (ADVICE r5).  The three
-    # registry consumers all hit the same sf_dir back-to-back, so
-    # most-recent-per-session keeps the reuse that matters.
-    sess = cache_key[0]
-    for k in [k for k in _HITS_CACHE if k[0] == sess]:
-        del _HITS_CACHE[k]
-    evict_dead_sessions(_HITS_CACHE, cache_key[0])
-    _HITS_CACHE[cache_key] = (hits, pos)
     return hits, pos
-
-
-def clear_hits_cache() -> None:
-    """Explicit eviction hook (fixture-cycling tests/tools)."""
-    _HITS_CACHE.clear()
 
 
 _POS_SQL = f"""

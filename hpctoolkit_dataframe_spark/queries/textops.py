@@ -25,8 +25,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.functions import pandas_udf
 
-from . import (evict_dead_sessions, hash8_sql, load_table, register,
-               session_key)
+from . import hash8_sql, load_table, register, session_memo
 
 STOPWORDS = ["the", "a", "of", "and", "to", "in", "is", "on"]
 N_HASHES = 8
@@ -263,9 +262,7 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the checkpointed band-key table is memoized per (session, sf_dir)
     # like build_cct: dedup_clusters and training_shard_manifest re-run
     # this pipeline, and the materialized keys are the shared prefix
-    cache_key = (session_key(spark), sf_dir)
-    keys = _KEYS_CACHE.get(cache_key)
-    if keys is None:
+    def band_keys():
         sig = minhash_signatures(spark, sf_dir)
         # posexplode instead of a 4-way union so the signature
         # computation runs once, not once per band branch
@@ -276,9 +273,9 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
                   for b in range(N_BANDS)])).alias("band_idx", "key"))
         # materialize: the whole shingle->minhash->band pipeline would
         # otherwise run once per self-join side
-        keys = keys.localCheckpoint(eager=True)
-        evict_dead_sessions(_KEYS_CACHE, cache_key[0])
-        _KEYS_CACHE[cache_key] = keys
+        return keys.localCheckpoint(eager=True)
+
+    keys = session_memo(_KEYS_CACHE, spark, sf_dir, build=band_keys)
     # Exclude hot band keys BEFORE the self-join (same failure class as
     # the shingle DF cap one layer down): degenerate content collapses
     # to identical signatures, and one 10^6-member band key would emit
@@ -319,16 +316,8 @@ def lsh_pairs_materialized(spark: SparkSession, sf_dir: str) -> DataFrame:
     rule).  The registry entry itself stays un-memoized so its plan
     keeps showing the cap-below-self-join contract (pinned in
     tests/test_plans.py); consumers import this helper instead."""
-    key = (session_key(spark), sf_dir)
-    hit = _PAIRS_CACHE.get(key)
-    if hit is not None:
-        return hit
-    pairs = minhash_lsh_pairs(spark, sf_dir).localCheckpoint(eager=True)
-    for k in [k for k in _PAIRS_CACHE if k[0] == key[0]]:
-        del _PAIRS_CACHE[k]
-    evict_dead_sessions(_PAIRS_CACHE, key[0])
-    _PAIRS_CACHE[key] = pairs
-    return pairs
+    return session_memo(_PAIRS_CACHE, spark, sf_dir, build=lambda: (
+        minhash_lsh_pairs(spark, sf_dir).localCheckpoint(eager=True)))
 
 
 # ---------------------------------------------------------------------------

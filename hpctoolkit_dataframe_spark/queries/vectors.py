@@ -25,7 +25,7 @@ import hashlib
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from . import evict_dead_sessions, load_table, register, session_key
+from . import load_table, register, session_memo
 
 QUANT = 10_000
 N_QUERIES = 5
@@ -344,9 +344,7 @@ def lsh_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # like textops' band keys: embedding_dup_clusters and repeated bench
     # samples re-enter this pipeline, and the quantization + 8 plane
     # dots per vector are its shared prefix
-    cache_key = (session_key(spark), sf_dir)
-    bucketed = _BUCKETED_CACHE.get(cache_key)
-    if bucketed is None:
+    def build():
         from ._veckernel import hyperplane_bucket_udf
 
         emb = load_table(spark, sf_dir, "embeddings").filter(
@@ -361,12 +359,12 @@ def lsh_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         # spread the single input split, then materialize: quantization
         # + 8 plane dots per vector would otherwise run once PER
         # SELF-JOIN SIDE
-        bucketed = (
+        return (
             emb.repartition(spark.sparkContext.defaultParallelism, "vec_id")
             .withColumn("bucket", bucket.cast("long"))
             .localCheckpoint(eager=True))
-        evict_dead_sessions(_BUCKETED_CACHE, cache_key[0])
-        _BUCKETED_CACHE[cache_key] = bucketed
+
+    bucketed = session_memo(_BUCKETED_CACHE, spark, sf_dir, build=build)
     # Exclude hot buckets BEFORE the self-join: degenerate embeddings
     # (zeros, duplicates) collapse into one bucket, and a 10^6-member
     # bucket would emit ~10^12 candidate pairs.  Same recipe as the
@@ -407,16 +405,8 @@ def vec_pairs_materialized(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate) on top of the memoized bucket table; the registry entry
     keeps the un-memoized plan so the cap-below-self-join pin stays
     testable."""
-    key = (session_key(spark), sf_dir)
-    hit = _VEC_PAIRS_CACHE.get(key)
-    if hit is not None:
-        return hit
-    pairs = lsh_near_dup_pairs(spark, sf_dir).localCheckpoint(eager=True)
-    for k in [k for k in _VEC_PAIRS_CACHE if k[0] == key[0]]:
-        del _VEC_PAIRS_CACHE[k]
-    evict_dead_sessions(_VEC_PAIRS_CACHE, key[0])
-    _VEC_PAIRS_CACHE[key] = pairs
-    return pairs
+    return session_memo(_VEC_PAIRS_CACHE, spark, sf_dir, build=lambda: (
+        lsh_near_dup_pairs(spark, sf_dir).localCheckpoint(eager=True)))
 
 
 # ---------------------------------------------------------------------------
@@ -539,24 +529,16 @@ def _quantized_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     r12: memoized per (session, sf_dir) — nine registry entries
     (kmeans/ivf/pq/ivfpq/semdedup families) each re-quantized and
     re-checkpointed the identical corpus; one materialization per
-    session is the deployment shape (guide §5: reuse + recompute cost).
-    Most-recent-per-session eviction like the span-hits cache so
-    fixture-cycling tests don't pin every dir's checkpoint blocks."""
-    key = (session_key(spark), sf_dir)
-    hit = _CORPUS_CACHE.get(key)
-    if hit is not None:
-        return hit
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", _qint(F.col("embedding")).alias("qe"),
-        _norm2(F.col("embedding")).alias("n2"))
-    out = emb.repartition(
-        spark.sparkContext.defaultParallelism, "vec_id"
-    ).localCheckpoint(eager=True)
-    for k in [k for k in _CORPUS_CACHE if k[0] == key[0]]:
-        del _CORPUS_CACHE[k]
-    evict_dead_sessions(_CORPUS_CACHE, key[0])
-    _CORPUS_CACHE[key] = out
-    return out
+    session is the deployment shape (guide §5: reuse + recompute cost)."""
+    def build():
+        emb = load_table(spark, sf_dir, "embeddings").select(
+            "vec_id", _qint(F.col("embedding")).alias("qe"),
+            _norm2(F.col("embedding")).alias("n2"))
+        return emb.repartition(
+            spark.sparkContext.defaultParallelism, "vec_id"
+        ).localCheckpoint(eager=True)
+
+    return session_memo(_CORPUS_CACHE, spark, sf_dir, build=build)
 
 
 def _lloyd(emb: DataFrame, iters: int = KMEANS_ITERS,
@@ -627,17 +609,11 @@ def _lloyd_trained(spark: SparkSession,
     iteration rounds without changing a single output row.  ``cents``
     is checkpointed too (N_CELLS rows) so consumers don't re-run the
     two re-estimate aggregations per action."""
-    key = (session_key(spark), sf_dir)
-    hit = _LLOYD_CACHE.get(key)
-    if hit is not None:
-        return hit
-    cents, assigned = _lloyd(_quantized_corpus(spark, sf_dir))
-    cents = cents.localCheckpoint(eager=True)
-    for k in [k for k in _LLOYD_CACHE if k[0] == key[0]]:
-        del _LLOYD_CACHE[k]
-    evict_dead_sessions(_LLOYD_CACHE, key[0])
-    _LLOYD_CACHE[key] = (cents, assigned)
-    return cents, assigned
+    def build():
+        cents, assigned = _lloyd(_quantized_corpus(spark, sf_dir))
+        return cents.localCheckpoint(eager=True), assigned
+
+    return session_memo(_LLOYD_CACHE, spark, sf_dir, build=build)
 
 
 @register("kmeans_centroids", sql=f"""
@@ -817,10 +793,11 @@ def _pq_train(spark: SparkSession, sf_dir: str):
     replaces the per-iteration broadcast join + row_number window
     (Exchange + Sort over the 4x-exploded corpus) + localCheckpoint.
     Re-estimate arithmetic verbatim, outputs bit-identical."""
-    cache_key = (session_key(spark), sf_dir)
-    hit = _PQ_CACHE.get(cache_key)
-    if hit is not None:
-        return hit
+    return session_memo(_PQ_CACHE, spark, sf_dir,
+                        build=lambda: _pq_build(spark, sf_dir))
+
+
+def _pq_build(spark: SparkSession, sf_dir: str):
     emb = _quantized_corpus(spark, sf_dir)
     seed = sorted(emb.filter(F.col("vec_id") < K_PQ)
                   .select("vec_id", "qe").collect(),
@@ -856,8 +833,6 @@ def _pq_train(spark: SparkSession, sf_dir: str):
     cents = spark.createDataFrame(
         [(m, cell, ce) for m in range(M_SUB) for cell, ce in books[m]],
         "m int, cell long, ce array<long>")
-    evict_dead_sessions(_PQ_CACHE, cache_key[0])
-    _PQ_CACHE[cache_key] = (emb, cents, assigned)
     return emb, cents, assigned
 
 

@@ -41,6 +41,7 @@ from ..frame import (_COMPACT_LOCATION_COLUMNS, _COMPACT_SUFFIXES,
                      _HOT_PATH_SUFFIX, CCTMetadata,
                      determine_percentage_column)
 from ..functions import formulas as _formulas
+from ..memo import session_memo
 from ..operators import cct as _cct
 
 _MEASUREMENT_TYPES = {
@@ -391,7 +392,9 @@ def load_experiments(
     if add_percentage_columns:
         # reference layout (:190-198, 354): the ratio columns right
         # after their base; the ancestor arrays are dropped here
-        ancestors, total, parent = _ratio_columns(pct, pct_mid, pct_formula)
+        ancestors, total, parent = session_memo(
+            _COMPILE_CACHE, spark, None, "ratios", pct, pct_mid, pct_formula,
+            build=lambda: _ratio_columns(pct, pct_mid, pct_formula))
         df = df.withColumn("__anc", ancestors)
         cols = []
         for c in df.columns:
@@ -427,11 +430,13 @@ def union_heterogeneous(
     per group, in group order (each carries its group's election in
     ``meaningful_columns``).
 
-    Scale shape: grouping reads only XML HEADERS driver-side (bounded
-    work per file, no tree parse); each group then ingests through the
-    normal embarrassingly-parallel path, and the union is a zero-shuffle
-    plan node.  For a million-file fleet, group membership would come
-    from a catalog instead — the alignment logic is unchanged.
+    Scale shape: grouping runs driver-side and parses every WHOLE file
+    (``ET.fromstring`` on its full bytes, then ``_parse_header``), so
+    its cost grows with the total XML size, not the file count; each
+    group then ingests through the normal embarrassingly-parallel path,
+    and the union is a zero-shuffle plan node.  For a million-file
+    fleet, group membership would come from a catalog instead — the
+    alignment logic is unchanged.
     """
     assert on_error in ("fail", "skip"), on_error
     files = _expand_paths(paths)
@@ -479,27 +484,9 @@ def union_heterogeneous(
 # Compiled-expression cache: the Columns depend only on the formula
 # text (metric references are $N ids resolved to __raw_N / __anc_N
 # columns), and building the ~20 nested expressions costs ~0.3 s of Py4J
-# round trips per load.  Keyed by the active SparkContext so a restarted
-# JVM cannot serve stale expression handles.
+# round trips per load.  Keyed by the session (no input files, so
+# sf_dir None) so a restarted JVM cannot serve stale expression handles.
 _COMPILE_CACHE: dict[tuple, tuple] = {}
-
-
-def _session_cached(key: tuple, build):
-    from pyspark import SparkContext
-
-    sc = SparkContext._active_spark_context
-    # applicationId, not id(): object ids are reused after GC, so a new
-    # context could alias stale Py4J expression handles
-    key = (sc.applicationId if sc is not None else None, *key)
-    hit = _COMPILE_CACHE.get(key)
-    if hit is None:
-        hit = _COMPILE_CACHE[key] = build()
-    return hit
-
-
-def _compiled_raw_formula(frm: str):
-    return _session_cached(("raw", frm), lambda: _formulas.compile_formula(
-        frm, lambda mid: F.col(f"__raw_{mid}")))
 
 
 def _ratio_columns(pct: str, pct_mid: int, frm: str | None):
@@ -509,17 +496,14 @@ def _ratio_columns(pct: str, pct_mid: int, frm: str | None):
     compiled once, over their elements at each ancestor index (one per
     callpath element).  The ratios read it as column ``__anc``, so the
     array is computed once per row."""
-    def build():
-        ancestors = F.col(f"__anc_{pct_mid}")
-        if frm is not None:
-            ancestors = F.transform("callpath", lambda _, k: (
-                _formulas.compile_formula(
-                    frm, lambda mid: F.col(f"__anc_{mid}")[k])[0]))
-        return (ancestors, *_cct.ancestor_ratio_columns(
-            F.col(f"`{pct}`"), lambda k: F.col("__anc")[k],
-            F.size("callpath")))
-
-    return _session_cached(("ratios", pct, pct_mid, frm), build)
+    ancestors = F.col(f"__anc_{pct_mid}")
+    if frm is not None:
+        ancestors = F.transform("callpath", lambda _, k: (
+            _formulas.compile_formula(
+                frm, lambda mid: F.col(f"__anc_{mid}")[k])[0]))
+    return (ancestors, *_cct.ancestor_ratio_columns(
+        F.col(f"`{pct}`"), lambda k: F.col("__anc")[k],
+        F.size("callpath")))
 
 
 def finalize_metrics(raw: DataFrame, header: dict, *,
@@ -536,7 +520,10 @@ def finalize_metrics(raw: DataFrame, header: dict, *,
         if frm is None:
             values[name] = F.col(f"__raw_{mid}")
             continue
-        re_, im_ = _compiled_raw_formula(frm)
+        re_, im_ = session_memo(
+            _COMPILE_CACHE, raw.sparkSession, None, "raw", frm,
+            build=lambda: _formulas.compile_formula(
+                frm, lambda mid: F.col(f"__raw_{mid}")))
         values[name] = re_
         if with_imag and im_ is not None:
             imag_exprs.append(im_.alias(f"{name} (imag)"))
