@@ -35,7 +35,8 @@ def bench_xml(spark) -> float:
     The two experiment databases are independent (different
     MetricTables, so they cannot share one frame); a Spark user loads
     them as concurrent jobs on one session — the threads overlap each
-    file's driver-side parse/plan work with the other's JVM actions.
+    file's driver-side header read and planning with the other's Spark
+    jobs, which run the parse itself.
     """
     from concurrent.futures import ThreadPoolExecutor
 

@@ -115,9 +115,8 @@ def connected_components(edges: DataFrame,
     Edge sets at or under ``small_input_rows`` take a driver-side
     union-find instead (same labeling, bounded memory: 2 longs per
     node): star-contraction's per-round scheduler overhead (~4 tiny
-    jobs/round) dwarfs sub-second graphs — the same bounded fast-path
-    trade ``load_experiments`` makes for small file sets.  Pass 0 to
-    force the distributed path (the property tests do).
+    jobs/round) dwarfs sub-second graphs.  Pass 0 to force the
+    distributed path (the property tests do).
     """
     cur = _canon(edges).localCheckpoint(eager=True)
     prev_fp = _fingerprint(cur)

@@ -29,17 +29,18 @@ from __future__ import annotations
 
 import glob as _glob
 import os as _os
-import xml.etree.ElementTree as ET
 from collections.abc import Iterator, Sequence
+from pathlib import Path as _Path
 
 from pyspark.sql import types as T
 from pyspark.sql.datasource import (
     DataSource, DataSourceReader, DataSourceStreamReader, InputPartition)
 
 # captured at import so the by-value pickle of THIS module carries the
-# parser functions with it (their module is registered by value too)
-from .hpctoolkit_xml import (  # noqa: F401
-    _parse_header, _raw_schema, parse_experiment_rows)
+# parser and its per-file contract with it (their module is registered
+# by value too)
+from .hpctoolkit_xml import (_raw_schema, first_parseable_header,
+                             parse_checked_rows)
 
 
 class _FilePartition(InputPartition):
@@ -74,20 +75,10 @@ class HPCToolkitXMLDataSource(DataSource):
         return "hpctoolkit"
 
     def schema(self) -> T.StructType:
-        on_error = str(self.options.get("on_error", "fail")).lower()
-        errors: list[str] = []
-        for candidate in _matched_files(self.options.get("path")):
-            try:
-                with open(candidate, "rb") as f:
-                    header = _parse_header(ET.fromstring(f.read()))
-                return _raw_schema(sorted(header["metrics_by_id"]))
-            except Exception as e:  # schema comes from the first
-                if on_error != "skip":  # PARSEABLE file in skip mode
-                    raise
-                errors.append(f"{candidate}: {e}")
-        raise ValueError(
-            f"no parseable experiment file in "
-            f"{self.options.get('path')}: {errors}")
+        _, _, on_error = _parse_scan_options(self.options)
+        _, header = first_parseable_header(
+            _matched_files(self.options.get("path")), on_error)
+        return _raw_schema(sorted(header["metrics_by_id"]))
 
     def reader(self, schema: T.StructType) -> "_HPCToolkitReader":
         return _HPCToolkitReader(dict(self.options), schema)
@@ -116,33 +107,13 @@ def _parse_scan_options(options: dict) -> tuple:
 
 def _read_one_file(path: str, columns: Sequence[str], max_depth,
                    skip_callsite: bool, on_error: str) -> Iterator[tuple]:
-    """Shared per-partition parse for the batch and stream readers."""
-    try:
-        with open(path, "rb") as f:
-            content = f.read()
-        file_header, rows = parse_experiment_rows(
-            content, path, max_depth=max_depth,
-            skip_callsite=skip_callsite)
-        # same contract as load_experiments (ADVICE r1): a file whose
-        # MetricTable differs from the scan schema must error or be
-        # skipped WHOLE — silent null-padding makes wrong rows
-        file_ids = sorted(file_header["metrics_by_id"])
-        schema_ids = sorted(
-            int(c[len("__raw_"):]) for c in columns
-            if c.startswith("__raw_"))
-        if file_ids != schema_ids:
-            raise ValueError(
-                f"{path}: MetricTable ids {file_ids} differ "
-                f"from the scan schema's {schema_ids}; heterogeneous "
-                "metric sets must be loaded separately and unioned")
-    except Exception:
-        if on_error == "fail":
-            raise
-        import logging
-
-        logging.getLogger(__name__).warning(
-            "skipping malformed experiment file %s", path, exc_info=True)
-        return
+    """Shared per-partition parse for the batch and stream readers,
+    under the same per-file contract as ``load_experiments``."""
+    schema_ids = sorted(int(c[len("__raw_"):]) for c in columns
+                        if c.startswith("__raw_"))
+    rows = parse_checked_rows(_Path(path).read_bytes, path, schema_ids,
+                              on_error, max_depth=max_depth,
+                              skip_callsite=skip_callsite) or []
     for r in rows:
         yield tuple(
             list(r["callpath"]) if c == "callpath" else r.get(c)

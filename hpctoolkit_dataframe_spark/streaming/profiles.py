@@ -62,9 +62,9 @@ def run_profile_merge_stream(profiles_stream: DataFrame, base: str,
     spark = profiles_stream.sparkSession
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        # file-path batch: the per-file bytes re-read driver/executor
-        # side by the attested ingest pipeline (its own fast/distributed
-        # path selection), not shipped through the stream plan
+        # file-path batch: the per-file bytes are re-read executor-side
+        # by the attested ingest pipeline, not shipped through the
+        # stream plan
         paths = sorted(
             r["path"].removeprefix("file:")
             for r in batch_df.select("path").collect())

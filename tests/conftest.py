@@ -1,3 +1,5 @@
+from contextlib import contextmanager
+
 import pytest
 
 from hpctoolkit_dataframe_spark import get_spark
@@ -7,6 +9,22 @@ from hpctoolkit_dataframe_spark import get_spark
 def spark():
     s = get_spark("hpctoolkit-dataframe-spark-tests")
     yield s
+
+
+@contextmanager
+def job_probe(spark, group):
+    """Run the block in Spark job group ``group``; yields a function that
+    returns the ids of the jobs the block has started so far."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    sc.setJobGroup(group, group)
+    before = set(tracker.getJobIdsForGroup(group))
+    try:
+        yield lambda: set(tracker.getJobIdsForGroup(group)) - before
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
 
 
 SF_DIR = "/root/testdata/sf0.001"

@@ -5,9 +5,11 @@ inline experiment XMLs.
 in its parse stage, from the ancestor values each parsed row carries.
 These tests pin both columns to ``with_ratio_of_total`` /
 ``with_ratio_of_parent`` (the explode path) over the same loaded frame,
-exactly, on the driver-side fast path (1 file) and the distributed path
-(9 files), and pin that the distributed call itself starts no Spark job.
+exactly, for 1 file and for 9 files, and pin that a load of either size
+is the same lazy plan and starts no Spark job.
 """
+
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -15,7 +17,7 @@ from pyspark.sql import functions as F
 from hpctoolkit_dataframe_spark.operators import cct
 from hpctoolkit_dataframe_spark.sources.hpctoolkit_xml import load_experiments
 
-from .conftest import cct_xml
+from .conftest import cct_xml, job_probe
 
 PCT = "T:Mean (I)"
 TOTAL, PARENT = PCT + " ratio of total", PCT + " ratio of parent"
@@ -88,7 +90,7 @@ def _assert_loader_matches_explode(df):
 
 @pytest.mark.parametrize("make", [_plain_xml, _formula_xml],
                          ids=["raw", "formula"])
-def test_fast_path_ratios_match_explode(spark, tmp_path, make):
+def test_one_file_ratios_match_explode(spark, tmp_path, make):
     zero_root, path = _write(tmp_path, make, 2)
     got = _assert_loader_matches_explode(
         load_experiments(spark, zero_root)[0])
@@ -124,23 +126,36 @@ def test_fast_path_ratios_match_explode(spark, tmp_path, make):
 @pytest.mark.parametrize("make", [_plain_xml, _formula_xml],
                          ids=["raw", "formula"])
 def test_distributed_path_ratios_match_explode(spark, tmp_path, make):
-    paths = _write(tmp_path, make, 9)  # more than 8 files: distributed
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-    group = "load-experiments-starts-no-job"
-    sc.setJobGroup(group, "load_experiments plan building")
-    try:
-        before = set(tracker.getJobIdsForGroup(group))
+    paths = _write(tmp_path, make, 9)
+    with job_probe(spark, "load-experiments-starts-no-job") as jobs:
+        one, _ = load_experiments(spark, paths[1])
         df, _ = load_experiments(spark, str(tmp_path / "exp_*.xml"))
-        after = set(tracker.getJobIdsForGroup(group))
-        assert after == before
+        assert jobs() == set()
+        assert one.count() == len(_tree(0.0)) - 1
         assert df.count() == 9 * (len(_tree(0.0)) - 1)
-        assert set(tracker.getJobIdsForGroup(group)) > after  # probe works
-    finally:
-        for key in ("spark.jobGroup.id", "spark.job.description",
-                    "spark.job.interruptOnCancel"):
-            sc.setLocalProperty(key, None)
+        assert jobs()  # the probe works
     got = _assert_loader_matches_explode(df)
     assert {p for p, _ in got} == set(paths)
     assert any(t is not None for t, _ in got.values())
     assert any(p is None for _, p in got.values())
+
+
+def _plan_nodes(df):
+    """Operator names of the optimized logical plan, top down, and the
+    plan text."""
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    return [re.sub(r"^[\s:+|-]*", "", line).split(" ")[0]
+            for line in plan.splitlines() if line.strip()], plan
+
+
+def test_one_file_and_nine_files_share_one_plan(spark, tmp_path):
+    """A 1-file load is the same lazy binaryFile -> MapInPandas plan as
+    a 9-file load, not driver-parsed rows shipped as a local relation."""
+    paths = _write(tmp_path, _plain_xml, 9)
+    one, one_plan = _plan_nodes(load_experiments(spark, paths[0])[0])
+    nine, _ = _plan_nodes(
+        load_experiments(spark, str(tmp_path / "exp_*.xml"))[0])
+    assert one == nine
+    assert "MapInPandas" in one
+    assert re.search(r"Relation \[path#\d+,[^\]]*\] binaryFile", one_plan)
+    assert "LocalRelation" not in one_plan and "LogicalRDD" not in one_plan

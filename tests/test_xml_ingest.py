@@ -1,12 +1,18 @@
 """Golden-value parity with the reference (FIXTURES.md §3 captures)."""
 
+import os
+import shutil
+from xml.etree.ElementTree import ParseError
+
 import pyspark.sql.functions as F
 import pytest
+from pyspark.errors import AnalysisException, PythonException
 
 from hpctoolkit_dataframe_spark import HPCtoolkitDataFrame
+from hpctoolkit_dataframe_spark.sources import datasource
 from hpctoolkit_dataframe_spark.sources.hpctoolkit_xml import load_experiments
 
-from .conftest import EXPERIMENT1, EXPERIMENT2
+from .conftest import EXPERIMENT1, EXPERIMENT2, cct_xml, job_probe
 
 
 @pytest.fixture(scope="module")
@@ -168,25 +174,24 @@ def test_unknown_element_raises(spark, tmp_path):
 
     with pytest.raises(NotImplementedError):
         parse_experiment_rows(bad.read_bytes(), str(bad))
-    # small-input fast path parses driver-side -> raises eagerly at load
-    with pytest.raises(NotImplementedError):
-        load_experiments(spark, str(bad), add_percentage_columns=False)
-    # and through the distributed path (forced by exceeding the fast
-    # path's file limit) the task error surfaces at execution
-    import shutil
-
+    # the load only plans the parse (no job); the error surfaces at the
+    # action, from the parse task, for one file and for ten alike
+    with job_probe(spark, "unknown-element-load") as jobs:
+        df, _ = load_experiments(spark, str(bad),
+                                 add_percentage_columns=False)
+        assert jobs() == set()
+    with pytest.raises(PythonException, match="NotImplementedError"):
+        df.collect()
     for i in range(9):
         shutil.copy(bad, tmp_path / f"bad{i}.xml")
     df, _ = load_experiments(spark, str(tmp_path / "bad*.xml"),
                              add_percentage_columns=False)
-    with pytest.raises(Exception):
+    with pytest.raises(PythonException, match="NotImplementedError"):
         df.collect()
 
 
 def test_on_error_skip_fleet_mode(spark, tmp_path):
     # a corrupt file alongside a good one: 'skip' keeps the good rows
-    import shutil
-
     good = tmp_path / "exp_good.xml"
     shutil.copy(EXPERIMENT1, good)
     (tmp_path / "exp_corrupt.xml").write_text("<not-valid-xml")
@@ -207,8 +212,6 @@ def test_cct_xml_ingest_gate_fixture(spark):
     """The driver-gate ingest query must keep matching the captured
     reference fixture (tools/make_ingest_fixture.py) row-count-wise;
     cell-exactness is enforced by oracle_check / the driver itself."""
-    import os
-
     from hpctoolkit_dataframe_spark.queries import REGISTRY
     from hpctoolkit_dataframe_spark.queries.xml_ingest import FIXTURE
 
@@ -244,48 +247,137 @@ def test_heterogeneous_metric_table_rejected(spark, tmp_path):
     (tmp_path / "h_a.xml").write_text(mini_metric_xml(2))
     (tmp_path / "h_b.xml").write_text(mini_metric_xml(9))
     glob = str(tmp_path / "h_*.xml")
-    with pytest.raises(ValueError, match="MetricTable ids"):
-        load_experiments(spark, glob, add_percentage_columns=False)
+    df, _ = load_experiments(spark, glob, add_percentage_columns=False)
+    with pytest.raises(PythonException,
+                       match=r"ValueError: .*MetricTable ids"):
+        df.collect()
     df, _ = load_experiments(spark, glob, add_percentage_columns=False,
                              on_error="skip")
     assert df.select("profile_id").distinct().count() == 1
 
 
-def test_fast_and_distributed_paths_agree(spark, tmp_path):
-    """The driver-side fast path (≤8 small files) and the executor
-    mapInPandas path must produce identical rows for the same file."""
-    import shutil
-
-    for i in range(9):  # 9 files forces the distributed path
-        shutil.copy(EXPERIMENT1, tmp_path / f"same_{i}.xml")
-
-    fast, _ = load_experiments(spark, str(tmp_path / "same_0.xml"),
+def _assert_one_file_matches_nine(spark, tmp_path, write_one):
+    """A file loaded alone and the same file loaded among 9 copies give
+    identical rows; returns the row count."""
+    for i in range(9):
+        write_one(tmp_path / f"same_{i}.xml")
+    one, _ = load_experiments(spark, str(tmp_path / "same_0.xml"),
+                              add_percentage_columns=False)
+    nine, _ = load_experiments(spark, str(tmp_path / "same_*.xml"),
                                add_percentage_columns=False)
-    dist, _ = load_experiments(spark, str(tmp_path / "same_*.xml"),
-                               add_percentage_columns=False)
-    dist0 = dist.filter(
+    nine0 = nine.filter(
         F.col("profile_id") == str(tmp_path / "same_0.xml"))
 
-    cols = [c for c in fast.columns if c != "profile_id"]
+    cols = [c for c in one.columns if c != "profile_id"]
     # sort by id (unique, non-null) — raw tuples contain NULL metrics
     idx = cols.index("id")
-    a = sorted((tuple(r) for r in fast.select(*cols).collect()),
+    a = sorted((tuple(r) for r in one.select(*cols).collect()),
                key=lambda t: t[idx])
-    b = sorted((tuple(r) for r in dist0.select(*cols).collect()),
+    b = sorted((tuple(r) for r in nine0.select(*cols).collect()),
                key=lambda t: t[idx])
-    assert len(a) == 3454
     assert a == b
+    return len(a)
 
 
-def test_fast_path_null_fidelity_without_arrow(spark):
+def test_one_and_nine_file_loads_agree(spark, tmp_path):
+    """One file and the same file among 9 give identical rows."""
+    assert _assert_one_file_matches_nine(
+        spark, tmp_path, lambda p: shutil.copy(EXPERIMENT1, p)) == 3454
+
+
+# a generated profile with an absent metric (node 2), an absent procedure
+# (the root, and loop 3 below it) and a call site spliced out (node 5)
+_NULLS = {(): {2: 10.0}, (1,): {2: 6.0}, (1, 2): {2: None},
+          (1, 2, 4): {2: 1.0}, (3,): {2: 2.0}, (1, 5): {2: 4.0},
+          (1, 5, 6): {2: None}}
+_NULLS_XML = cct_xml(_NULLS, tags={(3,): "L", (1, 5): "C"})
+
+
+def test_one_and_nine_file_loads_agree_generated(spark, tmp_path):
+    """Generated-input twin of the test above."""
+    assert _assert_one_file_matches_nine(
+        spark, tmp_path, lambda p: p.write_text(_NULLS_XML)) == 6
+
+
+def test_null_fidelity_without_arrow_generated(spark, tmp_path):
+    """Generated-input twin of the Arrow-off null-fidelity test below:
+    an absent metric and an absent procedure are SQL NULL, not NaN and
+    not the string 'nan'."""
+    path = tmp_path / "nulls.xml"
+    path.write_text(_NULLS_XML)
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        df, _ = load_experiments(spark, str(path))
+        rows = {r["id"]: r for r in df.collect()}
+        assert set(rows) == {-1, 1, 2, 3, 4, 6}
+        for c in ("T:Mean (I)", "T:Mean (I) ratio of total",
+                  "T:Mean (I) ratio of parent"):
+            assert rows[2][c] is None and rows[6][c] is None, c
+            assert df.filter(F.isnan(f"`{c}`")).count() == 0, c
+        assert rows[-1]["procedure"] is None
+        assert rows[3]["procedure"] is None
+        assert rows[1]["procedure"] == "main"
+        assert df.filter(F.col("procedure") == "nan").count() == 0
+        assert df.filter(F.col("procedure").isNull()).count() == 2
+    finally:
+        spark.conf.set(key, prev)
+
+
+def test_on_error_corrupt_first_file_generated(spark, tmp_path):
+    """A corrupt file that sorts first, through ``load_experiments`` and
+    ``format("hpctoolkit")``: 'fail' raises, 'skip' infers the schema
+    from the next file and keeps every good row."""
+    datasource.register(spark)
+    (tmp_path / "aaa_corrupt.xml").write_text("<not-valid-xml")
+    good = [tmp_path / f"exp_{i}.xml" for i in range(2)]
+    for p in good:
+        p.write_text(_NULLS_XML)
+    glob = str(tmp_path / "*.xml")
+    want = {str(p) for p in good}
+
+    with pytest.raises(ParseError, match="unclosed token"):
+        load_experiments(spark, glob)
+    with pytest.raises(AnalysisException, match="unclosed token"):
+        spark.read.format("hpctoolkit").load(glob).collect()
+
+    df, meta = load_experiments(spark, glob, on_error="skip")
+    assert meta.db_path == str(good[0])
+    scan = (spark.read.format("hpctoolkit").option("on_error", "skip")
+            .load(glob))
+    for frame in (df, scan):
+        counts = dict(frame.groupBy("profile_id").count().collect())
+        assert counts == {p: 6 for p in want}
+
+
+def test_relative_paths_resolve_against_python_cwd(spark, tmp_path,
+                                                   monkeypatch):
+    """Relative paths (one file, and a glob of 9) resolve against the
+    Python working directory, not the JVM's; profile_id is the absolute
+    path, with a space or a '%' in a file name kept literally."""
+    monkeypatch.chdir(tmp_path)
+    names = [f"rel_{i} %41.xml" for i in range(9)]
+    for name in names:
+        (tmp_path / name).write_text(_NULLS_XML)
+    one, meta = load_experiments(spark, names[0])
+    assert meta.db_path == str(tmp_path / names[0])
+    assert [r[0] for r in one.select("profile_id").distinct().collect()] \
+        == [str(tmp_path / names[0])]
+    nine, _ = load_experiments(spark, "rel_*.xml")
+    counts = dict(nine.groupBy("profile_id").count().collect())
+    assert counts == {str(tmp_path / name): 6 for name in names}
+
+
+def test_null_fidelity_without_arrow(spark):
     """VERDICT r5 #1 regression: under a session WITHOUT
     ``spark.sql.execution.arrow.pyspark.enabled`` (the driver's default
-    session), the fast path's createDataFrame used to keep pandas NaN as
-    float NaN in metric columns (downstream cents became 0 instead of
-    NULL) and stringify object-column NaN to 'nan'.  Absent metrics must
-    be SQL NULL under ANY session config (reference semantics:
-    hpctoolkit_dataframe.py:206-216 fills absent metrics with NaN, which
-    maps to NULL in the relational model)."""
+    session), a driver-side createDataFrame of the parsed pandas frame
+    used to keep pandas NaN as float NaN in metric columns (downstream
+    cents became 0 instead of NULL) and stringify object-column NaN to
+    'nan'.  Absent metrics must be SQL NULL under ANY session config
+    (reference semantics: hpctoolkit_dataframe.py:206-216 fills absent
+    metrics with NaN, which maps to NULL in the relational model)."""
     key = "spark.sql.execution.arrow.pyspark.enabled"
     prev = spark.conf.get(key)
     spark.conf.set(key, "false")
@@ -295,7 +387,7 @@ def test_fast_path_null_fidelity_without_arrow(spark):
         sum_e = "CPUTIME (usec):Sum (E)"
         nulls = df.filter(F.col(f"`{sum_e}`").isNull()).count()
         nans = df.filter(F.isnan(f"`{sum_e}`")).count()
-        assert nans == 0, "float NaN leaked through the fast path"
+        assert nans == 0, "float NaN leaked through the load"
         assert nulls > 0, "expected absent metrics to surface as NULL"
         assert df.filter(F.col("procedure") == "nan").count() == 0
         # experiment2's elected family has real NaN-heavy (E) columns too

@@ -36,10 +36,8 @@ def main() -> None:
             shutil.copy(SRC, os.path.join(tmp, f"experiment_{i:04d}.xml"))
         spark = get_spark("ingest-throughput")
         spark.sparkContext.setLogLevel("ERROR")
-        # warm the session so the number measures ingest, not JVM start.
-        # A single small file would take the driver-side fast path and
-        # leave the executor machinery (Python workers, module-by-value
-        # pickling) cold — warm through a >8-file glob instead.
+        # warm the session (JVM, Python workers, module-by-value
+        # pickling) so the number measures ingest, not start-up
         load_experiments(spark, os.path.join(tmp, "experiment_000*.xml"),
                          add_percentage_columns=False)[0].count()
 
