@@ -1,3 +1,4 @@
+import os
 from contextlib import contextmanager
 
 import pytest
@@ -72,6 +73,54 @@ def cct_xml(values, metrics=((2, "T:Mean (I)", None),), tags=None):
 <SecCallPathProfileData>{tree}</SecCallPathProfileData>
 </SecCallPathProfile>
 </HPCToolkitExperiment>"""
+
+
+# A stand-in for experiment1.xml: one ``CPUTIME (usec)`` family with
+# Sum, Mean, Min and Max inclusive and Sum exclusive.  A single-thread
+# profile has Sum = Mean = Min = Max per node; an exclusive time of 0 has
+# no ``M`` element, so some ``Sum (E)`` values are absent.  Seven levels
+# deep (``(2, 4, 6, 8, 10, 12, 14)``) with one call site, ``8``.
+# ``Mean (I)`` is not the last metric id, so whether the ratio columns
+# follow it or the last metric shows in the column order.
+_CPU_INCLUSIVE = {
+    (): 100.0, (2,): 100.0, (2, 5): 5.0, (2, 4): 95.0, (2, 4, 7): 15.0,
+    (2, 4, 6): 80.0, (2, 4, 6, 9): 10.0, (2, 4, 6, 8): 70.0,
+    (2, 4, 6, 8, 10): 70.0, (2, 4, 6, 8, 10, 16): 15.0,
+    (2, 4, 6, 8, 10, 12): 55.0, (2, 4, 6, 8, 10, 12, 15): 10.0,
+    (2, 4, 6, 8, 10, 12, 14): 40.0,
+}
+_CPU_TAGS = {(2, 4, 6): "L", (2, 4, 6, 8): "C", (2, 4, 6, 8, 10, 12): "L",
+             (2, 5): "S", (2, 4, 7): "S", (2, 4, 6, 9): "S",
+             (2, 4, 6, 8, 10, 16): "S", (2, 4, 6, 8, 10, 12, 15): "S",
+             (2, 4, 6, 8, 10, 12, 14): "S"}
+
+
+def _cpu_values(p):
+    v = _CPU_INCLUSIVE[p]
+    exclusive = v - sum(c for q, c in _CPU_INCLUSIVE.items()
+                        if len(q) == len(p) + 1 and q[:-1] == p)
+    return {2: v, 3: exclusive or None, 4: v, 5: v, 6: v}
+
+
+CPU_PROFILE_XML = cct_xml(
+    {p: _cpu_values(p) for p in _CPU_INCLUSIVE},
+    metrics=tuple((mid, f"CPUTIME (usec):{stat}", None) for mid, stat in (
+        (2, "Sum (I)"), (3, "Sum (E)"), (4, "Mean (I)"), (5, "Min (I)"),
+        (6, "Max (I)"))),
+    tags=_CPU_TAGS)
+
+
+def profile_path(reference, tmp_dir):
+    """``reference`` when that file exists; else ``CPU_PROFILE_XML``
+    written into ``tmp_dir`` under the reference's basename.  For tests
+    whose assertions hold on any profile with a ``CPUTIME (usec)``
+    family: they run on the reference wherever it is present."""
+    if os.path.exists(reference):
+        return reference
+    path = os.path.join(tmp_dir, os.path.basename(reference))
+    with open(path, "w") as f:
+        f.write(CPU_PROFILE_XML)
+    return path
 
 
 def hot_path_walk(values, start=(), threshold=0.05, max_iters=64):

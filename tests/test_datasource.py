@@ -7,12 +7,14 @@ from hpctoolkit_dataframe_spark.sources import datasource
 from hpctoolkit_dataframe_spark.sources.hpctoolkit_xml import (
     parse_experiment_rows)
 
+from .conftest import profile_path
+
 XML1 = "/root/reference/test/data/experiment1.xml"
 
 
-def _expected(max_depth=None):
-    with open(XML1, "rb") as f:
-        _, rows = parse_experiment_rows(f.read(), XML1,
+def _expected(path=XML1, max_depth=None):
+    with open(path, "rb") as f:
+        _, rows = parse_experiment_rows(f.read(), path,
                                         max_depth=max_depth)
     return rows
 
@@ -34,11 +36,12 @@ def test_datasource_matches_parser(spark):
             assert g[c] == w.get(c)
 
 
-def test_datasource_depth_pushdown(spark):
+def test_datasource_depth_pushdown(spark, tmp_path):
+    xml1 = profile_path(XML1, tmp_path)
     datasource.register(spark)
     got = (spark.read.format("hpctoolkit").option("max_depth", 5)
-           .load(XML1).select(F.size("callpath").alias("d")).collect())
-    want = _expected(max_depth=5)
+           .load(xml1).select(F.size("callpath").alias("d")).collect())
+    want = _expected(xml1, max_depth=5)
     assert sorted(r["d"] for r in got) == \
         sorted(len(r["callpath"]) for r in want)
 
@@ -172,5 +175,5 @@ def test_stream_latest_offset_waits_for_nonglob_file(tmp_path):
         {"path": str(target)},
         T.StructType([T.StructField("id", T.LongType())]))
     assert rdr.latestOffset() == {"files": []}
-    shutil.copy(XML1, target)
+    shutil.copy(profile_path(XML1, tmp_path), target)
     assert rdr.latestOffset() == {"files": [str(target)]}

@@ -10,7 +10,9 @@ import hpctoolkit_dataframe_spark.streaming.profiles as sp
 from hpctoolkit_dataframe_spark.operators.cct import merge_profiles
 from hpctoolkit_dataframe_spark.sources.hpctoolkit_xml import load_experiments
 
-EXP1 = "/root/reference/test/data/experiment1.xml"
+from .conftest import profile_path
+
+EXP1_REF = "/root/reference/test/data/experiment1.xml"
 COMBINES = {
     "CPUTIME (usec):Sum (I)": "sum",
     "CPUTIME (usec):Min (I)": "min",
@@ -27,6 +29,7 @@ def _key_rows(df):
 
 
 def test_stream_merge_equals_batch_and_resumes(spark, tmp_path):
+    EXP1 = profile_path(EXP1_REF, tmp_path)
     landing = tmp_path / "landing"
     landing.mkdir()
     base = str(tmp_path / "stores")
@@ -75,6 +78,7 @@ def test_profile_store_compaction(spark, tmp_path):
     """Folding the partials is the merge: merged_profile_cct is
     identical before and after compaction, and a profile landing AFTER
     compaction still merges in on top of the consolidated partition."""
+    EXP1 = profile_path(EXP1_REF, tmp_path)
     landing = tmp_path / "landing"
     landing.mkdir()
     base = str(tmp_path / "stores")

@@ -1,4 +1,8 @@
-"""Golden-value parity with the reference (FIXTURES.md §3 captures)."""
+"""Golden-value parity with the reference (FIXTURES.md §3 captures).
+
+The behaviour tests on ``profile1``, ``test_max_depth_zero_root_only``
+and ``test_multi_file_load`` read the reference's experiment1.xml where
+it exists and the generated ``conftest.CPU_PROFILE_XML`` elsewhere."""
 
 import os
 import shutil
@@ -12,7 +16,8 @@ from hpctoolkit_dataframe_spark import HPCtoolkitDataFrame
 from hpctoolkit_dataframe_spark.sources import datasource
 from hpctoolkit_dataframe_spark.sources.hpctoolkit_xml import load_experiments
 
-from .conftest import EXPERIMENT1, EXPERIMENT2, cct_xml, job_probe
+from .conftest import (EXPERIMENT1, EXPERIMENT2, cct_xml, job_probe,
+                       profile_path)
 
 
 @pytest.fixture(scope="module")
@@ -22,6 +27,28 @@ def exp1(spark):
     h._df.count()
     yield h
     h._df.unpersist()
+
+
+@pytest.fixture(scope="module")
+def profile1(spark, tmp_path_factory):
+    path = profile_path(EXPERIMENT1, tmp_path_factory.mktemp("profile1"))
+    h = HPCtoolkitDataFrame(path=path, spark=spark)
+    h._df = h._df.cache()
+    h._df.count()
+    yield h
+    h._df.unpersist()
+
+
+def test_profile_path_prefers_existing_reference(tmp_path):
+    reference = tmp_path / "ref" / "experiment1.xml"
+    reference.parent.mkdir()
+    reference.write_text("<reference/>")
+    assert profile_path(str(reference), tmp_path) == str(reference)
+    reference.unlink()
+    generated = profile_path(str(reference), tmp_path)
+    assert generated == str(tmp_path / "experiment1.xml")
+    with open(generated) as f:
+        assert "CPUTIME (usec):Mean (I)" in f.read()
 
 
 def test_shape_and_types(exp1):
@@ -64,12 +91,14 @@ def test_filters_golden(exp1):
             exp1.at_paths(suffix=(813,)).select("id").collect()] == [813]
 
 
-def test_fragments_not_implemented(exp1):
+def test_fragments_not_implemented(profile1):
+    exp1 = profile1
     with pytest.raises(NotImplementedError):
         exp1.at_paths((1, 2))
 
 
-def test_metadata_propagates_through_transformations(exp1):
+def test_metadata_propagates_through_transformations(profile1):
+    exp1 = profile1
     sliced = exp1.at_depth(3).compact
     assert sliced.metadata is exp1.metadata
     assert sliced.metadata.meaningful_columns["hot_path"] == \
@@ -79,7 +108,8 @@ def test_metadata_propagates_through_transformations(exp1):
     assert filtered.metadata is exp1.metadata
 
 
-def test_column_order_matches_reference(exp1):
+def test_column_order_matches_reference(profile1):
+    exp1 = profile1
     # reference layout (hpctoolkit_dataframe.py:190-198, 354, 385):
     # metrics sorted by id, both ratio columns right after the elected
     # percentage column, then the location columns
@@ -96,9 +126,9 @@ def test_column_order_matches_reference(exp1):
     assert exp1.columns[len(expected):] == ["profile_id"]  # engine extension
 
 
-def test_max_depth_zero_root_only(spark):
-    df, _ = load_experiments(spark, EXPERIMENT1, max_depth=0,
-                             add_percentage_columns=False)
+def test_max_depth_zero_root_only(spark, tmp_path):
+    df, _ = load_experiments(spark, profile_path(EXPERIMENT1, tmp_path),
+                             max_depth=0, add_percentage_columns=False)
     rows = df.collect()
     assert len(rows) == 1
     assert rows[0]["id"] == -1 and rows[0]["type"] == "root"
@@ -201,9 +231,10 @@ def test_on_error_skip_fleet_mode(spark, tmp_path):
     assert df.select("profile_id").distinct().count() == 1
 
 
-def test_multi_file_load(spark):
+def test_multi_file_load(spark, tmp_path):
     # engine extension: many experiments in one frame via profile_id
-    df, _ = load_experiments(spark, EXPERIMENT1.replace("experiment1", "experiment[1]"),
+    experiment1 = profile_path(EXPERIMENT1, tmp_path)
+    df, _ = load_experiments(spark, experiment1.replace("experiment1", "experiment[1]"),
                              add_percentage_columns=False)
     assert df.select("profile_id").distinct().count() == 1
 
