@@ -21,7 +21,7 @@ DEFAULT_XML = "/root/reference/test/data/experiment1.xml"
 
 
 def main() -> None:
-    path = sys.argv[1] if len(sys.argv) > 1 else DEFAULT_XML
+    path = os.path.abspath(sys.argv[1] if len(sys.argv) > 1 else DEFAULT_XML)
     spark = get_spark("demo")
     spark.sparkContext.setLogLevel("ERROR")
 

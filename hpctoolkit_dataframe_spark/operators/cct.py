@@ -33,69 +33,6 @@ from pyspark.sql import functions as F
 
 from ..functions import callpath as cp
 
-# Build-side row cap for FORCING a shuffled-hash join in the parent/
-# ancestor self-joins.  SHJ was measured faster than sort-merge at
-# bench scale (the exploded probe side pays an O(n log n) sort under
-# SMJ), but its build-side hash map CANNOT spill, so the cap must
-# scale with the heap actually available — a fixed row count is only
-# valid at the heap it was calibrated on.  Two measured OOMs pin the
-# density: the r7 30x run died at 18.6M build rows on an 8 GiB heap
-# (6.2M was fine), and the r7 low-memory probe died at the SAME 6.2M
-# rows on a 3 GiB heap.  800k rows per heap-GiB sits just above the
-# known-good 6.2M/8GiB point and a factor ~3 below both known-bad
-# points.  Above the cap the hint is dropped and Catalyst/AQE pick
-# the strategy (sort-merge — degrades gracefully via spill).  Checked
-# against a count of the ALREADY MATERIALIZED input (memoized build or
-# the eager localCheckpoint this function itself takes), so the probe
-# costs one cheap cached-scan job.
-SHJ_ROWS_PER_HEAP_GIB = 800_000
-
-
-def _parse_mem_gib(mem: str) -> float:
-    """Parse a Spark memory string to GiB, matching JavaUtils
-    byteStringAsMb: optional single-letter unit with optional trailing
-    'b' ('8g', '8gb', '512mb'), and a BARE number means MiB (Spark's
-    convention for spark.*.memory), not bytes."""
-    mem = mem.strip().lower()
-    units = {"k": 1 / (1024 * 1024), "m": 1 / 1024, "g": 1, "t": 1024,
-             "p": 1024 * 1024}
-    if mem.endswith("b") and len(mem) > 1 and mem[-2] in units:
-        mem = mem[:-1]
-    elif mem.endswith("b") and mem[:-1].isdigit():
-        # bare 'b' with no unit letter is BYTES in JavaUtils ('800b');
-        # falling through to the MiB fallback overstated heap ~1000x
-        # for this form (ADVICE r8)
-        return float(mem[:-1]) / (1024 ** 3)
-    try:
-        if mem[-1] in units:
-            return float(mem[:-1]) * units[mem[-1]]
-        return float(mem) / 1024  # bare number = MiB (JavaUtils)
-    except (ValueError, IndexError):
-        return 1.0
-
-
-def _shj_build_row_cap(spark) -> int:
-    """Heap-proportional SHJ build-side cap.  Local mode does the work
-    in the driver JVM; on a cluster the executors build the maps — and
-    the map is PER TASK, so the executor heap is divided by its task
-    slots (spark.executor.cores).  The 800k/GiB density was calibrated
-    in local mode, where concurrent tasks share the driver heap but the
-    probed joins run effectively one-at-a-time; on a cluster the
-    per-slot division is the conservative reading of the same data."""
-    conf = spark.sparkContext.getConf()
-    master = conf.get("spark.master", "")
-    if master.startswith("local"):
-        gib = _parse_mem_gib(conf.get("spark.driver.memory", "1g"))
-    else:
-        gib = _parse_mem_gib(conf.get("spark.executor.memory", "1g"))
-        try:
-            slots = max(1, int(conf.get("spark.executor.cores", "1")))
-        except ValueError:
-            slots = 1
-        gib /= slots
-    return max(1, int(gib * SHJ_ROWS_PER_HEAP_GIB))
-
-
 # ---------------------------------------------------------------------------
 # filters (reference at_paths/at_depths/at_depth, :391-401)
 # ---------------------------------------------------------------------------
@@ -231,25 +168,12 @@ def ancestor_ratio_columns(
     )
 
 
-def _maybe_shuffle_hash(nodes: DataFrame, df: DataFrame) -> DataFrame:
-    """Apply the shuffle-hash hint only while the build side provably
-    fits the CURRENT heap (_shj_build_row_cap); beyond it, no hint —
-    Catalyst picks sort-merge, which spills instead of OOMing."""
-    try:
-        n = df.count()
-    except Exception:
-        return nodes  # un-countable input: be safe, no forced SHJ
-    cap = _shj_build_row_cap(df.sparkSession)
-    return nodes.hint("shuffle_hash") if n <= cap else nodes
-
-
 def with_ratio_of_parent(
     df: DataFrame,
     base_column: str,
     column_name: str | None = None,
     partition_cols: Sequence[str] = (),
     callpath_col: str = "callpath",
-    persist_input: bool = True,
     carry_cols: Sequence[str] | None = None,
     monotone: bool = False,
 ) -> DataFrame:
@@ -284,11 +208,11 @@ def with_ratio_of_parent(
       than one row raises at the action instead of feeding duplicate
       ancestors into ``max_by``.
 
-    ``persist_input`` (explode plan only): the input feeds the node
-    table, the explode and the join-back, so its lineage is cut with an
-    eager ``localCheckpoint`` after a repartition to the default
-    parallelism.  Pass False when the input is already materialized (a
-    memoized build) or cheap to recompute.
+    The input is read by up to three plan branches (the node table, the
+    explode or child side, and the join-back), so cache an expensive
+    input before the call; building the plan starts no Spark job.
+    Neither join carries a hint: AQE picks broadcast, shuffled-hash or
+    sort-merge from runtime sizes.
 
     ``carry_cols``: when given, the result holds ONLY
     (partition_cols, id, *carry_cols, ratio); the carried columns ride
@@ -323,7 +247,7 @@ def with_ratio_of_parent(
             F.col(base_column).cast("double").alias("__value"),
         ).withColumn("__path_key", cp.path_key("__path"))
         joined = child.join(
-            _maybe_shuffle_hash(nodes, df),
+            nodes,
             on=[F.col(c) == F.col(f"__n_{c}") for c in pc]
             + [F.col("__pkey") == F.col("__path_key"),
                F.col("__ppath") == F.col("__path")],
@@ -333,17 +257,6 @@ def with_ratio_of_parent(
             *[child[c] for c in out_cols],
             F.try_divide(F.col("__cv"), F.col("__value"))
             .alias(column_name))
-
-    if persist_input:
-        # the input feeds three plan branches (node table, ancestor
-        # explode, final join-back); cache() substitution does NOT
-        # survive the self-join's relation deduplication here (observed:
-        # the upstream plan ran 3x), so cut the lineage outright with an
-        # eager localCheckpoint.  Repartition first: AQE coalesces
-        # upstream aggregate output for exchange SIZE, which can leave
-        # 1-2 partitions feeding the CPU-heavy ancestor explode.
-        sc = df.sparkSession.sparkContext
-        df = df.repartition(sc.defaultParallelism).localCheckpoint(eager=True)
 
     # ancestor depths 0..d-1 of a depth-d node; the root (d=0) explodes
     # to its own depth 0 so root/root = 1.0 like the reference
@@ -388,11 +301,7 @@ def with_ratio_of_parent(
         .otherwise(F.col("__value")).alias("__value"),
     )
     joined = exploded.join(
-        # shuffle-hash, not sort-merge: the exploded side is |df| x depth
-        # rows and sorting it dominates the join cost; the node side (the
-        # build side) is |df| slim rows — hashing it is cheap WHEN it
-        # fits (_shj_build_row_cap guards the 30x + low-mem OOMs)
-        _maybe_shuffle_hash(nodes, df),
+        nodes,
         on=[F.col(c) == F.col(f"__n_{c}") for c in pc]
         + [depth == F.col("__n_depth"), F.col("__anc_id") == F.col("__n_id")],
         how="inner",

@@ -269,7 +269,6 @@ def cct_ratio_of_parent(spark: SparkSession, sf_dir: str) -> DataFrame:
     # what the hash check proves)
     df = ops.with_ratio_of_parent(build_cct(spark, sf_dir), "value", "ratio",
                                   carry_cols=("depth", "value"),
-                                  persist_input=False,  # build is memoized
                                   monotone=True)
     return df.select("id", "depth", "value", "ratio")
 
@@ -288,8 +287,7 @@ def cct_ratio_of_parent_walkup(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = build_cct(spark, sf_dir).withColumn(
         "avg_leaf", F.col("value").cast("double") / F.col("leaves").cast("double"))
     df = ops.with_ratio_of_parent(df, "avg_leaf", "ratio",
-                                  carry_cols=("depth", "avg_leaf"),
-                                  persist_input=False)  # build is memoized
+                                  carry_cols=("depth", "avg_leaf"))
     return df.select("id", "depth", "avg_leaf", "ratio")
 
 

@@ -48,9 +48,19 @@ class _FilePartition(InputPartition):
         self.path = path
 
 
-def _matched_files(path: str | None) -> list[str]:
+def _checked_path(path: str | None) -> str:
     if not path:
         raise ValueError("format('hpctoolkit') requires .load(path)")
+    if not _os.path.isabs(path):
+        # the source runs in a Python worker whose working directory is
+        # not the driver's: a relative path would name another file
+        raise ValueError(
+            f"the hpctoolkit data source needs an absolute path: {path!r}")
+    return path
+
+
+def _matched_files(path: str | None) -> list[str]:
+    path = _checked_path(path)
     files = sorted(_glob.glob(path)) if _glob.has_magic(path) else [path]
     if not files:
         raise FileNotFoundError(path)
@@ -58,7 +68,8 @@ def _matched_files(path: str | None) -> list[str]:
 
 
 class HPCToolkitXMLDataSource(DataSource):
-    """``spark.read.format("hpctoolkit")`` — options:
+    """``spark.read.format("hpctoolkit")`` — the path (a file or a glob)
+    must be absolute.  Options:
 
     - ``max_depth`` (int): stop parsing below this depth (true scan
       pushdown: pruned subtrees are never materialized)
@@ -150,9 +161,7 @@ class _HPCToolkitStreamReader(DataSourceStreamReader):
         self._columns: Sequence[str] = [f.name for f in schema.fields]
         (self._max_depth, self._skip_callsite,
          self._on_error) = _parse_scan_options(options)
-        self._path = options.get("path")
-        if not self._path:
-            raise ValueError("format('hpctoolkit') requires .load(path)")
+        self._path = _checked_path(options.get("path"))
 
     def initialOffset(self) -> dict:
         return {"files": []}

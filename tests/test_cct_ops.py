@@ -9,7 +9,11 @@ the joins (engine extension — reference is single-profile only).
 import pytest
 from pyspark.sql import functions as F
 
+from hpctoolkit_dataframe_spark import HPCtoolkitDataFrame
 from hpctoolkit_dataframe_spark.operators import cct
+from hpctoolkit_dataframe_spark.plans import explain
+
+from .conftest import cct_xml, job_probe
 
 
 @pytest.fixture(scope="module")
@@ -100,8 +104,6 @@ def test_ratio_of_parent_null_ancestor_stops_walk(spark, tmp_path):
     from hpctoolkit_dataframe_spark.sources.hpctoolkit_xml import \
         load_experiments
 
-    from .conftest import cct_xml
-
     values = {(): 10.0, (1,): None, (1, 2): 5.0, (1, 2, 3): 4.0}
     df = spark.createDataFrame(
         [("p1", p[-1] if p else -1, list(p), v) for p, v in values.items()],
@@ -154,10 +156,9 @@ def test_monotone_hint_equals_walkup_explode(spark):
 
     df = build_cct(spark, "/root/testdata/sf0.001")
     fast = cct.with_ratio_of_parent(
-        df, "value", "r", carry_cols=("depth",), persist_input=False,
-        monotone=True)
+        df, "value", "r", carry_cols=("depth",), monotone=True)
     slow = cct.with_ratio_of_parent(
-        df, "value", "r", carry_cols=("depth",), persist_input=False)
+        df, "value", "r", carry_cols=("depth",))
     a = {r["id"]: (r["depth"], r["r"]) for r in fast.collect()}
     b = {r["id"]: (r["depth"], r["r"]) for r in slow.collect()}
     assert a == b
@@ -190,7 +191,7 @@ def test_walkup_explode_matches_python_reference(spark, tree):
     # the walk really skips smaller parents somewhere in this tree
     assert any(values[p[:-1]] < v for p, v in values.items() if p)
     out = cct.with_ratio_of_parent(
-        df, "avg_leaf", "r", carry_cols=("depth",), persist_input=False)
+        df, "avg_leaf", "r", carry_cols=("depth",))
     got = {}
     for r in out.collect():
         assert r["depth"] == len(paths[r["id"]])
@@ -248,7 +249,7 @@ def test_walkup_root_matched_by_depth_not_id(spark):
         }, carry
 
 
-def test_walkup_duplicate_key_raises_at_action(spark, monkeypatch):
+def test_walkup_duplicate_key_raises_at_action(spark):
     """Two rows on one (partition, depth, id) key break the walk-up's
     input contract: the action raises, naming the key, instead of
     feeding both rows into the deepest-stopper aggregate; building the
@@ -261,25 +262,72 @@ def test_walkup_duplicate_key_raises_at_action(spark, monkeypatch):
     ]
     df = spark.createDataFrame(
         rows, "profile_id string, id long, callpath array<long>, value double")
-    # the shuffle-hash size gate counts the input (a job of its own, not
-    # the check's); stub it out so the probe sees only the walk-up plan
-    monkeypatch.setattr(cct, "_maybe_shuffle_hash", lambda nodes, df: nodes)
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-    group = "walkup-check-starts-no-job"
-    sc.setJobGroup(group, "with_ratio_of_parent plan building")
-    try:
+    with job_probe(spark, "walkup-check-starts-no-job") as jobs:
         out = cct.with_ratio_of_parent(
-            df, "value", "r", partition_cols=["profile_id"],
-            persist_input=False)
-        assert tracker.getJobIdsForGroup(group) == []
+            df, "value", "r", partition_cols=["profile_id"])
+        assert jobs() == set()
         with pytest.raises(Exception, match="2 rows share depth 1 and id 1"):
             out.collect()
-        assert tracker.getJobIdsForGroup(group)  # the probe works
+        assert jobs()  # the probe works
+
+
+@pytest.fixture(scope="module")
+def profile(spark, tmp_path_factory):
+    """A loaded experiment XML as the reference-shaped frame."""
+    xml = tmp_path_factory.mktemp("profile") / "profile.xml"
+    values = {(): 10.0, (1,): 8.0, (1, 2): 3.0, (1, 2, 3): 5.0, (1, 4): 8.0}
+    xml.write_text(cct_xml({p: {2: v} for p, v in values.items()}))
+    return HPCtoolkitDataFrame(path=str(xml), spark=spark)
+
+
+def test_ratio_of_parent_starts_no_job(spark, tree, profile):
+    """Both walk-up plans and the frame's ``add_ratio_column(...,
+    "parent")`` are lazy: the call starts no Spark job, the action
+    does."""
+    with job_probe(spark, "ratio-of-parent-starts-no-job") as jobs:
+        outs = [
+            cct.with_ratio_of_parent(tree, "value", "r",
+                                     partition_cols=["profile_id"],
+                                     monotone=monotone, carry_cols=carry)
+            for monotone in (True, False) for carry in (None, ("value",))]
+        outs.append(profile.add_ratio_column("T:Mean (I)", "r", "parent"))
+        assert jobs() == set()
+        for out in outs:
+            out.collect()
+        assert jobs()  # the probe works
+
+
+def _outside_cache(plan: str, op: str) -> list[str]:
+    """Lines of a plan tree string that name ``op`` with no
+    ``InMemoryRelation`` among their ancestors."""
+    stack: list[tuple[int, str]] = []
+    found = []
+    for line in plan.splitlines():
+        indent = len(line) - len(line.lstrip(" :|+-"))
+        while stack and stack[-1][0] >= indent:
+            stack.pop()
+        if op in line and not any("InMemoryRelation" in a for _, a in stack):
+            found.append(line)
+        stack.append((indent, line))
+    return found
+
+
+def test_ratio_of_parent_reads_cached_input(spark, profile):
+    """On a cached frame every branch of the walk-up plan reads the
+    cache: the XML parse (``MapInPandas``) shows only inside the
+    ``InMemoryRelation``, never as a re-parse of its own."""
+    cached = profile.cache()
+    try:
+        cached.count()
+        out = cached.add_ratio_column("T:Mean (I)", "r", "parent")._df
+        out.collect()  # finalizes this Dataset's adaptive plan
+        plan = explain.executed_plan(out)
+        assert "isFinalPlan=true" in plan
+        final = plan.split("== Initial Plan ==")[0]
+        assert final.count("InMemoryRelation") == 3, final  # 3 branches
+        assert _outside_cache(final, "MapInPandas") == [], final
     finally:
-        for key in ("spark.jobGroup.id", "spark.job.description",
-                    "spark.job.interruptOnCancel"):
-            sc.setLocalProperty(key, None)
+        cached.unpersist()
 
 
 def test_deepest_aggregate_maxby_semantics(spark):

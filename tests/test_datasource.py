@@ -177,3 +177,26 @@ def test_stream_latest_offset_waits_for_nonglob_file(tmp_path):
     assert rdr.latestOffset() == {"files": []}
     shutil.copy(profile_path(XML1, tmp_path), target)
     assert rdr.latestOffset() == {"files": [str(target)]}
+
+
+def test_relative_path_rejected(spark, tmp_path, monkeypatch):
+    """The source resolves paths in its Python worker, not in the
+    driver's working directory, so a relative path is refused with a
+    clear error instead of a missing-file error for another directory."""
+    import shutil
+
+    import pytest
+    from pyspark.sql import types as T
+
+    from hpctoolkit_dataframe_spark.sources.datasource import (
+        _HPCToolkitStreamReader)
+
+    datasource.register(spark)
+    monkeypatch.chdir(tmp_path)
+    shutil.copy(profile_path(XML1, tmp_path), tmp_path / "rel.xml")
+    with pytest.raises(Exception, match="needs an absolute path"):
+        spark.read.format("hpctoolkit").load("rel.xml").count()
+    with pytest.raises(ValueError, match="needs an absolute path"):
+        _HPCToolkitStreamReader(
+            {"path": "rel.xml"},
+            T.StructType([T.StructField("id", T.LongType())]))

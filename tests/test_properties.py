@@ -65,8 +65,7 @@ def test_walk_up_matches_python_reference(spark, trees):
     df = spark.createDataFrame(
         rows, "profile_id string, id long, callpath array<long>, value double")
     out = cct.with_ratio_of_parent(
-        df, "value", "ratio", partition_cols=["profile_id"],
-        persist_input=False).collect()
+        df, "value", "ratio", partition_cols=["profile_id"]).collect()
     explode = {(r["profile_id"], tuple(r["callpath"])): r["ratio"]
                for r in out}
     with tempfile.TemporaryDirectory() as d:

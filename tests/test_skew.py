@@ -86,36 +86,3 @@ def test_first_point_after_anchor_is_never_its_own_point(spark):
     got = {r["event_id"]: r["nxt"] for r in _first_point_after(
         anchors, points, "t", "p", out="nxt").collect()}
     assert got == {1: 150, 2: 150}
-
-
-def test_shj_cap_scales_with_heap(spark):
-    from hpctoolkit_dataframe_spark.operators.cct import (
-        SHJ_ROWS_PER_HEAP_GIB, _shj_build_row_cap)
-
-    # the live session: cap == configured driver heap x density
-    import re
-    mem = spark.sparkContext.getConf().get("spark.driver.memory", "1g")
-    m = re.fullmatch(r"(\d+(?:\.\d+)?)([kmgt])", mem.strip().lower())
-    assert m, mem
-    scale = {"k": 1 / 2**20, "m": 1 / 2**10, "g": 1, "t": 2**10}[m.group(2)]
-    expect = max(1, int(float(m.group(1)) * scale * SHJ_ROWS_PER_HEAP_GIB))
-    assert _shj_build_row_cap(spark) == expect
-
-
-def test_mem_string_parser_matches_javautils():
-    """ADVICE r7: '8gb'/'512mb' two-letter suffixes and bare-number-
-    means-MiB must match Spark's JavaUtils.byteStringAsMb convention."""
-    from hpctoolkit_dataframe_spark.operators.cct import _parse_mem_gib
-
-    assert _parse_mem_gib("8g") == 8.0
-    assert _parse_mem_gib("8gb") == 8.0
-    assert _parse_mem_gib("512mb") == 0.5
-    assert _parse_mem_gib("512m") == 0.5
-    assert _parse_mem_gib("4096") == 4.0      # bare number = MiB
-    assert _parse_mem_gib("1t") == 1024.0
-    assert _parse_mem_gib("1048576k") == 1.0
-    # ADVICE r8: bare 'b' with no unit letter is BYTES in JavaUtils,
-    # not the MiB/fallback path (which overstated heap ~1000x)
-    assert _parse_mem_gib("800b") == 800 / 1024 ** 3
-    assert _parse_mem_gib(str(1024 ** 3) + "b") == 1.0
-    assert _parse_mem_gib("garbage") == 1.0   # fallback unchanged
