@@ -158,7 +158,12 @@ class HPCtoolkitDataFrame:
     ) -> "HPCtoolkitDataFrame":
         """Reference: hpctoolkit_dataframe.py:340-385 (returns new frame —
         Spark DataFrames are immutable, unlike the reference's in-place
-        ``insert``)."""
+        ``insert``).
+
+        Starts no Spark job.  ``"parent"`` reads the frame in three plan
+        branches and a loaded frame is not cached, so an uncached frame
+        parses its XML three times per action: call ``cache()`` on it
+        first."""
         assert base_column in self._df.columns, (base_column, self._df.columns)
         assert column_name not in self._df.columns, (column_name, self._df.columns)
         if method == "total":

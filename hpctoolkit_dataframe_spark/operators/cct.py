@@ -211,8 +211,8 @@ def with_ratio_of_parent(
     The input is read by up to three plan branches (the node table, the
     explode or child side, and the join-back), so cache an expensive
     input before the call; building the plan starts no Spark job.
-    Neither join carries a hint: AQE picks broadcast, shuffled-hash or
-    sort-merge from runtime sizes.
+    Neither join carries a hint: AQE broadcasts a small side at
+    runtime, else Spark plans a sort-merge join, which spills.
 
     ``carry_cols``: when given, the result holds ONLY
     (partition_cols, id, *carry_cols, ratio); the carried columns ride

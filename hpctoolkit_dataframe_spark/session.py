@@ -25,16 +25,6 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # AQE plans a sort-merge join as shuffled-hash when every
-        # post-shuffle partition of the build side is at most this many
-        # shuffle bytes, measured at runtime; above it SMJ spills.  The
-        # bound only acts while >= the advisory partition size, so both
-        # drop from the 64MB default: at the 10x clone the monotone
-        # walk-up's 32-64MB (compressed) partitions did not fit in a
-        # 4 GiB driver as hash maps.
-        .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-                "16MB")
-        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16MB")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))

@@ -28,27 +28,6 @@ def job_probe(spark, group):
             sc.setLocalProperty(key, None)
 
 
-@contextmanager
-def no_broadcast(spark):
-    """Turn off both broadcast-join thresholds for the block."""
-    keys = ["spark.sql.autoBroadcastJoinThreshold",
-            "spark.sql.adaptive.autoBroadcastJoinThreshold"]
-    old = {k: spark.conf.get(k, None) for k in keys}
-    for k in keys:
-        spark.conf.set(k, "-1")
-    try:
-        yield
-    finally:
-        # restore EXACT prior state: a key that was unset must be unset
-        # again (leaving adaptive.autoBroadcastJoinThreshold=-1 would
-        # disable AQE broadcasts for every later test in the session)
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-
-
 SF_DIR = "/root/testdata/sf0.001"
 EXPERIMENT1 = "/root/reference/test/data/experiment1.xml"
 EXPERIMENT2 = "/root/reference/test/data/experiment2.xml"

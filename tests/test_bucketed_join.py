@@ -3,13 +3,33 @@ two tables bucketed on the same key with the same bucket count runs
 with ZERO shuffle exchanges — the co-located-join pattern that turns a
 100 TB fact-fact join from a full network shuffle into local reads."""
 
+import contextlib
+
 import pytest
 from pyspark.sql import functions as F
 
 from hpctoolkit_dataframe_spark.plans import explain
 from hpctoolkit_dataframe_spark.sources.sinks import write_bucketed_table
 
-from .conftest import no_broadcast
+
+@contextlib.contextmanager
+def _no_broadcast(spark):
+    keys = ["spark.sql.autoBroadcastJoinThreshold",
+            "spark.sql.adaptive.autoBroadcastJoinThreshold"]
+    old = {k: spark.conf.get(k, None) for k in keys}
+    for k in keys:
+        spark.conf.set(k, "-1")
+    try:
+        yield
+    finally:
+        # restore EXACT prior state: a key that was unset must be unset
+        # again (leaving adaptive.autoBroadcastJoinThreshold=-1 would
+        # disable AQE broadcasts for every later test in the session)
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 @pytest.fixture()
@@ -30,7 +50,7 @@ def bucketed_pair(spark):
 
 def test_bucketed_join_no_shuffle(spark, bucketed_pair):
     ta, tb = bucketed_pair
-    with no_broadcast(spark):
+    with _no_broadcast(spark):
         joined = (spark.table(ta).join(spark.table(tb), "k")
                   .groupBy("v1").agg(F.sum("v2").alias("s")))
         plan = explain.executed_plan(joined)
@@ -44,7 +64,7 @@ def test_bucketed_join_no_shuffle(spark, bucketed_pair):
 
 def test_bucketed_join_values(spark, bucketed_pair):
     ta, tb = bucketed_pair
-    with no_broadcast(spark):
+    with _no_broadcast(spark):
         got = (spark.table(ta).join(spark.table(tb), "k")
                .agg(F.count(F.lit(1)), F.sum("v2")).collect()[0])
     assert tuple(got) == (30_000, sum(i % 13 for i in range(30_000)))

@@ -106,7 +106,7 @@ def test_fingerprint_store_roundtrip_bucketed(spark, tmp_path):
     from hpctoolkit_dataframe_spark.queries.textops import with_simhash64
     from hpctoolkit_dataframe_spark.sources.sinks import write_bucketed_table
 
-    from .conftest import no_broadcast
+    from .test_bucketed_join import _no_broadcast
 
     docs = load_table(spark, SF_DIR, "documents").filter(
         F.col("text").isNotNull())
@@ -118,7 +118,7 @@ def test_fingerprint_store_roundtrip_bucketed(spark, tmp_path):
         store = spark.table("fp_store_t")
         delta = with_simhash64(docs.limit(50)).select(
             "doc_id", F.md5("text").alias("th"))
-        with no_broadcast(spark):  # force the bucket layout to carry it
+        with _no_broadcast(spark):  # force the bucket layout to carry it
             flagged = delta.join(store.select("th"), "th", "left_semi")
             plan = explain.executed_plan(flagged)
             # exactly ONE hash exchange on th — the delta aligning to

@@ -11,7 +11,7 @@ import pytest
 from hpctoolkit_dataframe_spark.plans import explain
 from hpctoolkit_dataframe_spark.queries import REGISTRY
 
-from .conftest import SF_DIR, no_broadcast
+from .conftest import SF_DIR
 
 
 def test_q6_filter_pushdown_and_pruning(spark):
@@ -424,18 +424,3 @@ def test_cosine_zero_norm_filter_has_no_norm_lambda(spark):
         bad = [ln for ln in plan.splitlines()
                if "Filter" in ln and "aggregate(" in ln]
         assert not bad, (name, bad[:2])
-
-
-def test_walkup_join_is_shuffled_hash_without_broadcast(spark):
-    """With broadcasts off, AQE plans the walk-up's ancestor join as a
-    shuffled-hash join from runtime partition sizes
-    (``maxShuffledHashJoinLocalMapThreshold``): no hint forces it, and
-    without the setting the same plan is a sort-merge join."""
-    with no_broadcast(spark):
-        df = REGISTRY["cct_ratio_of_parent_walkup"].fn(spark, SF_DIR)
-        df.collect()  # finalizes this Dataset's adaptive plan
-    plan = explain.executed_plan(df)
-    assert "isFinalPlan=true" in plan
-    final = plan.split("== Initial Plan ==")[0]
-    assert "ShuffledHashJoin" in final, final
-    assert "SortMergeJoin" not in final, final

@@ -69,8 +69,8 @@ SELECTION = {
     "cct_ratio_of_parent": (
         "Monotone walk-up short-circuit (r7): the rollup-sum metric"
         " provably stops the walk at the immediate parent, so the plan"
-        " is ONE slim parent self-join with no hint (AQE picks"
-        " broadcast, shuffled-hash or sort-merge at runtime) — no"
+        " is ONE slim parent self-join with no hint (AQE broadcasts a"
+        " small side, else sort-merge) — no"
         " explode, no aggregate.  The general non-monotone path"
         " (ancestor explode, (depth, id) join, max_by deepest stopper)"
         " is cct_ratio_of_parent_walkup's plan."),
@@ -78,8 +78,7 @@ SELECTION = {
         "Ancestor walk-up, general path: explode each node to its"
         " ancestor depths, address each ancestor by the BIGINT pair"
         " (depth, callpath[depth]) (the root as depth 0), join against"
-        " the node table with no hint (AQE picks broadcast, else"
-        " shuffled-hash while each partition of a side is <= 16 MB,"
+        " the node table with no hint (AQE broadcasts a small side,"
         " else sort-merge), max_by deepest stopper.  The node table is"
         " aggregated on the join key to reject duplicate keys; that"
         " aggregate's exchange is the join's, so it adds none.  No"
