@@ -16,7 +16,7 @@ greedy hot-path extraction, flame-graph layout).  This package provides:
 - ``operators.flame``: flame-graph layout (reference: :430-540)
 - ``frame``: metadata-carrying wrapper (reference subclasses pd.DataFrame,
   :131-152; Spark DataFrames cannot be subclassed usefully)
-- ``operators.dedup / similarity / text_analysis / multimodal`` and
+- ``queries.dedup / textops / vectors``, ``operators.multimodal`` and
   ``streaming``: scale extensions beyond the reference.
 """
 

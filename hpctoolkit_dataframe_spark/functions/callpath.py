@@ -139,9 +139,3 @@ def sequence_matches(
             cond = cond & _fullmatch_or_eq(
                 F.try_element_at(c, F.lit(-(len(suffix) - i))), item)
     return cond
-
-
-def path_str(callpath: Column | str = "callpath", sep: str = "/") -> Column:
-    """Deterministic string rendering (for cross-engine comparisons)."""
-    c = F.col(callpath) if isinstance(callpath, str) else callpath
-    return F.array_join(F.transform(c, lambda x: x.cast("string")), sep)

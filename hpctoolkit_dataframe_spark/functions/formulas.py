@@ -222,10 +222,6 @@ def compile_formula(
     return _compile(parse_formula(formula), resolve)
 
 
-def formula_may_be_complex(formula: str) -> bool:
-    return "sqrt" in formula
-
-
 _COMBINE_RE = re.compile(r"\s*(sum|min|max)\s*\(\s*\$([0-9]+)\s*,\s*\$([0-9]+)\s*\)\s*")
 
 

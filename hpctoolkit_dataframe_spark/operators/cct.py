@@ -192,7 +192,9 @@ def with_ratio_of_parent(
     - ``monotone=True`` — caller-asserted: ``base_column`` never
       decreases up the tree (e.g. a rollup SUM of non-negative leaves),
       so every parent stops the walk.  The plan is one slim parent
-      self-join on the parent path; no explode, no aggregate.
+      self-join on the parent path; no explode, no aggregate.  A parent
+      whose value is below its child's breaks that promise and raises
+      at the action.
     - otherwise, the ancestor explode: a depth-d node explodes into its
       d ancestors (the root into itself), each addressed by the BIGINT
       pair (depth k, callpath[k]); the root is matched as depth 0 on
@@ -234,6 +236,10 @@ def with_ratio_of_parent(
         # whose oracle remains the FULL walk-up SQL, so the claimed
         # equivalence is hash-checked at two scale factors.  Root joins
         # its own empty path -> ratio 1.0, exactly the walk-up result.
+        # The joined row holds both values, so the assertion is checked
+        # there at no extra stage: a parent below its child would not
+        # stop the walk, and the one-step ratio would be wrong.  A NaN
+        # child stops every walk (the reference's `x < NaN` is False).
         out_cols = ([*pc, "id", *carry_cols] if carry_cols is not None
                     else list(df.columns))
         child = df.select(
@@ -253,9 +259,14 @@ def with_ratio_of_parent(
                F.col("__ppath") == F.col("__path")],
             how="left",
         )
+        bad = (F.col("__value") < F.col("__cv")) & ~F.isnan("__cv")
         return joined.select(
             *[child[c] for c in out_cols],
-            F.try_divide(F.col("__cv"), F.col("__value"))
+            F.when(bad, F.raise_error(F.format_string(
+                "with_ratio_of_parent(monotone=True): node %d has value %s "
+                "but its parent %s; base_column must not decrease up the "
+                "tree", "id", "__cv", "__value")))
+            .otherwise(F.try_divide(F.col("__cv"), F.col("__value")))
             .alias(column_name))
 
     # ancestor depths 0..d-1 of a depth-d node; the root (d=0) explodes

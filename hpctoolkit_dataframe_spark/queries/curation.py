@@ -724,9 +724,9 @@ _SNAPSHOTS_SQL = """
 def scd2_snapshots(spark: SparkSession,
                    sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """The deterministic two-snapshot change simulation (re-segment
-    %7, delete %17) — ONE definition shared by this batch query, its
-    oracle SQL (_SNAPSHOTS_SQL mirrors it), and the streaming twin
-    test (tests/test_scd2_stream.py), so the three cannot drift."""
+    %7, delete %17) — ONE definition shared by this batch query and
+    its oracle SQL (_SNAPSHOTS_SQL mirrors it), so the two cannot
+    drift."""
     cust = load_table(spark, sf_dir, "customer")
     s1 = cust.select("c_custkey", F.lit(1).cast("long").alias("snap"),
                      F.col("c_mktsegment").alias("seg"))

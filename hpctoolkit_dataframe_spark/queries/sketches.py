@@ -18,8 +18,6 @@ agg) and ``price_quantiles`` (exact percentile_cont).
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import load_table, register
@@ -270,81 +268,3 @@ def cms_counters(toks: DataFrame) -> DataFrame:
             .withColumn("b", cms_b)
             .groupBy("i", "b")
             .agg(F.sum("c0").cast("long").alias("c")))
-
-
-def cms_estimate_tokens(spark: SparkSession, store_path: str,
-                        toks: DataFrame) -> DataFrame:
-    """min-over-rows estimates for each distinct token in ``toks``,
-    against the APPEND-ONLY counter store: cell-wise SUM of every
-    appended batch's counters IS the merged sketch (mergeability is
-    the data structure's point), then D lookups per token."""
-    counters = (spark.read.parquet(store_path)
-                .groupBy("i", "b").agg(F.sum("c").cast("long").alias("c")))
-    cand = toks.select("tok").distinct()
-    cms_b = F.conv(F.substring(F.md5(
-        F.concat(F.col("i").cast("string"), F.lit(":"), F.col("tok"))),
-        1, 8), 16, 10).cast("long") % CMS_W
-    cells = (cand
-             .select("tok", F.explode(F.sequence(F.lit(0),
-                                                 F.lit(CMS_D - 1)))
-                     .alias("i"))
-             .withColumn("b", cms_b))
-    # LEFT join: an untouched cell means count 0 — an inner join would
-    # drop it from the min and overestimate absent tokens (or lose them
-    # entirely when all D cells are empty)
-    return (cells.join(counters, ["i", "b"], "left")
-            .groupBy("tok")
-            .agg(F.min(F.coalesce("c", F.lit(0))).cast("long")
-                 .alias("est_c")))
-
-
-def compact_counter_store(spark: SparkSession, store_path: str,
-                          key_cols: Sequence[str],
-                          sum_cols: Sequence[str],
-                          n_files: int = 1) -> tuple[int, int]:
-    """Maintenance rewrite for APPEND-ONLY mergeable-counter stores
-    (the CMS cell store, the streaming DSIR bucket models): N appended
-    batches mean N rows per cell and N files to open per read.
-    Because the merge is associative cell-wise addition, the compacted
-    store IS the aggregate: group by the key, SUM the counters, and
-    swap the directory (write to a sibling temp dir, rename the live
-    dir aside, rename the temp into place, delete the old).  A reader
-    never observes a half-written store, and if the swap-in rename
-    fails the prior store is recoverable at ``path__old``; the swap is
-    still not atomic for a reader that lists the parent in the
-    instant between the two renames.  Idempotent: compacting twice is
-    a no-op.  Returns (files_before, files_after)."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    path = jvm.org.apache.hadoop.fs.Path(store_path)
-    fs = path.getFileSystem(conf)
-
-    def count_files(p) -> int:
-        if not fs.exists(p):
-            return 0
-        it, n = fs.listFiles(p, True), 0
-        while it.hasNext():
-            f = it.next().getPath().getName()
-            if not (f.startswith("_") or f.startswith(".")):
-                n += 1
-        return n
-
-    before = count_files(path)
-    merged = (spark.read.parquet(store_path)
-              .groupBy(*key_cols)
-              .agg(*[F.sum(c).cast("long").alias(c) for c in sum_cols])
-              .coalesce(n_files))
-    tmp = jvm.org.apache.hadoop.fs.Path(store_path + "__compacting")
-    merged.write.mode("overwrite").parquet(str(tmp))
-    # Old-aside-first swap: the live store is never deleted before its
-    # replacement is in place (ADVICE r6 — delete-then-rename left a
-    # window with NO store, and a failed rename lost the live copy).
-    old = jvm.org.apache.hadoop.fs.Path(store_path + "__old")
-    fs.delete(old, True)  # leftover from a previously interrupted swap
-    if not fs.rename(path, old):
-        raise IOError(f"swap failed moving live store aside: {path}")
-    if not fs.rename(tmp, path):
-        fs.rename(old, path)  # roll back: restore the live store
-        raise IOError(f"swap failed: {tmp} -> {path} (old store restored)")
-    fs.delete(old, True)
-    return before, count_files(path)

@@ -233,83 +233,6 @@ def duplicate_word_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
                  .alias("covered_frac")))
 
 
-# ---------------------------------------------------------------------------
-# Snapshot-resumable SUBSTRING dedup: the gram-store analog of the
-# document-fingerprint store (queries/dedup.py).  The persisted state
-# is the set of K-gram hashes ever seen; a new batch flags positions
-# whose gram is already in the store, then appends only its genuinely
-# new grams — run N+1 reads the store and the batch, never the corpus.
-# ---------------------------------------------------------------------------
-GRAM_STORE_TABLE = "gram_store"
-GRAM_STORE_BUCKETS = 16
-
-
-def span_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents + deterministic batch bucket (doc_id % 4): bucket >= 2
-    plays the historical corpus, 1 and 0 the two incoming batches."""
-    return (load_table(spark, sf_dir, "documents")
-            .filter(F.col("text").isNotNull())
-            .withColumn("bucket", (F.col("doc_id") % 4).cast("int")))
-
-
-def write_gram_store(pos: DataFrame, table: str = GRAM_STORE_TABLE,
-                     n_buckets: int = GRAM_STORE_BUCKETS) -> None:
-    """Initialize the store: DISTINCT gram hashes, bucketed+sorted on h
-    so batch checks join bucket-aligned (zero store-side shuffle)."""
-    from ..sources.sinks import write_bucketed_table
-
-    write_bucketed_table(pos.select("h").distinct(), table,
-                         bucket_cols=("h",), n_buckets=n_buckets,
-                         sort_cols=("h",))
-
-
-def check_spans_against_store(spark: SparkSession, batch_pos: DataFrame,
-                              table: str = GRAM_STORE_TABLE) -> DataFrame:
-    """Per batch doc: total K-gram positions and how many are already
-    known to the store — the corpus' bytes are never read."""
-    store = spark.table(table).select("h").distinct() \
-        .withColumn("known", F.lit(1))
-    return (batch_pos.join(store, "h", "left")
-            .groupBy("doc_id")
-            .agg(F.count(F.lit(1)).cast("long").alias("n_pos"),
-                 F.sum(F.coalesce("known", F.lit(0))).cast("long")
-                 .alias("dup_pos")))
-
-
-def append_new_grams(spark: SparkSession, batch_pos: DataFrame,
-                     table: str = GRAM_STORE_TABLE,
-                     n_buckets: int = GRAM_STORE_BUCKETS) -> None:
-    """Grow the snapshot by the batch's unseen gram hashes only."""
-    from ..sources.sinks import write_bucketed_table
-
-    store = spark.table(table)
-    new = (batch_pos.select("h").distinct()
-           .join(store.select("h"), "h", "left_anti"))
-    write_bucketed_table(new, table, bucket_cols=("h",),
-                         n_buckets=n_buckets, sort_cols=("h",),
-                         mode="append")
-    spark.catalog.refreshTable(table)
-
-
-def incremental_span_frames(
-        spark: SparkSession, sf_dir: str,
-        table: str = "gram_store_ref") -> tuple[DataFrame, DataFrame]:
-    """Batch reference for the streaming twin: corpus -> store, then
-    batch 1 (check -> append) then batch 2 (check).  Returns both flag
-    frames; batch 1's is materialized against the pre-append snapshot."""
-    from .dedup import drop_fingerprint_store as _drop
-
-    split = span_split(spark, sf_dir)
-    _drop(spark, table)  # same orphaned-location hygiene as fp store
-    write_gram_store(_positions(split.filter(F.col("bucket") >= 2)), table)
-    p1 = _positions(split.filter(F.col("bucket") == 1))
-    out1 = check_spans_against_store(spark, p1, table) \
-        .localCheckpoint(eager=True)
-    append_new_grams(spark, p1, table)
-    p2 = _positions(split.filter(F.col("bucket") == 0))
-    return out1, check_spans_against_store(spark, p2, table)
-
-
 @register("corpus_without_dup_spans", sql=f"""
 WITH {_POS_SQL},
 own AS (

@@ -14,7 +14,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 
 def write_profiles(
@@ -53,122 +53,3 @@ def write_bucketed_table(
     if sort_cols:
         writer = writer.sortBy(*sort_cols)
     writer.saveAsTable(table)
-
-
-def write_range_sorted(
-    df: DataFrame,
-    path: str,
-    *,
-    range_cols: Sequence[str],
-    n_files: int | None = None,
-    format: str = "parquet",
-    mode: str = "overwrite",
-) -> None:
-    """Range-partition + sort-within-partitions before writing — the
-    min/max-pruning layout for time-series and key-range scans at
-    100 TB.  Each output file covers a disjoint range of ``range_cols``
-    and is internally sorted, so parquet row-group statistics let a
-    range predicate skip everything outside its window (the pushdown is
-    free; the LAYOUT is what makes the statistics selective — a random
-    layout gives every row group the full min/max span and prunes
-    nothing).  Disjointness is test-pinned per file."""
-    cols = list(range_cols)
-    out = (df.repartitionByRange(n_files, *cols) if n_files
-           else df.repartitionByRange(*cols))
-    out = out.sortWithinPartitions(*cols)
-    out.write.format(format).mode(mode).save(path)
-
-
-def zorder_key(df: DataFrame, cols: Sequence[str], bits: int = 16):
-    """Column expression interleaving ``bits`` bits of each column's
-    min/max-normalized value — the Morton (Z-order) curve key.  Rows
-    close on the curve are close in EVERY listed dimension, so sorting
-    by this key gives parquet row-group min/max statistics that prune
-    under MULTI-column box predicates (a single-column range sort can
-    only ever prune its own column).
-
-    The per-column [min, max] calibration is one bounded 1-row
-    aggregate; the interleave itself is pure JVM bit arithmetic (shift/
-    and/or), no UDF.  Columns must be numeric; NULLs coalesce to the
-    column MINIMUM (curve position 0 for that dimension), keeping null
-    rows clustered at the low end of the dimension rather than
-    scattered — a layout-quality choice, not a value semantic."""
-    if bits * len(cols) > 63:
-        # Java shift counts wrap mod 64 — silent key corruption past 63
-        # usable bits.  Scale per-column precision down instead.
-        bits = 63 // len(cols)
-    stats = df.agg(*[f(c).alias(f"{n}_{c}") for c in cols
-                     for n, f in (("mn", F.min), ("mx", F.max))]).head()
-    if stats is None or any(stats[f"mn_{c}"] is None for c in cols):
-        # empty or all-NULL frame: no calibration possible — constant
-        # key keeps the writer a plain passthrough
-        return F.lit(0).cast("long")
-    parts = []
-    for j, c in enumerate(cols):
-        lo = float(stats[f"mn_{c}"])
-        hi = float(stats[f"mx_{c}"])
-        span = (hi - lo) or 1.0
-        # scale into [0, 2^bits - 1] — double math is calibration only
-        # (layout quality), never a correctness surface
-        scaled = F.least(
-            F.lit((1 << bits) - 1),
-            F.greatest(F.lit(0), F.floor(
-                (F.coalesce(F.col(c).cast("double"), F.lit(lo)) - lo)
-                * ((1 << bits) / span)).cast("long")))
-        for k in range(bits):
-            parts.append(F.shiftleft(
-                F.shiftrightunsigned(scaled, k).bitwiseAND(F.lit(1)),
-                k * len(cols) + j))
-    key = parts[0]
-    for p in parts[1:]:
-        key = key.bitwiseOR(p)
-    return key
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    *,
-    zorder_cols: Sequence[str],
-    n_files: int | None = None,
-    bits: int = 16,
-    format: str = "parquet",
-    mode: str = "overwrite",
-) -> None:
-    """Z-order clustering writer: range-partition + sort on the Morton
-    key of ``zorder_cols`` so each output file covers a compact box in
-    the multi-dimensional key space.  The companion to
-    ``write_range_sorted`` (1-D) for workloads filtering on SEVERAL
-    columns at once (user x time, tenant x day).  Box-predicate file
-    pruning is test-pinned against the 1-D layout."""
-    key = zorder_key(df, zorder_cols, bits=bits)
-    out = (df.repartitionByRange(n_files, key) if n_files
-           else df.repartitionByRange(key))
-    out = out.sortWithinPartitions(key)
-    out.write.format(format).mode(mode).save(path)
-
-
-def write_training_shards(
-    spark: SparkSession,
-    sf_dir: str,
-    path: str,
-    format: str = "json",
-    mode: str = "overwrite",
-) -> None:
-    """Materialize the training corpus the manifest describes: canonical
-    + quality-passing documents joined back to their text, written as
-    one directory per hash shard (``shard=N/``) in a line-oriented
-    format a data loader streams directly.  Partition count inside each
-    shard follows the cluster — at 100 TB each shard directory is many
-    files, and the loader shards by DIRECTORY, preserving the
-    manifest's deterministic doc->shard assignment."""
-    from ..queries import REGISTRY, load_table
-
-    manifest = (REGISTRY["training_shard_manifest"].fn(spark, sf_dir)
-                .filter(F.col("quality_pass") == 1)
-                .select("doc_id", "shard"))
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "text", "lang", "source")
-    (docs.join(manifest, "doc_id")
-     .repartition("shard")
-     .write.partitionBy("shard").format(format).mode(mode).save(path))

@@ -1,8 +1,8 @@
 """End-to-end streaming curation topology (VERDICT r6 next #5).
 
 One continuous micro-batch pipeline composing the persisted store
-maintainers that streaming/events.py twins one at a time — the
-streaming shape of tools/curation_run.py.  Per document micro-batch:
+maintainers — the streaming shape of tools/curation_run.py.  Per
+document micro-batch:
 
   1. exact/near fingerprints (md5 + simhash64) checked against the
      fingerprint store AS OF batch start;

@@ -1,17 +1,19 @@
-"""Structured Streaming operators over the ``events`` table.
+"""Structured Streaming operators over document and ``events`` streams.
 
 The reference has NO streaming surface (SURVEY.md §2.9) — this module
-is the engine's scale extension: the same event-time aggregations that
-``queries/relational.py`` runs in batch, expressed as incremental
-streaming queries with watermarks, plus a custom stateful operator via
-``applyInPandasWithState``.
+is the engine's scale extension:
 
-Design notes for 100 TB / continuous ingestion:
-- file-source streams here (the test harness reads the parquet table as
-  a stream with ``availableNow``); swap the source for Kafka/queue in
-  production — the transformation graph is identical.
-- watermark bounds state: hourly windows keep ~(watermark/1h) buckets
-  per key; session state is per-user and evicted on timeout.
+- ``streaming_simhash_dedup``: near-dup detection on the shared 64-bit
+  simhash fold, with a custom stateful operator via
+  ``applyInPandasWithState`` for the Hamming-1 mode;
+- ``run_vector_index_stream`` / ``run_dsir_stream``: ``foreachBatch``
+  maintenance of the IVF cell store and the DSIR bucket-count model;
+- ``run_funnel_stream``: the view -> click -> purchase funnel over
+  event-time-ordered micro-batches with persisted state tables.
+
+File-source streams here (tests read a parquet table as a stream with
+``availableNow``); swap the source for Kafka/queue in production — the
+transformation graph is identical.
 """
 
 from __future__ import annotations
@@ -20,11 +22,11 @@ from . import _drain
 
 from typing import Any, Iterable
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
 
 def events_schema(sf_dir: str | None = None) -> T.StructType:
     """Read schema for the events stream.  ``ts`` on disk has changed
@@ -59,21 +61,6 @@ def events_schema(sf_dir: str | None = None) -> T.StructType:
 EVENTS_SCHEMA = events_schema()
 
 
-def read_events_stream(spark: SparkSession, sf_dir: str,
-                       max_files_per_trigger: int | None = None) -> DataFrame:
-    from .._pickle import register_module_by_value
-
-    register_module_by_value(__name__)  # stateful fn runs worker-side
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    reader = (
-        spark.readStream.schema(events_schema(sf_dir))
-        .option("pathGlobFilter", "events.parquet")
-    )
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return normalize_events(reader.parquet(sf_dir))
-
-
 def normalize_events(df: DataFrame) -> DataFrame:
     """Restore the LONG-nanoseconds ``ts`` contract on an events frame
     (batch or streaming) whose on-disk ``ts`` is a microsecond TIMESTAMP.
@@ -84,136 +71,6 @@ def normalize_events(df: DataFrame) -> DataFrame:
     return df.select(*[
         F.expr("unix_micros(cast(ts as timestamp)) * 1000").alias("ts")
         if c == "ts" else F.col(c) for c in df.columns])
-
-
-def with_event_time(df: DataFrame) -> DataFrame:
-    """Nanosecond LONG -> TIMESTAMP event-time column (microsecond prec)."""
-    return df.withColumn("ts_t", F.timestamp_micros(F.expr("ts div 1000")))
-
-
-def hourly_counts(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
-    """Tumbling hourly aggregation — streaming twin of ``events_hourly``."""
-    return (
-        with_event_time(events)
-        .withWatermark("ts_t", watermark)
-        .groupBy(F.window("ts_t", "1 hour").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"),
-             F.sum(F.round(F.col("value") * 100).cast("long")).cast("long")
-             .alias("value_c"))
-        .select(F.unix_timestamp(F.col("w.start")).alias("hour_epoch_s"),
-                "event_type", "n", "value_c")
-    )
-
-
-def sliding_counts(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
-    """Sliding 1-hour windows every 15 minutes — streaming twin of the
-    batch ``events_sliding`` query."""
-    return (
-        with_event_time(events)
-        .withWatermark("ts_t", watermark)
-        .groupBy(F.window("ts_t", "1 hour", "15 minutes").alias("w"),
-                 "event_type")
-        .agg(F.count(F.lit(1)).alias("n"),
-             F.sum(F.round(F.col("value") * 100).cast("long")).cast("long")
-             .alias("value_c"))
-        .select(F.unix_timestamp(F.col("w.start")).alias("window_start_s"),
-                "event_type", "n", "value_c")
-    )
-
-
-def session_aggregate(events: DataFrame, gap: str = "30 minutes",
-                      watermark: str = "2 hours") -> DataFrame:
-    """Native session windows (gap-based) — streaming twin of
-    ``events_sessions``'s grouping."""
-    return (
-        with_event_time(events)
-        .withWatermark("ts_t", watermark)
-        .groupBy(F.session_window("ts_t", gap).alias("w"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"),
-             F.sum(F.round(F.col("value") * 100).cast("long")).cast("long")
-             .alias("value_c"))
-        .select("user_id",
-                F.unix_timestamp(F.col("w.start")).alias("start_epoch_s"),
-                F.unix_timestamp(F.col("w.end")).alias("end_epoch_s"),
-                "n_events", "value_c")
-    )
-
-
-# ---------------------------------------------------------------------------
-# custom stateful operator: running per-user counters with timeout
-# ---------------------------------------------------------------------------
-_STATE_SCHEMA = "total BIGINT, value_c BIGINT"
-_OUTPUT_SCHEMA = T.StructType([
-    T.StructField("user_id", T.LongType()),
-    T.StructField("events_so_far", T.LongType()),
-    T.StructField("value_c_so_far", T.LongType()),
-])
-
-
-def _update_user_totals(
-    key: tuple, batches: Iterable[pd.DataFrame], state: GroupState
-) -> Iterable[pd.DataFrame]:
-    total, value_c = state.get if state.exists else (0, 0)
-    for batch in batches:
-        total += len(batch)
-        # HALF_UP to match Spark F.round in every batch twin — pandas
-        # .round() is half-to-even and diverges on exact .5 cents; NaN
-        # values count as 0 instead of crashing the int cast (ADVICE r1).
-        # floor(x+0.5) == HALF_UP for the non-negative values here.
-        cents = np.floor(batch["value"].fillna(0.0) * 100 + 0.5)
-        value_c += int(cents.astype("int64").sum())
-    state.update((total, value_c))
-    yield pd.DataFrame({"user_id": [key[0]], "events_so_far": [total],
-                        "value_c_so_far": [value_c]})
-
-
-def running_user_totals(events: DataFrame) -> DataFrame:
-    """Arbitrary stateful processing (applyInPandasWithState): emits the
-    running per-user event count and value total after each micro-batch.
-    """
-    return (
-        events.groupBy("user_id")
-        .applyInPandasWithState(
-            _update_user_totals,
-            outputStructType=_OUTPUT_SCHEMA,
-            stateStructType=_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# streaming exact dedup: state-backed dropDuplicates on the content hash
-# — the streaming side of the batch dedup_exact query.  State grows with
-# distinct hashes; bound it with a watermark on an event-time column
-# (dropDuplicatesWithinWatermark) for unbounded streams.
-# ---------------------------------------------------------------------------
-def streaming_dedup(docs: DataFrame, content_col: str = "text") -> DataFrame:
-    """First occurrence of each content hash wins, across micro-batches."""
-    return (
-        docs.withColumn("text_hash", F.md5(F.col(content_col)))
-        .dropDuplicates(["text_hash"])
-    )
-
-
-def streaming_dedup_within_watermark(
-        events: DataFrame, watermark: str = "2 hours") -> DataFrame:
-    """The BOUNDED-state variant for unbounded streams: duplicates of
-    the same content arriving within the watermark horizon are dropped,
-    and each hash's state is evicted once the watermark passes it —
-    state is O(watermark x arrival rate) instead of O(all distinct
-    content ever).  The trade (vs ``streaming_dedup``): a duplicate
-    arriving AFTER its original's state expired is re-emitted; for
-    longer horizons, compose with the persistent fingerprint store
-    (queries.dedup.incremental_dedup) downstream."""
-    return (
-        with_event_time(events)
-        .withColumn("content_hash",
-                    F.md5(F.concat_ws("|", "event_type", "value")))
-        .withWatermark("ts_t", watermark)
-        .dropDuplicatesWithinWatermark(["content_hash"])
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -303,74 +160,6 @@ def streaming_simhash_dedup(docs: DataFrame, hamming: int = 0) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# custom stateful operator: streaming as-of attribution
-# ---------------------------------------------------------------------------
-_ASOF_STATE = "view_id BIGINT, view_ts BIGINT"
-_ASOF_OUTPUT = T.StructType([
-    T.StructField("user_id", T.LongType()),
-    T.StructField("purchase_id", T.LongType()),
-    T.StructField("ts_us", T.LongType()),
-    T.StructField("view_id", T.LongType()),
-    T.StructField("view_ts_us", T.LongType()),
-    T.StructField("lag_s", T.LongType()),
-])
-
-
-def _update_asof(
-    key: tuple, batches: Iterable[pd.DataFrame], state: GroupState
-) -> Iterable[pd.DataFrame]:
-    vid, vts = state.get if state.exists else (None, None)
-    rows = pd.concat(list(batches), ignore_index=True)
-    # views sort before purchases at equal ts (exact matches count),
-    # larger event_id wins ties among views — same order the batch
-    # asof_join's (__t, __tag, payload) window ordering produces
-    rows["__p"] = (rows["event_type"] == "purchase").astype("int64")
-    rows = rows.sort_values(["ts_us", "__p", "event_id"])
-    out = []
-    for r in rows.itertuples():
-        if r.event_type == "view":
-            vid, vts = int(r.event_id), int(r.ts_us)
-        elif r.event_type == "purchase":
-            out.append((key[0], int(r.event_id), int(r.ts_us), vid, vts,
-                        None if vts is None
-                        else (int(r.ts_us) - vts) // 1_000_000))
-    state.update((vid, vts))
-    yield pd.DataFrame(out, columns=[f.name for f in _ASOF_OUTPUT.fields])
-
-
-def streaming_asof_attribution(events: DataFrame) -> DataFrame:
-    """Streaming twin of the batch ``events_asof_attribution`` query:
-    per-user state carries the latest view; each purchase emits its
-    last-touch match incrementally.
-
-    Contract: micro-batches must arrive in event-time order per user
-    (true of replay/log sources); out-of-order data would need a
-    watermark-bounded buffer, which ``transformWithState``-style
-    operators would host — the state shape here is the same.  Ties are
-    part of the contract: a view and a purchase sharing one timestamp
-    must land in the same micro-batch to count as an exact match — a
-    same-ts view arriving in a LATER batch is late data.
-    """
-    from .._pickle import register_module_by_value
-
-    register_module_by_value(__name__)  # _update_asof runs worker-side
-    typed = events.select(
-        "user_id", "event_id", "event_type",
-        F.expr("ts div 1000").alias("ts_us"))
-    return (
-        typed.filter(F.col("event_type").isin("view", "purchase"))
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _update_asof,
-            outputStructType=_ASOF_OUTPUT,
-            stateStructType=_ASOF_STATE,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
 def run_available_now(stream_df: DataFrame, query_name: str,
                       output_mode: str = "complete") -> list[Any]:
     """Drain a stream with availableNow into a memory sink; return rows."""
@@ -383,163 +172,6 @@ def run_available_now(stream_df: DataFrame, query_name: str,
     spark = stream_df.sparkSession
     return spark.sql(f"SELECT * FROM {query_name}").collect()
 
-
-# ---------------------------------------------------------------------------
-# streaming vocabulary document-frequency: incremental twin of the batch
-# token_df_vocab query (queries/textops.py).  Same narrow per-row
-# array_distinct-before-explode shape; the aggregation state is ONE long
-# per distinct token (update-mode incremental count), so a 100 TB stream
-# carries vocabulary-sized state, not corpus-sized.  Top-k is the
-# reader's cheap final step over the complete-mode sink.
-# ---------------------------------------------------------------------------
-def streaming_token_df(docs: DataFrame) -> DataFrame:
-    toks = F.split(F.col("text"), r"\s+")
-    return (docs.filter(F.col("text").isNotNull())
-            .select(F.explode(F.array_distinct(toks)).alias("token"))
-            .groupBy("token")
-            .agg(F.count(F.lit(1)).cast("long").alias("df")))
-
-
-def hourly_uniques(events: DataFrame, watermark: str = "2 hours",
-                   rsd: float = 0.02) -> DataFrame:
-    """Streaming approximate uniques: the HLL registers ARE the
-    streaming state, merging across micro-batches exactly as they merge
-    across partitions in batch — so the drained stream equals the batch
-    sketch bit-for-bit (twin-tested).  Fixed ~1.5 KB state per window
-    regardless of cardinality; an exact streaming distinct would hold
-    every seen user_id in state."""
-    return (
-        with_event_time(events)
-        .withWatermark("ts_t", watermark)
-        .groupBy(F.window("ts_t", "1 hour").alias("w"))
-        .agg(F.approx_count_distinct("user_id", rsd=rsd)
-             .cast("long").alias("approx_users"))
-        .select(F.unix_timestamp(F.col("w.start")).alias("hour_epoch_s"),
-                "approx_users")
-    )
-
-
-# ---------------------------------------------------------------------------
-# native stream-stream interval join: every (view, purchase) pair of
-# the same user with the view inside the purchase's attribution window
-# — the incremental twin of the batch interval join behind
-# ``purchase_view_windows``.  Both sides carry watermarks and the join
-# condition bounds v_t relative to p_t, so each side's state is evicted
-# once the other side's watermark passes the window: state is
-# O(watermark x arrival rate), never the full history.
-# ---------------------------------------------------------------------------
-def streaming_view_purchase_pairs(
-        spark: SparkSession, sf_dir: str,
-        watermark: str = "12 hours") -> DataFrame:
-    from ..queries.relational import ATTRIBUTION_WINDOW_US
-
-    views = (
-        with_event_time(read_events_stream(spark, sf_dir))
-        .filter(F.col("event_type") == "view")
-        .select(F.col("user_id").alias("v_user"),
-                F.col("event_id").alias("view_id"),
-                F.col("ts_t").alias("v_t"))
-        .withWatermark("v_t", watermark))
-    purchases = (
-        with_event_time(read_events_stream(spark, sf_dir))
-        .filter(F.col("event_type") == "purchase")
-        .select("user_id", F.col("event_id").alias("purchase_id"),
-                F.col("ts_t").alias("p_t"))
-        .withWatermark("p_t", watermark))
-    win_s = ATTRIBUTION_WINDOW_US // 1_000_000
-    joined = views.join(
-        purchases,
-        F.expr(f"v_user = user_id AND "
-               f"v_t >= p_t - interval {win_s} seconds AND v_t <= p_t"))
-    return joined.select(
-        "user_id", "purchase_id", "view_id",
-        F.unix_micros("p_t").alias("purchase_us"),
-        F.unix_micros("v_t").alias("view_us"))
-
-
-# ---------------------------------------------------------------------------
-# streaming twin of the snapshot-resumable incremental dedup
-# (queries/dedup.py): a CONTINUOUS document stream checked against the
-# persisted bucketed fingerprint store, with each micro-batch's new
-# fingerprints appended before the next batch arrives — foreachBatch is
-# the idiomatic bridge because the store round-trip (table read +
-# bucketed append) is a batch-side effect the pure streaming operators
-# cannot express.  Each batch's flags bind to the store AS OF batch
-# start (collected before the append), exactly like the batch
-# sequence's semantics; stream-of-two-batches == batch two-batch run is
-# twin-tested.
-# ---------------------------------------------------------------------------
-def run_store_dedup_stream(docs_stream: DataFrame, table: str,
-                           query_name: str = "store_dedup",
-                           sink_path: str | None = None) -> list[Any]:
-    """Drain a document stream (availableNow) through the persisted
-    fingerprint store ``table`` (must exist — create it with
-    queries.dedup.write_fingerprint_store).
-
-    With ``sink_path`` the per-batch flags append to that parquet sink
-    distributed-side — the production shape, zero driver collect — and
-    the return value is empty; without it the flags are returned as
-    rows (test/notebook convenience, batch-scale collect)."""
-    from ..queries.dedup import (append_new_fingerprints,
-                                 check_batch_against_store)
-    from ..queries.textops import with_simhash64
-
-    spark = docs_stream.sparkSession
-    out: list[Any] = []
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        batch = with_simhash64(
-            batch_df.filter(F.col("text").isNotNull())).select(
-            "doc_id", F.md5("text").alias("th"), "simhash") \
-            .localCheckpoint(eager=True)
-        flags = check_batch_against_store(spark, batch, table) \
-            .withColumn("batch_id", F.lit(batch_id).cast("long"))
-        # materialize BEFORE the append: the flags are defined against
-        # the store as of batch start
-        if sink_path is not None:
-            flags.write.mode("append").parquet(sink_path)
-        else:
-            out.extend(flags.collect())
-        append_new_fingerprints(spark, batch, table)
-
-    q = (docs_stream.writeStream.foreachBatch(process)
-         .queryName(query_name).trigger(availableNow=True).start())
-    _drain.drain(q, 600)
-    return out
-
-
-def run_gram_store_stream(docs_stream: DataFrame, table: str,
-                          query_name: str = "gram_store_dedup",
-                          sink_path: str | None = None) -> list[Any]:
-    """Substring-level twin of run_store_dedup_stream: drain a document
-    stream through the persisted K-GRAM store (create it with
-    queries.spans.write_gram_store).  Each micro-batch reports, per
-    doc, how many of its K-gram positions are already known to the
-    store (dup_pos / n_pos), then appends its genuinely new grams —
-    the corpus' bytes are never re-read."""
-    from ..queries.spans import (_positions, append_new_grams,
-                                 check_spans_against_store)
-
-    spark = docs_stream.sparkSession
-    out: list[Any] = []
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        pos = _positions(batch_df.filter(F.col("text").isNotNull())) \
-            .localCheckpoint(eager=True)
-        flags = check_spans_against_store(spark, pos, table) \
-            .withColumn("batch_id", F.lit(batch_id).cast("long"))
-        # materialize BEFORE the append: flags are defined against the
-        # store as of batch start
-        if sink_path is not None:
-            flags.write.mode("append").parquet(sink_path)
-        else:
-            out.extend(flags.collect())
-        append_new_grams(spark, pos, table)
-
-    q = (docs_stream.writeStream.foreachBatch(process)
-         .queryName(query_name).trigger(availableNow=True).start())
-    _drain.drain(q, 600)
-    return out
 
 
 def run_vector_index_stream(emb_stream: DataFrame, cents: DataFrame,
@@ -571,31 +203,6 @@ def run_vector_index_stream(emb_stream: DataFrame, cents: DataFrame,
         n_batches += 1
 
     q = (emb_stream.writeStream.foreachBatch(process)
-         .queryName(query_name).trigger(availableNow=True).start())
-    _drain.drain(q, 600)
-    return n_batches
-
-
-def run_cms_stream(docs_stream: DataFrame, store_path: str,
-                   query_name: str = "cms_maintain") -> int:
-    """Mergeable-sketch maintenance: each micro-batch's token stream
-    becomes a D x W counter table appended to the store; the merged
-    sketch at any time is the cell-wise SUM of all appended batches —
-    exactly equal to a batch-built CMS over everything seen (pinned by
-    the streaming twin test).  State per batch is <= D*W cells no
-    matter how many tokens arrived."""
-    from ..queries.sketches import cms_counters
-
-    n_batches = 0
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        nonlocal n_batches
-        toks = (batch_df.filter(F.col("text").isNotNull())
-                .select(F.explode(F.split("text", r"\s+")).alias("tok")))
-        cms_counters(toks).write.mode("append").parquet(store_path)
-        n_batches += 1
-
-    q = (docs_stream.writeStream.foreachBatch(process)
          .queryName(query_name).trigger(availableNow=True).start())
     _drain.drain(q, 600)
     return n_batches
@@ -635,11 +242,11 @@ def _state_table(spark: SparkSession, name: str, schema: str) -> None:
     managed location first (a session that died mid-write leaves the
     warehouse dir behind with no catalog entry, and the next
     saveAsTable fails LOCATION_ALREADY_EXISTS; CLAUDE.md rule, same
-    treatment as scd2._ensure_tables / dedup.drop_fingerprint_store)."""
-    from .scd2 import _delete_orphan_location
+    helper as dedup.drop_fingerprint_store)."""
+    from ..queries.dedup import delete_orphan_location
 
     if not spark.catalog.tableExists(name):
-        _delete_orphan_location(spark, name)
+        delete_orphan_location(spark, name)
         spark.createDataFrame([], schema).write.saveAsTable(name)
 
 
@@ -670,7 +277,7 @@ def _first_point_after(anchors: DataFrame, points: DataFrame,
                        on: str = "user_id") -> DataFrame:
     """For every anchor row, the MINIMUM point timestamp STRICTLY
     greater than the anchor's own, within the same ``on`` key — the
-    per-batch step-matching core of both funnel streams.
+    per-batch step-matching core of the funnel stream.
 
     Shape: one union + one descending per-key sort + one incremental
     running-min window — O(n log n) in any single key's row count.
@@ -733,8 +340,8 @@ def run_funnel_stream(events_stream: DataFrame, prefix: str,
     Per batch: arriving views append to the wait-set; arriving clicks
     claim the earliest qualifying click per waiting view (batch order
     is event-time order, so the first batch containing a qualifying
-    click holds the GLOBAL first — the in-order contract the streaming
-    as-of twin also uses); arriving purchases complete matched views.
+    click holds the GLOBAL first); arriving purchases complete matched
+    views.
     Entries whose window closed before the batch's max timestamp are
     purged, so state is bounded by one horizon of traffic regardless
     of stream length.  Completions/matches accumulate in
@@ -822,181 +429,3 @@ def run_funnel_stream(events_stream: DataFrame, prefix: str,
     q = writer.queryName(query_name).trigger(availableNow=True).start()
     _drain.drain(q, 900)
     return spark.table(f"{prefix}_out")
-
-
-def run_funnel_stream_ooo(events_stream: DataFrame, prefix: str,
-                          lateness_us: int,
-                          horizon_us: int | None = None,
-                          checkpoint_dir: str | None = None,
-                          query_name: str = "funnel_ooo") -> "DataFrame":
-    """Out-of-order-safe funnel: unlike run_funnel_stream (which
-    claims clicks eagerly and therefore requires event-time-ordered
-    batches), this variant buffers raw arrivals and resolves each
-    stage only when the WATERMARK (max event time seen - allowed
-    lateness) passes the window end — at which point every qualifying
-    click/purchase within the lateness contract has arrived, so the
-    decision equals the batch query's on ANY arrival order.
-
-    State: raw view/click/purchase buffers bounded by ~2 horizons of
-    event-time traffic (a click can serve views up to H older, which
-    resolve up to H later), plus the resolved-awaiting-purchase set.
-    Emission is deferred by up to lateness + horizon — the classic
-    correctness/latency trade the eager variant sits on the other
-    side of.  Drain the final windows by appending a sentinel event
-    beyond max_ts + lateness + 2H (the twin test does)."""
-    from ..queries.funnel import FUNNEL_H_US
-
-    h = horizon_us or FUNNEL_H_US
-    spark = events_stream.sparkSession
-
-    _guard_restart(spark, prefix, ("rv", "rc", "rp", "vc", "wm", "out"),
-                   checkpoint_dir)
-    _state_table(spark, f"{prefix}_rv",
-                 "event_id long, user_id long, v_ts long")
-    _state_table(spark, f"{prefix}_rc", "user_id long, c_ts long")
-    _state_table(spark, f"{prefix}_rp", "user_id long, p_ts long")
-    _state_table(spark, f"{prefix}_vc",
-                 "event_id long, user_id long, v_ts long, c_ts long")
-    _state_table(spark, f"{prefix}_wm", "wm long")
-    _state_table(spark, f"{prefix}_out",
-                 "event_id long, v_ts long, stage string")
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        b = batch_df.select(
-            "event_id", "user_id", "event_type",
-            F.expr("ts div 1000").alias("ts_us")).localCheckpoint(True)
-        hi = b.agg(F.max("ts_us")).head()[0]
-        if hi is None:
-            return
-        prev = spark.table(f"{prefix}_wm").agg(F.max("wm")).head()[0]
-        wm = max(hi - lateness_us, prev if prev is not None else -2**62)
-
-        views = (spark.table(f"{prefix}_rv").unionByName(
-            b.filter(F.col("event_type") == "view")
-            .select("event_id", "user_id", F.col("ts_us").alias("v_ts")))
-            .localCheckpoint(True))
-        clicks = (spark.table(f"{prefix}_rc").unionByName(
-            b.filter(F.col("event_type") == "click")
-            .select("user_id", F.col("ts_us").alias("c_ts")))
-            .localCheckpoint(True))
-        purchases = (spark.table(f"{prefix}_rp").unionByName(
-            b.filter(F.col("event_type") == "purchase")
-            .select("user_id", F.col("ts_us").alias("p_ts")))
-            .localCheckpoint(True))
-
-        # resolve step 1 for views whose click window closed below wm
-        # (window-scan core, not a theta join — hot-user linear; the
-        # left-join-with-range semantics survive as "NULL the min when
-        # it falls beyond the horizon")
-        closing = views.filter(F.col("v_ts") + h < wm)
-        resolved = (_first_point_after(
-            closing, clicks.select("user_id", "c_ts"),
-            "v_ts", "c_ts", out="__nc")
-            .select("event_id", "user_id", "v_ts",
-                    F.when(F.col("__nc") <= F.col("v_ts") + h,
-                           F.col("__nc")).alias("c_ts"))
-            .localCheckpoint(True))
-        matched = resolved.filter(F.col("c_ts").isNotNull())
-
-        # resolve step 2 for matched views whose purchase window closed
-        vc_all = (spark.table(f"{prefix}_vc").unionByName(matched)
-                  .localCheckpoint(True))
-        vc_closing = vc_all.filter(F.col("c_ts") + h < wm)
-        done = (_first_point_after(
-            vc_closing, purchases.select("user_id", "p_ts"),
-            "c_ts", "p_ts", out="__np")
-            .filter(F.col("__np") <= F.col("c_ts") + h)
-            .select("event_id", "v_ts").distinct()
-            .localCheckpoint(True))
-
-        out = (views.join(spark.table(f"{prefix}_rv"), "event_id",
-                          "left_anti")  # only THIS batch's new views
-               .select("event_id", "v_ts", F.lit("view").alias("stage"))
-               .unionByName(matched.select(
-                   "event_id", "v_ts", F.lit("clicked").alias("stage")))
-               .unionByName(done.select(
-                   "event_id", "v_ts", F.lit("purchased").alias("stage"))))
-        out.write.mode("append").saveAsTable(f"{prefix}_out")
-
-        # advance buffers: drop resolved views; age out clicks and
-        # purchases no unresolved window can reach any more
-        (views.join(closing.select("event_id"), "event_id", "left_anti")
-         .write.mode("overwrite").saveAsTable(f"{prefix}_rv"))
-        (clicks.filter(F.col("c_ts") + 2 * h >= wm)
-         .write.mode("overwrite").saveAsTable(f"{prefix}_rc"))
-        (purchases.filter(F.col("p_ts") + 2 * h >= wm)
-         .write.mode("overwrite").saveAsTable(f"{prefix}_rp"))
-        (vc_all.join(vc_closing.select("event_id"), "event_id",
-                     "left_anti")
-         .write.mode("overwrite").saveAsTable(f"{prefix}_vc"))
-        spark.createDataFrame([(wm,)], "wm long").write \
-            .mode("overwrite").saveAsTable(f"{prefix}_wm")
-        for t in ("rv", "rc", "rp", "vc", "wm", "out"):
-            spark.catalog.refreshTable(f"{prefix}_{t}")
-
-    writer = events_stream.writeStream.foreachBatch(process)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    q = writer.queryName(query_name).trigger(availableNow=True).start()
-    _drain.drain(q, 900)
-    return spark.table(f"{prefix}_out")
-
-
-# ---------------------------------------------------------------------------
-# streaming data-quality monitoring: per-batch expectation counters
-# (the streaming face of queries/curation.dq_report).  Each micro-batch
-# contributes ONE conditional-aggregation row set (check_id, violations,
-# total) appended to the store; the monitored totals at any point are
-# the SUM over batches — exactly equal to the batch conditional agg
-# over everything seen, regardless of how the stream was chopped into
-# batches (twin-pinned).  State per batch is |checks| rows.
-# ---------------------------------------------------------------------------
-DQ_EVENT_TYPES = ("view", "click", "purchase", "error")
-
-
-def dq_event_counters(events: DataFrame) -> DataFrame:
-    """(check_id, violations, total) for one events frame — shared by
-    the per-batch append and the batch twin."""
-    agg = events.agg(
-        F.sum(F.col("user_id").isNull().cast("long")).alias("v0"),
-        F.sum((F.col("value") < 0).cast("long")).alias("v1"),
-        F.sum((~F.col("event_type").isin(*DQ_EVENT_TYPES)).cast("long"))
-        .alias("v2"),
-        F.sum(F.col("ts").isNull().cast("long")).alias("v3"),
-        F.count(F.lit(1)).alias("total"))
-    rows = ", ".join(
-        f"'{name}', coalesce(v{i}, cast(0 as bigint))"
-        for i, name in enumerate(
-            ("events_null_user", "events_negative_value",
-             "events_type_domain", "events_null_ts")))
-    return agg.selectExpr(
-        f"stack(4, {rows}) as (check_id, violations)",
-        "cast(total as long) as total")
-
-
-def run_dq_stream(events_stream: DataFrame, store_path: str,
-                  query_name: str = "dq_monitor") -> int:
-    """Drain the stream, appending one counter row-set per micro-batch."""
-    n_batches = 0
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        nonlocal n_batches
-        dq_event_counters(batch_df).withColumn(
-            "batch_id", F.lit(batch_id).cast("long")
-        ).write.mode("append").parquet(store_path)
-        n_batches += 1
-
-    q = (events_stream.writeStream.foreachBatch(process)
-         .queryName(query_name).trigger(availableNow=True).start())
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("dq stream drain did not finish within 300s")
-    return n_batches
-
-
-def dq_stream_report(spark: SparkSession, store_path: str) -> DataFrame:
-    """Merged monitoring report over all appended batches."""
-    return (spark.read.parquet(store_path)
-            .groupBy("check_id")
-            .agg(F.sum("violations").cast("long").alias("violations"),
-                 F.sum("total").cast("long").alias("total")))

@@ -271,6 +271,22 @@ def test_walkup_duplicate_key_raises_at_action(spark):
         assert jobs()  # the probe works
 
 
+def test_monotone_violation_raises_at_action(spark, tree):
+    """``monotone=True`` on a tree where a parent's value is below its
+    child's (p1: node 3 = 50 under node 2 = 10) would give a wrong
+    one-step ratio: the action raises, naming the node, and building
+    the plan starts no Spark job."""
+    with job_probe(spark, "monotone-check-starts-no-job") as jobs:
+        out = cct.with_ratio_of_parent(
+            tree, "value", "r", partition_cols=["profile_id"],
+            monotone=True)
+        assert jobs() == set()
+        with pytest.raises(Exception, match="node 3 has value 50.0 but "
+                                            "its parent 10.0"):
+            out.collect()
+        assert jobs()  # the probe works
+
+
 @pytest.fixture(scope="module")
 def profile(spark, tmp_path_factory):
     """A loaded experiment XML as the reference-shaped frame."""
@@ -284,9 +300,11 @@ def test_ratio_of_parent_starts_no_job(spark, tree, profile):
     """Both walk-up plans and the frame's ``add_ratio_column(...,
     "parent")`` are lazy: the call starts no Spark job, the action
     does."""
+    # the monotone plan gets p2 only: p1 breaks its precondition
+    p2 = tree.filter(F.col("profile_id") == "p2")
     with job_probe(spark, "ratio-of-parent-starts-no-job") as jobs:
         outs = [
-            cct.with_ratio_of_parent(tree, "value", "r",
+            cct.with_ratio_of_parent(p2 if monotone else tree, "value", "r",
                                      partition_cols=["profile_id"],
                                      monotone=monotone, carry_cols=carry)
             for monotone in (True, False) for carry in (None, ("value",))]

@@ -75,121 +75,3 @@ def test_write_read_roundtrip(spark, tmp_path):
     assert "PartitionFilters: [isnotnull(profile_id" in explain.plan_string(
         pruned) or "profile_id" in " ".join(explain.pushed_filters(pruned)) \
         or pruned.count() == 1  # pruning visible in plan on most builds
-
-
-def test_range_sorted_layout_gives_disjoint_file_ranges(spark, tmp_path):
-    """write_range_sorted's contract: per-file [min, max] ranges of the
-    range column are pairwise disjoint (the property that makes parquet
-    min/max statistics selective under a range predicate), the rows
-    survive intact, and a range filter still pushes to the scan."""
-    import pyarrow.parquet as pq
-
-    from hpctoolkit_dataframe_spark.plans import explain
-    from hpctoolkit_dataframe_spark.queries import load_table
-    from hpctoolkit_dataframe_spark.sources import sinks
-
-    ev = load_table(spark, "/root/testdata/sf0.001", "events")
-    out = str(tmp_path / "events_ranged")
-    sinks.write_range_sorted(ev, out, range_cols=("ts",), n_files=8)
-
-    spans = []
-    total = 0
-    for f in sorted((tmp_path / "events_ranged").glob("*.parquet")):
-        t = pq.read_table(f, columns=["ts"])
-        total += t.num_rows
-        if t.num_rows:
-            col = t.column("ts").to_pylist()
-            spans.append((min(col), max(col)))
-    assert total == ev.count()
-    spans.sort()
-    for (lo1, hi1), (lo2, hi2) in zip(spans, spans[1:]):
-        assert hi1 <= lo2  # disjoint (boundary ties may touch)
-
-    back = spark.read.parquet(out)
-    mid = sorted(s[0] for s in spans)[len(spans) // 2]
-    filtered = back.filter(back.ts >= mid)
-    pushed = explain.pushed_filters(filtered)
-    assert any("ts" in p for p in pushed), pushed
-    assert filtered.count() == ev.filter(ev.ts >= mid).count()
-
-
-def test_zorder_layout_prunes_2d_boxes(spark, tmp_path):
-    """write_zordered's contract: under a 2-D box predicate
-    (user range x time range), the per-file (user_id, ts) bounding
-    boxes overlap the query box in FEWER files than a 1-D ts-sorted
-    layout of the same data — and the data itself round-trips."""
-    import pyarrow.parquet as pq
-
-    from hpctoolkit_dataframe_spark.queries import load_table
-    from hpctoolkit_dataframe_spark.sources import sinks
-
-    ev = load_table(spark, "/root/testdata/sf0.001", "events")
-    zdir, ldir = str(tmp_path / "z"), str(tmp_path / "linear")
-    sinks.write_zordered(ev, zdir, zorder_cols=("user_id", "ts"),
-                         n_files=16)
-    sinks.write_range_sorted(ev, ldir, range_cols=("ts",), n_files=16)
-
-    # the discriminating box is NARROW in the dimension the 1-D layout
-    # cannot prune: one user across the full time range — a ts-sorted
-    # layout must touch every file, z-order only the user's curve cells
-    us_all = sorted(r.user_id for r in ev.select("user_id").collect())
-    u_lo = u_hi = us_all[len(us_all) // 2]
-    t = sorted(r.ts for r in ev.select("ts").collect())
-    t_lo, t_hi = t[0], t[-1]
-
-    def overlapping_files(d):
-        total, hit = 0, 0
-        import pathlib
-        for f in sorted(pathlib.Path(d).glob("*.parquet")):
-            tab = pq.read_table(f, columns=["user_id", "ts"])
-            if not tab.num_rows:
-                continue
-            total += 1
-            us = tab.column("user_id").to_pylist()
-            ts = tab.column("ts").to_pylist()
-            if (min(us) <= u_hi and max(us) >= u_lo
-                    and min(ts) <= t_hi and max(ts) >= t_lo):
-                hit += 1
-        return hit, total
-
-    z_hit, z_total = overlapping_files(zdir)
-    l_hit, l_total = overlapping_files(ldir)
-    assert z_total >= 8 and l_total >= 8
-    # ts-sorted files all span every user -> l_hit == l_total; the
-    # z-layout must confine one user to at most half the files
-    assert l_hit == l_total
-    assert z_hit <= z_total // 2, (z_hit, z_total, l_hit, l_total)
-    # correctness: the box query returns identical rows either way
-    back = spark.read.parquet(zdir)
-    box = ((F.col("user_id").between(u_lo, u_hi))
-           & (F.col("ts").between(t_lo, t_hi)))
-    assert (sorted(r.event_id for r in back.filter(box)
-                   .select("event_id").collect())
-            == sorted(r.event_id for r in ev.filter(box)
-                      .select("event_id").collect()))
-
-
-def test_training_shards_export_round_trips(spark, tmp_path):
-    """write_training_shards: shard=N directories, JSONL content, and
-    the exported (doc_id, shard) set equals the manifest's
-    quality-passing canonical rows exactly."""
-    from hpctoolkit_dataframe_spark.queries import REGISTRY
-    from hpctoolkit_dataframe_spark.sources import sinks
-
-    out = str(tmp_path / "shards")
-    sinks.write_training_shards(spark, "/root/testdata/sf0.001", out)
-    back = spark.read.json(out)
-    want = {(r.doc_id, r.shard) for r in
-            REGISTRY["training_shard_manifest"]
-            .fn(spark, "/root/testdata/sf0.001")
-            .filter(F.col("quality_pass") == 1)
-            .select("doc_id", "shard").collect()}
-    got = {(r.doc_id, r.shard) for r in
-           back.select("doc_id", "shard").collect()}
-    assert got == want
-    shard_dirs = {p.name for p in (tmp_path / "shards").iterdir()
-                  if p.name.startswith("shard=")}
-    assert shard_dirs == {f"shard={s}" for _, s in want}
-    # text survives the JSON round trip
-    one = back.filter(F.col("text").isNotNull()).head()
-    assert one is not None and len(one.text) > 0

@@ -110,30 +110,3 @@ def test_cms_overestimates_only_and_merges(spark):
     global_ = {(r["i"], r["b"]): r["count"] for r in
                cells.groupBy("i", "b").count().collect()}
     assert merged == global_
-
-
-def test_counter_store_compaction_preserves_estimates(spark, tmp_path):
-    """Append-only CMS store: after two appended batch models,
-    compaction must cut the file count, keep every estimate
-    bit-identical, and be idempotent."""
-    from pyspark.sql import functions as F
-
-    from hpctoolkit_dataframe_spark.queries.sketches import (
-        cms_counters, cms_estimate_tokens, compact_counter_store)
-
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    toks = (docs.filter(F.col("text").isNotNull())
-            .select(F.explode(F.split("text", r"\s+")).alias("tok")))
-    store = str(tmp_path / "cms_store")
-    for cond in (F.col("tok") < "m", F.col("tok") >= "m"):
-        cms_counters(toks.filter(cond)).write.mode("append").parquet(store)
-    probe = toks.limit(200)
-    before_rows = sorted(tuple(r) for r in
-                         cms_estimate_tokens(spark, store, probe).collect())
-    b, a = compact_counter_store(spark, store, ["i", "b"], ["c"])
-    assert a < b
-    after_rows = sorted(tuple(r) for r in
-                        cms_estimate_tokens(spark, store, probe).collect())
-    assert after_rows == before_rows
-    b2, a2 = compact_counter_store(spark, store, ["i", "b"], ["c"])
-    assert (b2, a2) == (a, a)  # idempotent

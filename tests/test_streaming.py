@@ -1,35 +1,11 @@
 """Streaming twins must agree with their batch counterparts."""
 
-import pytest
 from pyspark.sql import functions as F
 
 from hpctoolkit_dataframe_spark.queries import REGISTRY
 from hpctoolkit_dataframe_spark.streaming import events as se
 
 from .conftest import SF_DIR
-
-
-def test_hourly_counts_matches_batch(spark):
-    stream = se.read_events_stream(spark, SF_DIR)
-    assert stream.isStreaming
-    got = se.run_available_now(se.hourly_counts(stream), "hourly_t",
-                               output_mode="complete")
-    batch = REGISTRY["events_hourly"].fn(spark, SF_DIR).collect()
-    key = lambda r: (r["hour_epoch_s"], r["event_type"])  # noqa: E731
-    got_m = {key(r): (r["n"], r["value_c"]) for r in got}
-    batch_m = {key(r): (r["n"], r["value_c"]) for r in batch}
-    assert got_m == batch_m
-
-
-def test_sliding_counts_matches_batch(spark):
-    stream = se.read_events_stream(spark, SF_DIR)
-    got = se.run_available_now(se.sliding_counts(stream), "sliding_t",
-                               output_mode="complete")
-    batch = REGISTRY["events_sliding"].fn(spark, SF_DIR).collect()
-    key = lambda r: (r["window_start_s"], r["event_type"])  # noqa: E731
-    got_m = {key(r): (r["n"], r["value_c"]) for r in got}
-    batch_m = {key(r): (r["n"], r["value_c"]) for r in batch}
-    assert got_m == batch_m
 
 
 def test_salted_join_equals_plain_join(spark):
@@ -44,202 +20,6 @@ def test_salted_join_equals_plain_join(spark):
     salted = {(r["k"], r["v"], r["name"])
               for r in skew.salted_join(left, right, ["k"]).collect()}
     assert salted == plain
-    agg = {r["k"]: r["sum_v"] for r in skew.two_stage_agg_sum(
-        left, ["k"], "v").collect()}
-    expected = {r["k"]: r["s"] for r in left.groupBy("k")
-                .agg(F.sum("v").alias("s")).collect()}
-    assert agg == expected
-
-
-def test_session_window_aggregate(spark):
-    stream = se.read_events_stream(spark, SF_DIR)
-    rows = se.run_available_now(se.session_aggregate(stream), "sessions_t",
-                                output_mode="complete")
-    assert rows
-    # session totals must partition the event count
-    assert sum(r["n_events"] for r in rows) == \
-        spark.read.parquet(f"{SF_DIR}/events.parquet").count()
-    # every session respects the 30-minute gap bound on its span per event
-    for r in rows[:50]:
-        assert r["end_epoch_s"] >= r["start_epoch_s"]
-
-
-def test_watermark_drops_late_events(spark, tmp_path):
-    """Late-data handling: an event older than the watermark, arriving in
-    a later micro-batch, must not count; a fresh event must."""
-    import pandas as pd
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    base_us = 1_700_000_000_000_000  # fixed epoch micros
-    hour = 3_600_000_000
-
-    def write(path, rows):
-        df = pd.DataFrame(rows, columns=["event_id", "ts", "user_id",
-                                         "event_type", "value", "props"])
-        table = pa.Table.from_pydict({
-            "event_id": pa.array(df["event_id"], pa.int64()),
-            # microsecond TIMESTAMP, the current testdata vintage
-            "ts": pa.array(list(df["ts"]), pa.timestamp("us")),
-            "user_id": pa.array(df["user_id"], pa.int64()),
-            "event_type": pa.array(df["event_type"], pa.string()),
-            "value": pa.array(df["value"], pa.float64()),
-            "props": pa.array(df["props"], pa.string()),
-        })
-        pq.write_table(table, path)
-
-    import time
-
-    # batch 0: events at T and T+5h -> watermark becomes T+3h afterwards
-    write(tmp_path / "b1.parquet", [
-        (1, base_us, 1, "click", 1.0, ""),
-        (2, base_us + 5 * hour, 1, "click", 1.0, ""),
-    ])
-    time.sleep(1.1)  # file source orders micro-batches by modification time
-    # batch 1: fresh event; T-window state is finalized+evicted this batch
-    write(tmp_path / "b2.parquet", [
-        (3, base_us + 5 * hour + 60_000_000, 1, "click", 1.0, ""),
-    ])
-    time.sleep(1.1)
-    # batch 2: a LATE event at T — its window is long gone; must be DROPPED
-    # (watermark semantics: once state is evicted, late rows cannot
-    # resurrect a finalized window)
-    write(tmp_path / "b3.parquet", [
-        (4, base_us, 1, "click", 1.0, ""),
-    ])
-
-    stream = se.normalize_events(
-        spark.readStream.schema(se.EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 1).parquet(str(tmp_path))
-    )
-    agg = se.hourly_counts(stream, watermark="2 hours")
-    q = (agg.writeStream.format("memory").queryName("late_t")
-         .outputMode("update").trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    dropped = sum(
-        (p["stateOperators"][0]["numRowsDroppedByWatermark"]
-         if p["stateOperators"] else 0)
-        for p in q.recentProgress)
-    rows = spark.sql("SELECT * FROM late_t").collect()
-    counts = {}
-    for r in rows:  # update mode: keep the LAST emission per window
-        counts[r["hour_epoch_s"]] = r["n"]
-    first_window = base_us // 1_000_000 // 3600 * 3600
-    fresh_window = (base_us + 5 * hour) // 1_000_000 // 3600 * 3600
-    # the late event (id 4) was dropped by the watermark, not re-counted
-    assert dropped == 1
-    assert counts[first_window] == 1
-    assert counts[fresh_window] == 2
-
-
-def test_running_user_totals_stateful(spark):
-    stream = se.read_events_stream(spark, SF_DIR)
-    rows = se.run_available_now(se.running_user_totals(stream), "totals_t",
-                                output_mode="update")
-    assert rows
-    ev = spark.read.parquet(f"{SF_DIR}/events.parquet")
-    expected = ev.groupBy("user_id").count().collect()
-    expected_m = {r["user_id"]: r["count"] for r in expected}
-    # final state per user equals the batch count (availableNow drains all)
-    final = {}
-    for r in rows:
-        final[r["user_id"]] = max(final.get(r["user_id"], 0),
-                                  r["events_so_far"])
-    assert final == expected_m
-
-
-def test_streaming_asof_matches_batch(spark, tmp_path):
-    """Streaming last-touch attribution across ordered micro-batches
-    must equal the batch as-of join (events_asof_attribution)."""
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from hpctoolkit_dataframe_spark.queries import load_table
-
-    ev = load_table(spark, SF_DIR, "events").select(
-        "event_id", F.expr("ts div 1000").alias("ts_us"), "user_id",
-        "event_type", "value", "props").toPandas()
-    ev = ev.sort_values("ts_us")
-    cut = len(ev) // 2
-    for i, part in enumerate((ev.iloc[:cut], ev.iloc[cut:])):
-        table = pa.Table.from_pydict({
-            "event_id": part["event_id"].astype("int64"),
-            # microsecond TIMESTAMP, the current testdata vintage
-            "ts": pa.array(part["ts_us"].astype("int64").tolist(),
-                           pa.timestamp("us")),
-            "user_id": part["user_id"].astype("int64"),
-            "event_type": part["event_type"],
-            "value": part["value"],
-            "props": part["props"],
-        })
-        p = tmp_path / f"batch{i}.parquet"
-        pq.write_table(table, p)
-        os.utime(p, (1_700_000_000 + i * 60, 1_700_000_000 + i * 60))
-
-    stream = se.normalize_events(
-        spark.readStream.schema(se.EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(tmp_path))
-    )
-    got = se.run_available_now(se.streaming_asof_attribution(stream),
-                               "asof_t", output_mode="append")
-    batch = REGISTRY["events_asof_attribution"].fn(spark, SF_DIR).collect()
-    to_map = lambda rows: {  # noqa: E731
-        r["purchase_id"]: (r["user_id"], r["ts_us"], r["view_id"],
-                           r["view_ts_us"], r["lag_s"]) for r in rows}
-    assert to_map(got) == to_map(batch)
-
-
-def test_streaming_foreach_batch_parquet_sink(spark, tmp_path):
-    """Stream -> foreachBatch -> partitioned parquet -> read back equals
-    the batch twin (the production sink path for continuous ingestion)."""
-    out_dir = str(tmp_path / "hourly_out")
-    stream = se.read_events_stream(spark, SF_DIR)
-    agg = se.hourly_counts(stream)
-
-    def sink(batch_df, batch_id):
-        (batch_df.write.mode("overwrite")
-         .partitionBy("event_type").parquet(out_dir))
-
-    q = (agg.writeStream.outputMode("complete")
-         .foreachBatch(sink).trigger(availableNow=True).start())
-    q.awaitTermination()
-
-    back = spark.read.parquet(out_dir).collect()
-    batch = REGISTRY["events_hourly"].fn(spark, SF_DIR).collect()
-    key = lambda r: (r["hour_epoch_s"], r["event_type"])  # noqa: E731
-    assert {key(r): (r["n"], r["value_c"]) for r in back} == \
-        {key(r): (r["n"], r["value_c"]) for r in batch}
-
-
-def test_streaming_dedup_across_batches(spark, tmp_path):
-    """State-backed dropDuplicates: duplicates arriving in LATER
-    micro-batches are dropped; kept count equals the batch distinct."""
-    import os
-
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    half = docs.limit(docs.count() // 2)
-    # batch 0: first half; batch 1: ALL docs (so every batch-0 hash
-    # reappears) — write as two files, ordered by mtime
-    half.coalesce(1).write.mode("overwrite").parquet(str(tmp_path / "b0"))
-    docs.coalesce(1).write.mode("overwrite").parquet(str(tmp_path / "b1"))
-    stream_dir = tmp_path / "stream"
-    stream_dir.mkdir()
-    for i, src in enumerate(("b0", "b1")):
-        part = next((tmp_path / src).glob("*.parquet"))
-        dst = stream_dir / f"batch{i}.parquet"
-        part.rename(dst)
-        os.utime(dst, (1_700_000_000 + i * 60, 1_700_000_000 + i * 60))
-
-    stream = (spark.readStream.schema(docs.schema)
-              .option("maxFilesPerTrigger", 1).parquet(str(stream_dir)))
-    got = se.run_available_now(se.streaming_dedup(stream), "dedup_t",
-                               output_mode="append")
-    distinct_hashes = docs.select(F.md5("text")).distinct().count()
-    assert len(got) == distinct_hashes
-    assert len({r["text_hash"] for r in got}) == distinct_hashes
 
 
 def _docs_stream(spark, docs):
@@ -332,71 +112,6 @@ def test_streaming_simhash_near_dup_cross_batch_state(spark, tmp_path):
                 assert flagged == [doc_id], (doc_id, band, dups)
 
 
-def test_streaming_token_df_accumulates_to_batch(spark, tmp_path):
-    """Two disjoint micro-batches of documents must accumulate to
-    exactly the batch document-frequency map, and the top-k read off the
-    complete-mode sink must equal token_df_vocab (same tie-break)."""
-    import os
-
-    from hpctoolkit_dataframe_spark.queries.textops import VOCAB_TOP_K
-
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    n = docs.count()
-    first = docs.orderBy("doc_id").limit(n // 2)
-    second = docs.orderBy("doc_id").subtract(first)
-    first.coalesce(1).write.mode("overwrite").parquet(str(tmp_path / "b0"))
-    second.coalesce(1).write.mode("overwrite").parquet(str(tmp_path / "b1"))
-    stream_dir = tmp_path / "stream"
-    stream_dir.mkdir()
-    for i, src in enumerate(("b0", "b1")):
-        part = next((tmp_path / src).glob("*.parquet"))
-        dst = stream_dir / f"batch{i}.parquet"
-        part.rename(dst)
-        os.utime(dst, (1_700_000_000 + i * 60, 1_700_000_000 + i * 60))
-
-    stream = (spark.readStream.schema(docs.schema)
-              .option("maxFilesPerTrigger", 1).parquet(str(stream_dir)))
-    got = se.run_available_now(se.streaming_token_df(stream), "tokdf_t",
-                               output_mode="complete")
-    got_map = {r["token"]: r["df"] for r in got}
-
-    batch_full = {r["token"]: r["df"] for r in (
-        docs.filter(F.col("text").isNotNull())
-        .select(F.explode(F.array_distinct(F.split("text", r"\s+")))
-                .alias("token"))
-        .groupBy("token").count()
-        .withColumnRenamed("count", "df").collect())}
-    assert got_map == batch_full
-
-    topk = sorted(got, key=lambda r: (-r["df"], r["token"]))[:VOCAB_TOP_K]
-    want = REGISTRY["token_df_vocab"].fn(spark, SF_DIR).collect()
-    assert [(r["token"], r["df"]) for r in topk] == \
-        [(r["token"], r["df"]) for r in want]
-
-
-def test_hourly_uniques_matches_batch_sketch(spark):
-    """HLL state in streaming must merge to the same registers as the
-    batch aggregation (register-max is order- and batch-independent)."""
-    stream = se.read_events_stream(spark, SF_DIR, max_files_per_trigger=1)
-    got = {r["hour_epoch_s"]: r["approx_users"] for r in
-           se.run_available_now(se.hourly_uniques(stream), "uniq_t",
-                                output_mode="complete")}
-    from hpctoolkit_dataframe_spark.queries import load_table
-    ev = load_table(spark, SF_DIR, "events")
-    hour = F.expr("(ts div 1000) div 3600000000 * 3600").cast("long")
-    batch = {r["h"]: r["u"] for r in
-             ev.groupBy(hour.alias("h"))
-             .agg(F.approx_count_distinct("user_id", rsd=0.02)
-                  .cast("long").alias("u")).collect()}
-    assert got == batch
-    exact = {r["h"]: r["e"] for r in
-             ev.groupBy(hour.alias("h"))
-             .agg(F.countDistinct("user_id").cast("long").alias("e"))
-             .collect()}
-    for h, u in got.items():
-        assert abs(u - exact[h]) <= max(2, 0.15 * exact[h])
-
-
 def test_streaming_restart_exactly_once(spark, tmp_path):
     """Checkpoint recovery contract: stopping a stream and restarting
     it against the same checkpoint must process NEW files exactly once
@@ -434,194 +149,6 @@ def test_streaming_restart_exactly_once(spark, tmp_path):
     drain()   # restart from the same checkpoint
     got = [r["event_id"] for r in spark.read.parquet(sink).collect()]
     assert sorted(got) == list(range(150))  # each id exactly once
-
-
-def test_stream_stream_interval_join_matches_batch(spark):
-    """The native stream-stream interval join must produce exactly the
-    batch pair set (same user, view within the purchase's attribution
-    window)."""
-    from hpctoolkit_dataframe_spark.queries import load_table
-    from hpctoolkit_dataframe_spark.queries.relational import (
-        ATTRIBUTION_WINDOW_US)
-
-    got = {(r["user_id"], r["purchase_id"], r["view_id"]) for r in
-           se.run_available_now(
-               se.streaming_view_purchase_pairs(spark, SF_DIR),
-               "ssj_t", output_mode="append")}
-    ev = load_table(spark, SF_DIR, "events").select(
-        "user_id", "event_id", "event_type",
-        F.expr("ts div 1000").alias("ts_us"))
-    v = ev.filter(F.col("event_type") == "view").select(
-        F.col("user_id").alias("vu"), F.col("event_id").alias("view_id"),
-        F.col("ts_us").alias("v_us"))
-    p = ev.filter(F.col("event_type") == "purchase").select(
-        "user_id", F.col("event_id").alias("purchase_id"),
-        F.col("ts_us").alias("p_us"))
-    want = {(r["user_id"], r["purchase_id"], r["view_id"]) for r in
-            v.join(p, (F.col("vu") == F.col("user_id"))
-                   & (F.col("v_us") >= F.col("p_us") - ATTRIBUTION_WINDOW_US)
-                   & (F.col("v_us") <= F.col("p_us"))).collect()}
-    assert got == want and want  # non-trivial pair set
-
-
-def test_dedup_within_watermark_drops_near_duplicates(spark, tmp_path):
-    """dropDuplicatesWithinWatermark: a duplicate arriving in a later
-    micro-batch but inside the watermark horizon is dropped; distinct
-    content all survives."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    import time as _time
-
-    base = 1_700_000_000_000_000
-
-    def write(path, rows):  # (event_id, us_offset, event_type, value)
-        pq.write_table(pa.Table.from_pydict({
-            "event_id": pa.array([r[0] for r in rows], pa.int64()),
-            "ts": pa.array([base + r[1] for r in rows],
-                           pa.timestamp("us")),
-            "user_id": pa.array([1] * len(rows), pa.int64()),
-            "event_type": pa.array([r[2] for r in rows], pa.string()),
-            "value": pa.array([float(r[3]) for r in rows], pa.float64()),
-            "props": pa.array([""] * len(rows), pa.string()),
-        }), path)
-
-    write(tmp_path / "b1.parquet", [
-        (1, 0, "click", 1.0), (2, 1_000_000, "view", 2.0)])
-    _time.sleep(1.1)
-    write(tmp_path / "b2.parquet", [
-        (3, 600_000_000, "click", 1.0),    # dup content, 10 min later
-        (4, 601_000_000, "purchase", 9.0),  # fresh content
-    ])
-
-    stream = se.normalize_events(
-        spark.readStream.schema(se.EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 1).parquet(str(tmp_path)))
-    got = se.run_available_now(
-        se.streaming_dedup_within_watermark(stream, watermark="2 hours"),
-        "ddww_t", output_mode="append")
-    ids = sorted(r["event_id"] for r in got)
-    assert ids == [1, 2, 4]  # id 3 deduped within the watermark
-
-
-def test_streaming_store_dedup_matches_batch_resume_sequence(spark, tmp_path):
-    """foreachBatch store round-trip twin: streaming batch-1 docs then
-    batch-2 docs through the persisted fingerprint store must emit
-    EXACTLY the flags of the batch incremental_dedup_resume sequence
-    (check -> append -> check), including the append being visible to
-    the later micro-batch only."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from hpctoolkit_dataframe_spark.queries.dedup import (
-        drop_fingerprint_store, fingerprint_split,
-        incremental_dedup_resume_frames, write_fingerprint_store)
-
-    table = "fp_stream_t"
-    try:
-        # batch reference: the two-batch sequence through its own table
-        out1, out2 = incremental_dedup_resume_frames(
-            spark, SF_DIR, table="fp_stream_ref_t")
-        want = {(r["doc_id"], b): (r["exact_dup"], r["near_dup"])
-                for b, frame in ((0, out1), (1, out2))
-                for r in frame.collect()}
-
-        # streaming side: same initial store, same two batches as files
-        split = fingerprint_split(spark, SF_DIR)
-        drop_fingerprint_store(spark, table)
-        write_fingerprint_store(split.filter(F.col("bucket") >= 2), table)
-        docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-        ids = {b: [r["doc_id"] for r in
-                   split.filter(F.col("bucket") == (1 - b)).collect()]
-               for b in (0, 1)}  # batch0 = bucket1, batch1 = bucket0
-        stream_dir = tmp_path / "stream"
-        stream_dir.mkdir()
-        for b in (0, 1):
-            docs.filter(F.col("doc_id").isin(ids[b])).coalesce(1) \
-                .write.mode("overwrite").parquet(str(tmp_path / f"b{b}"))
-            part = next((tmp_path / f"b{b}").glob("*.parquet"))
-            dst = stream_dir / f"batch{b}.parquet"
-            part.rename(dst)
-            os.utime(dst, (1_700_000_000 + b * 60,) * 2)
-        stream = (spark.readStream.schema(docs.schema)
-                  .option("maxFilesPerTrigger", 1)
-                  .parquet(str(stream_dir)))
-        got_rows = se.run_store_dedup_stream(stream, table,
-                                             query_name="storededup_t")
-        got = {(r["doc_id"], r["batch_id"]): (r["exact_dup"], r["near_dup"])
-               for r in got_rows}
-        assert got == want
-
-        # production shape: flags land in a parquet sink distributed-
-        # side (zero driver collect), same values
-        drop_fingerprint_store(spark, table)
-        write_fingerprint_store(split.filter(F.col("bucket") >= 2), table)
-        sink = str(tmp_path / "flags_sink")
-        stream2 = (spark.readStream.schema(docs.schema)
-                   .option("maxFilesPerTrigger", 1)
-                   .parquet(str(stream_dir)))
-        assert se.run_store_dedup_stream(
-            stream2, table, query_name="storededup_sink_t",
-            sink_path=sink) == []
-        sunk = {(r["doc_id"], r["batch_id"]): (r["exact_dup"], r["near_dup"])
-                for r in spark.read.parquet(sink).collect()}
-        assert sunk == want
-    finally:
-        spark.sql("DROP TABLE IF EXISTS fp_stream_t")
-        spark.sql("DROP TABLE IF EXISTS fp_stream_ref_t")
-
-
-def test_streaming_gram_store_matches_batch_sequence(spark, tmp_path):
-    """Substring-dedup store twin: streaming batch-1 then batch-2 docs
-    through the persisted gram store must emit EXACTLY the per-doc
-    (n_pos, dup_pos) flags of the batch incremental_span_frames
-    sequence, with batch 1's new grams visible to batch 2 only."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from hpctoolkit_dataframe_spark.queries.dedup import \
-        drop_fingerprint_store
-    from hpctoolkit_dataframe_spark.queries.spans import (
-        _positions, incremental_span_frames, span_split, write_gram_store)
-
-    try:
-        out1, out2 = incremental_span_frames(
-            spark, SF_DIR, table="gram_store_ref_t")
-        want = {(r["doc_id"], b): (r["n_pos"], r["dup_pos"])
-                for b, frame in ((0, out1), (1, out2))
-                for r in frame.collect()}
-
-        split = span_split(spark, SF_DIR)
-        drop_fingerprint_store(spark, "gram_store_t")
-        write_gram_store(_positions(split.filter(F.col("bucket") >= 2)),
-                         "gram_store_t")
-        docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-        ids = {b: [r["doc_id"] for r in
-                   split.filter(F.col("bucket") == (1 - b)).collect()]
-               for b in (0, 1)}
-        stream_dir = tmp_path / "stream"
-        stream_dir.mkdir()
-        for b in (0, 1):
-            docs.filter(F.col("doc_id").isin(ids[b])).coalesce(1) \
-                .write.mode("overwrite").parquet(str(tmp_path / f"b{b}"))
-            part = next((tmp_path / f"b{b}").glob("*.parquet"))
-            dst = stream_dir / f"batch{b}.parquet"
-            part.rename(dst)
-            os.utime(dst, (1_700_000_000 + b * 60,) * 2)
-        stream = (spark.readStream.schema(docs.schema)
-                  .option("maxFilesPerTrigger", 1)
-                  .parquet(str(stream_dir)))
-        got_rows = se.run_gram_store_stream(stream, "gram_store_t",
-                                            query_name="gramstore_t")
-        got = {(r["doc_id"], r["batch_id"]): (r["n_pos"], r["dup_pos"])
-               for r in got_rows}
-        assert got == want
-        # the split seeds real overlap: some doc must flag fully-known
-        assert any(np == dp for (np, dp) in got.values())
-    finally:
-        for t in ("gram_store_t", "gram_store_ref_t"):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
 def test_streaming_ivf_index_matches_batch_probe(spark, tmp_path):
@@ -683,45 +210,6 @@ def test_streaming_ivf_index_matches_batch_probe(spark, tmp_path):
         assert len(got) == V.N_QUERIES * V.TOP_K
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {table}")
-
-
-def test_streaming_cms_equals_batch_sketch(spark, tmp_path):
-    """Mergeable-sketch maintenance twin: CMS counters appended per
-    micro-batch, cell-wise summed at read time, must give estimates
-    IDENTICAL to the batch cms_heavy_hitters over the full corpus —
-    exact equality, because CMS construction is pure integer
-    arithmetic and merging is associative addition."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from hpctoolkit_dataframe_spark.queries.sketches import \
-        cms_estimate_tokens
-
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    stream_dir = tmp_path / "stream"
-    stream_dir.mkdir()
-    for b, cond in ((0, F.col("doc_id") % 2 == 0),
-                    (1, F.col("doc_id") % 2 == 1)):
-        docs.filter(cond).coalesce(1).write.mode("overwrite") \
-            .parquet(str(tmp_path / f"cb{b}"))
-        part = next((tmp_path / f"cb{b}").glob("*.parquet"))
-        dst = stream_dir / f"batch{b}.parquet"
-        part.rename(dst)
-        os.utime(dst, (1_700_000_000 + b * 60,) * 2)
-    store = str(tmp_path / "cms_store")
-    stream = (spark.readStream.schema(docs.schema)
-              .option("maxFilesPerTrigger", 1)
-              .parquet(str(stream_dir)))
-    assert se.run_cms_stream(stream, store) == 2
-
-    toks = (docs.filter(F.col("text").isNotNull())
-            .select(F.explode(F.split("text", r"\s+")).alias("tok")))
-    got = {r.tok: r.est_c for r in
-           cms_estimate_tokens(spark, store, toks).collect()}
-    want = {r.tok: r.est_c for r in
-            REGISTRY["cms_heavy_hitters"].fn(spark, SF_DIR).collect()}
-    assert got == want
 
 
 def test_streaming_funnel_matches_batch(spark, tmp_path):
@@ -793,89 +281,6 @@ def test_streaming_funnel_matches_batch(spark, tmp_path):
             for st in stage_batches.values() if "view" in st)
     finally:
         for t in ("views", "vc", "out"):
-            spark.sql(f"DROP TABLE IF EXISTS {prefix}_{t}")
-
-
-@pytest.mark.parametrize("ordering", ["shuffled", "inorder"])
-def test_streaming_funnel_ooo_matches_batch(spark, tmp_path, ordering):
-    """Watermark-resolved funnel twin: batches either round-robin
-    SHUFFLED (each spans the full time range — the eager variant's
-    in-order contract violated on purpose) or in-order with tight
-    lateness; after a sentinel flush event advances the watermark past
-    every window, the folded stage log must equal the batch funnel
-    exactly."""
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    from pyspark.sql import functions as F
-
-    from hpctoolkit_dataframe_spark.queries import REGISTRY, load_table
-    from hpctoolkit_dataframe_spark.queries.dedup import \
-        drop_fingerprint_store
-    from hpctoolkit_dataframe_spark.queries.funnel import FUNNEL_H_US
-
-    prefix = f"funnel_ooo_{ordering}_t"
-    tables = ("rv", "rc", "rp", "vc", "wm", "out")
-    try:
-        for t in tables:
-            drop_fingerprint_store(spark, f"{prefix}_{t}")
-        ev = load_table(spark, SF_DIR, "events").select(
-            "event_id", F.expr("ts div 1000").alias("ts_us"), "user_id",
-            "event_type", "value", "props").toPandas()
-        span = int(ev["ts_us"].max() - ev["ts_us"].min())
-        if ordering == "shuffled":
-            parts = [ev.iloc[i::3] for i in range(3)]
-            lateness = span + 1  # nothing is ever too late
-        else:
-            ev = ev.sort_values("ts_us")
-            parts = [ev.iloc[:len(ev) // 3],
-                     ev.iloc[len(ev) // 3:2 * len(ev) // 3],
-                     ev.iloc[2 * len(ev) // 3:]]
-            lateness = 3_600_000_000  # 1h: batches stay within contract
-
-        def write_batch(i, ids, ts, users, types, vals, props):
-            table = pa.Table.from_pydict({
-                "event_id": pa.array(ids, pa.int64()),
-                "ts": pa.array(ts, pa.timestamp("us")),
-                "user_id": pa.array(users, pa.int64()),
-                "event_type": pa.array(types, pa.string()),
-                "value": pa.array(vals, pa.float64()),
-                "props": pa.array(props, pa.string()),
-            })
-            p = tmp_path / f"batch{i}.parquet"
-            pq.write_table(table, p)
-            os.utime(p, (1_700_000_000 + i * 60,) * 2)
-
-        for i, part in enumerate(parts):
-            write_batch(i, part["event_id"].astype("int64").tolist(),
-                        part["ts_us"].astype("int64").tolist(),
-                        part["user_id"].astype("int64").tolist(),
-                        part["event_type"].tolist(),
-                        part["value"].tolist(), part["props"].tolist())
-        # sentinel flush: one 'noop' event far beyond every window
-        flush_ts = int(ev["ts_us"].max()) + lateness + 3 * FUNNEL_H_US
-        write_batch(3, [10**12], [flush_ts], [0], ["noop"], [0.0], [""])
-
-        stream = se.normalize_events(
-            spark.readStream.schema(se.EVENTS_SCHEMA)
-            .option("maxFilesPerTrigger", 1).parquet(str(tmp_path)))
-        out = se.run_funnel_stream_ooo(stream, prefix, lateness)
-        day = F.expr("v_ts div 86400000000").alias("day")
-        got = {(r.day, r.stage): r.n for r in
-               out.groupBy(day, "stage")
-               .agg(F.count(F.lit(1)).alias("n")).collect()}
-        want = {}
-        for r in REGISTRY["funnel_view_click_purchase"].fn(
-                spark, SF_DIR).collect():
-            want[(r.day, "view")] = r.n_views
-            if r.n_clicked:
-                want[(r.day, "clicked")] = r.n_clicked
-            if r.n_purchased:
-                want[(r.day, "purchased")] = r.n_purchased
-        assert got == want
-    finally:
-        for t in tables:
             spark.sql(f"DROP TABLE IF EXISTS {prefix}_{t}")
 
 
@@ -954,43 +359,6 @@ def test_streaming_funnel_resumes_from_checkpoint(spark, tmp_path):
     finally:
         for t in tables:
             spark.sql(f"DROP TABLE IF EXISTS {prefix}_{t}")
-
-
-def test_dq_stream_counters_match_batch(spark, tmp_path):
-    """Streaming DQ monitoring twin: summed per-batch expectation
-    counters must equal the batch conditional aggregation over the
-    full events table, however the stream was chopped — counter
-    addition is associative, so the chop cannot matter (same argument
-    as the CMS twin)."""
-    import os
-
-    events = se.normalize_events(
-        spark.read.parquet(f"{SF_DIR}/events.parquet"))
-    stream_dir = tmp_path / "stream"
-    stream_dir.mkdir()
-    for b, cond in ((0, F.col("event_id") % 3 != 0),
-                    (1, F.col("event_id") % 3 == 0)):
-        events.filter(cond).coalesce(1).write.mode("overwrite") \
-            .parquet(str(tmp_path / f"db{b}"))
-        part = next((tmp_path / f"db{b}").glob("*.parquet"))
-        dst = stream_dir / f"batch{b}.parquet"
-        part.rename(dst)
-        os.utime(dst, (1_700_000_000 + b * 60,) * 2)
-    store = str(tmp_path / "dq_store")
-    # the staged files carry LONG ts (already normalized), so read
-    # them back with the staged schema, not the raw-events schema
-    stream = (spark.readStream.schema(events.schema)
-              .option("maxFilesPerTrigger", 1)
-              .parquet(str(stream_dir)))
-    assert se.run_dq_stream(stream, store) == 2
-
-    got = {r["check_id"]: (r["violations"], r["total"]) for r in
-           se.dq_stream_report(spark, store).collect()}
-    want = {r["check_id"]: (r["violations"], r["total"]) for r in
-            se.dq_event_counters(events).collect()}
-    assert got == want
-    assert len(got) == 4
-    assert all(t == events.count() for _, t in got.values())
 
 
 def test_funnel_restart_without_checkpoint_refused(spark, tmp_path):
