@@ -22,6 +22,7 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 MEDIA_SCHEMA = T.StructType([
@@ -119,6 +120,12 @@ def sample_frames(df: DataFrame, every_nth: int = 10, *, fake: bool = False,
                 {"media_id": ids, "frame_idx": idxs, "frame": frames})
 
     return df.mapInPandas(run, schema=out_schema)
+
+
+def with_media_stats(df: DataFrame, content_col: str = "content") -> DataFrame:
+    """Pure-JVM metadata columns: size + content hash (no Python)."""
+    return df.withColumn("n_bytes", F.octet_length(content_col).cast("long")) \
+             .withColumn("content_md5", F.md5(F.col(content_col)))
 
 
 def synthesize_media(spark, n: int = 100) -> DataFrame:

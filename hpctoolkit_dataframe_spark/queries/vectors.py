@@ -1167,3 +1167,47 @@ def ivf_probe_store(spark: SparkSession, queries_emb: DataFrame,
     the maintained index (twin-pinned equal to the in-memory probe)."""
     return probe_cells(queries_emb, cents, spark.table(table))
 
+
+# ---------------------------------------------------------------------------
+# Recall/parameter sweep (VERDICT r6 next #4): recall@k of each ANN
+# variant against the brute-force exact twin, as a function of the
+# probe width.  Makes the accuracy-cost trade explicit and guards the
+# codebooks — a silent centroid/codebook regression shows up as a
+# recall drop before any oracle notices.  Driver-side sets are bounded
+# by N_QUERIES x k (<= 50 rows); the distance work stays distributed.
+# ---------------------------------------------------------------------------
+def recall_curve(spark: SparkSession, sf_dir: str, variant: str = "ivf",
+                 probes=(1, 2, 4, 8), k: int = TOP_K) -> list[tuple[int, float]]:
+    """[(n_probe, recall@k), ...] for ``variant`` in {'ivf',
+    'ivf_trained', 'ivfpq'} vs the exact cosine top-k.  Probing all
+    N_CELLS cells makes the flat-IVF candidate set exhaustive, so its
+    recall is 1.0 at n_probe=N_CELLS by construction; ivfpq stays
+    below that ceiling by its quantization error."""
+    exact = {(r["query_id"], r["neighbor_id"])
+             for r in _exact_topk(spark, sf_dir, k).collect()}
+    if variant in ("ivf", "ivf_trained"):
+        if variant == "ivf":
+            emb, cent = _ivf_flat_index(spark, sf_dir)
+        else:
+            emb = _quantized_corpus(spark, sf_dir)
+            cent, _ = _lloyd_trained(spark, sf_dir)
+        ann = lambda p: _ivf_probe(emb, cent, n_probe=p, top_k=k)  # noqa: E731
+    elif variant == "ivfpq":
+        ann = lambda p: _ivfpq_topk(spark, sf_dir, n_probe=p, top_k=k)  # noqa: E731
+    else:
+        raise ValueError(variant)
+    curve = []
+    for p in probes:
+        got = {(r["query_id"], r["neighbor_id"]) for r in ann(p).collect()}
+        curve.append((p, len(got & exact) / len(exact)))
+    return curve
+
+
+def pq_recall(spark: SparkSession, sf_dir: str, k: int = TOP_K) -> float:
+    """recall@k of the full-scan ADC ranking (pq_ann) vs exact — the
+    pure quantization-error measurement, no probe pruning involved."""
+    exact = {(r["query_id"], r["neighbor_id"])
+             for r in _exact_topk(spark, sf_dir, k).collect()}
+    got = {(r["query_id"], r["neighbor_id"])
+           for r in _pq_topk(spark, sf_dir, k).collect()}
+    return len(got & exact) / len(exact)

@@ -265,3 +265,45 @@ def test_leakage_safe_split_is_cluster_atomic(spark):
     split_of = {r["doc_id"]: r["split"] for r in rows}
     assert all(split_of[p["doc_a"]] == split_of[p["doc_b"]]
                for p in pairs)
+
+
+def test_fingerprint_store_compaction(spark):
+    """Maintenance rewrite: after the two-batch append sequence the
+    store holds many small files; compaction must shrink the file
+    count to ~one per bucket while leaving the row set and batch-check
+    results bit-identical."""
+    from hpctoolkit_dataframe_spark.queries.dedup import (
+        FP_STORE_BUCKETS, check_batch_against_store,
+        compact_fingerprint_store, drop_fingerprint_store,
+        fingerprint_split, incremental_dedup_resume_frames)
+
+    table = "incr_fp_store_compact_t"
+    drop_fingerprint_store(spark, table)
+    try:
+        split = fingerprint_split(spark, SF_DIR)
+        from hpctoolkit_dataframe_spark.queries.dedup import (
+            append_new_fingerprints, write_fingerprint_store)
+
+        write_fingerprint_store(split.filter(F.col("bucket") >= 2), table)
+        append_new_fingerprints(spark, split.filter(F.col("bucket") == 1),
+                                table)
+        append_new_fingerprints(spark, split.filter(F.col("bucket") == 0),
+                                table)
+        rows_before = sorted(
+            tuple(r) for r in spark.table(table).collect())
+        probe = split.limit(50)
+        flags_before = sorted(tuple(r) for r in
+                              check_batch_against_store(
+                                  spark, probe, table).collect())
+
+        before, after = compact_fingerprint_store(spark, table)
+        assert after < before
+        assert after <= FP_STORE_BUCKETS
+        rows_after = sorted(tuple(r) for r in spark.table(table).collect())
+        assert rows_after == rows_before
+        flags_after = sorted(tuple(r) for r in
+                             check_batch_against_store(
+                                 spark, probe, table).collect())
+        assert flags_after == flags_before
+    finally:
+        drop_fingerprint_store(spark, table)

@@ -79,6 +79,13 @@ def test_multimodal_frame_sampling(spark):
         assert len(by_media[r["media_id"]]) == expected
 
 
+def test_media_stats_jvm_side(spark):
+    media = multimodal.synthesize_media(spark, 5)
+    stats = multimodal.with_media_stats(media).collect()
+    assert all(r["n_bytes"] > 0 and len(r["content_md5"]) == 32
+               for r in stats)
+
+
 def test_flame_svg_matches_layout_geometry(spark):
     """The dependency-free SVG sink must contain exactly one rect per
     layout segment, with x/width pixel geometry proportional to the

@@ -39,6 +39,15 @@ def test_salted_join_equals_plain_join(skewed, how):
         _counts(plain.collect())
 
 
+def test_two_stage_agg_sum_equals_group_sum(skewed):
+    left, _ = skewed
+    plain = {r["k"]: r["s"] for r in
+             left.groupBy("k").agg(F.sum("v").alias("s")).collect()}
+    two = {r["k"]: r["sum_v"] for r in
+           skew.two_stage_agg_sum(left, ["k"], "v", salt=8).collect()}
+    assert two == plain
+
+
 # ---------------------------------------------------------------------------
 # _first_point_after: the funnel stream's window-scan step matcher
 # (replaced the per-user theta join the skewed-clone probe measured at

@@ -125,3 +125,30 @@ def test_ivfpq_subset_of_pq_ranking(spark):
 # be k/N = 0.005, so .1 still guards a broken codebook by 20x.
 # ---------------------------------------------------------------------------
 SF01 = "/root/testdata/sf0.1"
+
+
+def test_ivf_recall_curve(spark):
+    curve = V.recall_curve(spark, SF01, "ivf", probes=(1, 2, 4, 8), k=10)
+    recalls = [r for _, r in curve]
+    assert recalls == sorted(recalls), curve  # candidate set only grows
+    assert recalls[0] >= 0.9, curve
+    # probing every cell makes flat IVF exhaustive -> exact by construction
+    assert recalls[-1] == 1.0, curve
+
+
+def test_ivf_trained_recall_curve(spark):
+    curve = V.recall_curve(spark, SF01, "ivf_trained",
+                           probes=(1, 8), k=10)
+    assert curve[0][1] >= 0.9, curve
+    assert curve[-1][1] == 1.0, curve
+
+
+def test_ivfpq_full_probe_equals_pq(spark):
+    """Probing all N_CELLS coarse cells must make IVFPQ's candidate set
+    the full corpus, i.e. exactly pq_ann's ADC ranking — the probe
+    layer is lossless; only ADC quantization costs recall."""
+    ivfpq_full = V.recall_curve(spark, SF01, "ivfpq",
+                                probes=(V.N_CELLS,), k=10)[0][1]
+    pq = V.pq_recall(spark, SF01, k=10)
+    assert ivfpq_full == pq, (ivfpq_full, pq)
+    assert pq >= 0.1, pq  # 20x the random-guess baseline of k/N=0.005
