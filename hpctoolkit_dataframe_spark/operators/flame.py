@@ -234,83 +234,3 @@ def flame_svg(
     parts.append("</svg>")
     return "\n".join(parts)
 
-
-def flame_svg_diff(
-    df_a: DataFrame,
-    df_b: DataFrame,
-    column: str,
-    join_cols: Sequence[str] = ("id",),
-    prefix: Sequence[int] = (),
-    min_depth: int | None = None,
-    max_depth: int | None = None,
-    callpath_col: str = "callpath",
-    label_col: str | None = "procedure",
-    width_px: int = 1200,
-    row_px: int = 22,
-    title: str = "",
-) -> str:
-    """Differential flame graph (engine extension; the reference has
-    only single-profile rendering): geometry comes from profile A's
-    layout, color from the signed relative change of ``column`` in B
-    vs A — red = hotter in B, blue = cooler, grey = unchanged/missing.
-    The B values ride a join on ``join_cols`` before the driver-side
-    layout collect, so the diff is one extra hash join, not a second
-    layout pass."""
-    import html
-
-    if min_depth is None:
-        min_depth = len(prefix) + 1
-    b_vals = df_b.select(
-        *join_cols, F.col(column).cast("double").alias("__b_v"))
-    joined = (df_a.join(b_vals, on=list(join_cols), how="left"))
-    layout = flame_layout(joined, column, prefix, min_depth, max_depth,
-                          callpath_col, label_col)
-    # display-restrict BEFORE collecting values — like the layout
-    # itself, only the drawn window ever reaches the driver (a full-
-    # frame collect would be the anti-pattern the plan census hunts)
-    shown = _cct.at_depths(
-        _cct.at_paths(joined, prefix=prefix),
-        min_depth, max_depth if max_depth is not None else None)
-    # 'id' is collected unconditionally: the layout segments are keyed
-    # by id, so a join_cols that omits it must not break the value maps
-    # (ADVICE r6 — r["id"] KeyError after the join already ran).
-    id_cols = list(join_cols) + (["id"] if "id" not in join_cols else [])
-    vals = shown.select(
-        *id_cols, F.col(column).cast("double").alias("__a_v"),
-        "__b_v").collect()
-    a_by_id = {r["id"]: r["__a_v"] for r in vals}
-    b_by_id = {r["id"]: r["__b_v"] for r in vals}
-    scale = width_px / NORMALIZATION_CONSTANT
-    depths = [s["depth"] for s in layout] or [min_depth]
-    height_px = (max(depths) - min_depth + 1) * row_px + row_px
-
-    def color(seg_id) -> str:
-        a, b = a_by_id.get(seg_id), b_by_id.get(seg_id)
-        if a is None or b is None or a == 0:
-            return "#bdbdbd"
-        delta = (b - a) / abs(a)
-        if delta > 0:
-            mag = min(delta, 1.0)
-            return f"#{230:02x}{int(150 - 120 * mag):02x}{int(140 - 110 * mag):02x}"
-        if delta < 0:
-            mag = min(-delta, 1.0)
-            return f"#{int(150 - 120 * mag):02x}{int(170 - 80 * mag):02x}{230:02x}"
-        return "#bdbdbd"
-
-    parts = [
-        f'<svg xmlns="http://www.w3.org/2000/svg" width="{width_px}" '
-        f'height="{height_px}" font-family="monospace" font-size="11">',
-        f"<title>{html.escape(title or column)} (B vs A)</title>",
-    ]
-    for seg in layout:
-        x, w = seg["offset"] * scale, seg["width"] * scale
-        y = height_px - (seg["depth"] - min_depth + 1) * row_px
-        label = seg["label"] or ""
-        a, b = a_by_id.get(seg["id"]), b_by_id.get(seg["id"])
-        tip = (f"{label} A={a} B={b}" if a is not None else label)
-        parts.append(
-            f'<rect x="{x:.3f}" y="{y}" width="{w:.3f}" '
-            f'height="{row_px}" fill="{color(seg["id"])}" stroke="#fff">'
-            f"<title>{html.escape(tip)}</title></rect>")
-    parts.append("</svg>")
-    return "\n".join(parts)

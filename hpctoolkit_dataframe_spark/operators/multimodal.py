@@ -25,13 +25,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-MEDIA_SCHEMA = T.StructType([
-    T.StructField("media_id", T.LongType()),
-    T.StructField("media_type", T.StringType()),  # image | audio | video
-    T.StructField("content", T.BinaryType()),
-    T.StructField("meta", T.MapType(T.StringType(), T.StringType())),
-])
-
 FEATURE_DIM = 64
 
 
@@ -122,18 +115,15 @@ def sample_frames(df: DataFrame, every_nth: int = 10, *, fake: bool = False,
     return df.mapInPandas(run, schema=out_schema)
 
 
-def with_media_stats(df: DataFrame, content_col: str = "content") -> DataFrame:
-    """Pure-JVM metadata columns: size + content hash (no Python)."""
-    return df.withColumn("n_bytes", F.octet_length(content_col).cast("long")) \
-             .withColumn("content_md5", F.md5(F.col(content_col)))
-
-
 def synthesize_media(spark, n: int = 100) -> DataFrame:
     """Deterministic fake media table for tests (binary payloads derived
-    from the row id; no external data)."""
+    from the row id; no external data; media_type is image, audio or
+    video)."""
     rows = []
     for i in range(n):
         payload = hashlib.md5(f"media{i}".encode()).digest() * (i % 7 + 1)
         rows.append((i, ["image", "audio", "video"][i % 3], payload,
                      {"w": str(64 + i), "h": "64"}))
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
+    return spark.createDataFrame(
+        rows, "media_id long, media_type string, content binary, "
+              "meta map<string, string>")

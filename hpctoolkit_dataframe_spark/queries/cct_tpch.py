@@ -836,16 +836,14 @@ def cct_merge_profiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# V1+: differential flame graph values layer (VERDICT r6 next #6).
-# flame_svg_diff (operators/flame.py:238) renders geometry from profile
-# A colored by the signed relative change of B vs A; its base geometry
-# is oracle-gated via cct_flame_widths but the signed-change layer was
-# test-only.  This entry is that layer's DataFrame twin: A = the full
-# revenue CCT, B = the kept-only profile (l_returnflag <> 'R'), joined
-# on node id under A's depth 1-3 flame geometry.  rel_bp is integer
-# basis points via `div` — both engines truncate integral division
-# toward zero, so negative deltas agree; hue replicates the renderer's
-# red/blue/grey classification (grey = unchanged or missing in B).
+# V1+: differential flame graph values layer (VERDICT r6 next #6):
+# geometry from profile A, each segment colored by the signed relative
+# change of B vs A.  A = the full revenue CCT, B = the kept-only profile
+# (l_returnflag <> 'R'), joined on node id under A's depth 1-3 flame
+# geometry (cct_flame_widths).  rel_bp is integer basis points via
+# `div` — both engines truncate integral division toward zero, so
+# negative deltas agree; hue is the red/blue/grey classification
+# (red = hotter in B, blue = cooler, grey = unchanged or missing in B).
 # ---------------------------------------------------------------------------
 @register("cct_flame_diff", sql=f"""WITH RECURSIVE {CCT_CTES},
 shares AS (
@@ -906,7 +904,7 @@ FROM geom g
 JOIN cct c ON c.id = g.id
 LEFT JOIN kept k ON k.id = g.id""",
           doc="differential flame values layer: A geometry + signed "
-              "B-vs-A change per segment (flame_svg_diff's color input)")
+              "B-vs-A change per segment (its color layer)")
 def cct_flame_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     geom = cct_flame_widths(spark, sf_dir)
     a = (build_cct(spark, sf_dir)

@@ -1315,8 +1315,8 @@ def dsir_count_model(tb: DataFrame) -> DataFrame:
     """(b, rc, tc): raw and target bucket counts in ONE conditional
     aggregation — the entire DSIR 'model', <= B rows.  MERGEABLE:
     cell-wise SUM of per-batch models equals the model of the unioned
-    input (associative integer addition) — what run_dsir_stream
-    exploits to maintain the model incrementally."""
+    input (associative integer addition) — what the ``dsir`` store of
+    streaming/curation.py exploits to maintain the model incrementally."""
     return tb.groupBy("b").agg(
         F.count(F.lit(1)).cast("long").alias("rc"),
         F.sum(F.when(F.col("lang") == DSIR_TARGET_LANG, 1).otherwise(0))
@@ -1343,18 +1343,6 @@ def dsir_score(tb: DataFrame, w: DataFrame) -> DataFrame:
             .groupBy("doc_id")
             .agg(F.count(F.lit(1)).cast("long").alias("n_tokens"),
                  F.sum("lr_u").cast("long").alias("score_u")))
-
-
-def dsir_score_against_store(spark: SparkSession, store_path: str,
-                             docs: DataFrame) -> DataFrame:
-    """Score documents against the APPEND-ONLY model store that
-    run_dsir_stream maintains: cell-wise SUM of every appended batch
-    model IS the merged model, then the usual broadcast scoring."""
-    model = (spark.read.parquet(store_path)
-             .groupBy("b").agg(F.sum("rc").cast("long").alias("rc"),
-                               F.sum("tc").cast("long").alias("tc")))
-    return dsir_score(dsir_token_buckets(docs),
-                      dsir_weights_from_model(model))
 
 
 # ---------------------------------------------------------------------------

@@ -346,54 +346,6 @@ def append_new_fingerprints(spark: SparkSession, batch: DataFrame,
     spark.catalog.refreshTable(table)
 
 
-def _store_files(spark: SparkSession, table: str) -> int:
-    """Data-file count in the managed table's location (the small-files
-    metric compaction exists to bound)."""
-    jvm = spark._jvm
-    path = jvm.org.apache.hadoop.fs.Path(
-        spark.conf.get("spark.sql.warehouse.dir"), table.lower())
-    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(path):
-        return 0
-    it, n = fs.listFiles(path, True), 0
-    while it.hasNext():
-        f = it.next().getPath().getName()
-        if not (f.startswith("_") or f.startswith(".")):
-            n += 1
-    return n
-
-
-def compact_fingerprint_store(spark: SparkSession,
-                              table: str = FP_STORE_TABLE,
-                              n_buckets: int = FP_STORE_BUCKETS
-                              ) -> tuple[int, int]:
-    """Rewrite the append-grown store to ONE file per bucket.
-
-    Every append adds a file per (writing task x touched bucket), so a
-    long-lived store accretes the classic small-files problem: N
-    batches -> ~N files per bucket, each read fanning out N splits per
-    bucket and metadata scaling with batch count, not data.  The fix is
-    the standard maintenance rewrite: materialize the rows (BEFORE
-    dropping — the plan must not read the table being replaced),
-    repartition by the bucket key into exactly ``n_buckets`` hash
-    partitions (the same Murmur3(th) % n hash bucketBy uses, so each
-    task holds exactly one bucket and emits exactly one file), and
-    rewrite bucketed+sorted.  Bucket pruning and shuffle-free joins are
-    preserved because the bucketing spec is identical.  Returns
-    (files_before, files_after)."""
-    rows = spark.table(table).select("th", "simhash") \
-        .localCheckpoint(eager=True)
-    before = _store_files(spark, table)
-    drop_fingerprint_store(spark, table)
-    from ..sources.sinks import write_bucketed_table
-
-    write_bucketed_table(
-        rows.repartition(n_buckets, F.col("th")), table,
-        bucket_cols=("th",), n_buckets=n_buckets, sort_cols=("th",))
-    spark.catalog.refreshTable(table)
-    return before, _store_files(spark, table)
-
-
 def delete_orphan_location(spark: SparkSession, table: str) -> None:
     """Delete ``table``'s managed warehouse directory if it exists.  A
     session that died mid-write leaves that directory behind with no

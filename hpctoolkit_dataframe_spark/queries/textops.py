@@ -741,9 +741,9 @@ def with_simhash64(df: DataFrame, text_col: str = "text",
                    out: str = "simhash") -> DataFrame:
     """Append the 64-bit simhash fingerprint of ``text_col`` — the one
     shared fold used by the batch ``simhash64`` query, the incremental
-    dedup flag, and ``streaming.streaming_simhash_dedup``, so they
-    cannot drift.  Works on batch and streaming frames alike (per-row
-    scalar Arrow UDF over a JVM-hashed token array)."""
+    dedup flag, and the ``fingerprints`` store of streaming/curation.py,
+    so they cannot drift.  Works on batch and streaming frames alike
+    (per-row scalar Arrow UDF over a JVM-hashed token array)."""
     from .._pickle import register_module_by_value
 
     register_module_by_value(__name__)  # fold runs worker-side

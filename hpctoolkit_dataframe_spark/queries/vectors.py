@@ -1071,17 +1071,12 @@ def _ivfpq_topk(spark: SparkSession, sf_dir: str,
 
 
 # ---------------------------------------------------------------------------
-# IVF index maintenance: the persisted, append-only cell store.  The
-# coarse codebook is trained ONCE (the expensive pass); from then on
-# new vectors stream in, get assigned to their nearest fixed cell, and
-# append to a cell-bucketed table — queries probe cells against the
-# store without ever touching raw history.  The vector-index analog of
-# the fingerprint/gram stores.
+# IVF index maintenance: the coarse codebook is trained ONCE (the
+# expensive pass); from then on new vectors get assigned to their
+# nearest fixed cell and land in the cell-partitioned store
+# (streaming/vectors.py) — queries probe cells against the store
+# without ever touching raw history.
 # ---------------------------------------------------------------------------
-VEC_STORE_TABLE = "ivf_cell_store"
-VEC_STORE_BUCKETS = 8
-
-
 def assign_to_cells(emb: DataFrame, cents: DataFrame) -> DataFrame:
     """(vec_id, qe, n2, cell): nearest-centroid assignment by exact
     integer L2 with the (d, cell) tie-break — the same rule the trainer
@@ -1093,36 +1088,12 @@ def assign_to_cells(emb: DataFrame, cents: DataFrame) -> DataFrame:
         "vec_id", "qe", "n2", "cell")
 
 
-def write_vector_store(assigned: DataFrame,
-                       table: str = VEC_STORE_TABLE,
-                       n_buckets: int = VEC_STORE_BUCKETS) -> None:
-    """Initialize the store bucketed on cell: a probe of N_PROBE cells
-    reads N_PROBE buckets' files, nothing else."""
-    from ..sources.sinks import write_bucketed_table
-
-    write_bucketed_table(assigned.select("vec_id", "qe", "n2", "cell"),
-                         table, bucket_cols=("cell",),
-                         n_buckets=n_buckets, sort_cols=("cell",))
-
-
-def append_to_vector_store(assigned: DataFrame,
-                           table: str = VEC_STORE_TABLE,
-                           n_buckets: int = VEC_STORE_BUCKETS) -> None:
-    from ..sources.sinks import write_bucketed_table
-
-    write_bucketed_table(assigned.select("vec_id", "qe", "n2", "cell"),
-                         table, bucket_cols=("cell",),
-                         n_buckets=n_buckets, sort_cols=("cell",),
-                         mode="append")
-    assigned.sparkSession.catalog.refreshTable(table)
-
-
 def probe_cells(queries_emb: DataFrame, cents: DataFrame,
                 cells: DataFrame) -> DataFrame:
     """Top-k cosine against an assigned-cells frame: probe N_PROBE
     nearest cells per query, rank only those cells' vectors.  ``cells``
     may be an in-memory assignment (twin tests) or the persisted store
-    (``ivf_probe_store``) — identical semantics either way.
+    (streaming/vectors.py) — identical semantics either way.
 
     n2 > 0 on BOTH inputs: the cosine-family zero-norm exclusion
     (_ivf_probe docstring) applied here too — the streaming store is
@@ -1158,14 +1129,6 @@ def probe_cells(queries_emb: DataFrame, cents: DataFrame,
             .withColumn("rk", F.row_number().over(w_rank).cast("long"))
             .filter(F.col("rk") <= TOP_K)
             .select("query_id", "neighbor_id", "rk", "cos"))
-
-
-def ivf_probe_store(spark: SparkSession, queries_emb: DataFrame,
-                    cents: DataFrame,
-                    table: str = VEC_STORE_TABLE) -> DataFrame:
-    """probe_cells against the PERSISTED cell store — the query path of
-    the maintained index (twin-pinned equal to the in-memory probe)."""
-    return probe_cells(queries_emb, cents, spark.table(table))
 
 
 # ---------------------------------------------------------------------------

@@ -3,11 +3,8 @@
 The reference has NO streaming surface (SURVEY.md §2.9) — this module
 is the engine's scale extension:
 
-- ``streaming_simhash_dedup``: near-dup detection on the shared 64-bit
-  simhash fold, with a custom stateful operator via
-  ``applyInPandasWithState`` for the Hamming-1 mode;
-- ``run_vector_index_stream`` / ``run_dsir_stream``: ``foreachBatch``
-  maintenance of the IVF cell store and the DSIR bucket-count model;
+- ``events_schema`` / ``normalize_events``: the fixed read schema of the
+  ``events`` stream and its LONG-nanos ``ts`` contract;
 - ``run_funnel_stream``: the view -> click -> purchase funnel over
   event-time-ordered micro-batches with persisted state tables.
 
@@ -20,12 +17,8 @@ from __future__ import annotations
 
 from . import _drain
 
-from typing import Any, Iterable
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 
 def events_schema(sf_dir: str | None = None) -> T.StructType:
@@ -71,170 +64,6 @@ def normalize_events(df: DataFrame) -> DataFrame:
     return df.select(*[
         F.expr("unix_micros(cast(ts as timestamp)) * 1000").alias("ts")
         if c == "ts" else F.col(c) for c in df.columns])
-
-
-# ---------------------------------------------------------------------------
-# streaming NEAR-dup dedup: simhash-backed state, the streaming side of
-# the batch ``simhash64`` fingerprint (the fold is SHARED —
-# queries.textops.with_simhash64 — so the two cannot drift).
-# ---------------------------------------------------------------------------
-_ND_STATE = "doc_ids ARRAY<BIGINT>, hashes ARRAY<BIGINT>"
-_ND_OUTPUT = T.StructType([
-    T.StructField("doc_id", T.LongType()),
-    T.StructField("simhash", T.LongType()),
-    T.StructField("band_idx", T.IntegerType()),
-    T.StructField("dup_of", T.LongType()),
-])
-# per-bucket reference cap: a degenerate bucket (boilerplate content)
-# otherwise grows state and per-doc scan without bound — same failure
-# class as the batch BAND_DF_CAP (queries/textops.py)
-_ND_STATE_CAP = 256
-
-
-def _update_near_dup(
-    key: tuple, batches: Iterable[pd.DataFrame], state: GroupState
-) -> Iterable[pd.DataFrame]:
-    ids, hashes = state.get if state.exists else ([], [])
-    ids, hashes = list(ids), list(hashes)
-    rows = pd.concat(list(batches), ignore_index=True)
-    rows = rows.sort_values("doc_id")  # deterministic within a batch
-    out = []
-    for r in rows.itertuples():
-        h, dup_of = int(r.simhash), None
-        for i, ph in enumerate(hashes):
-            x = ph ^ h
-            if x & (x - 1) == 0:  # 0 or a power of two: hamming <= 1
-                dup_of = ids[i]
-                break
-        if dup_of is None and len(ids) < _ND_STATE_CAP:
-            ids.append(int(r.doc_id))
-            hashes.append(h)
-        out.append((int(r.doc_id), h, int(key[0]), dup_of))
-    state.update((ids, hashes))
-    yield pd.DataFrame(out, columns=[f.name for f in _ND_OUTPUT.fields])
-
-
-def streaming_simhash_dedup(docs: DataFrame, hamming: int = 0) -> DataFrame:
-    """Streaming near-dup detection on the 64-bit simhash fingerprint.
-
-    ``hamming=0``: state-backed ``dropDuplicates`` on the fingerprint —
-    first doc with each simhash wins across micro-batches; different
-    texts folding to one fingerprint are treated as near-dups.
-
-    ``hamming=1``: banded stateful matching.  The fingerprint splits
-    into two 32-bit halves; two hashes within Hamming distance 1 agree
-    on at least one half (pigeonhole), so each doc is checked in its two
-    (band, half-value) buckets against the capped set of reference docs
-    seen there.  Output is one row per (doc, band) with ``dup_of`` = the
-    earliest reference within distance <= 1 in that bucket (NULL if
-    none): a doc IS a near-dup iff flagged in ANY band — reduce with
-    ``groupBy(doc_id).agg(min(dup_of))`` in ``foreachBatch`` or batch.
-    New references append to bucket state up to ``_ND_STATE_CAP``.
-    """
-    from .._pickle import register_module_by_value
-    from ..queries.textops import with_simhash64
-
-    fp = with_simhash64(docs.filter(F.col("text").isNotNull()), "text") \
-        .select("doc_id", "simhash")
-    if hamming == 0:
-        return fp.dropDuplicates(["simhash"])
-    assert hamming == 1, "only hamming in (0, 1) is supported"
-    register_module_by_value(__name__)  # _update_near_dup runs worker-side
-    b = fp.select(
-        "doc_id", "simhash",
-        F.explode(F.array(F.lit(0), F.lit(1))).alias("band_idx"),
-    ).withColumn(
-        # arithmetic shiftright sign-extends on negative fingerprints;
-        # the mask keeps exactly the 32-bit half either way
-        "band_val",
-        F.expr("shiftright(simhash, band_idx * 32) & 4294967295"))
-    return (
-        b.groupBy("band_idx", "band_val")
-        .applyInPandasWithState(
-            _update_near_dup,
-            outputStructType=_ND_OUTPUT,
-            stateStructType=_ND_STATE,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-def run_available_now(stream_df: DataFrame, query_name: str,
-                      output_mode: str = "complete") -> list[Any]:
-    """Drain a stream with availableNow into a memory sink; return rows."""
-    q = (
-        stream_df.writeStream.format("memory").queryName(query_name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True).start()
-    )
-    _drain.drain(q, 600)
-    spark = stream_df.sparkSession
-    return spark.sql(f"SELECT * FROM {query_name}").collect()
-
-
-
-def run_vector_index_stream(emb_stream: DataFrame, cents: DataFrame,
-                            table: str,
-                            query_name: str = "ivf_index") -> int:
-    """IVF index maintenance as a stream: each micro-batch of raw
-    embeddings is quantized, assigned to its nearest FIXED coarse cell
-    (the codebook trained once up front — broadcast, never retrained
-    mid-stream), and appended to the cell-bucketed store.  Queries run
-    ivf_probe_store against the table between or during batches.
-    Returns the number of micro-batches processed.
-
-    Semantics twin only: no checkpoint, raw appends — a replayed batch
-    would double-insert.  The production shape is
-    streaming/vectors.py run_vector_store_stream (checkpointed offsets
-    + per-batch partition overwrite = exactly-once, kill/resume
-    pinned in tests/test_vector_stream.py)."""
-    from ..queries.vectors import (append_to_vector_store, assign_to_cells,
-                                   _norm2, _qint)
-
-    n_batches = 0
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        nonlocal n_batches
-        emb = batch_df.select(
-            "vec_id", _qint(F.col("embedding")).alias("qe"),
-            _norm2(F.col("embedding")).alias("n2"))
-        append_to_vector_store(assign_to_cells(emb, cents), table)
-        n_batches += 1
-
-    q = (emb_stream.writeStream.foreachBatch(process)
-         .queryName(query_name).trigger(availableNow=True).start())
-    _drain.drain(q, 600)
-    return n_batches
-
-
-def run_dsir_stream(docs_stream: DataFrame, store_path: str,
-                    query_name: str = "dsir_model") -> int:
-    """DSIR model maintenance as a stream: each micro-batch of raw
-    documents contributes one <= B-row (b, rc, tc) bucket-count model
-    appended to the store.  The merged model at any time is the
-    cell-wise SUM of appended batches — exactly equal to the model
-    batch-built over everything seen (associative integer addition),
-    so importance weights can be recomputed from the tiny store
-    between batches without ever re-reading corpus bytes
-    (queries.curation.dsir_score_against_store; equality with the
-    batch dsir_importance_weights is twin-test-pinned).  State per
-    batch is <= B rows regardless of batch size."""
-    from ..queries.curation import dsir_count_model, dsir_token_buckets
-
-    n_batches = 0
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        nonlocal n_batches
-        docs = batch_df.filter(F.col("text").isNotNull())
-        dsir_count_model(dsir_token_buckets(docs)) \
-            .write.mode("append").parquet(store_path)
-        n_batches += 1
-
-    q = (docs_stream.writeStream.foreachBatch(process)
-         .queryName(query_name).trigger(availableNow=True).start())
-    _drain.drain(q, 600)
-    return n_batches
 
 
 def _state_table(spark: SparkSession, name: str, schema: str) -> None:

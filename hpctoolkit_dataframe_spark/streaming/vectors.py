@@ -1,13 +1,13 @@
 """Exactly-once streaming maintenance for the IVF vector index.
 
-`streaming/events.py run_vector_index_stream` proves the semantics
-(stream-assigned cells == batch assignment) but appends to the bucketed
-table without a checkpoint: a crashed-and-replayed micro-batch would
-double-insert its vectors.  The five curation stores solved this with
-checkpointed offsets + per-batch partition OVERWRITE
-(streaming/curation.py); this module gives the vector index the same
-discipline, completing the "every persisted store has an exactly-once
-streaming maintainer" invariant.
+Each micro-batch of raw embeddings is assigned to its nearest coarse
+cell and written into a cell-partitioned store; probing the store gives
+the same rows as the batch probe over the same assignment.  A plain
+append would double-insert the vectors of a crashed-and-replayed
+micro-batch.  The five curation stores solve this with checkpointed
+offsets + per-batch partition OVERWRITE (streaming/curation.py); this
+module gives the vector index the same discipline, so every persisted
+store has an exactly-once streaming maintainer.
 
 Layout: ``{base}/cells/batch_id=N/cell=K/part-*.parquet``.
 

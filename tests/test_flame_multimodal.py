@@ -79,13 +79,6 @@ def test_multimodal_frame_sampling(spark):
         assert len(by_media[r["media_id"]]) == expected
 
 
-def test_media_stats_jvm_side(spark):
-    media = multimodal.synthesize_media(spark, 5)
-    stats = multimodal.with_media_stats(media).collect()
-    assert all(r["n_bytes"] > 0 and len(r["content_md5"]) == 32
-               for r in stats)
-
-
 def test_flame_svg_matches_layout_geometry(spark):
     """The dependency-free SVG sink must contain exactly one rect per
     layout segment, with x/width pixel geometry proportional to the
@@ -119,43 +112,3 @@ def test_flame_svg_matches_layout_geometry(spark):
                             abs_tol=2e-3)
 
 
-def test_flame_svg_diff_colors_by_delta(spark):
-    """Differential flame: geometry equals A's layout; a node hotter
-    in B must render reddish (R>B channel), cooler must render bluish,
-    equal grey."""
-    import xml.etree.ElementTree as ET
-
-    from pyspark.sql import functions as F
-
-    from hpctoolkit_dataframe_spark.operators.flame import (
-        flame_layout, flame_svg_diff)
-    from hpctoolkit_dataframe_spark.queries.cct_tpch import build_cct
-
-    from .conftest import SF_DIR
-
-    cct = build_cct(spark, SF_DIR)
-    # B = A with depth-1 values doubled, depth-2 halved, rest equal
-    b = cct.withColumn("value", F.when(
-        F.size("callpath") == 1, F.col("value") * 2).when(
-        F.size("callpath") == 2, F.col("value") / 2).otherwise(
-        F.col("value")))
-    svg = flame_svg_diff(cct, b, "value", max_depth=3, label_col=None,
-                         width_px=1000)
-    root = ET.fromstring(svg)
-    ns = "{http://www.w3.org/2000/svg}"
-    rects = root.findall(f"{ns}rect")
-    layout = flame_layout(cct, "value", max_depth=3, label_col=None)
-    assert len(rects) == len(layout)
-
-    def rgb(rect):
-        h = rect.get("fill").lstrip("#")
-        return tuple(int(h[i:i + 2], 16) for i in (0, 2, 4))
-
-    for rect, seg in zip(rects, layout):
-        r, g, bch = rgb(rect)
-        if seg["depth"] == 1:
-            assert r > bch, (seg, rect.get("fill"))  # hotter -> red
-        elif seg["depth"] == 2:
-            assert bch > r, (seg, rect.get("fill"))  # cooler -> blue
-        else:
-            assert r == g == bch, (seg, rect.get("fill"))  # unchanged

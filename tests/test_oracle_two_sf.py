@@ -82,7 +82,7 @@ R7_ADDITIONS = [
     # multi-profile merge through the real merge_profiles operator
     # (the one SURVEY §2 surface that lacked a driver-gated oracle)
     "cct_merge_profiles",
-    # flame_svg_diff's signed-change layer as a DataFrame twin
+    # differential flame: A's geometry, B-vs-A signed change per segment
     "cct_flame_diff",
     # embedding-space leakage vs the labeled benchmark set
     "semantic_decontaminate",

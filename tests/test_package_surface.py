@@ -2,22 +2,24 @@
 real workloads run, so code that only its own tests reach cannot come
 back.
 
-The roots are the ``@register`` entries (their decorator arguments
-included), ``tools/``, ``perfbench/``, ``bench.py``, ``examples/`` and
-the package's module-level code.  A definition is reached when reached
-code names it: an identifier, an attribute, or a word in a string
-literal (docstrings and registry docs count) equal to its name.  The
-walk is by name, so one reached mention reaches every definition of
-that name.
+The roots are the ``@register`` entries (each by its own name),
+``tools/``, ``perfbench/``, ``bench.py``, ``examples/``, every
+definition's decorators and the package's module-level code that
+defines nothing.  A definition is a top-level ``def`` or ``class``, or
+a module-level ``NAME = ...`` assignment other than ``__all__``.  It is
+reached when reached code names it as an identifier or an attribute;
+string literals, docstrings and registry docs included, name nothing.
+The walk is by name, so one reached mention reaches every definition
+of that name.
 
 ``KEPT`` lists the definitions that stay although only tests reach
 them, each with its reason.  It may only shrink: an entry that becomes
-reached or is deleted must leave the list.
+reached or is deleted must leave the list.  ``TOOLS`` gives each file
+in ``tools/`` (all of them roots) the reason it stays.
 """
 
 import ast
 import pathlib
-import re
 
 import hpctoolkit_dataframe_spark
 
@@ -25,10 +27,6 @@ PKG = pathlib.Path(hpctoolkit_dataframe_spark.__file__).parent
 REPO = PKG.parent
 ROOTS = ("bench.py", "tools", "perfbench", "examples")
 DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
-WORD = re.compile(r"[A-Za-z_]\w*")
-
-DEFERRED = ("to be deleted with its test by a later change, which keeps "
-            "each change's test removals few")
 
 KEPT = {
     ("functions/callpath.py", "sequence_matches"):
@@ -41,23 +39,52 @@ KEPT = {
     ("plans/explain.py", "read_schemas"): "test tooling for plan assertions",
     ("plans/explain.py", "python_udf_count"):
         "test tooling for plan assertions",
-    ("streaming/events.py", "run_available_now"):
-        "drains the simhash streams in their tests",
     ("operators/multimodal.py", "synthesize_media"):
         "the input for the tests of the registry-reached extract_features "
         "and sample_frames",
-    ("queries/vectors.py", "write_vector_store"):
-        "creates the store that run_vector_index_stream appends to, for "
-        "that stream's test",
     ("queries/vectors.py", "recall_curve"):
         "measures recall@k of the ANN variants against the exact top-k; "
         "its tests guard the codebooks",
     ("queries/vectors.py", "pq_recall"):
         "the quantization-error half of the same recall guard",
-    ("operators/skew.py", "two_stage_agg_sum"): DEFERRED,
-    ("operators/multimodal.py", "with_media_stats"): DEFERRED,
-    ("queries/dedup.py", "compact_fingerprint_store"): DEFERRED,
-    ("queries/dedup.py", "_store_files"): DEFERRED,
+    ("sources/hpctoolkit_xml.py", "union_heterogeneous"):
+        "mixed-MetricTable fleets, README API",
+}
+
+TOOLS = {
+    "curation_run.py":
+        "materializes the composed curation pipeline end to end",
+    "curation_stream_run.py":
+        "drives the streaming curation stores across resumed invocations",
+    "dump_plans.py": "regenerates PLANS.md",
+    "env_check.py": "reports testdata schema drift without a Spark session",
+    "make_adv_data.py": "builds the adversarial-text clone",
+    "make_bpe_fixture.py":
+        "builds the BPE goldens from an independent Python implementation",
+    "make_ingest_fixture.py":
+        "captures the reference ingest fixture the cct_xml_ingest oracle "
+        "reads",
+    "make_scale_data.py": "builds the uniform 10x clone",
+    "make_skew_data.py": "builds the skewed 10x clone",
+    "make_skewadv_data.py": "builds the skew x adversarial clone",
+    "oracle_check.py": "the local replica of the DuckDB correctness gate",
+    "parity_check.py":
+        "A/B against the reference implementation; test_full_parity runs it",
+    "plan_census.py": "the registry-wide plan-feature census and allowlists",
+    "profile_entries.py":
+        "times chosen registry entries and dumps their plans under plans/",
+    "profile_stream_run.py":
+        "drives the streaming fleet profile merge over waves of files",
+    "scale_bench.py":
+        "flagship entries at sf0.1 and a scale clone, with plan signatures",
+    "scale_oracle_sweep.py":
+        "the full-registry oracle sweep at a scale clone, in subprocess "
+        "chunks",
+    "scale_smoke.py": "operator plan shapes at 10-50x synthetic volume",
+    "stream_skew_probe.py":
+        "the streaming stores under the skew clone's hot-key micro-batches",
+    "vector_stream_run.py":
+        "drives the exactly-once vector store over waves, then compacts it",
 }
 
 
@@ -69,14 +96,27 @@ def _names(nodes):
                 out.add(n.id)
             elif isinstance(n, ast.Attribute):
                 out.add(n.attr)
-            elif isinstance(n, ast.Constant) and isinstance(n.value, str):
-                out.update(WORD.findall(n.value))
     return out
 
 
 def _is_entry(node):
     return any(isinstance(d, ast.Call) and getattr(d.func, "id", None)
                == "register" for d in node.decorator_list)
+
+
+def _defined(node):
+    """The name a top-level statement defines, or None."""
+    if isinstance(node, DEFS):
+        return node.name
+    if isinstance(node, ast.Assign) and len(node.targets) == 1:
+        target = node.targets[0]
+    elif isinstance(node, ast.AnnAssign):
+        target = node.target
+    else:
+        return None
+    if isinstance(target, ast.Name) and target.id != "__all__":
+        return target.id
+    return None
 
 
 def unreached(package, roots):
@@ -86,12 +126,15 @@ def unreached(package, roots):
     defs, todo = {}, set()
     for path, src in package.items():
         for node in ast.parse(src).body:
-            if isinstance(node, DEFS):
-                defs.setdefault(node.name, []).append((path, node))
-                todo |= _names([node] if _is_entry(node)
-                               else node.decorator_list)
-            else:
+            name = _defined(node)
+            if name is None:
                 todo |= _names([node])
+                continue
+            defs.setdefault(name, []).append((path, node))
+            if isinstance(node, DEFS):
+                todo |= _names(node.decorator_list)
+                if _is_entry(node):
+                    todo.add(name)
     for src in roots:
         todo |= _names([ast.parse(src)])
     seen = set()
@@ -123,11 +166,20 @@ def test_every_definition_is_reached():
     assert not stale, f"reached or deleted; drop from KEPT: {stale}"
 
 
+def test_every_tool_has_a_reason():
+    tools = {p.name for p in (REPO / "tools").glob("*.py")}
+    missing = sorted(tools - TOOLS.keys())
+    assert not missing, f"give each tool a keep reason in TOOLS: {missing}"
+    stale = sorted(TOOLS.keys() - tools)
+    assert not stale, f"no such tool; drop from TOOLS: {stale}"
+
+
 def test_guard_catches_an_unreferenced_definition():
     package = {"q.py": (
         "from . import register\n"
         "@register('entry', doc='rows of documented')\n"
         "def entry(spark, sf_dir):\n"
+        "    \"\"\"Calls helper, not documented.\"\"\"\n"
         "    return helper()\n"
         "def helper():\n"
         "    return 1\n"
@@ -138,5 +190,35 @@ def test_guard_catches_an_unreferenced_definition():
         "def orphan():\n"
         "    return helper()\n")}
     tool = "from q import tool_only\ntool_only()\n"
-    assert unreached(package, [tool]) == {("q.py", "orphan")}
-    assert unreached(package, [tool, "orphan()"]) == set()
+    assert unreached(package, [tool]) == {("q.py", "documented"),
+                                          ("q.py", "orphan")}
+    assert unreached(package, [tool, "documented(); orphan()"]) == set()
+
+
+def test_a_registry_entry_is_a_root_by_its_own_name():
+    package = {"q.py": (
+        "from . import register\n"
+        "@register('q1', doc='no name of this module')\n"
+        "def entry(spark, sf_dir):\n"
+        "    return helper()\n"
+        "def helper():\n"
+        "    return 1\n")}
+    assert unreached(package, []) == set()
+
+
+def test_a_dead_module_constant_is_reported():
+    package = {"q.py": (
+        "LIVE = 2\n"
+        "DEAD: int = 3\n"
+        "CACHE = {}\n"
+        "def used():\n"
+        "    return LIVE, CACHE\n")}
+    assert unreached(package, ["used()"]) == {("q.py", "DEAD")}
+
+
+def test_dunder_all_is_not_a_definition():
+    package = {"q.py": (
+        "__all__ = ['orphan']\n"
+        "def orphan():\n"
+        "    pass\n")}
+    assert unreached(package, []) == {("q.py", "orphan")}

@@ -8,110 +8,6 @@ from hpctoolkit_dataframe_spark.streaming import events as se
 from .conftest import SF_DIR
 
 
-def test_salted_join_equals_plain_join(spark):
-    from hpctoolkit_dataframe_spark.operators import skew
-
-    left = spark.range(5000).select(
-        (F.col("id") % 7).alias("k"), F.col("id").alias("v"))
-    right = spark.createDataFrame(
-        [(i, f"r{i}") for i in range(7)], "k long, name string")
-    plain = {(r["k"], r["v"], r["name"])
-             for r in left.join(right, "k").collect()}
-    salted = {(r["k"], r["v"], r["name"])
-              for r in skew.salted_join(left, right, ["k"]).collect()}
-    assert salted == plain
-
-
-def _docs_stream(spark, docs):
-    return (spark.readStream.schema(docs.schema)
-            .option("pathGlobFilter", "documents.parquet")
-            .parquet(SF_DIR))
-
-
-def test_streaming_simhash_fingerprints_match_batch(spark):
-    """hamming=0 twin: the streaming fingerprint is the SAME fold as the
-    batch simhash64 query — kept docs carry the batch value, and the
-    kept set covers every distinct fingerprint exactly once."""
-    batch = {r["doc_id"]: r["simhash"]
-             for r in REGISTRY["simhash64"].fn(spark, SF_DIR).collect()}
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    got = se.run_available_now(
-        se.streaming_simhash_dedup(_docs_stream(spark, docs)),
-        "simdedup_t", output_mode="append")
-    assert all(batch[r["doc_id"]] == r["simhash"] for r in got)
-    assert {r["simhash"] for r in got} == set(batch.values())
-    assert len(got) == len(set(batch.values()))
-
-
-def test_streaming_simhash_near_dup_matches_greedy_replica(spark):
-    """hamming=1 twin: per-band flags equal a Python replica of the
-    greedy banded scan over the batch simhash64 fingerprints, including
-    WHICH reference each dup matched."""
-    batch = sorted(
-        (r["doc_id"], r["simhash"])
-        for r in REGISTRY["simhash64"].fn(spark, SF_DIR).collect())
-    want = {}  # (doc_id, band) -> dup_of (None if reference)
-    for band in (0, 1):
-        buckets: dict[int, list[tuple[int, int]]] = {}
-        for doc_id, h in batch:  # doc_id order == operator's sort
-            refs = buckets.setdefault((h >> (32 * band)) & 0xFFFFFFFF, [])
-            dup_of = next((rid for rid, rh in refs
-                           if (rh ^ h) & ((rh ^ h) - 1) == 0), None)
-            if dup_of is None and len(refs) < se._ND_STATE_CAP:
-                refs.append((doc_id, h))
-            want[(doc_id, band)] = dup_of
-
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    got = se.run_available_now(
-        se.streaming_simhash_dedup(_docs_stream(spark, docs), hamming=1),
-        "simnear_t", output_mode="append")
-    assert len(got) == len(want)
-    for r in got:
-        assert want[(r["doc_id"], r["band_idx"])] == r["dup_of"], r
-    # sanity: the dataset actually exercises both outcomes
-    assert any(r["dup_of"] is not None for r in got)
-    assert any(r["dup_of"] is None for r in got)
-
-
-def test_streaming_simhash_near_dup_cross_batch_state(spark, tmp_path):
-    """A doc re-arriving in a LATER micro-batch is flagged against the
-    batch-0 state (dup_of == its own first arrival) in both bands."""
-    import os
-
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    half = docs.limit(docs.count() // 2)
-    half.coalesce(1).write.mode("overwrite").parquet(str(tmp_path / "b0"))
-    docs.coalesce(1).write.mode("overwrite").parquet(str(tmp_path / "b1"))
-    stream_dir = tmp_path / "stream"
-    stream_dir.mkdir()
-    for i, src in enumerate(("b0", "b1")):
-        part = next((tmp_path / src).glob("*.parquet"))
-        dst = stream_dir / f"batch{i}.parquet"
-        part.rename(dst)
-        os.utime(dst, (1_700_000_000 + i * 60, 1_700_000_000 + i * 60))
-
-    stream = (spark.readStream.schema(docs.schema)
-              .option("maxFilesPerTrigger", 1).parquet(str(stream_dir)))
-    got = se.run_available_now(
-        se.streaming_simhash_dedup(stream, hamming=1),
-        "simnear_cb_t", output_mode="append")
-    b0_ids = {r["doc_id"] for r in half.select("doc_id").collect()}
-    # each batch-0 doc appears twice per band; its re-arrival MUST be
-    # flagged against batch-0 state (a first arrival may itself be a
-    # near-dup of an earlier batch-0 doc, so it can be flagged too)
-    for doc_id in b0_ids:
-        for band in (0, 1):
-            dups = [r["dup_of"] for r in got
-                    if r["doc_id"] == doc_id and r["band_idx"] == band]
-            assert len(dups) == 2, (doc_id, band, dups)
-            flagged = [d for d in dups if d is not None]
-            assert flagged, (doc_id, band)  # the re-arrival at minimum
-            if None in dups:
-                # first arrival was a reference -> the re-arrival can
-                # only have matched the doc's own state entry
-                assert flagged == [doc_id], (doc_id, band, dups)
-
-
 def test_streaming_restart_exactly_once(spark, tmp_path):
     """Checkpoint recovery contract: stopping a stream and restarting
     it against the same checkpoint must process NEW files exactly once
@@ -149,67 +45,6 @@ def test_streaming_restart_exactly_once(spark, tmp_path):
     drain()   # restart from the same checkpoint
     got = [r["event_id"] for r in spark.read.parquet(sink).collect()]
     assert sorted(got) == list(range(150))  # each id exactly once
-
-
-def test_streaming_ivf_index_matches_batch_probe(spark, tmp_path):
-    """Vector-index maintenance twin: train the coarse codebook once,
-    stream the non-query corpus into the cell store in two
-    micro-batches, then probe the STORE — rows must EQUAL probe_cells
-    over the identical in-memory assignment (same integer inputs ->
-    bit-identical cosines)."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from hpctoolkit_dataframe_spark.queries import load_table
-    from hpctoolkit_dataframe_spark.queries import vectors as V
-    from hpctoolkit_dataframe_spark.queries.dedup import \
-        drop_fingerprint_store
-
-    table = "ivf_store_t"
-    try:
-        emb_all = V._quantized_corpus(spark, SF_DIR)
-        cents, _ = V._lloyd(emb_all)
-        cents = cents.localCheckpoint(eager=True)
-
-        corpus_ids = sorted(r.vec_id for r in
-                            emb_all.filter(F.col("vec_id") >= V.N_QUERIES)
-                            .select("vec_id").collect())
-        half = corpus_ids[len(corpus_ids) // 2]
-        raw = load_table(spark, SF_DIR, "embeddings")
-        stream_dir = tmp_path / "emb_stream"
-        stream_dir.mkdir()
-        for b, cond in ((0, (F.col("vec_id") >= V.N_QUERIES)
-                         & (F.col("vec_id") < half)),
-                        (1, F.col("vec_id") >= half)):
-            raw.filter(cond).coalesce(1).write.mode("overwrite") \
-                .parquet(str(tmp_path / f"eb{b}"))
-            part = next((tmp_path / f"eb{b}").glob("*.parquet"))
-            dst = stream_dir / f"batch{b}.parquet"
-            part.rename(dst)
-            os.utime(dst, (1_700_000_000 + b * 60,) * 2)
-
-        drop_fingerprint_store(spark, table)  # location hygiene
-        V.write_vector_store(
-            V.assign_to_cells(emb_all, cents).filter(F.lit(False)), table)
-        stream = (spark.readStream.schema(raw.schema)
-                  .option("maxFilesPerTrigger", 1)
-                  .parquet(str(stream_dir)))
-        assert se.run_vector_index_stream(stream, cents, table) == 2
-
-        queries = emb_all.filter(F.col("vec_id") < V.N_QUERIES)
-        got = {(r.query_id, r.rk): (r.neighbor_id, r.cos)
-               for r in V.ivf_probe_store(spark, queries, cents, table)
-               .collect()}
-        corpus = emb_all.filter(F.col("vec_id") >= V.N_QUERIES)
-        want = {(r.query_id, r.rk): (r.neighbor_id, r.cos)
-                for r in V.probe_cells(
-                    queries, cents,
-                    V.assign_to_cells(corpus, cents)).collect()}
-        assert got == want
-        assert len(got) == V.N_QUERIES * V.TOP_K
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
 
 
 def test_streaming_funnel_matches_batch(spark, tmp_path):
@@ -384,41 +219,3 @@ def test_funnel_restart_without_checkpoint_refused(spark, tmp_path):
         spark.sql(f"DROP TABLE IF EXISTS {prefix}_out")
 
 
-def test_streaming_dsir_equals_batch_model(spark, tmp_path):
-    """Mergeable-model twin: DSIR bucket models appended per
-    micro-batch and cell-wise summed at read time must score every
-    document IDENTICALLY to the batch dsir_importance_weights over the
-    full corpus — exact equality, because the model is integer counts,
-    merging is associative addition, and the weight computation sees
-    bit-identical inputs either way."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from hpctoolkit_dataframe_spark.queries.curation import \
-        dsir_score_against_store
-
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    stream_dir = tmp_path / "stream"
-    stream_dir.mkdir()
-    for b, cond in ((0, F.col("doc_id") % 2 == 0),
-                    (1, F.col("doc_id") % 2 == 1)):
-        docs.filter(cond).coalesce(1).write.mode("overwrite") \
-            .parquet(str(tmp_path / f"db{b}"))
-        part = next((tmp_path / f"db{b}").glob("*.parquet"))
-        dst = stream_dir / f"batch{b}.parquet"
-        part.rename(dst)
-        os.utime(dst, (1_700_000_000 + b * 60,) * 2)
-    store = str(tmp_path / "dsir_store")
-    stream = (spark.readStream.schema(docs.schema)
-              .option("maxFilesPerTrigger", 1)
-              .parquet(str(stream_dir)))
-    assert se.run_dsir_stream(stream, store) == 2
-
-    got = {r.doc_id: (r.n_tokens, r.score_u) for r in
-           dsir_score_against_store(
-               spark, store, docs.filter(F.col("text").isNotNull()))
-           .collect()}
-    want = {r.doc_id: (r.n_tokens, r.score_u) for r in
-            REGISTRY["dsir_importance_weights"].fn(spark, SF_DIR).collect()}
-    assert got == want

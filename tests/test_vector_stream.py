@@ -2,10 +2,9 @@
 (streaming/vectors.py): a batch killed AFTER its partition write but
 BEFORE its offset commit must, after resume from the same checkpoint,
 leave the store IDENTICAL to an uninterrupted run (the replay
-overwrites, never double-inserts — the failure mode the append-only
-`run_vector_index_stream` twin cannot survive); probes against the
-streamed store equal the in-memory probe; the cell directories
-partition-prune; compaction preserves probe results."""
+overwrites, never double-inserts as a plain append would); probes
+against the streamed store equal the in-memory probe; the cell
+directories partition-prune; compaction preserves probe results."""
 
 import os
 

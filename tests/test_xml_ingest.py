@@ -16,8 +16,8 @@ from hpctoolkit_dataframe_spark import HPCtoolkitDataFrame
 from hpctoolkit_dataframe_spark.sources import datasource
 from hpctoolkit_dataframe_spark.sources.hpctoolkit_xml import load_experiments
 
-from .conftest import (EXPERIMENT1, EXPERIMENT2, cct_xml, job_probe,
-                       profile_path)
+from .conftest import (CPU_PROFILE_XML, EXPERIMENT1, EXPERIMENT2, cct_xml,
+                       job_probe, profile_path)
 
 
 @pytest.fixture(scope="module")
@@ -458,21 +458,20 @@ def test_flat_profile_and_callers_view(exp1):
             pytest.approx(r[base] or 0.0, rel=1e-9, abs=1e-6)
 
 
-def test_union_heterogeneous_mixed_fleet(spark):
-    """VERDICT r4 #4: the two checked-in fixtures mix MetricTable
-    schemas (CPUTIME vs PAPI) — one call loads both, null-padded and
-    aligned, each profile keeping its OWN percentage election
-    (reference R2 semantics per file)."""
+def _assert_mixed_fleet(spark, paths, want_pcts, n_rows):
+    """One ``union_heterogeneous`` call loads profiles of two MetricTable
+    schemas, null-padded and aligned, each profile keeping its OWN
+    percentage election (reference R2 semantics per file); strict
+    ``load_experiments`` still rejects the same list."""
     from hpctoolkit_dataframe_spark.sources.hpctoolkit_xml import (
         LOCATION_COLUMNS, union_heterogeneous)
 
-    df, metas = union_heterogeneous(spark, [EXPERIMENT1, EXPERIMENT2])
+    df, metas = union_heterogeneous(spark, paths)
     df = df.localCheckpoint(eager=True)
-    assert df.count() == 3454 + 2854
+    assert df.count() == n_rows
     assert len(metas) == 2
     pcts = {m.db_path: m.meaningful_columns["percentage"] for m in metas}
-    assert pcts == {EXPERIMENT1: "CPUTIME (usec):Mean (I)",
-                    EXPERIMENT2: "PAPI_MEM_WCY:Mean (I)"}
+    assert pcts == want_pcts
     # layout: group columns first, shared location tail
     assert df.columns[-len(LOCATION_COLUMNS) - 1:] == \
         LOCATION_COLUMNS + ["profile_id"]
@@ -488,10 +487,40 @@ def test_union_heterogeneous_mixed_fleet(spark):
         assert root[own] == pytest.approx(1.0)
         assert root[other] is None
         # and its metric columns from the other schema are NULL too
-        other_base = next(mm for mm in metas if mm.db_path != m.db_path)
-        some_other_metric = sorted(other_base.metrics_by_id.values())[0]
-        assert root[some_other_metric] is None
-    # strict mode unchanged: the same mixed list still errors loudly
-    with pytest.raises(ValueError, match="MetricTable ids"):
-        load_experiments(spark, [EXPERIMENT1, EXPERIMENT2],
-                         add_percentage_columns=False)
+        other_meta = next(mm for mm in metas if mm.db_path != m.db_path)
+        for metric in other_meta.metrics_by_id.values():
+            assert root[metric] is None
+    # strict mode unchanged: the same mixed list still errors loudly, at
+    # the first action (the load reads only the first file's header)
+    strict, _ = load_experiments(spark, paths, add_percentage_columns=False)
+    with pytest.raises(PythonException,
+                       match=r"ValueError: .*MetricTable ids"):
+        strict.collect()
+
+
+def test_union_heterogeneous_mixed_fleet(spark):
+    """VERDICT r4 #4: the two checked-in fixtures mix MetricTable
+    schemas (CPUTIME vs PAPI)."""
+    _assert_mixed_fleet(
+        spark, [EXPERIMENT1, EXPERIMENT2],
+        {EXPERIMENT1: "CPUTIME (usec):Mean (I)",
+         EXPERIMENT2: "PAPI_MEM_WCY:Mean (I)"}, 3454 + 2854)
+
+
+def test_union_heterogeneous_generated_mixed_fleet(spark, tmp_path):
+    """The same contract on two generated profiles (CPUTIME vs
+    PAPI_MEM_WCY), so it holds without the reference fixtures."""
+    cpu, papi = str(tmp_path / "cpu.xml"), str(tmp_path / "papi.xml")
+    with open(cpu, "w") as f:
+        f.write(CPU_PROFILE_XML)
+    papi_values = {(): 50.0, (3,): 50.0, (3, 5): 20.0, (3, 7): 30.0}
+    with open(papi, "w") as f:
+        f.write(cct_xml(
+            {p: {2: v, 3: v} for p, v in papi_values.items()},
+            metrics=((2, "PAPI_MEM_WCY:Sum (I)", None),
+                     (3, "PAPI_MEM_WCY:Mean (I)", None))))
+    n_cpu = load_experiments(spark, cpu)[0].count()
+    _assert_mixed_fleet(
+        spark, [cpu, papi],
+        {cpu: "CPUTIME (usec):Mean (I)", papi: "PAPI_MEM_WCY:Mean (I)"},
+        n_cpu + len(papi_values))

@@ -8,7 +8,8 @@ O(n^2)/single-partition regressions before they ship, not to produce a
 benchmark number.
 
 Usage: python tools/scale_smoke.py [scale, default 1]
-  scale=1: ~10M-row as-of probe, 5M-row skewed join, 100k-doc winnow
+  scale=1: ~10M-row as-of probe, 5M-row hot-key as-of probe, 100k-doc
+  winnow
 """
 
 from __future__ import annotations
@@ -23,7 +24,6 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from hpctoolkit_dataframe_spark import get_spark  # noqa: E402
 from hpctoolkit_dataframe_spark.operators.asof import asof_join  # noqa: E402
-from hpctoolkit_dataframe_spark.operators.skew import salted_join  # noqa: E402
 
 
 def mat(df) -> int:
@@ -68,18 +68,6 @@ def main() -> None:
     rows = mat(asof_join(hot_l, hot_r, on="k", left_ts="t",
                          right_cols=["rid"], time_buckets=64))
     print(f"asof_join {n_l2:,}x{n_r2:,}, 90% one key, time_buckets=64: "
-          f"{rows:,} rows in {time.time()-t0:.1f}s")
-
-    # 2) salted join under 90% single-key skew, 5M x 100k
-    n = 5_000_000 * scale
-    skew_l = spark.range(n, numPartitions=par).select(
-        F.when(F.col("id") % 10 < 9, 0).otherwise(F.col("id") % 100_000)
-        .alias("k"), F.col("id").alias("v"))
-    dim = spark.range(100_000).select(F.col("id").alias("k"),
-                                      (F.col("id") * 3).alias("w"))
-    t0 = time.time()
-    rows = mat(salted_join(skew_l, dim, on=["k"], salt=32))
-    print(f"salted_join {n:,} rows, 90% hot key: "
           f"{rows:,} rows in {time.time()-t0:.1f}s")
 
     # 3) winnowing on 100k synthetic docs (~300 chars each)
