@@ -1,11 +1,13 @@
 #!/usr/bin/env python
-"""Benchmark headline queries; prints ONE JSON line for the driver.
+"""Benchmark the registry entries; prints ONE JSON line for the driver.
 
 Runs every registry query at ``$SPARK_GRAFT_SF_DIR`` (default
 /root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]``, forcing full
 materialization through a noop sink (no driver-side collect cost), plus
 the reference-workload analog: HPCtoolkit XML load + hot_path on the
 reference's own experiment databases (BASELINE.md's measured workload).
+Where those databases are absent, the line names ``xml_load_hot_path``
+under ``skipped``.
 """
 
 from __future__ import annotations
@@ -22,7 +24,8 @@ from hpctoolkit_dataframe_spark import get_spark  # noqa: E402
 from hpctoolkit_dataframe_spark.queries import REGISTRY  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-XML_GLOB = "/root/reference/test/data/experiment*.xml"
+XML_FILES = ("/root/reference/test/data/experiment1.xml",
+             "/root/reference/test/data/experiment2.xml")
 
 
 def materialize(df) -> None:
@@ -51,9 +54,7 @@ def bench_xml(spark) -> float:
 
     t0 = time.time()
     with ThreadPoolExecutor(max_workers=2) as pool:
-        for f in [pool.submit(one, p) for p in (
-                "/root/reference/test/data/experiment1.xml",
-                "/root/reference/test/data/experiment2.xml")]:
+        for f in [pool.submit(one, p) for p in XML_FILES]:
             f.result()
     return time.time() - t0
 
@@ -68,11 +69,13 @@ def main() -> None:
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
     timings: dict[str, float] = {}
     errors: dict[str, str] = {}
+    skipped: list[str] = []
 
     # warm the JVM + parquet footers + Python workers once so per-query
-    # numbers measure the queries, not session startup
+    # numbers measure the queries, not session startup (a plain events
+    # scan + aggregate: no memoized build to pre-empt)
     try:
-        REGISTRY["q6_forecast_revenue"].fn(spark, SF_DIR).count()
+        REGISTRY["exact_daily_uniques"].fn(spark, SF_DIR).count()
     except Exception as exc:  # warm-up must not kill the whole round
         print(f"WARMUP ERROR: {exc}", file=sys.stderr)
     spark.range(64, numPartitions=32).mapInPandas(
@@ -84,9 +87,15 @@ def main() -> None:
     # pandas loop) has no JIT so its number is inherently steady-state;
     # ours pays one-time codegen/optimizer compilation on the first run
     # of each plan shape, which is session startup cost, not workload.
-    bench_xml(spark)
-    xml_samples = sorted(bench_xml(spark) for _ in range(3))
-    timings["xml_load_hot_path"] = round(xml_samples[1], 3)
+    if all(os.path.exists(p) for p in XML_FILES):
+        try:
+            bench_xml(spark)
+            xml_samples = sorted(bench_xml(spark) for _ in range(3))
+            timings["xml_load_hot_path"] = round(xml_samples[1], 3)
+        except Exception as exc:
+            errors["xml_load_hot_path"] = f"{type(exc).__name__}: {exc}"[:500]
+    else:
+        skipped.append("xml_load_hot_path")
 
     # the memoized CCT build (a materialized view in a real deployment)
     # is a one-time cost that would otherwise land on whichever CCT
@@ -186,7 +195,7 @@ def main() -> None:
     # per-query map to bench_details.json next to this script.
     ext_load = [ld for pair in loads.values() for ld in pair]
     details = {
-        "metric": "headline_queries_total",
+        "metric": "registry_queries_total",
         "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "queries": timings,
@@ -196,6 +205,8 @@ def main() -> None:
     }
     if errors:
         details["errors"] = errors
+    if skipped:
+        details["skipped"] = skipped
     repo_dir = os.path.dirname(os.path.abspath(__file__))
     with open(os.path.join(repo_dir, "bench_details.json"), "w") as f:
         json.dump(details, f, indent=1, sort_keys=True)
@@ -212,11 +223,12 @@ def main() -> None:
         json.dump(details, f, indent=1, sort_keys=True)
     slowest = dict(sorted(timings.items(), key=lambda kv: -kv[1])[:8])
     out = {
-        "metric": "headline_queries_total",
+        "metric": "registry_queries_total",
         "value": details["value"],
         "unit": "sec",
         "n": len(timings),
         "n_errors": len(errors),
+        "skipped": skipped,
         "max": max(timings.values()) if timings else 0.0,
         "queries": slowest,
         "queries_full": stamped,

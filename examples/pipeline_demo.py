@@ -107,10 +107,6 @@ def main() -> None:
     REGISTRY["funnel_view_click_purchase"].fn(spark, sf_dir).orderBy(
         "day").show(5)
 
-    print("weekly cohort retention triangle:")
-    REGISTRY["cohort_retention"].fn(spark, sf_dir).orderBy(
-        "cohort_w", "offset_w").show(8)
-
     print("BM25 top-10 (exact-integer TF saturation):")
     REGISTRY["bm25_topk"].fn(spark, sf_dir).show(10)
 

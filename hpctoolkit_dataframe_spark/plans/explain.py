@@ -3,8 +3,8 @@
 The reference has no optimizer (SURVEY.md §4) — on Spark the plan IS
 the performance contract, so these helpers make plan properties
 assertable in tests: filters must reach the parquet scan, dimension
-joins must broadcast, scans must prune columns, and hot expressions
-must stay inside whole-stage codegen.
+joins must broadcast, and hot expressions must stay inside whole-stage
+codegen.
 """
 
 from __future__ import annotations
@@ -28,15 +28,6 @@ def pushed_filters(df: DataFrame) -> list[str]:
     out: list[str] = []
     for m in re.finditer(r"PushedFilters: \[([^\]]*)\]", plan_string(df)):
         out.extend(p.strip() for p in m.group(1).split(",") if p.strip())
-    return out
-
-
-def read_schemas(df: DataFrame) -> list[list[str]]:
-    """Column lists read by each parquet scan (column-pruning check)."""
-    out = []
-    for m in re.finditer(r"ReadSchema: struct<([^>]*)>", plan_string(df)):
-        out.append([c.split(":")[0].strip() for c in m.group(1).split(",")
-                    if c.strip()])
     return out
 
 

@@ -188,59 +188,49 @@ def _count_scan_partitions(spark: SparkSession, df: DataFrame) -> int:
     return n
 
 
-from . import cct_tpch, multimodal, relational, textops, vectors, xml_ingest  # noqa: E402,F401
-from . import dedup  # noqa: E402,F401  (after textops: reuses its registered SQL)
-from . import pipeline, shaping, sketches  # noqa: E402,F401
-from . import bpe  # noqa: E402,F401  (after textops: reuses its tokenizer)
-from . import tpch_gap  # noqa: E402,F401  (post-r5-window: r6 rotation picks up)
-from . import funnel, pii, spans  # noqa: E402,F401
-from . import curation  # noqa: E402,F401  (after dedup/vectors: reuses their SQL; post-r5-window)
+# dedup reads the registered SQL of textops and vectors entries, and
+# curation that of dedup, so each imports after the modules it reads.
+from . import cct_tpch, multimodal, textops, vectors, xml_ingest  # noqa: E402,F401
+from . import dedup, pipeline, shaping, sketches  # noqa: E402,F401
+from . import bpe, funnel, pii, spans  # noqa: E402,F401
+from . import curation  # noqa: E402,F401
 
 # ---------------------------------------------------------------------------
-# Driver-gate window ordering (VERDICT r4 #1/#3).  The external
-# correctness gate hashes the FIRST 50 registry entries only; after r6
-# every hash-capable entry has a green driver row, so from r7 on the
-# window follows the steady-state keeper-rotation policy (VERDICT r6
-# next #3): 8 permanent canaries spanning each family, every
-# round-new entry, and the remaining slots re-attesting the entries
-# whose LATEST green row is oldest (r7 rotates the r4-attested
-# CCT/TPC-H/events block back in; the 7 that don't fit head the r8
-# queue — rotation log: COVERAGE.md §"Driver-gate rotation").
+# Driver-gate window ordering.  The external correctness gate hashes
+# the FIRST 50 registry entries only, so the window follows the
+# keeper-rotation policy: 8 permanent canaries spanning each family,
+# then the entries whose LATEST green row is oldest (rotation log:
+# COVERAGE.md §"Driver-gate rotation").
 # ---------------------------------------------------------------------------
 _GATE_ORDER = [
     # permanent canaries: xml ingest end-to-end trio + one keeper per
-    # family (CCT descent, TPC-H agg, sessionization, span store,
+    # family (CCT descent, event-time funnel, as-of join, span store,
     # simhash kernel)
     "cct_xml_ingest", "cct_flat_profile", "cct_callers_view",
-    "cct_hot_path", "q1_pricing_summary", "events_sessions",
-    "duplicate_spans", "simhash64",
-    # the full r11 rotation queue: ALL 9 remaining r8-latest entries —
-    # after this window no entry's latest green row predates r9
-    "price_quantiles", "q10_returned_items",
-    "q13_order_count_distribution", "q14_promo_revenue",
-    "q17_small_quantity_revenue", "q19_disjunctive_revenue",
-    "q22_idle_customers", "set_ops_customers",
-    "top_customer_per_nation",
-    # oldest re-attestations: 33 of the 40 remaining r9-latest entries
-    # (alphabetical; the other 7 head the r13 queue:
-    # source_token_totals split_leakage_report stratified_sample
-    # token_df_vocab top_terms_per_doc training_shard_manifest
-    # user_value_history).  semdedup_prune doubles as the r12-changed
-    # re-attestation slot if its skew-floor work (VERDICT r11 next #6)
-    # touches the query.
+    "cct_hot_path", "funnel_view_click_purchase",
+    "events_asof_attribution", "duplicate_spans", "simhash64",
+    # the 31 registered entries kept from the r12 window, with the six
+    # registered r9-latest names of the r13 queue merged in
+    # (alphabetical); after this window no entry's latest green row
+    # predates r10
     "bigram_lm_score", "bm25_topk", "canonical_dedup",
-    "cct_fragment_filter", "cms_heavy_hitters", "cohort_retention",
+    "cct_fragment_filter", "cms_heavy_hitters",
     "corpus_without_dup_spans", "curation_funnel_report",
     "dedup_keep_best", "dq_report", "dsir_importance_weights",
-    "duplicate_word_coverage", "er_part_pairs",
-    "event_sequence_matches", "exact_daily_uniques",
+    "duplicate_word_coverage", "er_part_pairs", "exact_daily_uniques",
     "exact_value_percentiles", "exact_weekly_uniques",
     "gopher_quality_flags", "incremental_dedup_resume",
     "leakage_safe_split", "mixture_plan", "pack_sequences",
     "pagerank_dup_graph", "pii_redact_stats", "pmi_top_pairs",
     "posting_lists", "pq_ann", "pq_codes", "quality_top_decile",
     "repetition_ratio", "semantic_decontaminate", "semdedup_prune",
-    "simhash_near_dup_pairs",
+    "simhash_near_dup_pairs", "source_token_totals",
+    "split_leakage_report", "stratified_sample", "token_df_vocab",
+    "top_terms_per_doc", "training_shard_manifest",
+    # the 5 alphabetically first r10-latest entries; the rest head the
+    # next queue (COVERAGE.md)
+    "bpe_encode_stats", "bpe_train_merges", "cct_flame_diff",
+    "cct_flame_widths", "cct_hot_path_batch",
 ]
 assert len(_GATE_ORDER) == 50, len(_GATE_ORDER)
 _missing = set(_GATE_ORDER) - set(REGISTRY)

@@ -1,8 +1,14 @@
-"""Product-analytics patterns over the events stream: multi-step
-funnel conversion and cohort retention — the two queries every
-event-warehouse team runs daily, expressed in the repo's exact-integer
-event-time convention (LONG nanoseconds in Spark, epoch_us in the
-oracle, all bucketing by integer division).
+"""Event-time joins over the events stream: the view -> click ->
+purchase funnel, last-touch as-of attribution and trailing-window
+attribution, in the repo's exact-integer event-time convention (LONG
+nanoseconds in Spark, epoch_us in the oracle, all bucketing by integer
+division).
+
+Each entry stays for the reason its docstring gives: the funnel is the
+batch reference of ``streaming.events.run_funnel_stream``, and the two
+attributions are the only registry coverage of ``operators.asof`` and
+``operators.interval``.  Generic relational queries test Spark, not
+this package, and have no entries.
 
 The funnel's step matching is a single per-user ordered window scan
 (suffix-min of the next purchase, then suffix-min of the (next click,
@@ -19,11 +25,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from ..operators.asof import asof_join
+from ..operators.interval import interval_join
 from . import load_table, register
 
 FUNNEL_H_US = 86_400_000_000  # step-to-step horizon: 24h in microseconds
 _US_PER_DAY = 86_400_000_000
-_US_PER_WEEK = 7 * _US_PER_DAY
 
 
 def _events_us(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -85,8 +92,11 @@ LEFT JOIN per_day_c b ON b.day = a.day
 LEFT JOIN per_day_p p ON p.day = a.day""")
 def funnel_view_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """3-step funnel (view -> first click within 24h -> purchase within
-    24h of THAT click), reported per view-day.  Funnel attribution is
-    earliest-next-step, computed by ONE per-user ordered scan:
+    24h of THAT click), reported per view-day.  Kept as the batch
+    reference that ``run_funnel_stream``'s tests compare against.
+
+    Funnel attribution is earliest-next-step, computed by ONE per-user
+    ordered scan:
 
     - sort each user's events by (ts, tie-rank, event_id), where the
       tie-rank orders purchase < click < view at EQUAL timestamps so a
@@ -168,204 +178,132 @@ def funnel_view_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
              / F.col("n_views").cast("double")).alias("purchase_rate")))
 
 
-@register("cohort_retention", sql=f"""
-WITH e AS (SELECT user_id,
-                  CAST(epoch_us(ts) AS BIGINT) // {_US_PER_WEEK} AS week
-           FROM events),
-first_w AS (SELECT user_id, CAST(MIN(week) AS BIGINT) AS cohort_w
-            FROM e GROUP BY user_id),
-active AS (SELECT DISTINCT user_id, week FROM e),
-cohort_size AS (SELECT cohort_w, COUNT(*) AS n0 FROM first_w GROUP BY 1)
-SELECT f.cohort_w,
-       CAST(a.week - f.cohort_w AS BIGINT) AS offset_w,
-       CAST(COUNT(*) AS BIGINT) AS n_users,
-       CAST(COUNT(*) AS DOUBLE) / CAST(s.n0 AS DOUBLE) AS retention
-FROM active a
-JOIN first_w f ON f.user_id = a.user_id
-JOIN cohort_size s ON s.cohort_w = f.cohort_w
-GROUP BY f.cohort_w, offset_w, s.n0""")
-def cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weekly cohort retention triangle: users bucketed by their first
-    active week; each later week's survivors as a count + fraction of
-    the cohort.  Week ids are exact integer division of epoch_us —
-    the repo's standard cross-engine time bucketing."""
-    e = (_events_us(spark, sf_dir)
-         .select("user_id",
-                 F.expr(f"ts_us div {_US_PER_WEEK}").alias("week")))
-    active = e.distinct()  # one row per (user, active week)
-    first_w = active.groupBy("user_id").agg(
-        F.min("week").cast("long").alias("cohort_w"))
-    size = first_w.groupBy("cohort_w").agg(
-        F.count(F.lit(1)).alias("n0"))
-    return (active.join(first_w, "user_id")
-            .groupBy("cohort_w",
-                     (F.col("week") - F.col("cohort_w")).cast("long")
-                     .alias("offset_w"))
-            .agg(F.count(F.lit(1)).cast("long").alias("n_users"))
-            .join(F.broadcast(size), "cohort_w")
-            .select("cohort_w", "offset_w", "n_users",
-                    (F.col("n_users").cast("double")
-                     / F.col("n0").cast("double")).alias("retention")))
+# ---------------------------------------------------------------------------
+# as-of join: last-touch attribution — for each purchase, the most
+# recent view of the same user at-or-before it.  Spark lacks ASOF JOIN;
+# operators/asof.py supplies the scalable union+window form (one key
+# shuffle, no row explosion).  The oracle is DuckDB's own ASOF LEFT
+# JOIN over tie-deduped views.
+# ---------------------------------------------------------------------------
+@register("events_asof_attribution", sql="""
+-- ASOF LEFT JOIN replaces the former per-user inequality join + MAX
+-- (quadratic per key — timed out at the skew-100x clone, same class
+-- the funnel oracle above shed).  DuckDB's ASOF picks the
+-- single greatest v.ts_us <= p.ts_us per probe but breaks right-side
+-- timestamp TIES arbitrarily, so v is pre-deduped to one row per
+-- (user_id, ts_us) keeping MAX(event_id) — the Spark operator's
+-- payload-struct tie-break (operators/asof.py:16-19).
+WITH e AS (SELECT user_id, event_id, event_type,
+                  CAST(epoch_us(ts) AS BIGINT) AS ts_us FROM events),
+p AS (SELECT user_id, event_id, ts_us FROM e
+      WHERE event_type = 'purchase'),
+v AS (SELECT user_id, MAX(event_id) AS view_id, ts_us FROM e
+      WHERE event_type = 'view' GROUP BY user_id, ts_us)
+SELECT p.user_id, p.event_id AS purchase_id, p.ts_us,
+       CAST(v.view_id AS BIGINT) AS view_id,
+       CAST(v.ts_us AS BIGINT) AS view_ts_us,
+       CAST((p.ts_us - v.ts_us) // 1000000 AS BIGINT) AS lag_s
+FROM p ASOF LEFT JOIN v
+  ON v.user_id = p.user_id AND v.ts_us <= p.ts_us""")
+def events_asof_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Kept as the only registry and oracle coverage of
+    ``operators.asof.asof_join`` (with its hot-key pre-split)."""
+    ev = load_table(spark, sf_dir, "events").withColumn(
+        "ts_us", F.expr("ts div 1000"))
+    purchases = ev.filter(F.col("event_type") == "purchase").select(
+        "user_id", F.col("event_id").alias("purchase_id"), "ts_us")
+    views = ev.filter(F.col("event_type") == "view").select(
+        "user_id", F.col("event_id").alias("view_id"), "ts_us")
+    # time_buckets: one bot user holding 45% of events is a WINDOW
+    # skew — the single (user)-partitioned sort task held 45M rows at
+    # the skew-100x clone and ground for most of an hour.  The asof
+    # operator's hot-key pre-split spreads every key's timeline over
+    # 32 stitched ranges (results property-tested identical); the two
+    # extra small aggregations are noise at uniform scale.
+    out = asof_join(purchases, views, on="user_id", left_ts="ts_us",
+                    right_cols=["view_id"], time_buckets=32)
+    return out.select(
+        "user_id", "purchase_id", "ts_us",
+        F.col("view_id").cast("long").alias("view_id"),
+        F.col("ts_us_right").alias("view_ts_us"),
+        F.expr("(ts_us - ts_us_right) div 1000000").cast("long")
+        .alias("lag_s"))
 
 
-@register("event_sequence_matches", sql="""
-WITH seq AS (
-  SELECT user_id,
-         CAST(COUNT(*) AS BIGINT) AS n_events,
-         string_agg(event_type, ' '
-                    ORDER BY CAST(epoch_us(ts) AS BIGINT), event_id) AS s
-  FROM events GROUP BY user_id)
-SELECT user_id, n_events,
-       CAST(len(regexp_extract_all(s, 'view click purchase')) AS BIGINT)
-         AS n_vcp,
-       CAST(len(regexp_extract_all(s, 'error error')) AS BIGINT)
-         AS n_error_bursts,
-       CAST(len(regexp_extract_all(s, 'signup')) AS BIGINT) AS n_signups
-FROM seq""")
-def event_sequence_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MATCH_RECOGNIZE-lite: each user's event stream as an ordered
-    type sequence, patterns counted by non-overlapping regex scan
-    (leftmost, advance-past-match — identical in Java regex and RE2).
-    Contiguous-triple conversions, repeated-error bursts, signups.
-    The per-user collect is bounded by one user's activity (the same
-    contract as sessionization); ordering ties break on event_id so
-    the sequence is deterministic."""
-    e = _events_us(spark, sf_dir)
-    seq = (e.groupBy("user_id")
-           .agg(F.count(F.lit(1)).cast("long").alias("n_events"),
-                F.array_join(
-                    F.transform(
-                        F.array_sort(F.collect_list(
-                            F.struct("ts_us", "event_id", "event_type"))),
-                        lambda x: x["event_type"]), " ").alias("s")))
-    return seq.select(
-        "user_id", "n_events",
-        F.regexp_count("s", F.lit("view click purchase")).cast("long")
-        .alias("n_vcp"),
-        F.regexp_count("s", F.lit("error error")).cast("long")
-        .alias("n_error_bursts"),
-        F.regexp_count("s", F.lit("signup")).cast("long").alias("n_signups"))
+# ---------------------------------------------------------------------------
+# bucketed interval join: views inside each purchase's trailing 6-hour
+# attribution window.  Spark lacks a range-join strategy (an
+# inequality join nests loops); operators/interval.py buckets time so
+# the match runs as ONE hash equi-join on (user, bucket) — the shape
+# that survives hot users and 100x data.  The oracle counts without
+# pairs: cumulative view counts read by three ASOF lookups.
+# ---------------------------------------------------------------------------
+ATTRIBUTION_WINDOW_US = 21_600_000_000  # 6 hours (synthetic event density)
 
 
-@register("ab_test_purchase_value", sql=f"""
-WITH u AS (
-  SELECT user_id,
-         CASE WHEN {{h}} % 2 = 0 THEN 'A' ELSE 'B' END AS grp
-  FROM (SELECT DISTINCT user_id FROM events)),
-p AS (
-  SELECT e.user_id, CAST(ROUND(e.value * 100) AS BIGINT) AS v_c
-  FROM events e WHERE e.event_type = 'purchase'),
-g AS (
-  -- HUGEINT sums: a single $3e7 purchase makes v_c^2 overflow BIGINT
-  -- (ANSI throw on the Spark side — adversarial-events probe); the
-  -- Spark twin sums DECIMAL(38,0)
-  SELECT u.grp, CAST(COUNT(*) AS BIGINT) AS n,
-         CAST(SUM(CAST(p.v_c AS HUGEINT)) AS HUGEINT) AS s,
-         CAST(SUM(CAST(p.v_c AS HUGEINT) * p.v_c) AS HUGEINT) AS ss
-  FROM p JOIN u ON u.user_id = p.user_id GROUP BY u.grp)
-SELECT a.n AS n_a, b.n AS n_b,
-       CAST(a.s AS DOUBLE) / CAST(a.n AS DOUBLE) AS mean_a_c,
-       CAST(b.s AS DOUBLE) / CAST(b.n AS DOUBLE) AS mean_b_c,
-       (CAST(a.s AS DOUBLE) / CAST(a.n AS DOUBLE)
-        - CAST(b.s AS DOUBLE) / CAST(b.n AS DOUBLE))
-       / sqrt(
-           (CAST(a.ss AS DOUBLE) / CAST(a.n AS DOUBLE)
-            - (CAST(a.s AS DOUBLE) / CAST(a.n AS DOUBLE))
-              * (CAST(a.s AS DOUBLE) / CAST(a.n AS DOUBLE)))
-             / CAST(a.n AS DOUBLE)
-           + (CAST(b.ss AS DOUBLE) / CAST(b.n AS DOUBLE)
-              - (CAST(b.s AS DOUBLE) / CAST(b.n AS DOUBLE))
-                * (CAST(b.s AS DOUBLE) / CAST(b.n AS DOUBLE)))
-             / CAST(b.n AS DOUBLE)) AS welch_t
-FROM (SELECT * FROM g WHERE grp = 'A') a
-CROSS JOIN (SELECT * FROM g WHERE grp = 'B') b""".format(
-    h="(" + " + ".join(
-        f"(instr('0123456789abcdef', substr(md5('ab:' || CAST(user_id AS "
-        f"VARCHAR)), {k + 1}, 1)) - 1) * {16 ** (7 - k)}"
-        for k in range(8)) + ")"))
-def ab_test_purchase_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hash-split A/B comparison of purchase value: users split by a
-    deterministic md5 coin (rerun-stable, no RNG), per-arm mean and a
-    Welch t statistic computed from EXACT integer (sum, sum-of-squares)
-    aggregates — every double derives from identical BIGINTs on both
-    engines, so even sqrt-of-variance hashes exactly.  The aggregate
-    is one purchase-row shuffle; the final stats are a 2-row join."""
-    ev = load_table(spark, sf_dir, "events", spread=True)
-    coin = F.conv(F.substring(F.md5(
-        F.concat(F.lit("ab:"), F.col("user_id").cast("string"))),
-        1, 8), 16, 10).cast("long") % 2
-    u = (ev.select("user_id").distinct()
-         .select("user_id",
-                 F.when(coin == 0, "A").otherwise("B").alias("grp")))
-    p = (ev.filter(F.col("event_type") == "purchase")
-         .select("user_id",
-                 F.round(F.col("value") * 100).cast("long").alias("v_c")))
-    # DECIMAL(19,0) operands -> DECIMAL(38,0) products/sums: v_c^2 of a
-    # $3e7 purchase overflows INT64 and ANSI throws (adversarial-events
-    # probe); 128-bit keeps the moments exact, and the final
-    # cast-to-double of the same exact integer rounds identically on
-    # both engines (DuckDB side sums HUGEINT)
-    vc_d = F.col("v_c").cast("decimal(19,0)")
-    g = (p.join(u, "user_id").groupBy("grp")
-         .agg(F.count(F.lit(1)).cast("long").alias("n"),
-              F.sum(vc_d).alias("s"),
-              F.sum(vc_d * F.col("v_c")).alias("ss")))
-    a = g.filter(F.col("grp") == "A").select(
-        F.col("n").alias("n_a"), F.col("s").alias("s_a"),
-        F.col("ss").alias("ss_a"))
-    b = g.filter(F.col("grp") == "B").select(
-        F.col("n").alias("n_b"), F.col("s").alias("s_b"),
-        F.col("ss").alias("ss_b"))
-    mean = lambda s, n: F.col(s).cast("double") / F.col(n).cast("double")  # noqa: E731
-    var_over_n = lambda s, ss, n: (  # noqa: E731
-        (F.col(ss).cast("double") / F.col(n).cast("double")
-         - mean(s, n) * mean(s, n)) / F.col(n).cast("double"))
-    return (a.crossJoin(b)
-            .select("n_a", "n_b",
-                    mean("s_a", "n_a").alias("mean_a_c"),
-                    mean("s_b", "n_b").alias("mean_b_c"),
-                    ((mean("s_a", "n_a") - mean("s_b", "n_b"))
-                     / F.sqrt(var_over_n("s_a", "ss_a", "n_a")
-                              + var_over_n("s_b", "ss_b", "n_b")))
-                    .alias("welch_t")))
+@register("purchase_view_windows", sql=f"""
+WITH e AS (SELECT user_id, event_id, event_type,
+                  CAST(epoch_us(ts) AS BIGINT) AS ts_us FROM events),
+p AS (SELECT user_id, event_id AS purchase_id,
+             ts_us - {ATTRIBUTION_WINDOW_US} AS lo_us, ts_us AS hi_us
+      FROM e WHERE event_type = 'purchase'),
+v AS (SELECT user_id, ts_us FROM e WHERE event_type = 'view'),
+-- trailing-window COUNT/MIN/MAX without materializing pairs: the old
+-- banded v x p inequality join emitted every (purchase, view-in-6h)
+-- pair and ran the skew-100x bot user out of the 25 GiB spill budget.
+-- Per-(user, ts) cumulative view counts turn each purchase into three
+-- nearest-match lookups: cum at hi (backward asof), cum strictly
+-- before lo (backward, <), and the first view at/after lo (forward) —
+-- n = cum_hi - cum_lo, first/last come straight off the asof rows.
+-- Grouping v by (user, ts) first makes every asof tie-free (one row
+-- per timestamp, cum = count through that ts).  Row-exact vs the pair
+-- join at sf0.001/0.01/0.1 + skew-10x; 5.6 s at skew-100x.
+v3 AS MATERIALIZED (
+  SELECT user_id, ts_us,
+         CAST(SUM(COUNT(*)) OVER (PARTITION BY user_id ORDER BY ts_us)
+              AS BIGINT) AS cum
+  FROM v GROUP BY user_id, ts_us
+),
+hi AS MATERIALIZED (
+  SELECT p.purchase_id, p.user_id, p.lo_us, p.hi_us,
+         h.cum AS cum_hi, h.ts_us AS ts_hi
+  FROM p ASOF LEFT JOIN v3 h
+    ON h.user_id = p.user_id AND h.ts_us <= p.hi_us
+),
+lo AS MATERIALIZED (
+  SELECT hi.*, l.cum AS cum_lo
+  FROM hi ASOF LEFT JOIN v3 l
+    ON l.user_id = hi.user_id AND l.ts_us < hi.lo_us
+),
+fw AS MATERIALIZED (
+  SELECT lo.*, f.ts_us AS ts_fw
+  FROM lo ASOF LEFT JOIN v3 f
+    ON f.user_id = lo.user_id AND f.ts_us >= lo.lo_us
+)
+SELECT purchase_id, user_id,
+       CAST(cum_hi - COALESCE(cum_lo, 0) AS BIGINT) AS n_views,
+       CAST(ts_fw AS BIGINT) AS first_view_us,
+       CAST(ts_hi AS BIGINT) AS last_view_us
+FROM fw
+WHERE cum_hi IS NOT NULL AND cum_hi - COALESCE(cum_lo, 0) > 0""")
+def purchase_view_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Kept as the only registry and oracle coverage of
+    ``operators.interval.interval_join``."""
+    ev = load_table(spark, sf_dir, "events").withColumn(
+        "ts_us", F.expr("ts div 1000"))
+    views = ev.filter(F.col("event_type") == "view").select(
+        F.col("user_id"), F.col("event_id").alias("view_id"), "ts_us")
+    purchases = ev.filter(F.col("event_type") == "purchase").select(
+        "user_id", F.col("event_id").alias("purchase_id"),
+        (F.col("ts_us") - ATTRIBUTION_WINDOW_US).alias("lo_us"),
+        F.col("ts_us").alias("hi_us"))
+    pairs = interval_join(
+        views, purchases, point_ts="ts_us", lo="lo_us", hi="hi_us",
+        on="user_id", bucket_width=ATTRIBUTION_WINDOW_US)
+    return (
+        pairs.groupBy("purchase_id", "user_id")
+        .agg(F.count(F.lit(1)).cast("long").alias("n_views"),
+             F.min("ts_us").cast("long").alias("first_view_us"),
+             F.max("ts_us").cast("long").alias("last_view_us"))
+    )
 
-
-@register("stickiness_dau_wau", sql=f"""
-WITH a AS (
-  SELECT DISTINCT user_id,
-         CAST(epoch_us(ts) AS BIGINT) // {_US_PER_DAY} AS day
-  FROM events),
-dau AS (SELECT day, CAST(COUNT(*) AS BIGINT) AS dau FROM a GROUP BY day),
-contrib AS (
-  SELECT user_id, CAST(j AS BIGINT) AS report_day
-  FROM a, UNNEST(range(day, day + 7)) AS t(j)),
-wau AS (
-  SELECT report_day AS day, CAST(COUNT(DISTINCT user_id) AS BIGINT) AS wau
-  FROM contrib GROUP BY report_day)
-SELECT d.day, d.dau, w.wau,
-       CAST(d.dau AS DOUBLE) / CAST(w.wau AS DOUBLE) AS stickiness
-FROM dau d JOIN wau w ON w.day = d.day""")
-def stickiness_dau_wau(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DAU / trailing-7-day-WAU stickiness per day.  The trailing
-    distinct is computed WITHOUT a window-over-sets: each (user,
-    active-day) row contributes to the 7 report days it stays "weekly
-    active" for (a bounded explode), then one distinct count per
-    report day — the shape that scales, since per-day user sets never
-    materialize as arrays.  Days with events always have a WAU row, so
-    the join never drops observed days."""
-    a = (_events_us(spark, sf_dir)
-         .select("user_id",
-                 F.expr(f"ts_us div {_US_PER_DAY}").alias("day"))
-         .distinct()
-         .localCheckpoint(eager=True))  # feeds dau + contrib branches
-    dau = a.groupBy("day").agg(F.count(F.lit(1)).cast("long").alias("dau"))
-    contrib = a.select(
-        "user_id",
-        F.explode(F.sequence(F.col("day"), F.col("day") + 6))
-        .alias("report_day"))
-    wau = (contrib.groupBy(F.col("report_day").alias("day"))
-           .agg(F.count_distinct("user_id").cast("long").alias("wau")))
-    return (dau.join(wau, "day")
-            .select("day", "dau", "wau",
-                    (F.col("dau").cast("double")
-                     / F.col("wau").cast("double")).alias("stickiness")))

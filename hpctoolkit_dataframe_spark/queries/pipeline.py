@@ -63,7 +63,8 @@ def stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 # global-percentile quality gate: keep documents whose chars-per-token
 # density clears the corpus P90.  The score is a scaled-BIGINT ratio
 # (exact in both engines); the threshold is one exact percentile over
-# those integers (interpolation is bit-identical, cf. price_quantiles).
+# those integers (interpolation of identical integers is bit-identical
+# across engines).
 # Two-pass shape: pass 1 is a single scalar aggregate (percentile
 # buffer), pass 2 a scan-side filter against the broadcast scalar — at
 # 100 TB swap the exact percentile for approx_percentile and keep the

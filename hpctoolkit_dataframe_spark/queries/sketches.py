@@ -12,8 +12,10 @@ tests/test_sketches.py pins the accuracy contract instead: relative
 error vs the exact answer within the sketch's configured bound, plus
 exact-twin row parity.
 
-Exact twins in the suite: ``distinct_types_per_brand`` (exact distinct
-agg) and ``price_quantiles`` (exact percentile_cont).
+The exact answers: ``exact_daily_uniques``, ``exact_value_percentiles``
+and ``exact_weekly_uniques`` below are the hash-gated twins, and
+tests/test_sketches.py compares each sketch with an exact DuckDB or
+Spark count over the same events.
 """
 
 from __future__ import annotations

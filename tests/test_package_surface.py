@@ -16,10 +16,16 @@ of that name.
 them, each with its reason.  It may only shrink: an entry that becomes
 reached or is deleted must leave the list.  ``TOOLS`` gives each file
 in ``tools/`` (all of them roots) the reason it stays.
+
+Every file parses with warnings turned into errors, so an invalid
+escape such as ``"\\s"`` fails here rather than warning in some run.
 """
 
 import ast
 import pathlib
+import warnings
+
+import pytest
 
 import hpctoolkit_dataframe_spark
 
@@ -36,7 +42,6 @@ KEPT = {
         "the per-element matcher of sequence_matches",
     ("plans/explain.py", "plan_string"): "test tooling for plan assertions",
     ("plans/explain.py", "pushed_filters"): "test tooling for plan assertions",
-    ("plans/explain.py", "read_schemas"): "test tooling for plan assertions",
     ("plans/explain.py", "python_udf_count"):
         "test tooling for plan assertions",
     ("operators/multimodal.py", "synthesize_media"):
@@ -147,14 +152,24 @@ def unreached(package, roots):
             if name not in seen for path, _ in found}
 
 
-def _sources():
-    package = {str(p.relative_to(PKG)): p.read_text()
-               for p in sorted(PKG.rglob("*.py"))}
+def _root_files():
     files = []
     for root in ROOTS:
         p = REPO / root
         files += [p] if p.is_file() else sorted(p.rglob("*.py"))
-    return package, [p.read_text() for p in files]
+    return files
+
+
+def _sources():
+    package = {str(p.relative_to(PKG)): p.read_text()
+               for p in sorted(PKG.rglob("*.py"))}
+    return package, [p.read_text() for p in _root_files()]
+
+
+def _parse_strict(src, filename):
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        return ast.parse(src, filename)
 
 
 def test_every_definition_is_reached():
@@ -164,6 +179,16 @@ def test_every_definition_is_reached():
                        f"KEPT with a reason: {extra}")
     stale = sorted(KEPT.keys() - found)
     assert not stale, f"reached or deleted; drop from KEPT: {stale}"
+
+
+def test_every_file_parses_without_warnings():
+    for p in sorted(PKG.rglob("*.py")) + _root_files():
+        _parse_strict(p.read_text(), str(p))
+
+
+def test_strict_parse_rejects_an_invalid_escape():
+    with pytest.raises(SyntaxError):
+        _parse_strict('"""a \\s b"""\n', "q.py")
 
 
 def test_every_tool_has_a_reason():

@@ -25,10 +25,6 @@ SF_DIR = "/root/testdata/sf0.01"
 
 # query -> what the plan must show (the audit claim the dump evidences)
 SELECTION = {
-    "q5_region_revenue": (
-        "Multi-way TPC-H join: every dimension (region, nation, customer,"
-        " supplier) must appear as BroadcastHashJoin build sides; only the"
-        " lineitem-orders join shuffles.  No BatchEvalPython anywhere."),
     "minhash_lsh_pairs": (
         "Banded LSH self-join: the band-key equi-join (never a cartesian),"
         " with the BAND_DF_CAP hot-bucket filter applied BELOW the join"
@@ -54,10 +50,6 @@ SELECTION = {
         " flags + broadcast DSIR weights, joined on doc_id; shows the"
         " stages compose without recomputation of the corpus scan per"
         " stage beyond the three declared passes."),
-    "events_sessions": (
-        "Sessionization: one exchange on user_id feeding both the lag"
-        " window and the running-sum window (same partitioning reused,"
-        " no second shuffle)."),
     "funnel_view_click_purchase": (
         "3-step funnel: ONE user-key exchange + one descending sort"
         " feeding both running-min windows (next purchase, then the"

@@ -1,5 +1,5 @@
 #!/usr/bin/env python
-"""Build the BPE golden fixtures for the DuckDB oracles — with an
+r"""Build the BPE golden fixtures for the DuckDB oracles — with an
 INDEPENDENT pure-Python implementation (no Spark, no imports from
 hpctoolkit_dataframe_spark), the same pattern as make_ingest_fixture.py:
 the oracle's truth must not be the Spark engine's own output.
@@ -15,7 +15,7 @@ Emits two parquet files under tests/fixtures/:
   stream digest under the merges trained on that same corpus.
 
 Algorithm contract being twinned (queries/bpe.py): training tokenizes
-with the regex whitespace split (Spark ``F.split(text, '\\s+')`` minus
+with the regex whitespace split (Spark ``F.split(text, '\s+')`` minus
 empties), caps the vocabulary at the top 50 000 words by (count desc,
 word asc), runs 48 merges picking (max pair count, then
 lexicographically smallest pair); encoding pre-tokenizes with the SAME

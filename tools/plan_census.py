@@ -53,15 +53,14 @@ ARROW_OK = {
 # a crossJoin against a BROADCAST SCALAR (1-row aggregate / tiny
 # centroid table) — constant fan-out, not a quadratic join.
 SCALAR_BNLJ_OK = {
-    "q22_idle_customers", "knn_cosine", "ivf_ann", "ivf_ann_trained",
+    "knn_cosine", "ivf_ann", "ivf_ann_trained",
     "kmeans_centroids", "ivfpq_ann", "decontaminate", "cct_hot_regions",
-    "quality_top_decile", "cct_diff_returnflag", "events_zscore_outliers",
+    "quality_top_decile", "cct_diff_returnflag",
     "stratified_sample", "pq_codes", "pq_ann", "cct_ratio_of_total",
-    "cct_flame_widths", "customer_spend_deciles",
+    "cct_flame_widths",
     "training_shard_manifest", "corpus_report",   # quality threshold scalar
     "cct_hot_path", "cct_hot_path_batch",         # root-metric scalar probe
     "triangle_count_dup_graph",                   # 1-row edge-count join
-    "ab_test_purchase_value",                     # 2 one-row arm frames
     "bm25_topk",                                  # (nd, tt) corpus-scalar frame
     "hybrid_search_rrf",   # bm25 scalars + broadcast query-vector leg
     "pmi_top_pairs",       # (T, N) corpus-scalar frames

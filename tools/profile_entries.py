@@ -52,7 +52,7 @@ def main() -> None:
     spark = get_spark("profile")
     spark.sparkContext.setLogLevel("ERROR")
     # same warm-up as bench.py: JVM, parquet footers, Python workers
-    REGISTRY["q6_forecast_revenue"].fn(spark, sf_dir).count()
+    REGISTRY["exact_daily_uniques"].fn(spark, sf_dir).count()
     spark.range(64, numPartitions=32).mapInPandas(
         lambda it: it, schema="id long").count()
 
