@@ -28,6 +28,19 @@ XML_FILES = ("/root/reference/test/data/experiment1.xml",
              "/root/reference/test/data/experiment2.xml")
 
 
+def stamped_details_name(repo_dir: str) -> str:
+    """``bench_details_r<N>.json`` for the first N past the highest
+    ``BENCH_r<N>.json`` in ``repo_dir`` whose file does not exist yet,
+    so a run never overwrites a committed copy."""
+    rounds = [int(m.group(1)) for fn in os.listdir(repo_dir)
+              if (m := re.match(r"BENCH_r(\d+)\.json$", fn))]
+    n = max(rounds, default=0) + 1
+    while os.path.exists(
+            os.path.join(repo_dir, "bench_details_r%02d.json" % n)):
+        n += 1
+    return "bench_details_r%02d.json" % n
+
+
 def materialize(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
@@ -212,14 +225,11 @@ def main() -> None:
         json.dump(details, f, indent=1, sort_keys=True)
     # VERDICT r11 #2: bench_details.json is overwritten every run, so the
     # full per-query map was recoverable only via git archaeology.  Also
-    # write a ROUND-STAMPED copy (round = 1 + highest existing BENCH_r*)
-    # that gets committed, making cross-round per-query diffs
-    # self-contained.  (The stdout line itself must stay <~2 KB — the
-    # driver keeps only a tail of stdout; VERDICT r5 #3.)
-    rounds = [int(m.group(1)) for fn in os.listdir(repo_dir)
-              if (m := re.match(r"BENCH_r(\d+)\.json$", fn))]
-    stamped = "bench_details_r%02d.json" % (max(rounds, default=0) + 1)
-    with open(os.path.join(repo_dir, stamped), "w") as f:
+    # write a ROUND-STAMPED copy that gets committed, making cross-round
+    # per-query diffs self-contained.  (The stdout line itself must stay
+    # <~2 KB — the driver keeps only a tail of stdout; VERDICT r5 #3.)
+    stamped = stamped_details_name(repo_dir)
+    with open(os.path.join(repo_dir, stamped), "x") as f:
         json.dump(details, f, indent=1, sort_keys=True)
     slowest = dict(sorted(timings.items(), key=lambda kv: -kv[1])[:8])
     out = {

@@ -2,11 +2,13 @@
 
 Reference loader: hpctoolkit_dataframe/hpctoolkit_dataframe.py:154-216 —
 single-file, single-process, recursive DFS building a list of row dicts.
-Spark shape: ``spark.read.format("binaryFile")`` over a glob of
-experiment XMLs -> ``mapInPandas`` running a per-file parser that emits
-the flattened CCT (one row per node, callpath materialized, plus the raw
-values the ratio columns need at the node's ancestors) -> one narrow
-select: finalize formulas, root (E)<-(I) repair and both ratio columns.
+Spark shape: ``spark.read.format("binaryFile")`` lists a glob of
+experiment XMLs and packs them into partitions; the scan reads only
+their paths -> ``mapInPandas`` opens each file by path and runs the
+per-file parser (``read_profile_rows``), which emits the flattened CCT
+(one row per node, callpath materialized, plus the raw values the ratio
+columns need at the node's ancestors) -> one narrow select: finalize
+formulas, root (E)<-(I) repair and both ratio columns.
 Building that plan starts no Spark job.  One experiment tree is ~10^4
 nodes, so per-file driver-side recursion inside the executor is cheap
 and the 100 TB case (millions of files) is embarrassingly parallel —
@@ -30,7 +32,7 @@ import glob as _glob
 import logging
 import os
 import xml.etree.ElementTree as ET
-from collections.abc import Callable, Iterator, Sequence
+from collections.abc import Iterator, Sequence
 from pathlib import PurePosixPath
 
 import pandas as pd
@@ -217,12 +219,10 @@ def _raw_schema(metric_ids: list[int],
     return T.StructType(fields)
 
 
-def _expand_paths(path: str | list[str] | tuple[str, ...]) -> list[str]:
-    if isinstance(path, (list, tuple)):
-        return [f for p in path
-                for f in (sorted(_glob.glob(p)) if _glob.has_magic(p)
-                          else [p])]
-    return sorted(_glob.glob(path)) if _glob.has_magic(path) else [path]
+def _expand_paths(paths: str | Sequence[str]) -> list[str]:
+    """Each path, or the sorted files its glob matches."""
+    return [f for p in ([paths] if isinstance(paths, str) else paths)
+            for f in (sorted(_glob.glob(p)) if _glob.has_magic(p) else [p])]
 
 
 # The per-file contract that ``load_experiments`` and the ``hpctoolkit``
@@ -230,54 +230,70 @@ def _expand_paths(path: str | list[str] | tuple[str, ...]) -> list[str]:
 # PARSEABLE file's header, and a file whose MetricTable ids differ from
 # that schema raises or is skipped whole.
 
-def first_parseable_header(files: Sequence[str],
-                           on_error: str) -> tuple[str, dict]:
-    """(path, header) of the first file in ``files`` whose XML parses.
-    Under ``on_error='fail'`` the first failure raises; under 'skip' an
-    unparseable file is passed over, and only a set with no parseable
-    file raises."""
-    errors: list[str] = []
+def parseable_headers(files: Sequence[str],
+                      on_error: str) -> Iterator[tuple[str, dict]]:
+    """(path, header) of each file in ``files`` whose XML parses.  Under
+    ``on_error='fail'`` the first failure raises; under 'skip' an
+    unparseable file is passed over with a warning."""
     for candidate in files:
         try:
             with open(candidate, "rb") as f:
-                return candidate, _parse_header(ET.fromstring(f.read()))
-        except Exception as e:
+                header = _parse_header(ET.fromstring(f.read()))
+        except Exception:
             if on_error == "fail":
                 raise
-            errors.append(f"{candidate}: {e}")
-    raise ValueError(f"no parseable experiment file in {files}: {errors}")
+            logging.getLogger(__name__).warning(
+                "skipping malformed experiment file %s", candidate,
+                exc_info=True)
+            continue
+        yield candidate, header
 
 
-def parse_checked_rows(
-    read: Callable[[], bytes],
-    profile_id: str,
-    metric_ids: Sequence[int],
-    on_error: str,
-    **parse_options,
-) -> list[dict] | None:
-    """``parse_experiment_rows`` rows of the file whose bytes ``read``
-    returns, if its MetricTable ids are ``metric_ids`` (sorted).  A file
-    that cannot be read, does not parse, or whose ids differ raises
-    under ``on_error='fail'``; under 'skip' it is dropped whole with a
-    warning and None is returned — padding or dropping metric columns
-    for a heterogeneous file would make silently wrong rows."""
+def first_parseable_header(files: Sequence[str],
+                           on_error: str) -> tuple[str, dict]:
+    """The first of ``parseable_headers``; a set with no parseable file
+    raises."""
+    for found in parseable_headers(files, on_error):
+        return found
+    raise ValueError(f"no parseable experiment file in {list(files)}")
+
+
+def read_profile_rows(path: str, columns: Sequence[str], on_error: str,
+                      **parse_options) -> list[tuple]:
+    """The rows of the experiment at ``path``, as tuples in ``columns``
+    order: the one per-file read of both scans.  The metric ids come
+    from the ``__raw_<id>`` columns and the ancestor ids from the
+    ``__anc_<id>`` columns.  A file that cannot be read, does not parse,
+    or whose MetricTable ids differ from the columns' raises under
+    ``on_error='fail'``; under 'skip' it is dropped whole with a warning
+    and no rows are returned — padding or dropping metric columns for a
+    heterogeneous file would make silently wrong rows."""
+    metric_ids = sorted(int(c[len("__raw_"):]) for c in columns
+                        if c.startswith("__raw_"))
+    anc_ids = [int(c[len("__anc_"):]) for c in columns
+               if c.startswith("__anc_")]
     try:
-        header, rows = parse_experiment_rows(read(), profile_id,
-                                             **parse_options)
+        with open(path, "rb") as f:
+            header, rows = parse_experiment_rows(
+                f.read(), path, ancestor_metric_ids=anc_ids,
+                **parse_options)
         file_ids = sorted(header["metrics_by_id"])
-        if file_ids != list(metric_ids):
+        if file_ids != metric_ids:
             raise ValueError(
-                f"{profile_id}: MetricTable ids {file_ids} differ from "
-                f"the schema's {list(metric_ids)}; heterogeneous metric "
+                f"{path}: MetricTable ids {file_ids} differ from "
+                f"the schema's {metric_ids}; heterogeneous metric "
                 "sets must be loaded separately and unioned")
     except Exception:
         if on_error == "fail":
             raise
         logging.getLogger(__name__).warning(
-            "skipping malformed experiment file %s", profile_id,
-            exc_info=True)
-        return None
-    return rows
+            "skipping malformed experiment file %s", path, exc_info=True)
+        return []
+    out = []
+    for r in rows:
+        r["callpath"] = list(r["callpath"])
+        out.append(tuple(map(r.get, columns)))
+    return out
 
 
 def load_experiments(
@@ -301,7 +317,10 @@ def load_experiments(
     ``db_path``) is always the absolute filesystem path, not a URI.
 
     One plan for any number of files: ``binaryFile`` -> ``mapInPandas``
-    parse -> one select.  The call parses the first parseable file on
+    parse -> one select.  The scan reads only each file's path, and
+    the parse opens the file by that path, so the executors must see
+    the driver's filesystem at the same path (as the ``hpctoolkit``
+    data source assumes too).  The call parses the first parseable file on
     the driver for its header and starts no Spark job; every action on
     the frame parses the XML again, and a parse error raises at that
     action.  A frame acted on more than once should be cached, or
@@ -334,27 +353,22 @@ def load_experiments(
 
     def parse_files(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for batch in batches:
-            for p, content in zip(batch["path"], batch["content"]):
+            for p in batch["path"]:
                 # binaryFile reports Hadoop's Path.toString: the file:
                 # scheme over the unescaped path, so a '%' or a space in
                 # a file name is already literal
-                p = p.removeprefix("file:")
-                rows = parse_checked_rows(
-                    lambda: content, p, metric_ids, on_error,
-                    max_depth=max_depth, skip_callsite=skip_callsite,
-                    ancestor_metric_ids=anc_ids)
-                if rows is None:
-                    continue
-                out = pd.DataFrame(rows)
-                for c in columns:
-                    if c not in out.columns:
-                        out[c] = None
-                out["callpath"] = out["callpath"].map(list)
-                yield out[columns]
+                rows = read_profile_rows(
+                    p.removeprefix("file:"), columns, on_error,
+                    max_depth=max_depth, skip_callsite=skip_callsite)
+                if rows:
+                    yield pd.DataFrame(rows, columns=columns)
 
+    # binaryFile only lists and packs the files: with ``content`` pruned
+    # from the scan no file bytes cross the JVM, and its maxLength cap
+    # does not apply
     raw = (
         spark.read.format("binaryFile").load(paths)
-        .select("path", "content")
+        .select("path")
         .mapInPandas(parse_files, schema=schema)
     )
 
@@ -430,16 +444,7 @@ def union_heterogeneous(
     if not files:
         raise FileNotFoundError(str(paths))
     groups: dict[tuple, list[str]] = {}
-    for p in files:
-        try:
-            with open(p, "rb") as f:
-                h = _parse_header(ET.fromstring(f.read()))
-        except Exception:
-            if on_error == "fail":
-                raise
-            logging.getLogger(__name__).warning(
-                "skipping malformed experiment file %s", p, exc_info=True)
-            continue
+    for p, h in parseable_headers(files, on_error):
         sig = tuple(sorted(h["metrics_by_id"].items()))
         groups.setdefault(sig, []).append(p)
     if not groups:

@@ -118,65 +118,19 @@ def test_datasource_heterogeneous_rejected(spark, tmp_path):
     assert df.select("profile_id").distinct().count() == 1
 
 
-def test_datasource_stream_incremental_fleet(spark, tmp_path):
-    """readStream over an arriving fleet: each availableNow drain
-    ingests exactly the new files, the stream total equals the batch
-    scan, and a drain with no new files ingests nothing.  availableNow
-    terminates and commits deterministically — no sleeps, no race
-    against the commit log."""
-    import shutil
+def test_datasource_loads_a_list_of_paths(spark, tmp_path):
+    """``.load([a, b])`` reads both files: PySpark passes the list as
+    the ``paths`` option, not ``path``."""
+    from .test_xml_ingest import mini_metric_xml
 
     datasource.register(spark)
-    indir = tmp_path / "in"
-    indir.mkdir()
-    ckpt = str(tmp_path / "ckpt")
-    glob = f"{indir}/*.xml"
-
-    batches = []
-
-    def _drain():
-        sdf = (spark.readStream.format("hpctoolkit")
-               .option("max_depth", 5).load(glob))
-        q = (sdf.writeStream
-             .foreachBatch(lambda df, bid: batches.append(df.count()))
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        assert q.awaitTermination(120)
-
-    shutil.copy(XML1, indir / "a.xml")
-    _drain()
-    assert sum(batches) == 15  # first file, depth-5 rows
-
-    shutil.copy(XML1, indir / "b.xml")
-    _drain()
-    assert sum(batches) == 30  # exactly the delta was parsed
-
-    batch_rows = (spark.read.format("hpctoolkit")
-                  .option("max_depth", 5).load(glob).count())
-    assert batch_rows == 30
-
-    _drain()  # no new files: offset replay finds nothing
-    assert sum(batches) == 30
-
-
-def test_stream_latest_offset_waits_for_nonglob_file(tmp_path):
-    """ADVICE r5: a stream started before a literal (non-glob) path
-    exists must report an empty offset until the file arrives, not
-    fail its first batch."""
-    import shutil
-
-    from pyspark.sql import types as T
-
-    from hpctoolkit_dataframe_spark.sources.datasource import (
-        _HPCToolkitStreamReader)
-
-    target = tmp_path / "later.xml"
-    rdr = _HPCToolkitStreamReader(
-        {"path": str(target)},
-        T.StructType([T.StructField("id", T.LongType())]))
-    assert rdr.latestOffset() == {"files": []}
-    shutil.copy(profile_path(XML1, tmp_path), target)
-    assert rdr.latestOffset() == {"files": [str(target)]}
+    paths = [str(tmp_path / n) for n in ("l_a.xml", "l_b.xml")]
+    for p in paths:
+        with open(p, "w") as f:
+            f.write(mini_metric_xml(2))
+    df = spark.read.format("hpctoolkit").load(paths)
+    got = sorted(r["profile_id"] for r in df.select("profile_id").collect())
+    assert got == paths
 
 
 def test_relative_path_rejected(spark, tmp_path, monkeypatch):
@@ -186,17 +140,11 @@ def test_relative_path_rejected(spark, tmp_path, monkeypatch):
     import shutil
 
     import pytest
-    from pyspark.sql import types as T
-
-    from hpctoolkit_dataframe_spark.sources.datasource import (
-        _HPCToolkitStreamReader)
 
     datasource.register(spark)
     monkeypatch.chdir(tmp_path)
     shutil.copy(profile_path(XML1, tmp_path), tmp_path / "rel.xml")
     with pytest.raises(Exception, match="needs an absolute path"):
         spark.read.format("hpctoolkit").load("rel.xml").count()
-    with pytest.raises(ValueError, match="needs an absolute path"):
-        _HPCToolkitStreamReader(
-            {"path": "rel.xml"},
-            T.StructType([T.StructField("id", T.LongType())]))
+    with pytest.raises(Exception, match="needs an absolute path"):
+        spark.read.format("hpctoolkit").load(["rel.xml"]).count()

@@ -9,6 +9,7 @@ exactly, for 1 file and for 9 files, and pin that a load of either size
 is the same lazy plan and starts no Spark job.
 """
 
+import os
 import re
 
 import pytest
@@ -150,12 +151,35 @@ def _plan_nodes(df):
 
 def test_one_file_and_nine_files_share_one_plan(spark, tmp_path):
     """A 1-file load is the same lazy binaryFile -> MapInPandas plan as
-    a 9-file load, not driver-parsed rows shipped as a local relation."""
+    a 9-file load, not driver-parsed rows shipped as a local relation.
+    The scan reads only the file paths: the parse opens each file by
+    path, so no file bytes cross the JVM."""
     paths = _write(tmp_path, _plain_xml, 9)
-    one, one_plan = _plan_nodes(load_experiments(spark, paths[0])[0])
+    one_df = load_experiments(spark, paths[0])[0]
+    one, one_plan = _plan_nodes(one_df)
     nine, _ = _plan_nodes(
         load_experiments(spark, str(tmp_path / "exp_*.xml"))[0])
     assert one == nine
     assert "MapInPandas" in one
     assert re.search(r"Relation \[path#\d+,[^\]]*\] binaryFile", one_plan)
     assert "LocalRelation" not in one_plan and "LogicalRDD" not in one_plan
+    executed = one_df._jdf.queryExecution().executedPlan().toString()
+    assert "ReadSchema: struct<path:string>" in executed
+
+
+def test_load_ignores_binary_file_max_length(spark, tmp_path):
+    """binaryFile only lists the files, so a file larger than
+    ``spark.sql.sources.binaryFile.maxLength`` still loads whole."""
+    paths = _write(tmp_path, _plain_xml, 2)
+    key = "spark.sql.sources.binaryFile.maxLength"
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, "64")
+    try:
+        assert os.path.getsize(paths[0]) > 64
+        df, _ = load_experiments(spark, paths)
+        assert df.count() == 2 * (len(_tree(0.0)) - 1)
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
