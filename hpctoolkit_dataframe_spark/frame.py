@@ -52,6 +52,17 @@ def determine_percentage_column(columns: Sequence[str]) -> str:
     raise AssertionError(list(columns))
 
 
+def meaningful_columns_for(pct: str) -> dict[str, Any]:
+    """The reference's meaningful columns (:139-145) around the elected
+    percentage column ``pct``."""
+    return {
+        "percentage": pct,
+        "hot_path": pct + _HOT_PATH_SUFFIX,
+        "compact": [pct + s for s in _COMPACT_SUFFIXES]
+        + _COMPACT_LOCATION_COLUMNS,
+    }
+
+
 @dataclasses.dataclass
 class CCTMetadata:
     """Counterpart of the reference's ``_metadata`` list (:135-136)."""
@@ -89,13 +100,8 @@ class HPCtoolkitDataFrame:
         self._meta = metadata or CCTMetadata()
         if not self._meta.meaningful_columns:
             try:
-                pct = determine_percentage_column(df.columns)
-                self._meta.meaningful_columns = {
-                    "percentage": pct,
-                    "hot_path": pct + _HOT_PATH_SUFFIX,
-                    "compact": [pct + s for s in _COMPACT_SUFFIXES]
-                    + _COMPACT_LOCATION_COLUMNS,
-                }
+                self._meta.meaningful_columns = meaningful_columns_for(
+                    determine_percentage_column(df.columns))
             except AssertionError:
                 pass
 

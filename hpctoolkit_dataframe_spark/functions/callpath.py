@@ -1,10 +1,14 @@
-"""Column expressions over ``callpath: array<long>`` columns.
+"""Column expressions over the CCT's ``callpath: array<long>`` column.
 
 The reference materializes each CCT node's root-to-node id path as a
 Python tuple (hpctoolkit_dataframe/hpctoolkit_dataframe.py:283) and
 filters with row-at-a-time ``apply`` predicates (:79-128, :391-401).
 Here every predicate is a native Spark ``Column`` expression so it stays
 inside whole-stage codegen and is eligible for pushdown — no UDFs.
+
+The path helpers (``parent_path``, ``has_prefix``, ``has_suffix``,
+``contains_fragment``) read the column named ``callpath``, the name the
+flattened CCT always uses (operators/cct.py); there is no override.
 """
 
 from __future__ import annotations
@@ -15,14 +19,9 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def depth(callpath: Column | str = "callpath") -> Column:
-    """len(callpath) — reference _depth_filter (hpctoolkit_dataframe.py:123-128)."""
-    return F.size(callpath).cast("bigint")
-
-
-def parent_path(callpath: Column | str = "callpath") -> Column:
+def parent_path() -> Column:
     """callpath[:-1] (hpctoolkit_dataframe.py:369). Root's parent is []."""
-    c = F.col(callpath) if isinstance(callpath, str) else callpath
+    c = F.col("callpath")
     return F.slice(c, 1, F.greatest(F.size(c) - 1, F.lit(0)))
 
 
@@ -36,42 +35,36 @@ def path_key(callpath: Column | str = "callpath") -> Column:
     return F.xxhash64(callpath)
 
 
-def has_prefix(prefix: Sequence[int], callpath: Column | str = "callpath") -> Column:
+def _longs(items: Sequence[int]) -> str:
+    return "array(" + ",".join(f"{int(x)}L" for x in items) + ")"
+
+
+def has_prefix(prefix: Sequence[int]) -> Column:
     """callpath[:len(prefix)] == prefix — reference _callpath_filter
     (hpctoolkit_dataframe.py:88-89). Empty prefix passes everything.
 
-    For the common string-column case the predicate is built as ONE
-    ``F.expr`` (a single Py4J round trip, parsed JVM-side) instead of
-    2+2L driver-side Column constructions: a driver-side descent that
-    called this once per depth spent ~0.4 s of the xml_load_hot_path
-    floor on that Py4J chatter (r7 profile)."""
+    Built as ONE ``F.expr`` (a single Py4J round trip, parsed JVM-side)
+    instead of 2+2L driver-side Column constructions: a driver-side
+    descent that called this once per depth spent ~0.4 s of the
+    xml_load_hot_path floor on that Py4J chatter (r7 profile)."""
     if not prefix:
         return F.lit(True)
     n = len(prefix)
-    if isinstance(callpath, str):
-        arr = "array(" + ",".join(f"{int(p)}L" for p in prefix) + ")"
-        return F.expr(f"size(`{callpath}`) >= {n} "
-                      f"AND slice(`{callpath}`, 1, {n}) = {arr}")
-    lits = F.array(*[F.lit(int(p)).cast("bigint") for p in prefix])
-    return (F.size(callpath) >= n) & (F.slice(callpath, 1, n) == lits)
+    return F.expr(f"size(callpath) >= {n} "
+                  f"AND slice(callpath, 1, {n}) = {_longs(prefix)}")
 
 
-def has_suffix(suffix: Sequence[int], callpath: Column | str = "callpath") -> Column:
+def has_suffix(suffix: Sequence[int]) -> Column:
     """callpath[-len(suffix):] == suffix — reference _callpath_filter
     (hpctoolkit_dataframe.py:90-91). Empty suffix passes everything."""
     if not suffix:
         return F.lit(True)
     n = len(suffix)
-    if isinstance(callpath, str):
-        arr = "array(" + ",".join(f"{int(s)}L" for s in suffix) + ")"
-        return F.expr(f"size(`{callpath}`) >= {n} "
-                      f"AND slice(`{callpath}`, -{n}, {n}) = {arr}")
-    lits = F.array(*[F.lit(int(s)).cast("bigint") for s in suffix])
-    return (F.size(callpath) >= n) & (F.slice(callpath, -n, n) == lits)
+    return F.expr(f"size(callpath) >= {n} "
+                  f"AND slice(callpath, -{n}, {n}) = {_longs(suffix)}")
 
 
-def contains_fragment(fragment: Sequence[int],
-                      callpath: Column | str = "callpath") -> Column:
+def contains_fragment(fragment: Sequence[int]) -> Column:
     """``fragment`` appears as a CONTIGUOUS subsequence anywhere in the
     callpath — the semantics the reference's ``at_paths(*fragments)``
     declares but never implemented (hpctoolkit_dataframe.py:82-86, the
@@ -82,7 +75,7 @@ def contains_fragment(fragment: Sequence[int],
     (sequence(1, 0) would generate a DESCENDING [1, 0] under ANSI)."""
     if not fragment:
         return F.lit(True)
-    c = F.col(callpath) if isinstance(callpath, str) else callpath
+    c = F.col("callpath")
     m = len(fragment)
     lits = F.array(*[F.lit(int(x)).cast("bigint") for x in fragment])
     return F.when(

@@ -9,7 +9,8 @@ Expected input shape (the flattened CCT — the reference flattens the
 tree exactly this way at ingest, hpctoolkit_dataframe.py:233-289):
 
 - ``id: bigint``          unique node id (root = -1 by convention)
-- ``callpath: array<bigint>``  root-to-node ids, root = []
+- ``callpath: array<bigint>``  root-to-node ids, root = [].  Every
+  operator here reads the column by this name; there is no override
 - zero or more metric columns
 - optional partition columns (e.g. ``profile_id``) so many experiments
   coexist in one DataFrame — everything here is per-profile when
@@ -42,7 +43,6 @@ def at_paths(
     *fragments: Sequence[int],
     prefix: Sequence[int] = (),
     suffix: Sequence[int] = (),
-    callpath_col: str = "callpath",
 ) -> DataFrame:
     """Rows whose callpath starts with ``prefix`` and/or ends with ``suffix``.
 
@@ -53,14 +53,12 @@ def at_paths(
     if fragments:
         raise NotImplementedError(
             'filtering by arbitrary fragment "{}" not supported'.format(fragments))
-    return df.filter(
-        cp.has_prefix(prefix, callpath_col) & cp.has_suffix(suffix, callpath_col))
+    return df.filter(cp.has_prefix(prefix) & cp.has_suffix(suffix))
 
 
 def at_path_fragments(
     df: DataFrame,
     *fragments: Sequence[int],
-    callpath_col: str = "callpath",
 ) -> DataFrame:
     """Rows whose callpath contains EVERY fragment as a contiguous
     subsequence — the completion of the surface ``at_paths`` declares
@@ -70,7 +68,7 @@ def at_path_fragments(
     changing at_paths' pinned NotImplementedError behavior."""
     cond = F.lit(True)
     for frag in fragments:
-        cond = cond & cp.contains_fragment(frag, callpath_col)
+        cond = cond & cp.contains_fragment(frag)
     return df.filter(cond)
 
 
@@ -78,7 +76,6 @@ def at_depths(
     df: DataFrame,
     min_depth: int | None = None,
     max_depth: int | None = None,
-    callpath_col: str = "callpath",
 ) -> DataFrame:
     """min_depth <= len(callpath) <= max_depth (either bound optional).
 
@@ -86,15 +83,15 @@ def at_depths(
     """
     cond = F.lit(True)
     if min_depth is not None:
-        cond = cond & (F.size(callpath_col) >= min_depth)
+        cond = cond & (F.size("callpath") >= min_depth)
     if max_depth is not None:
-        cond = cond & (F.size(callpath_col) <= max_depth)
+        cond = cond & (F.size("callpath") <= max_depth)
     return df.filter(cond)
 
 
-def at_depth(df: DataFrame, depth: int, callpath_col: str = "callpath") -> DataFrame:
+def at_depth(df: DataFrame, depth: int) -> DataFrame:
     """Reference: hpctoolkit_dataframe.py:400-401."""
-    return at_depths(df, depth, depth, callpath_col)
+    return at_depths(df, depth, depth)
 
 
 # ---------------------------------------------------------------------------
@@ -102,11 +99,10 @@ def at_depth(df: DataFrame, depth: int, callpath_col: str = "callpath") -> DataF
 # ---------------------------------------------------------------------------
 
 def _root_values(
-    df: DataFrame, base_column: str, partition_cols: Sequence[str],
-    callpath_col: str,
+    df: DataFrame, base_column: str, partition_cols: Sequence[str]
 ) -> DataFrame:
     return (
-        df.filter(F.size(callpath_col) == 0)
+        df.filter(F.size("callpath") == 0)
         .select(*partition_cols, F.col(base_column).alias("__root_value"))
     )
 
@@ -116,7 +112,6 @@ def with_ratio_of_total(
     base_column: str,
     column_name: str | None = None,
     partition_cols: Sequence[str] = (),
-    callpath_col: str = "callpath",
 ) -> DataFrame:
     """value / value-at-root, per partition (profile).
 
@@ -126,7 +121,7 @@ def with_ratio_of_total(
     to any number of profiles.
     """
     column_name = column_name or f"{base_column} ratio of total"
-    roots = F.broadcast(_root_values(df, base_column, partition_cols, callpath_col))
+    roots = F.broadcast(_root_values(df, base_column, partition_cols))
     joined = (
         df.join(roots, on=list(partition_cols), how="left")
         if partition_cols else df.crossJoin(roots)
@@ -173,7 +168,6 @@ def with_ratio_of_parent(
     base_column: str,
     column_name: str | None = None,
     partition_cols: Sequence[str] = (),
-    callpath_col: str = "callpath",
     carry_cols: Sequence[str] | None = None,
     monotone: bool = False,
 ) -> DataFrame:
@@ -245,11 +239,11 @@ def with_ratio_of_parent(
         child = df.select(
             *out_cols,
             F.col(base_column).cast("double").alias("__cv"),
-            cp.parent_path(callpath_col).alias("__ppath"),
+            cp.parent_path().alias("__ppath"),
         ).withColumn("__pkey", cp.path_key("__ppath"))
         nodes = df.select(
             *[F.col(c).alias(f"__n_{c}") for c in pc],
-            F.col(callpath_col).alias("__path"),
+            F.col("callpath").alias("__path"),
             F.col(base_column).cast("double").alias("__value"),
         ).withColumn("__path_key", cp.path_key("__path"))
         joined = child.join(
@@ -279,9 +273,9 @@ def with_ratio_of_parent(
     exploded = df.select(
         *pc, "id", *carry,
         F.col(base_column).cast("double").alias("__cv"),
-        F.col(callpath_col).alias("__cp"),
+        F.col("callpath").alias("__cp"),
         F.explode(F.sequence(
-            F.lit(0), F.greatest(F.size(callpath_col) - 1, F.lit(0))
+            F.lit(0), F.greatest(F.size("callpath") - 1, F.lit(0))
         )).alias("__anc_depth"),
     ).select(
         *pc, "id", *carry, "__cv", "__anc_depth",
@@ -296,8 +290,8 @@ def with_ratio_of_parent(
     node_keys = [*[f"__n_{c}" for c in pc], "__n_depth", "__n_id"]
     nodes = df.select(
         *[F.col(c).alias(f"__n_{c}") for c in pc],
-        F.size(callpath_col).alias("__n_depth"),
-        F.when(F.size(callpath_col) == 0, F.lit(0).cast("long"))
+        F.size("callpath").alias("__n_depth"),
+        F.when(F.size("callpath") == 0, F.lit(0).cast("long"))
         .otherwise(F.col("id")).alias("__n_id"),
         F.col(base_column).cast("double").alias("__value"),
     ).groupBy(*node_keys).agg(
@@ -363,7 +357,6 @@ def hot_path(
     base_column: str,
     callpath: Sequence[int] = (),
     threshold: float = 0.05,
-    callpath_col: str = "callpath",
     max_iters: int = 64,
 ) -> DataFrame:
     """Greedy hottest-descendant chain.
@@ -378,7 +371,6 @@ def hot_path(
     the plan and the rules for ties, NULLs and the anchor.
     """
     return hot_paths(df, base_column, threshold=threshold,
-                     callpath_col=callpath_col,
                      max_depth=len(callpath) + max_iters - 1, start=callpath)
 
 
@@ -387,7 +379,6 @@ def hot_paths(
     base_column: str,
     partition_cols: Sequence[str] = (),
     threshold: float = 0.05,
-    callpath_col: str = "callpath",
     max_depth: int = 64,
     start: Sequence[int] = (),
 ) -> DataFrame:
@@ -419,17 +410,17 @@ def hot_paths(
     """
     pc = list(partition_cols)
     anchor = len(start)
-    depth = F.size(callpath_col)
+    depth = F.size("callpath")
     rows = df.filter((depth >= anchor) & (depth <= max_depth)
-                     & cp.has_prefix(start, callpath_col))
+                     & cp.has_prefix(start))
     if pc:
         rows = rows.repartition(*pc)
-    kept = hot_edges(rows, base_column, pc, callpath_col=callpath_col).filter(
+    kept = hot_edges(rows, base_column, pc).filter(
         (F.col("__rank") == 1)
         & ((depth == anchor) | (F.col(base_column) >= threshold)))
     node = F.struct(
-        depth.alias("d"), _parent_id(callpath_col).alias("p"),
-        F.when(depth > 0, F.element_at(callpath_col, -1)).cast("long")
+        depth.alias("d"), _parent_id().alias("p"),
+        F.when(depth > 0, F.element_at("callpath", -1)).cast("long")
         .alias("t"),
         F.struct(*[F.col(f"`{c}`") for c in df.columns]).alias("row"))
 
@@ -449,11 +440,11 @@ def hot_paths(
         F.inline(F.transform(walk["nodes"], lambda n: n["row"]))))
 
 
-def _parent_id(callpath_col: str) -> Column:
+def _parent_id() -> Column:
     """The parent's id from the callpath: NULL for the root's children
     (and the root), so the root is matched by depth, whatever its id."""
-    return F.when(F.size(callpath_col) > 1,
-                  F.element_at(callpath_col, -2)).cast("long")
+    return F.when(F.size("callpath") > 1,
+                  F.element_at("callpath", -2)).cast("long")
 
 
 def hot_edges(
@@ -461,7 +452,6 @@ def hot_edges(
     base_column: str,
     partition_cols: Sequence[str] = (),
     parent_id_col: str | None = None,
-    callpath_col: str = "callpath",
 ) -> DataFrame:
     """Rank-1 child per parent: df's columns plus ``__rank`` = 1 for the
     hottest child of each parent (ties by id, NULL values last).
@@ -471,7 +461,7 @@ def hot_edges(
     ranking :func:`hot_paths` walks.
     """
     keys = ([F.col(parent_id_col)] if parent_id_col
-            else [F.size(callpath_col), _parent_id(callpath_col)])
+            else [F.size("callpath"), _parent_id()])
     w = Window.partitionBy(*partition_cols, *keys).orderBy(
         F.col(base_column).desc(), F.col("id").asc())
     return df.withColumn("__rank", F.row_number().over(w))
@@ -493,7 +483,6 @@ def compact(df: DataFrame, columns: Sequence[str]) -> DataFrame:
 def merge_profiles(
     df: DataFrame,
     metric_combines: dict[str, str],
-    callpath_col: str = "callpath",
     location_cols: Sequence[str] = (),
 ) -> DataFrame:
     """Merge many profiles into one aggregate CCT.
@@ -520,5 +509,5 @@ def merge_profiles(
         fn = {"sum": F.sum, "min": F.min, "max": F.max}[kind]
         aggs.append(fn(F.col(f"`{metric}`")).alias(metric))
     aggs.append(F.count(F.lit(1)).alias("n_profiles"))
-    return df.groupBy(callpath_col,
+    return df.groupBy("callpath",
                       *[F.col(f"`{c}`") for c in location_cols]).agg(*aggs)

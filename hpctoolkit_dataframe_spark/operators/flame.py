@@ -30,7 +30,6 @@ def flame_layout(
     prefix: Sequence[int] = (),
     min_depth: int | None = None,
     max_depth: int | None = None,
-    callpath_col: str = "callpath",
     label_col: str | None = "procedure",
 ) -> list[dict]:
     """Compute the bar layout: one dict per segment with
@@ -52,7 +51,7 @@ def flame_layout(
                           max_depth if max_depth is not None else None)
     cols = [
         F.col("id"),
-        F.col(callpath_col).alias("path"),
+        F.col("callpath").alias("path"),
         F.col(column).cast("double").alias("v"),
     ]
     if label_col and label_col in df.columns:
@@ -114,7 +113,6 @@ def flame_graph(
     style: str = "flame",
     title: str = "",
     show: bool = True,
-    callpath_col: str = "callpath",
     label_col: str | None = "procedure",
     highlight=None,
 ):
@@ -142,8 +140,7 @@ def flame_graph(
 
     if min_depth is None:
         min_depth = len(prefix) + 1
-    layout = flame_layout(df, column, prefix, min_depth, max_depth,
-                          callpath_col, label_col)
+    layout = flame_layout(df, column, prefix, min_depth, max_depth, label_col)
     _, ax = plt.subplots(subplot_kw=dict(polar=shape == "wheel"),
                          figsize=(16, 16))
     thickness = 1
@@ -180,7 +177,6 @@ def flame_svg(
     prefix: Sequence[int] = (),
     min_depth: int | None = None,
     max_depth: int | None = None,
-    callpath_col: str = "callpath",
     label_col: str | None = "procedure",
     width_px: int = 1200,
     row_px: int = 22,
@@ -201,8 +197,7 @@ def flame_svg(
 
     if min_depth is None:
         min_depth = len(prefix) + 1
-    layout = flame_layout(df, column, prefix, min_depth, max_depth,
-                          callpath_col, label_col)
+    layout = flame_layout(df, column, prefix, min_depth, max_depth, label_col)
     palette = ["#e6550d", "#fd8d3c", "#fdae6b", "#fdd0a2",
                "#d94801", "#f16913"]
     scale = width_px / NORMALIZATION_CONSTANT

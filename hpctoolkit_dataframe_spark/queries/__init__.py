@@ -108,24 +108,23 @@ def _read_table(spark: SparkSession, sf_dir: str, name: str,
         # before CPU-heavy pipelines; a real deployment's many-file
         # tables split naturally and skip this.
         par = spark.sparkContext.defaultParallelism
-        if _scan_partitions(spark, sf_dir, name, df) < par // 2:
+        if _count_scan_partitions(spark, df) < par // 2:
             df = df.repartition(par)
     return df
 
 
 _TABLE_CACHE: dict = {}
-_SPREAD_CACHE: dict = {}
 
 
-def _scan_partitions(spark: SparkSession, sf_dir: str, name: str,
-                     df: DataFrame) -> int:
-    """Scan-partition count for the spread decision, memoized per
-    (session, sf_dir, table).
+def _count_scan_partitions(spark: SparkSession, df: DataFrame) -> int:
+    """Scan-partition count for the spread decision.  ``_read_table``
+    runs inside ``load_table``'s memo, so this runs once per (session,
+    sf_dir, table).
 
     r13 (guide §7.3 driver work): the old probe was
     ``df.rdd.getNumPartitions()`` — a DataFrame->RDD conversion costing
     ~0.13 s per call (1.3 s on a session's first), and load_table
-    (spread=True) runs at 42 call sites, many times per bench session:
+    (spread=True) runs at many call sites, many times per bench session:
     several seconds of pure driver time.  For plain local files the
     count is computable from file sizes by replicating
     FilePartition.getFilePartitions (maxSplitBytes clamp + descending
@@ -133,11 +132,6 @@ def _scan_partitions(spark: SparkSession, sf_dir: str, name: str,
     RDD probe on the testdata and multi-file clones); non-local or
     unstat-able inputs keep the RDD probe.  A wrong estimate could
     only flip the repartition heuristic — plan shape, never results."""
-    return session_memo(_SPREAD_CACHE, spark, sf_dir, name,
-                        build=lambda: _count_scan_partitions(spark, df))
-
-
-def _count_scan_partitions(spark: SparkSession, df: DataFrame) -> int:
     n = None
     try:
         files = df.inputFiles()

@@ -16,7 +16,7 @@ order-independent and cross-engine value-hashes match exactly.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from ..operators import cct as ops
 from . import hash8_sql, load_table, register, session_memo
@@ -129,14 +129,16 @@ def _cct_checkpoint_partitions(spark: SparkSession, sf_dir: str) -> int:
                          nbytes // (8 << 20)))
 
 
-def build_cct_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The un-materialized build plan (for plan inspection/tests)."""
+def _leaf_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """One row per lineitem: its root-to-leaf keys ``k1..k5`` (region >
+    nation > customer > order > lineitem, offset so the levels' ids never
+    collide), its revenue ``v`` and its ``l_returnflag``.  The mirror of
+    the oracles' lineitem|><|orders|><|customer|><|nation join."""
     li = load_table(spark, sf_dir, "lineitem", spread=True)
     orders = load_table(spark, sf_dir, "orders")
     customer = load_table(spark, sf_dir, "customer")
     nation = load_table(spark, sf_dir, "nation")
-
-    base = (
+    return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(F.broadcast(customer), orders.o_custkey == customer.c_custkey)
         .join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey)
@@ -149,50 +151,61 @@ def build_cct_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
              + F.col("l_linenumber").cast("long")).alias("k5"),
             (F.round(F.col("l_extendedprice") * 100).cast("long")
              * F.round((1 - F.col("l_discount")) * 100).cast("long")).alias("v"),
+            "l_returnflag",
         )
     )
-    rolled = base.rollup("k1", "k2", "k3", "k4", "k5").agg(
+
+
+_TYPES = ("root", "region", "nation", "customer", "order", "lineitem")
+
+
+def _node(levels: int) -> dict[str, Column]:
+    """The node columns (``id``, ``parent_id``, ``depth``, ``type``,
+    ``callpath``) of a rollup row over ``k1..k{levels}``, from its
+    ``gid``: a depth-d row has gid = 2^(levels-d) - 1, and the grand
+    total is the root (id -1, no parent, empty callpath) — the CASE
+    ladder of the oracles' ``cct`` CTE."""
+    gid = F.col("gid")
+
+    def by_depth(at, root):
+        col = F.when(gid == 0, at(levels))
+        for d in range(levels - 1, 0, -1):
+            col = col.when(gid == (1 << (levels - d)) - 1, at(d))
+        return col.otherwise(root)
+
+    def k(d):
+        return F.col(f"k{d}")
+
+    return {
+        "id": by_depth(k, F.lit(-1)).cast("long").alias("id"),
+        "parent_id": by_depth(lambda d: k(d - 1) if d > 1 else F.lit(-1),
+                              F.lit(None)).cast("long").alias("parent_id"),
+        "depth": by_depth(F.lit, F.lit(0)).cast("long").alias("depth"),
+        "type": by_depth(lambda d: F.lit(_TYPES[d]), F.lit("root"))
+        .alias("type"),
+        "callpath": by_depth(lambda d: F.array(*map(k, range(1, d + 1))),
+                             F.array().cast("array<long>")).alias("callpath"),
+    }
+
+
+def build_cct_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The un-materialized build plan (for plan inspection/tests)."""
+    rolled = _leaf_rows(spark, sf_dir).rollup(
+        "k1", "k2", "k3", "k4", "k5").agg(
         F.sum("v").alias("value"),
         F.count(F.lit(1)).alias("leaves"),
         F.grouping_id().alias("gid"),
     )
-    gid = F.col("gid")
-    keys = F.array("k1", "k2", "k3", "k4", "k5")
-    depth = (
-        F.when(gid == 0, 5).when(gid == 1, 4).when(gid == 3, 3)
-        .when(gid == 7, 2).when(gid == 15, 1).otherwise(0).cast("long")
-    )
-    node_id = (
-        F.when(gid == 0, F.col("k5")).when(gid == 1, F.col("k4"))
-        .when(gid == 3, F.col("k3")).when(gid == 7, F.col("k2"))
-        .when(gid == 15, F.col("k1")).otherwise(-1).cast("long")
-    )
-    parent_id = (
-        F.when(gid == 0, F.col("k4")).when(gid == 1, F.col("k3"))
-        .when(gid == 3, F.col("k2")).when(gid == 7, F.col("k1"))
-        .when(gid == 15, -1).otherwise(F.lit(None)).cast("long")
-    )
-    path = (
-        F.when(gid == 0, keys).when(gid == 1, F.slice(keys, 1, 4))
-        .when(gid == 3, F.slice(keys, 1, 3)).when(gid == 7, F.slice(keys, 1, 2))
-        .when(gid == 15, F.slice(keys, 1, 1))
-        .otherwise(F.array().cast("array<long>"))
-    )
-    node_type = (
-        F.when(gid == 0, "lineitem").when(gid == 1, "order")
-        .when(gid == 3, "customer").when(gid == 7, "nation")
-        .when(gid == 15, "region").otherwise("root")
-    )
+    node = _node(5)
     return rolled.select(
-        node_id.alias("id"), parent_id.alias("parent_id"),
-        depth.alias("depth"), node_type.alias("type"),
-        path.alias("callpath"), F.col("value").cast("long").alias("value"),
+        *(node[c] for c in ("id", "parent_id", "depth", "type", "callpath")),
+        F.col("value").cast("long").alias("value"),
         F.col("leaves").cast("long").alias("leaves"),
     )
 
 
-def _path_str(col: str = "callpath") -> F.Column:
-    return F.array_join(F.transform(F.col(col), lambda x: x.cast("string")), "/")
+def _path_str() -> Column:
+    return F.array_join(F.transform("callpath", lambda x: x.cast("string")), "/")
 
 
 # COALESCE: DuckDB's array_to_string of an empty list yields NULL,
@@ -491,7 +504,7 @@ def cct_flame_widths(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 HOT_THRESHOLD = 0.001
 
-@register("cct_hot_path", sql=f"""WITH RECURSIVE {CCT_CTES},
+_HOT_PATH_SQL = f"""WITH RECURSIVE {CCT_CTES},
 ranked AS (
   SELECT c.id, c.parent_id, c.depth, c.value,
          CAST(c.value AS DOUBLE) / CAST(r.value AS DOUBLE) AS ratio,
@@ -508,7 +521,10 @@ hot AS (
   FROM hot h JOIN ranked r
     ON r.parent_id = h.id AND r.rk = 1 AND r.ratio >= {HOT_THRESHOLD}
 )
-SELECT id, depth, value, ratio FROM hot""",
+SELECT id, depth, value, ratio FROM hot"""
+
+
+@register("cct_hot_path", sql=_HOT_PATH_SQL,
           doc="greedy hottest-descendant chain (reference O3 hot_path)")
 def cct_hot_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = ops.with_ratio_of_total(build_cct(spark, sf_dir), "value", "ratio")
@@ -518,17 +534,13 @@ def cct_hot_path(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # same oracle as cct_hot_path — the fleet operator hot_path delegates to,
 # called directly: the identical chain when the whole frame is one profile
-@register("cct_hot_path_batch",
+@register("cct_hot_path_batch", sql=_HOT_PATH_SQL,
           doc="fleet-scale hot_paths variant under the same oracle")
 def cct_hot_path_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = ops.with_ratio_of_total(build_cct(spark, sf_dir), "value", "ratio")
     chain = ops.hot_paths(df, "ratio", threshold=HOT_THRESHOLD)
     return chain.select("id", "depth", "value", "ratio")
 
-
-from . import REGISTRY as _REGISTRY  # noqa: E402
-
-_REGISTRY["cct_hot_path_batch"].sql = _REGISTRY["cct_hot_path"].sql
 
 
 # ---------------------------------------------------------------------------
@@ -671,38 +683,17 @@ FROM drolled""",
               "pass (two-profile comparison, the reference merge "
               "workflow's read side)")
 def cct_diff_returnflag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem", spread=True)
-    orders = load_table(spark, sf_dir, "orders")
-    customer = load_table(spark, sf_dir, "customer")
-    nation = load_table(spark, sf_dir, "nation")
-    base = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(customer), orders.o_custkey == customer.c_custkey)
-        .join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey)
-        .select(
-            (F.col("n_regionkey").cast("long") + REGION_OFF).alias("k1"),
-            (F.col("n_nationkey").cast("long") + NATION_OFF).alias("k2"),
-            (F.col("c_custkey").cast("long") + CUST_OFF).alias("k3"),
-            (F.round(F.col("l_extendedprice") * 100).cast("long")
-             * F.round((1 - F.col("l_discount")) * 100).cast("long"))
-            .alias("v"),
-            (F.col("l_returnflag") == "R").cast("int").alias("is_r"),
-        )
-    )
-    rolled = base.rollup("k1", "k2", "k3").agg(
-        F.sum(F.when(F.col("is_r") == 1, F.col("v")).otherwise(0))
+    is_r = F.col("l_returnflag") == "R"
+    rolled = _leaf_rows(spark, sf_dir).rollup("k1", "k2", "k3").agg(
+        F.sum(F.when(is_r, F.col("v")).otherwise(0))
         .cast("long").alias("value_r"),
-        F.sum(F.when(F.col("is_r") == 0, F.col("v")).otherwise(0))
+        F.sum(F.when(~is_r, F.col("v")).otherwise(0))
         .cast("long").alias("value_o"),
         F.grouping_id().alias("gid"),
     )
-    gid = F.col("gid")
-    depth = (F.when(gid == 0, 3).when(gid == 1, 2).when(gid == 3, 1)
-             .otherwise(0).cast("long"))
-    node_id = (F.when(gid == 0, F.col("k3")).when(gid == 1, F.col("k2"))
-               .when(gid == 3, F.col("k1")).otherwise(-1).cast("long"))
+    node = _node(3)
     return rolled.select(
-        depth.alias("depth"), node_id.alias("id"), "value_r", "value_o",
+        node["depth"], node["id"], "value_r", "value_o",
         (F.col("value_r") - F.col("value_o")).cast("long").alias("delta"),
         (F.col("value_r").cast("double")
          / (F.col("value_r") + F.col("value_o")).cast("double"))
@@ -774,60 +765,27 @@ FROM pcct GROUP BY path""",
           doc="3 hash-split profile clones merged via the real "
               "merge_profiles operator with sum/min/max combines")
 def cct_merge_profiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem", spread=True)
-    orders = load_table(spark, sf_dir, "orders")
-    customer = load_table(spark, sf_dir, "customer")
-    nation = load_table(spark, sf_dir, "nation")
-    k5 = (F.lit(LINE_OFF) + F.col("o_orderkey") * 10
-          + F.col("l_linenumber").cast("long"))
-    base = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(customer), orders.o_custkey == customer.c_custkey)
-        .join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey)
-        .select(
-            (k5 % 3).alias("p"),
-            (F.col("n_regionkey").cast("long") + REGION_OFF).alias("k1"),
-            (F.col("n_nationkey").cast("long") + NATION_OFF).alias("k2"),
-            (F.col("c_custkey").cast("long") + CUST_OFF).alias("k3"),
-            (F.col("o_orderkey").cast("long") + ORDER_OFF).alias("k4"),
-            k5.alias("k5"),
-            (F.round(F.col("l_extendedprice") * 100).cast("long")
-             * F.round((1 - F.col("l_discount")) * 100).cast("long"))
-            .alias("v"),
-        )
-    )
+    leaves = _leaf_rows(spark, sf_dir).withColumn("p", F.col("k5") % 3)
     # every grouping set keeps p: one pass builds all 3 per-profile
     # trees (gid bit-pattern identical to build_cct_plan's rollup
     # because p's grouping bit is always 0)
     keys = ["k1", "k2", "k3", "k4", "k5"]
     sets = [["p"] + keys[:n] for n in range(5, -1, -1)]
-    rolled = base.groupingSets(sets, "p", *keys).agg(
+    rolled = leaves.groupingSets(sets, "p", *keys).agg(
         F.sum("v").cast("long").alias("value"),
         F.grouping_id().alias("gid"))
-    gid = F.col("gid")
-    arr = F.array(*keys)
-    path = (
-        F.when(gid == 0, arr).when(gid == 1, F.slice(arr, 1, 4))
-        .when(gid == 3, F.slice(arr, 1, 3)).when(gid == 7, F.slice(arr, 1, 2))
-        .when(gid == 15, F.slice(arr, 1, 1))
-        .otherwise(F.array().cast("array<long>")))
-    depth = (F.when(gid == 0, 5).when(gid == 1, 4).when(gid == 3, 3)
-             .when(gid == 7, 2).when(gid == 15, 1).otherwise(0).cast("long"))
-    node_type = (F.when(gid == 0, "lineitem").when(gid == 1, "order")
-                 .when(gid == 3, "customer").when(gid == 7, "nation")
-                 .when(gid == 15, "region").otherwise("root"))
+    node = _node(5)
     profiles = rolled.select(
-        path.alias("callpath"), depth.alias("depth"),
-        node_type.alias("type"),
+        node["callpath"], node["depth"], node["type"],
         F.col("value").alias("value_sum"),
         F.col("value").alias("value_min"),
         F.col("value").alias("value_max"))
     merged = ops.merge_profiles(
         profiles,
         {"value_sum": "sum", "value_min": "min", "value_max": "max"},
-        callpath_col="callpath", location_cols=("depth", "type"))
+        location_cols=("depth", "type"))
     return merged.select(
-        _path_str("callpath").alias("path_s"),
+        _path_str().alias("path_s"),
         F.col("depth").cast("long").alias("depth"), "type",
         F.col("value_sum").cast("long").alias("value_sum"),
         F.col("value_min").cast("long").alias("value_min"),
@@ -911,31 +869,13 @@ def cct_flame_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
          .filter((F.col("depth") >= 1) & (F.col("depth") <= 3))
          .select(F.col("id").alias("a_id"), F.col("value").alias("a_v")))
 
-    li = load_table(spark, sf_dir, "lineitem", spread=True)
-    orders = load_table(spark, sf_dir, "orders")
-    customer = load_table(spark, sf_dir, "customer")
-    nation = load_table(spark, sf_dir, "nation")
-    kbase = (
-        li.filter(F.col("l_returnflag") != "R")
-        .join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(customer), orders.o_custkey == customer.c_custkey)
-        .join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey)
-        .select(
-            (F.col("n_regionkey").cast("long") + REGION_OFF).alias("k1"),
-            (F.col("n_nationkey").cast("long") + NATION_OFF).alias("k2"),
-            (F.col("c_custkey").cast("long") + CUST_OFF).alias("k3"),
-            (F.round(F.col("l_extendedprice") * 100).cast("long")
-             * F.round((1 - F.col("l_discount")) * 100).cast("long"))
-            .alias("v")))
-    krolled = kbase.rollup("k1", "k2", "k3").agg(
-        F.sum("v").cast("long").alias("b_v"),
-        F.grouping_id().alias("gid"))
-    kgid = F.col("gid")
-    kept = (krolled.filter(kgid.isin(0, 1, 3))
-            .select(F.when(kgid == 0, F.col("k3"))
-                    .when(kgid == 1, F.col("k2"))
-                    .when(kgid == 3, F.col("k1")).cast("long")
-                    .alias("b_id"), "b_v"))
+    krolled = (_leaf_rows(spark, sf_dir)
+               .filter(F.col("l_returnflag") != "R")
+               .rollup("k1", "k2", "k3").agg(
+                   F.sum("v").cast("long").alias("b_v"),
+                   F.grouping_id().alias("gid")))
+    # the root row (id -1) matches no depth-1..3 segment of the join below
+    kept = krolled.select(_node(3)["id"].alias("b_id"), "b_v")
 
     b_v, a_v = F.col("b_v"), F.col("a_v")
     return (geom.join(a, geom.id == F.col("a_id"))

@@ -40,9 +40,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..frame import (_COMPACT_LOCATION_COLUMNS, _COMPACT_SUFFIXES,
-                     _HOT_PATH_SUFFIX, CCTMetadata,
-                     determine_percentage_column)
+from ..frame import (CCTMetadata, determine_percentage_column,
+                     meaningful_columns_for)
 from ..functions import formulas as _formulas
 from ..memo import session_memo
 from ..operators import cct as _cct
@@ -381,12 +380,7 @@ def load_experiments(
         modules_by_id=header["modules_by_id"],
         files_by_id=header["files_by_id"],
         procedures_by_id=header["procedures_by_id"],
-        meaningful_columns={
-            "percentage": pct,
-            "hot_path": pct + _HOT_PATH_SUFFIX,
-            "compact": [pct + s for s in _COMPACT_SUFFIXES]
-            + _COMPACT_LOCATION_COLUMNS,
-        },
+        meaningful_columns=meaningful_columns_for(pct),
     )
     anc_cols = [f"__anc_{mid}" for mid in anc_ids]
     df = finalize_metrics(raw, header, with_imag=with_imag, carry=anc_cols)

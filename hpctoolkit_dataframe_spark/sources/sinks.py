@@ -17,24 +17,18 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 
 
-def write_profiles(
-    df: DataFrame,
-    path: str,
-    *,
-    format: str = "parquet",
-    partition_by: Sequence[str] = ("profile_id",),
-    mode: str = "overwrite",
-) -> None:
-    writer = df.write.format(format).mode(mode)
-    cols = [c for c in partition_by if c in df.columns]
-    if cols:
-        writer = writer.partitionBy(*cols)
-    writer.save(path)
+def write_profiles(df: DataFrame, path: str) -> None:
+    """Overwrite ``path`` with ``df`` as parquet, partitioned by
+    ``profile_id`` when the frame has that column."""
+    writer = df.write.mode("overwrite")
+    if "profile_id" in df.columns:
+        writer = writer.partitionBy("profile_id")
+    writer.parquet(path)
 
 
-def read_profiles(spark: SparkSession, path: str,
-                  format: str = "parquet") -> DataFrame:
-    return spark.read.format(format).load(path)
+def read_profiles(spark: SparkSession, path: str) -> DataFrame:
+    """The parquet profiles ``write_profiles`` wrote under ``path``."""
+    return spark.read.parquet(path)
 
 
 def write_bucketed_table(

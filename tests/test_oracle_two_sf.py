@@ -93,3 +93,17 @@ R7_ADDITIONS = [
                                     "/root/testdata/sf0.1"])
 def test_r7_addition_oracles(spark, sf_dir):
     _check(spark, sf_dir, R7_ADDITIONS)
+
+
+# every TPC-H calling-context-tree entry (the cct_xml_* trio reads XML
+# profiles, not these tables): the shared leaf join and rollup-level
+# mapping they are built from, checked at two scales
+CCT_SUITE = sorted(n for n, q in REGISTRY.items()
+                   if n.startswith("cct_")
+                   and q.fn.__module__.endswith(".cct_tpch"))
+
+
+@pytest.mark.parametrize("sf_dir", ["/root/testdata/sf0.001",
+                                    "/root/testdata/sf0.01"])
+def test_cct_suite_oracles(spark, sf_dir):
+    _check(spark, sf_dir, CCT_SUITE)

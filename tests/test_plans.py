@@ -30,6 +30,18 @@ def test_cct_build_single_shuffle_aggregate(spark):
     assert explain.python_udf_count(df) == 0
 
 
+@pytest.mark.parametrize("name, most", [("cct_merge_profiles", 2),
+                                        ("cct_flame_diff", 4)])
+def test_cct_leaf_rollups_keep_hash_exchanges(spark, name, most):
+    """The entries that roll the lineitem leaves up themselves, rather
+    than reading the memoized tree, plan no more hash exchanges than
+    when each wrote its own copy of the leaf join (2 and 4)."""
+    import re
+
+    df = REGISTRY[name].fn(spark, SF_DIR)
+    assert len(re.findall(r"Exchange hash", explain.executed_plan(df))) <= most
+
+
 def test_hot_path_batch_one_lazy_plan(spark):
     """The batch hot path is one window exchange and one group exchange
     over its input: no checkpoint of its own and no Python stage."""

@@ -6,7 +6,8 @@ multi-file directory table."""
 import pyspark.sql.functions as F
 import pytest
 
-from hpctoolkit_dataframe_spark.queries import _scan_partitions, session_key
+from hpctoolkit_dataframe_spark import queries
+from hpctoolkit_dataframe_spark.queries import _count_scan_partitions
 
 
 @pytest.mark.parametrize("sf_dir", ["/root/testdata/sf0.001",
@@ -16,7 +17,7 @@ def test_estimate_matches_rdd_probe_on_testdata(spark, sf_dir):
     for name in ("lineitem", "orders", "documents", "embeddings",
                  "customer", "nation"):
         df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        est = _scan_partitions(spark, sf_dir + "#test", name, df)
+        est = _count_scan_partitions(spark, df)
         assert est == df.rdd.getNumPartitions(), (sf_dir, name)
 
 
@@ -25,13 +26,24 @@ def test_estimate_matches_rdd_probe_multifile(spark, tmp_path):
     spark.range(200_000).withColumn("pad", F.md5(F.col("id").cast("string"))) \
         .repartition(7).write.parquet(out)
     df = spark.read.parquet(out)
-    est = _scan_partitions(spark, out, "multi", df)
+    est = _count_scan_partitions(spark, df)
     assert est == df.rdd.getNumPartitions()
 
 
-def test_estimate_is_memoized(spark):
-    df = spark.read.parquet("/root/testdata/sf0.001/nation.parquet")
-    key = (session_key(spark), "/root/testdata/sf0.001#memo", "nation")
-    _scan_partitions(spark, key[1], "nation", df)
-    from hpctoolkit_dataframe_spark.queries import _SPREAD_CACHE
-    assert key in _SPREAD_CACHE
+def test_estimate_is_memoized(spark, tmp_path, monkeypatch):
+    """load_table's memo builds a table's spread estimate once: the
+    second spread load of the same table is a hit and counts nothing."""
+    sf_dir = str(tmp_path)
+    spark.read.parquet("/root/testdata/sf0.001/nation.parquet") \
+        .write.parquet(f"{sf_dir}/nation.parquet")
+    calls = []
+
+    def counting(spark_, df):
+        calls.append(1)
+        return _count_scan_partitions(spark_, df)
+
+    monkeypatch.setattr(queries, "_count_scan_partitions", counting)
+    first = queries.load_table(spark, sf_dir, "nation", spread=True)
+    again = queries.load_table(spark, sf_dir, "nation", spread=True)
+    assert again is first
+    assert len(calls) == 1
